@@ -283,7 +283,6 @@ def create_app(spark=None, catalog_dir: Optional[str] = None,
                                       ds.max_timestamp)
                 result = engine.run(
                     df, query, with_stats=True,
-                    max_group_rows=ds.max_group_rows,
                     total_rows=ds.total_rows or None,
                     group_rows_topk=getattr(ds, "group_rows_topk", None),
                     segmented_cost_premium=getattr(
@@ -333,7 +332,6 @@ def create_app(spark=None, catalog_dir: Optional[str] = None,
                 try:
                     holder["result"] = engine.run(
                         df, query, with_stats=True,
-                        max_group_rows=ds.max_group_rows,
                         total_rows=ds.total_rows or None,
                         group_rows_topk=getattr(ds, "group_rows_topk",
                                                 None),

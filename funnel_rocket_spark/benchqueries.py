@@ -92,7 +92,8 @@ def _spread_max_bytes() -> int:
 
 
 def load_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """load_table + a round-robin spread for split-starved inputs.
+    """load_table + a spread (hash on the table key, else round-robin)
+    for split-starved inputs.
 
     The testdata tables are single-file, single-row-group parquet, and a
     parquet row group cannot split across tasks — so every scan is at
@@ -133,7 +134,7 @@ def load_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # retry-safe (deterministic key, SPARK-38388 does not apply).
         key = _SPREAD_KEYS.get(name)
         par = spark.sparkContext.defaultParallelism
-        if key is not None and os.environ.get("FRS_SPREAD_MODE") != "rr":
+        if key is not None:
             df = df.repartition(par, F.col(key))
         else:
             df = df.repartition(par)
@@ -470,12 +471,8 @@ def _ann_ivf_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Measured recall with it: 0.7-1.0 per query across sf0.001/0.01/0.1
     # vs the 0.2 floor (ML quantizer measured 0.3-0.9 — the swap only
     # WIDENS the certification margin).
-    if os.environ.get("FRS_ANN_QUANTIZER") == "ml":  # A/B control shape
-        ivf = similarity.ivf_topk(emb, queries, k=k, n_clusters=16,
-                                  n_probe=4)
-    else:
-        ivf = similarity.ivf_topk(emb, queries, k=k, n_clusters=16,
-                                  n_probe=4, quantizer="frames", max_iter=2)
+    ivf = similarity.ivf_topk(emb, queries, k=k, n_clusters=16,
+                              n_probe=4, quantizer="frames", max_iter=2)
     brute = similarity.cosine_topk(emb, queries, k=k)
     kth = brute.groupBy("query_id").agg(F.min("cosine_sim").alias("__kth"))
     per_q = (ivf.join(F.broadcast(kth), "query_id")
@@ -503,10 +500,6 @@ def _ann_ivf_full_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cell is probed — the result is brute-force-exact for ANY
     # assignment. Replaces ML KMeans(max_iter=1, random init), whose
     # fit() alone was ~8 sequential driver jobs.
-    if os.environ.get("FRS_ANN_QUANTIZER") == "ml":  # A/B control shape
-        return similarity.ivf_topk(emb, queries, k=10, n_clusters=8,
-                                   n_probe=8, max_iter=1,
-                                   init_mode="random")
     return similarity.ivf_topk(emb, queries, k=10, n_clusters=8, n_probe=8,
                                quantizer="frames", max_iter=0)
 

@@ -83,21 +83,19 @@ class Dataset:
     files_validated: Optional[int] = None
     files_total: Optional[int] = None
     # Largest single group's row count over the VALIDATED files (exact for
-    # validation_mode="full", a sampled estimate otherwise). Plan-time skew
-    # routing reads this: per-group sequence/funnel paths serialize each
-    # group into one task, so a whale group past QueryPlan's
-    # whale_row_threshold flips sequence_strategy="auto" to the segmented
-    # fold (see planner.compiler.QueryPlan) — the Spark restatement of
-    # "the optimizer, not the user, picks the skew-safe plan".
+    # validation_mode="full", a sampled estimate otherwise) — always
+    # group_rows_topk[0]. Informational: the planner routes on the full
+    # histogram head below. Kept because saved catalog JSON loads through
+    # Dataset(**data).
     max_group_rows: Optional[int] = None
-    # Top-K largest group sizes descending (group_rows_topk[0] ==
-    # max_group_rows) — the r11 group-size HISTOGRAM head. With this +
-    # total_rows the planner routes sequence strategies on MODELED task
-    # cost (estimated slowest window task vs the segmented fold's bounded
-    # task × measured premium) instead of the binary max>threshold test,
-    # which over-routed a 20M whale the external sort absorbs 3× faster
-    # (tools/rung_whale_100m_r10.json). Same sampled-extrapolation rule
-    # as max_group_rows under partial validation.
+    # Top-K largest group sizes descending — the r11 group-size HISTOGRAM
+    # head. With this + total_rows the planner routes sequence strategies
+    # on MODELED task cost (estimated slowest window task vs the
+    # segmented fold's bounded task × measured premium; see
+    # planner.compiler.QueryPlan) — the Spark restatement of "the
+    # optimizer, not the user, picks the skew-safe plan". A catalog saved
+    # without it plans on window anchors until re-registered. Under
+    # partial validation the counts are extrapolated from the sample.
     group_rows_topk: Optional[list[int]] = None
     # r12: the segmented fold's per-row cost premium over the window
     # sort, MEASURED on this dataset at registration
@@ -454,8 +452,7 @@ def register_dataset(
             # per partition merged on the driver, never a full sort; one
             # extra registration-time job). QueryPlan's auto
             # sequence-strategy routing models task cost from this
-            # histogram head; max_group_rows stays as topk[0] for
-            # backward compatibility with saved catalogs.
+            # histogram head; max_group_rows stays as topk[0].
             topk = [r["__c"] for r in
                     (df_val.groupBy(group_id_column)
                      .agg(F.count(F.lit(1)).alias("__c"))

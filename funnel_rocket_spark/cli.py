@@ -142,7 +142,6 @@ def cmd_run(args) -> int:
         spark = get_spark()
         engine = QueryEngine(ds.group_id_column, ds.timestamp_column)
         result = engine.run(ds.load(spark), query,
-                            max_group_rows=ds.max_group_rows,
                             total_rows=ds.total_rows or None,
                             group_rows_topk=getattr(ds, "group_rows_topk",
                                                     None),

@@ -35,18 +35,15 @@ class QueryEngine:
     def __init__(self, group_id_column: str, timestamp_column: str,
                  universe_window_threshold: int = 4_000_000,
                  agg_collect_threads: int = 8,
-                 whale_row_threshold: int = 4_000_000,
                  segmented_cost_premium: float = 20.0,
                  whale_hard_cap_rows: int = 2_000_000_000):
         self.group_id_column = group_id_column
         self.timestamp_column = timestamp_column
-        # Legacy-path knob (max-only hint): max-group-rows above which
-        # sequence_strategy="auto" routes to the segmented fold. With
-        # the r11 histogram hint (group_rows_topk) routing is a COST
-        # MODEL instead — see QueryPlan.__init__ and docs/operating.md
-        # for the two knobs below (the measured interpreted-fold
-        # premium per row, and the absolute task-size stall guard).
-        self.whale_row_threshold = whale_row_threshold
+        # sequence_strategy="auto" routes on a COST MODEL over the
+        # registration profile's group-size histogram (group_rows_topk)
+        # — see QueryPlan.__init__ and docs/operating.md for the two
+        # knobs below (the measured interpreted-fold premium per row,
+        # and the absolute task-size stall guard).
         self.segmented_cost_premium = segmented_cost_premium
         self.whale_hard_cap_rows = whale_hard_cap_rows
         # matched-group count above which the row universe switches from
@@ -76,7 +73,6 @@ class QueryEngine:
     def plan(self, df: DataFrame, query: dict, validate_schema: bool = True,
              sequence_strategy: str = "auto",
              fold_segments: int = 64,
-             max_group_rows: Optional[int] = None,
              total_rows: Optional[int] = None,
              group_rows_topk: Optional[list[int]] = None,
              segmented_cost_premium: Optional[float] = None,
@@ -89,8 +85,6 @@ class QueryEngine:
                          self.timestamp_column,
                          sequence_strategy=sequence_strategy,
                          fold_segments=fold_segments,
-                         max_group_rows_hint=max_group_rows,
-                         whale_row_threshold=self.whale_row_threshold,
                          total_rows_hint=total_rows,
                          group_rows_topk_hint=group_rows_topk,
                          # per-dataset premium measured at registration
@@ -138,7 +132,6 @@ class QueryEngine:
     def run(self, df: DataFrame, query: dict, validate_schema: bool = True,
             with_stats: bool = False, sequence_strategy: str = "auto",
             fold_segments: int = 64,
-            max_group_rows: Optional[int] = None,
             total_rows: Optional[int] = None,
             group_rows_topk: Optional[list[int]] = None,
             segmented_cost_premium: Optional[float] = None,
@@ -161,7 +154,6 @@ class QueryEngine:
         plan = self.plan(df, query, validate_schema=validate_schema,
                          sequence_strategy=sequence_strategy,
                          fold_segments=fold_segments,
-                         max_group_rows=max_group_rows,
                          total_rows=total_rows,
                          group_rows_topk=group_rows_topk,
                          segmented_cost_premium=segmented_cost_premium,
@@ -199,7 +191,7 @@ class QueryEngine:
                 # too big to broadcast would sort-merge the whole table, so
                 # evaluate the same conditions as window flags instead —
                 # join-free, measured 2.9× at 100M rows with 71% of groups
-                # matching. Fold-family sequences can't window their flags
+                # matching. Segmented-fold sequences can't window their flags
                 # (that would re-introduce the whale partition sort the
                 # fold was chosen to avoid), so past the threshold they
                 # take the shuffle_hash semi join — big side shuffled but
@@ -208,11 +200,10 @@ class QueryEngine:
                 # universe).
                 many = (counts["matching_groups"]
                         > self.universe_window_threshold)
-                fold_family = (plan._seq_specs
-                               and plan.sequence_strategy
-                               in ("fold", "fold_segmented"))
+                segmented = (plan._seq_specs
+                             and plan.sequence_strategy == "fold_segmented")
                 rows_strategy = (
-                    ("hash_join" if fold_family else "window")
+                    ("hash_join" if segmented else "window")
                     if many else "join")
                 # NOTE (r12, measured): a declared sorted layout does
                 # NOT flip this choice to "window" unconditionally —
@@ -245,12 +236,11 @@ class QueryEngine:
             if funnel is not None:
                 # the funnel universe reuses the adaptive policy: windowed
                 # condition flags when the matched-group set is beyond
-                # broadcast scale; fold-family plans take the
+                # broadcast scale; segmented-fold plans take the
                 # shuffle_hash semi join there instead (no big-side sort)
                 anchors_ok = not (
                     (plan._seq_specs or plan._funnel_spec is not None)
-                    and plan.sequence_strategy
-                    in ("fold", "fold_segmented"))
+                    and plan.sequence_strategy == "fold_segmented")
                 has_conditions = bool(
                     q.get("query", {}).get("conditions") or [])
                 many_f = (counts["matching_groups"]
@@ -287,7 +277,7 @@ class QueryEngine:
 
                     def step_rows(i: int):
                         # per-step adaptive: many groups pass → anchor
-                        # filter (join-free) or, for fold-family plans,
+                        # filter (join-free) or, for segmented-fold plans,
                         # the shuffle_hash semi join; few → semi join
                         # against the cached per-group frame
                         many = (step_counts[i]["matching_groups"]
@@ -350,9 +340,6 @@ class QueryEngine:
                         "autoRoutedSegmented": plan.auto_routed_segmented,
                         "autoRouteReason": plan.auto_route_reason,
                         "routeEstimates": plan.route_estimates,
-                        "effectiveWhaleThreshold":
-                            plan.effective_whale_threshold,
-                        "maxGroupRowsHint": plan.max_group_rows_hint,
                         "groupRowsTopkHint": plan.group_rows_topk_hint,
                         "rowUniverse": rows_strategy,
                         "sortedLayout": sorted_layout,

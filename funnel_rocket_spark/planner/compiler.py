@@ -220,94 +220,40 @@ def with_sequence_anchors(df: DataFrame, spec: SequenceSpec, group_col: str,
     return df
 
 
-def sequence_fold_done(spec: SequenceSpec, df: DataFrame, ts_col: str) -> Column:
-    """Steps-completed count as a PURE AGGREGATE: no window, no extra sort.
-
-    Per-step ``collect_list(when(pred_i, ts))`` arrays, then the
-    ITERATED-MIN recurrence (reference W1 semantics, identical to the
-    window-anchor pass): ``anchor_i = min(ts ∈ arr_i : ts > anchor_{i-1}
-    [∧ ts ≤ first + maxDuration])``. The greedy earliest-event fold over
-    the full event stream is equivalent (an event advances at most one
-    step; strict ``ts >`` blocks same-ts chains — the same equivalence
-    the streaming fold vectorizes on), and the recurrence is far cheaper
-    to EVALUATE: no array_sort, no per-event struct building through an
-    n-deep when-chain — one ``array_min(filter(...))`` per step over
-    only that step's matching timestamps (r12: 7.9× over the struct
-    fold at 10M rows). NULLs propagate the dead-chain semantics for
-    free: ``x > NULL`` filters everything, array_min of empty is NULL.
-    The result is the length of the matched step prefix: ``done > i`` ⇔
-    the group passed step *i*, ``done == n`` ⇔ the full sequence
-    matched.
-
-    Scale trade-off vs window anchors: per-step in-memory arrays per
-    group during aggregation (fine for user-sized groups, the window
-    path spills better on pathological ones) in exchange for dropping
-    the partition sort — sequence conditions then ride the SAME single
-    groupBy as every other condition. Not applicable to ``rowFound:
-    false`` (needs lookahead) — the planner falls back to window
-    anchors there.
-    """
-    arrs = _step_ts_arrays(spec, df, ts_col)
-    return _chain_done(arrs, 0, max_duration=spec.max_duration)
-
-
 def _step_ts_arrays(spec: SequenceSpec, df: DataFrame,
                     ts_col: str) -> list[Column]:
-    """Per-step matching-timestamp arrays as aggregate expressions:
-    ``collect_list(when(pred_i, ts))`` keeps exactly the rows where the
-    step predicate holds AND ts is non-null (collect_list drops NULLs —
-    a NULL pred or NULL ts could never advance the fold either way).
-    Identical step predicates dedupe to one aggregation buffer."""
+    """Per-step matching-timestamp arrays as aggregate expressions, the
+    input of the segmented fold's per-segment chains
+    (:func:`_segmented_fold_frame`): ``collect_list(when(pred_i, ts))``
+    keeps exactly the rows where the step predicate holds AND ts is
+    non-null (collect_list drops NULLs — a NULL pred or NULL ts could
+    never advance the fold either way). Identical step predicates dedupe
+    to one aggregation buffer."""
     ts, _ = ts_numeric(df, ts_col)
     return [F.collect_list(F.when(pred, ts)) for pred in spec.step_preds]
 
 
-def _chain_done(arrs: list[Column], entry: int,
-                max_duration=None) -> Column:
-    """Matched-prefix length from ENTRY step over per-step ts arrays via
-    the iterated-min recurrence. ``entry > 0`` is the segmented path
-    resuming a group's scan mid-sequence: the entry anchor is an event
-    in an earlier ts-range segment, strictly below every timestamp
-    here, so the first link needs no ``>`` filter (and ``maxDuration``
-    must already be a row filter — the duration origin isn't visible
-    inside a segment)."""
-    assert max_duration is None or entry == 0
-    a0 = F.array_min(arrs[entry])
-    done0 = a0.isNotNull().cast("int")
-    rest = arrs[entry + 1:]
-    if not rest:
-        return done0
-    if max_duration is None:
-        def step(acc, arr):
-            nxt = F.array_min(F.filter(arr, lambda x: x > acc["a"]))
-            return F.struct(
-                (acc["done"] + nxt.isNotNull().cast("int")).alias("done"),
-                nxt.alias("a"))
-
-        init = F.struct(done0.alias("done"), a0.alias("a"))
-    else:
-        # greedy-first semantics: the duration window starts at the
-        # EARLIEST step-0 match (= a0) and bounds every later step
-        def step(acc, arr):
-            nxt = F.array_min(F.filter(
-                arr, lambda x: (x > acc["a"])
-                & (x <= acc["first"] + F.lit(max_duration))))
-            return F.struct(
-                (acc["done"] + nxt.isNotNull().cast("int")).alias("done"),
-                nxt.alias("a"), acc["first"].alias("first"))
-
-        init = F.struct(done0.alias("done"), a0.alias("a"),
-                        a0.alias("first"))
-    return F.aggregate(F.array(*rest), init, step)["done"]
-
-
 def _chain_done_sql(names: list[str], entry: int) -> str:
-    """SQL-string twin of :func:`_chain_done` (no ``maxDuration`` —
-    segmented callers have already turned it into a row filter) over
-    NAMED per-step array columns. One ``F.expr`` parse replaces the
-    per-link lambda-Column construction; the resolved expression tree is
-    identical, including the duplicated ``array_min(filter(...))`` the
-    Column form inlines through ``nxt``."""
+    """Matched-prefix length from ENTRY step over NAMED per-step ts
+    array columns, as one SQL expression (no ``maxDuration`` — segmented
+    callers have already turned it into a row filter).
+
+    The ITERATED-MIN recurrence (reference W1 semantics, identical to the
+    window-anchor pass): ``anchor_i = min(ts ∈ arr_i : ts > anchor_{i-1})``.
+    The greedy earliest-event fold over the full event stream is
+    equivalent (an event advances at most one step; strict ``ts >``
+    blocks same-ts chains — the same equivalence the streaming fold
+    vectorizes on), and the recurrence is far cheaper to evaluate: one
+    ``array_min(filter(...))`` per step over only that step's matching
+    timestamps (r12: 7.9× over a struct fold over the sorted event array
+    at 10M rows). NULLs propagate the dead-chain semantics for free:
+    ``x > NULL`` filters everything, array_min of empty is NULL.
+
+    ``entry > 0`` resumes a group's scan mid-sequence inside one
+    ts-range segment: the entry anchor is an event in an earlier
+    segment, strictly below every timestamp here, so the first link
+    needs no ``>`` filter. One ``F.expr`` parse replaces per-link
+    lambda-Column construction (~500 py4j round-trips per entry index)."""
     a0 = f"array_min({names[entry]})"
     done0 = f"cast({a0} is not null as int)"
     rest = names[entry + 1:]
@@ -326,9 +272,9 @@ def sequence_anchor_chain(spec: SequenceSpec, df: DataFrame,
                           group_col: str, ts_col: str) -> DataFrame:
     """(group, __fr_rows, __fr_done) via n CHAINED per-group MIN
     aggregates — the whale-safe plan for sequences WITH ``rowFound:
-    false`` steps (r11), which neither fold form can express (the fold
-    needs lookahead; the exit table can't carry "nothing matched
-    anywhere after the anchor" across segments).
+    false`` steps (r11), which the exit-table fold can't express (it
+    can't carry "nothing matched anywhere after the anchor" across
+    segments).
 
     Key observation: the window-anchor semantics (reference W1/W3,
     ``with_sequence_anchors``) are already a RECURRENCE of per-group
@@ -399,12 +345,13 @@ def sequence_fold_done_segmented(spec: SequenceSpec, df: DataFrame,
                                  bounds: list | None = None) -> DataFrame:
     """(group, __fr_rows, __fr_done) via per-(group, ts-range-segment)
     partial folds merged through an associative exit table — the
-    whale-group rescue for the fold strategy.
+    whale-group alternative to window anchors.
 
-    Both plain strategies put an entire group in ONE task (window
-    partition sort or collect_list fold), so a bot group with tens of
-    millions of events serializes there (measured: the fold cliffs 8.4×
-    with 20% of a 100M stream in one group — README whale rung). Here a
+    Any per-group plan puts an entire group in ONE task (window
+    partition sort or a whole-group collect_list fold), so a bot group
+    with tens of millions of events serializes there (measured: a
+    whole-group fold cliffs 8.4× with 20% of a 100M stream in one group
+    — README whale rung). Here a
     group's events split across ``n_segments`` time-range segments, each
     folded in its own task, and only the tiny per-segment EXIT TABLES
     meet per group.
@@ -418,7 +365,7 @@ def sequence_fold_done_segmented(spec: SequenceSpec, df: DataFrame,
     step index. A segment is therefore summarized by the (n_steps+1)-
     entry vector ``exit_done[entry]``, and the group-level merge is a
     fold of those vectors in bucket order: ``done := exits[done]``.
-    One extra (small) exchange vs the plain fold, in exchange for
+    One extra (small) exchange vs a whole-group fold, in exchange for
     whale-proof task sizing.
 
     ``maxDuration`` takes a different (still whale-proof) shape — see
@@ -476,7 +423,7 @@ def _segmented_fold_frame(spec: SequenceSpec, df: DataFrame,
     # per-(group, segment) per-step matching-ts arrays, then one
     # iterated-min chain per ENTRY index (r12 — replaces n evaluations
     # of the interpreted struct fold over a sorted all-events array;
-    # see sequence_fold_done for the equivalence and the measurement).
+    # see _chain_done_sql for the equivalence and the measurement).
     # Any entry anchor reaching this segment is strictly below every
     # timestamp here, so chain link 0 is a bare array_min.
     arrs = _step_ts_arrays(spec, df, ts_col)
@@ -484,11 +431,9 @@ def _segmented_fold_frame(spec: SequenceSpec, df: DataFrame,
                 .agg(F.count(F.lit(1)).alias("__fr_prows"),
                      *[a.alias(f"__fr_a{i}") for i, a in enumerate(arrs)]))
     # the full exit vector as ONE parsed expression over the named
-    # per-step array columns: the per-entry Column-API chains cost
-    # ~500 py4j round-trips per entry index (measured 0.79 s of the
-    # fr_sequence_segmented build); the parsed plan — aggregate() over
-    # named_struct with the same duplicated array_min(filter()) the
-    # Column form inlines — is identical node-for-node.
+    # per-step array columns: per-entry Column-API chains cost ~500 py4j
+    # round-trips per entry index (measured 0.79 s of the
+    # fr_sequence_segmented build).
     anames = [f"__fr_a{i}" for i in range(n)]
     exits = F.expr("array(" + ",".join(
         [f"{e} + {_chain_done_sql(anames, e)}" for e in range(n)]
@@ -514,7 +459,7 @@ def _segmented_fold_max_duration(spec: SequenceSpec, df: DataFrame,
 
     Why it decomposes exactly: the fold's semantics are greedy-first —
     step 0 anchors at the group's EARLIEST step-0 event and never
-    re-anchors (``_fold_parts``: a timed-out state simply stops
+    re-anchors (a timed-out state simply stops
     advancing). So the continuous quantity the exit table couldn't
     carry, ``first``, is a plain per-group aggregate:
     ``min(ts) where p0`` — map-side-combining, whale-proof. With
@@ -522,7 +467,7 @@ def _segmented_fold_max_duration(spec: SequenceSpec, df: DataFrame,
 
     * only events in ``(F, F + maxDuration]`` can advance steps ≥ 1
       (strict-``>`` excludes ts ≤ F; the duration check excludes the
-      rest, and in the plain fold those events are no-ops for EVERY
+      rest, and in the whole-stream fold those events are no-ops for EVERY
       step index, so dropping them changes nothing);
     * inside that window the duration check is vacuous — the fold
       degenerates to the duration-free fold with entry done=1, where
@@ -575,60 +520,44 @@ def _segmented_fold_max_duration(spec: SequenceSpec, df: DataFrame,
                         F.lit(0)).alias(DONE_COL)))
 
 
-def sequence_fold_flag(spec: SequenceSpec, df: DataFrame, ts_col: str) -> Column:
-    """Full-sequence-matched flag — ``done == n`` over the fold."""
-    return (sequence_fold_done(spec, df, ts_col)
-            == F.lit(len(spec.step_preds)))
-
-
 class QueryPlan:
     """Lazy compilation of one expanded query over one DataFrame.
 
     Every public method returns an unexecuted DataFrame; callers compose/collect.
 
-    ``sequence_strategy``: how sequences evaluate — ``"auto"``/``"window"``
-    (default) use window-min anchors everywhere (see ``_use_fold`` for
-    the measurements); ``"fold"`` forces the windowless aggregate fold
-    (rejects rowFound:false, which needs anchor lookahead);
-    ``"fold_segmented"`` splits each group across ``fold_segments``
-    ts-range segments folded in parallel tasks and merges the tiny
-    per-segment exit tables — the whale-group shape (rejects
-    rowFound:false; ``maxDuration`` takes the first-anchor-join form,
-    see :func:`sequence_fold_done_segmented` /
-    :func:`_segmented_fold_max_duration`).
+    ``sequence_strategy``: how sequences evaluate — ``"window"`` uses
+    window-min anchors everywhere (one group-keyed exchange + partition
+    sort; the groupBy reuses its partitioning); ``"fold_segmented"``
+    splits each group across ``fold_segments`` ts-range segments folded
+    in parallel tasks and merges the tiny per-segment exit tables — the
+    whale-group shape (``maxDuration`` takes the first-anchor-join form,
+    ``rowFound:false`` the anchor-chain form, see
+    :func:`sequence_fold_done_segmented`).
 
-    ``"auto"`` is additionally SKEW-AWARE when the caller supplies
-    ``max_group_rows_hint`` (the registration profile's
-    ``Dataset.max_group_rows`` — free at plan time): a hint past
-    ``whale_row_threshold`` rows routes every segmentable plan to the
-    segmented fold automatically, so whale protection no longer requires
-    the operator to know the whale exists. Plans with rowFound:false
-    steps stay on window anchors (the one shape the fold family can't
-    express). ``auto_routed_segmented`` records the decision for
-    observability.
+    ``"auto"`` (default) picks between the two from the registration
+    profile's group-size histogram (``group_rows_topk_hint`` +
+    ``total_rows_hint`` — free at plan time): a cost model of the
+    slowest window task vs the segmented fold's bounded task, so whale
+    protection never requires the operator to know the whale exists.
+    Without the histogram it keeps window anchors. ``auto_routed_segmented``
+    and ``auto_route_reason`` record the decision for observability.
     """
 
     def __init__(self, df: DataFrame, expanded: ExpandedQuery,
                  group_col: str, ts_col: str,
                  sequence_strategy: str = "auto",
                  fold_segments: int = 64,
-                 max_group_rows_hint: Optional[int] = None,
-                 whale_row_threshold: int = 4_000_000,
                  total_rows_hint: Optional[int] = None,
-                 whale_task_multiple: float = 4.0,
                  group_rows_topk_hint: Optional[list[int]] = None,
                  segmented_cost_premium: float = 20.0,
                  whale_hard_cap_rows: int = 2_000_000_000,
                  sorted_layout_hint: bool = False):
-        if sequence_strategy not in ("auto", "window", "fold",
-                                     "fold_segmented"):
+        if sequence_strategy not in ("auto", "window", "fold_segmented"):
             raise ValueError(
-                "sequence_strategy must be auto|window|fold|"
-                f"fold_segmented: {sequence_strategy!r}")
+                "sequence_strategy must be auto|window|fold_segmented: "
+                f"{sequence_strategy!r}")
         self.sequence_strategy = sequence_strategy
         self.fold_segments = fold_segments
-        self.max_group_rows_hint = max_group_rows_hint
-        self.whale_row_threshold = whale_row_threshold
         self.group_rows_topk_hint = group_rows_topk_hint
         self.segmented_cost_premium = segmented_cost_premium
         self.whale_hard_cap_rows = whale_hard_cap_rows
@@ -701,49 +630,34 @@ class QueryPlan:
                 funnel["sequence"], prefix="__fr_fun_",
                 max_duration=funnel.get("maxDuration"))
 
-        # Skew-aware auto routing: the per-group sequence/funnel paths
-        # serialize each group into one task (window partition sort /
-        # fold's collect_list), so a whale group can flip "auto" to the
-        # segmented fold. Hints come for free from the registration
-        # profile; with no hint, auto keeps today's window anchors (no
-        # plan-time probe job — planning must stay job-free for
-        # sub-second queries). Routing is all-or-nothing: every spec
-        # must be segmentable (no rowFound:false — maxDuration is fine,
-        # it takes the _segmented_fold_max_duration shape) or the whole
-        # plan stays on the whale-tolerant window path rather than
-        # mixing strategies.
+        # Skew-aware auto routing: the window-anchor pass serializes each
+        # group into one task (partition sort), so a whale group can flip
+        # "auto" to the segmented fold. Hints come for free from the
+        # registration profile; with no hint, auto keeps window anchors
+        # (no plan-time probe job — planning must stay job-free for
+        # sub-second queries). Routing is all-or-nothing: every spec in
+        # the plan takes the same strategy.
         #
-        # With the r11 HISTOGRAM hint (Dataset.group_rows_topk + total
-        # rows), the decision is a COST MODEL, not a threshold: the
-        # window strategy's wall-clock is its slowest task, estimated by
-        # greedy-packing the top-K group sizes onto shuffle partitions
-        # over the uniform remainder; the segmented fold's tasks are
-        # bounded (uniform share + top1/fold_segments) but each row
-        # costs ~segmented_cost_premium more (measured ~20× on the 100M
-        # rung: ~22 µs/row interpreted two-level fold vs ~1 µs/row
-        # codegen external sort — tools/rung_whale_100m_r10.json, where
-        # the r10 max>threshold test routed a 20M-row whale to the
-        # segmented fold at 73.5 s when the window sort absorbs it in
+        # The decision is a COST MODEL over the group-size HISTOGRAM
+        # (Dataset.group_rows_topk + total rows): the window strategy's
+        # wall-clock is its slowest task, estimated by greedy-packing the
+        # top-K group sizes onto shuffle partitions over the uniform
+        # remainder; the segmented fold's tasks are bounded (uniform
+        # share + top1/fold_segments) but each row costs
+        # ~segmented_cost_premium more (measured ~20× on the 100M rung:
+        # ~22 µs/row interpreted two-level fold vs ~1 µs/row codegen
+        # external sort — tools/rung_whale_100m_r10.json, where a 20M-row
+        # whale takes the segmented fold 73.5 s and the window sort
         # 23.2 s). Route segmented only when modeled window wall-clock
         # exceeds premium × segmented task bound, or past
         # whale_hard_cap_rows — the task size where one straggler's
         # spill (~100 GB at 1e9 rows) risks stalling an executor
         # regardless of modeled speed. Knobs in docs/operating.md.
-        #
-        # Legacy path (max-only hint, e.g. a pre-r11 saved catalog):
-        # the scale-relative threshold — max(absolute floor,
-        # whale_task_multiple × total_rows / shuffle_partitions).
+        conf = df.sparkSession.conf.get("spark.sql.shuffle.partitions")
         try:
-            parts = int(df.sparkSession.conf.get(
-                "spark.sql.shuffle.partitions"))
-        except Exception:
-            parts = 0
-        eff_threshold = whale_row_threshold
-        if total_rows_hint and parts > 0:
-            eff_threshold = max(
-                eff_threshold,
-                int(whale_task_multiple * total_rows_hint / parts))
-        self.effective_whale_threshold = eff_threshold
+            parts = int(conf)
+        except ValueError:  # e.g. "auto" on AQE-managed platforms
+            parts = df.sparkSession.sparkContext.defaultParallelism
 
         topk = sorted((int(c) for c in (group_rows_topk_hint or [])
                        if c and int(c) > 0), reverse=True)
@@ -764,7 +678,7 @@ class QueryPlan:
                 # whale_hard_cap_rows keeps its straggler-spill risk even
                 # sort-free.
                 self.auto_route_reason = "sorted_layout_window"
-            elif topk and total_rows_hint and parts > 0:
+            elif topk and total_rows_hint:
                 total = max(int(total_rows_hint), sum(topk))
                 base = (total - sum(topk)) / parts
                 bins = [base] * max(1, min(parts, len(topk)))
@@ -783,9 +697,6 @@ class QueryPlan:
                     route, self.auto_route_reason = True, "cost_model"
                 else:
                     self.auto_route_reason = "cost_model_window"
-            elif (max_group_rows_hint is not None
-                  and max_group_rows_hint > eff_threshold):
-                route, self.auto_route_reason = True, "legacy_threshold"
         if route:
             specs = list(self._seq_specs.values())
             if self._funnel_spec is not None:
@@ -798,28 +709,6 @@ class QueryPlan:
                 self.auto_routed_segmented = True
 
     # ------------------------------------------------------------------ #
-
-    def _use_fold(self, spec: SequenceSpec) -> bool:
-        """Strategy resolution. "auto" (default) → window-min anchors for
-        sequence conditions AND funnels, decided by measurement
-        (tools/scale_check.py on 10M/1M and 50M/5M streams): both shapes
-        are one data exchange (the groupBy reuses the window's hash
-        partitioning), so the contest is the window's codegen'd partition
-        sort vs the fold's interpreted aggregate-HOF over per-group
-        arrays — anchors win ~2× for conditions and ~3× for funnel step
-        counts (17.9 s vs 5.4 s at 50M rows), and on a bucketed+sorted
-        layout the sort is free, widening the gap.
-
-        Explicit ``"fold"`` forces the windowless aggregate fold (the
-        right shape when sequences share one groupBy pass with many
-        non-sequence conditions and the input isn't sorted); it rejects
-        ``rowFound: false``, which needs lookahead only anchors express.
-        """
-        if self.sequence_strategy == "fold" and not all(spec.row_found):
-            raise ValueError(
-                "sequence_strategy='fold' cannot express rowFound:false "
-                "steps (use fold_segmented: its anchor-chain form can)")
-        return self.sequence_strategy == "fold"
 
     def _use_segmented(self, spec: SequenceSpec) -> bool:
         """fold_segmented resolution. Since r11 it accepts EVERY spec:
@@ -881,8 +770,8 @@ class QueryPlan:
     def _df_with_condition_anchors(self) -> DataFrame:
         df = self.df
         for spec in self._seq_specs.values():
-            if not (self._use_fold(spec) or self._use_segmented(spec)):
-                # segmented specs must not attach anchors either: the
+            if not self._use_segmented(spec):
+                # segmented specs must not attach anchors: the
                 # window expressions are unreferenced (pruned today), but
                 # any consumer touching one would re-introduce the
                 # single-task whale sort this strategy exists to avoid
@@ -895,10 +784,10 @@ class QueryPlan:
         Single groupBy pass — Spark's partial/final HashAggregate replaces the
         reference's per-part results + invoker reduce (reference A12,
         ``common/tasks/query.py:84-134``). Sequence conditions attach
-        window-min anchors first by default (the groupBy reuses the
-        window's partitioning — still one data exchange; see
-        ``_use_fold``), or ride the pass as aggregate folds under
-        ``sequence_strategy="fold"``.
+        window-min anchors first (the groupBy reuses the window's
+        partitioning — still one data exchange), or, under
+        ``fold_segmented``, are evaluated as their own two-level
+        aggregation and joined back on the group key.
         """
         aggs = [F.count(F.lit(1)).alias(ROWS_COL)]
         segmented: list[int] = []
@@ -912,10 +801,7 @@ class QueryPlan:
                     # partitioning, no extra full-table exchange)
                     segmented.append(i)
                     continue
-                if self._use_fold(spec):
-                    flag = sequence_fold_flag(spec, self.df, self.ts_col)
-                else:
-                    flag = F.max(F.col(spec.last_anchor).isNotNull())
+                flag = F.max(F.col(spec.last_anchor).isNotNull())
             else:
                 flag = _target_flag(filters_to_column(cond), cond)
             aggs.append(F.coalesce(flag, F.lit(False)).alias(f"{COND_PREFIX}{i}"))
@@ -991,7 +877,7 @@ class QueryPlan:
         ``strategy="hash_join"``: the semi join with a ``shuffle_hash``
         hint — the big side shuffles but is NEVER sorted (the matched
         side builds per-partition hash tables). This is the
-        many-groups-match shape for FOLD-FAMILY sequence plans, whose
+        many-groups-match shape for SEGMENTED-FOLD sequence plans, whose
         condition flags aren't window-expressible without re-introducing
         the whale partition sort the fold was chosen to avoid; it keeps
         the window universe's no-big-sort property at the price of one
@@ -1017,8 +903,9 @@ class QueryPlan:
         """Join-free row universe: condition flags as window aggregates.
 
         Sequence conditions ride their anchor columns (window-computed
-        already); fold-strategy sequences would need collect_list windows,
-        so they fall back to the join path at the caller.
+        already); segmented-fold sequences would need the whale partition
+        sort that strategy avoids, so they take the join path at the
+        caller.
         """
         w = Window.partitionBy(self.group_col)
         df = self._df_with_condition_anchors()
@@ -1026,7 +913,7 @@ class QueryPlan:
         for i, cond in enumerate(self._conditions):
             if "sequence" in cond:
                 spec = self._seq_specs[i]
-                if self._use_fold(spec) or self._use_segmented(spec):
+                if self._use_segmented(spec):
                     raise ValueError(
                         "windowed row universe requires anchor-strategy "
                         f"sequences (sequence_strategy="
@@ -1099,10 +986,9 @@ class QueryPlan:
 
         Funnel anchors are per-group CONSTANTS, so this tiny frame carries
         everything any funnel output needs: group passed step i ⇔ done > i.
-        Foldable funnels (no ``rowFound:false``) compute ``done`` in the
-        groupBy itself — no window, no partition sort. Otherwise window
-        anchors are attached first and ``done`` counts non-null anchors
-        (valid because passing step i requires passing i-1).
+        Window anchors are attached first and ``done`` counts non-null
+        anchors (valid because passing step i requires passing i-1);
+        ``fold_segmented`` plans compute ``done`` with the segmented fold.
         """
         spec = self._funnel_spec
         if spec is None:
@@ -1112,11 +998,6 @@ class QueryPlan:
             return sequence_fold_done_segmented(
                 spec, rows, self.group_col, self.ts_col,
                 self.fold_segments, bounds=self._segment_bounds(spec))
-        if self._use_fold(spec):
-            return rows.groupBy(self.group_col).agg(
-                F.count(F.lit(1)).alias(ROWS_COL),
-                sequence_fold_done(spec, rows, self.ts_col).alias(DONE_COL),
-            )
         anchored = with_sequence_anchors(rows, spec, self.group_col, self.ts_col)
         pg = anchored.groupBy(self.group_col).agg(
             F.count(F.lit(1)).alias(ROWS_COL),
@@ -1173,7 +1054,7 @@ class QueryPlan:
         whole universe.
 
         ``step_strategy="hash_join"``: the semi join with a
-        ``shuffle_hash`` hint — the fold-family twin of "window" (see
+        ``shuffle_hash`` hint — the segmented-fold twin of "window" (see
         ``rows_of_matching_groups``): universe shuffled, never sorted.
         """
         spec = self._funnel_spec
@@ -1182,8 +1063,8 @@ class QueryPlan:
         rows = self.rows_of_matching_groups(universe_strategy,
                                             matched=matched)
         if step_strategy == "window":
-            if self._use_fold(spec) or self._use_segmented(spec):
-                # fold_segmented must refuse too, not silently attach
+            if self._use_segmented(spec):
+                # fold_segmented must refuse, not silently attach
                 # anchors — that window sort is the whale cliff this
                 # strategy exists to avoid
                 raise ValueError(

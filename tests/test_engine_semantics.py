@@ -587,7 +587,8 @@ def test_matching_group_ids_export(spark, sdf, tmp_path):
 
 
 def test_sequence_strategies_agree(spark, sdf, seq_df):
-    """fold (default) and window strategies must produce identical results."""
+    """fold_segmented and window (default) strategies must produce
+    identical results."""
     from funnel_rocket_spark.engine import QueryEngine
     from funnel_rocket_spark.planner.compiler import QueryPlan
 
@@ -603,33 +604,16 @@ def test_sequence_strategies_agree(spark, sdf, seq_df):
     ]
     for q in queries:
         expanded = eng.expand(q, seq_df)
-        fold = QueryPlan(seq_df, expanded, "id", "timestamp",
-                         sequence_strategy="fold").counts().collect()
+        seg = QueryPlan(seq_df, expanded, "id", "timestamp",
+                        sequence_strategy="fold_segmented").counts().collect()
         window = QueryPlan(seq_df, expanded, "id", "timestamp",
                            sequence_strategy="window").counts().collect()
-        assert fold == window, q
-
-
-def test_fold_rejects_row_found_false(seq_df):
-    from funnel_rocket_spark.engine import QueryEngine
-    from funnel_rocket_spark.planner.compiler import QueryPlan
-    import pytest as _pytest
-
-    eng = QueryEngine("id", "timestamp")
-    q = {"query": {"conditions": [{"sequence": [
-        {"filter": ["category", "==", 0]},
-        {"filter": ["category", "==", 1], "rowFound": False}]}]}}
-    expanded = eng.expand(q, seq_df)
-    # auto silently falls back to window; explicit fold refuses
-    QueryPlan(seq_df, expanded, "id", "timestamp").counts().collect()
-    with _pytest.raises(ValueError):
-        QueryPlan(seq_df, expanded, "id", "timestamp",
-                  sequence_strategy="fold").counts()
+        assert seg == window, q
 
 
 def test_funnel_strategies_agree(spark, seq_df):
-    """Funnel step counts via the fold fast-path (done > i) must equal the
-    window-anchor path (anchor i non-null) step by step."""
+    """Funnel step counts via the segmented fold (done > i) must equal
+    the window-anchor path (anchor i non-null) step by step."""
     from funnel_rocket_spark.engine import QueryEngine
     from funnel_rocket_spark.planner.compiler import QueryPlan
 
@@ -645,15 +629,15 @@ def test_funnel_strategies_agree(spark, seq_df):
     for fn in funnels:
         q = {"query": {}, "funnel": fn}
         expanded = eng.expand(q, seq_df)
-        fold = QueryPlan(seq_df, expanded, "id", "timestamp",
-                         sequence_strategy="fold"
-                         ).funnel_step_counts().collect()
+        seg = QueryPlan(seq_df, expanded, "id", "timestamp",
+                        sequence_strategy="fold_segmented"
+                        ).funnel_step_counts().collect()
         window = QueryPlan(seq_df, expanded, "id", "timestamp",
                            sequence_strategy="window"
                            ).funnel_step_counts().collect()
         key = lambda rs: [(r["step"], r["matching_groups"],
                            r["matching_group_rows"]) for r in rs]
-        assert key(fold) == key(window), fn
+        assert key(seg) == key(window), fn
 
 
 def test_kitchen_sink_query(spark):
@@ -748,12 +732,12 @@ def test_kitchen_sink_query(spark):
 
 def test_fold_segmented_equals_other_strategies(spark, seq_df):
     """The segmented fold (per-(group, ts-range-segment) partial folds +
-    exit-table merge) must equal window AND fold exactly — on the tiny
-    fixture, on a seeded random stream with HEAVY timestamp ties (ties
-    stress the bucket-assignment invariant: tied ts must never split
-    across segments, or strict-> entry anchors would be wrong), and
-    across segment counts including the degenerate n_segments=1 (= the
-    plain fold) and n_segments far above the distinct-ts count."""
+    exit-table merge) must equal window exactly — on the tiny fixture,
+    on a seeded random stream with HEAVY timestamp ties (ties stress the
+    bucket-assignment invariant: tied ts must never split across
+    segments, or strict-> entry anchors would be wrong), and across
+    segment counts including the degenerate n_segments=1 (one
+    whole-group fold) and n_segments far above the distinct-ts count."""
     import random
 
     from funnel_rocket_spark.engine import QueryEngine
@@ -793,9 +777,6 @@ def test_fold_segmented_equals_other_strategies(spark, seq_df):
         expanded = eng2.expand(q, big)
         window = QueryPlan(big, expanded, "id", "timestamp",
                            sequence_strategy="window").counts().collect()
-        fold = QueryPlan(big, expanded, "id", "timestamp",
-                         sequence_strategy="fold").counts().collect()
-        assert fold == window, q
         for n_seg in (1, 4, 64):
             seg = QueryPlan(big, expanded, "id", "timestamp",
                             sequence_strategy="fold_segmented",
@@ -820,10 +801,10 @@ def test_fold_segmented_equals_other_strategies(spark, seq_df):
 
 
 def test_fold_segmented_rejects_unsupported(seq_df):
-    """Plain fold still refuses rowFound:false loudly (the shared-scan
-    fold has no lookahead); fold_segmented takes the anchor-chain form
+    """fold_segmented takes the anchor-chain form for rowFound:false
     since r11 and must MATCH the window path instead of raising; unknown
-    strategy names refused at construction."""
+    strategy names (including the removed whole-group ``"fold"``) are
+    refused at construction."""
     import pytest as _pytest
 
     from funnel_rocket_spark.engine import QueryEngine
@@ -834,31 +815,33 @@ def test_fold_segmented_rejects_unsupported(seq_df):
         {"filter": ["category", "==", 0]},
         {"filter": ["category", "==", 1], "rowFound": False}]}]}}
     expanded = eng.expand(qr, seq_df)
-    with _pytest.raises(ValueError, match="rowFound"):
-        QueryPlan(seq_df, expanded, "id", "timestamp",
-                  sequence_strategy="fold").counts()
-
     ref = QueryPlan(seq_df, expanded, "id", "timestamp",
                     sequence_strategy="window").counts().collect()
     got = QueryPlan(seq_df, expanded, "id", "timestamp",
                     sequence_strategy="fold_segmented").counts().collect()
     assert got == ref
 
-    with _pytest.raises(ValueError, match="sequence_strategy"):
-        QueryPlan(seq_df, eng.expand({"query": {}}, seq_df), "id",
-                  "timestamp", sequence_strategy="nope")
+    for name in ("nope", "fold"):
+        with _pytest.raises(ValueError, match="sequence_strategy"):
+            QueryPlan(seq_df, eng.expand({"query": {}}, seq_df), "id",
+                      "timestamp", sequence_strategy=name)
 
 
 def test_auto_strategy_whale_routing(spark, seq_df):
-    """sequence_strategy="auto" + a max_group_rows_hint past the whale
-    threshold routes to the segmented fold — same counts, no flag. No
-    hint (or a small one) keeps window anchors; since r11 EVERY spec
-    shape is segmentable (maxDuration via the first-anchor join,
-    rowFound:false via the anchor chain) so whale hints route them all;
-    the engine threads Dataset.max_group_rows through run()."""
+    """sequence_strategy="auto" + a group-size histogram whose whale
+    dominates the modeled window task routes to the segmented fold —
+    same counts, no flag. No hint (or small groups) keeps window
+    anchors; since r11 EVERY spec shape is segmentable (maxDuration via
+    the first-anchor join, rowFound:false via the anchor chain) so whale
+    hints route them all; the engine threads Dataset.group_rows_topk
+    through run()."""
     from funnel_rocket_spark.engine import QueryEngine
     from funnel_rocket_spark.planner.compiler import QueryPlan
 
+    # premium pinned low so the crossover is reachable at the test's
+    # partition count (see test_histogram_cost_model_routing)
+    whale = dict(group_rows_topk_hint=[95_000_000], total_rows_hint=10**8,
+                 segmented_cost_premium=1.5)
     eng = QueryEngine("id", "timestamp")
     q = {"query": {"conditions": [{"sequence": [
         {"filter": ["category", "==", 0]},
@@ -868,8 +851,7 @@ def test_auto_strategy_whale_routing(spark, seq_df):
     baseline = QueryPlan(seq_df, expanded, "id", "timestamp",
                          sequence_strategy="window").counts().collect()
 
-    routed = QueryPlan(seq_df, expanded, "id", "timestamp",
-                       max_group_rows_hint=10_000, whale_row_threshold=100)
+    routed = QueryPlan(seq_df, expanded, "id", "timestamp", **whale)
     assert routed.sequence_strategy == "fold_segmented"
     assert routed.auto_routed_segmented
     assert routed.counts().collect() == baseline
@@ -877,10 +859,10 @@ def test_auto_strategy_whale_routing(spark, seq_df):
     for plan in (
         QueryPlan(seq_df, expanded, "id", "timestamp"),  # no hint
         QueryPlan(seq_df, expanded, "id", "timestamp",   # small groups
-                  max_group_rows_hint=99, whale_row_threshold=100),
+                  group_rows_topk_hint=[99], total_rows_hint=10**8,
+                  segmented_cost_premium=1.5),
         QueryPlan(seq_df, expanded, "id", "timestamp",   # explicit window
-                  sequence_strategy="window",
-                  max_group_rows_hint=10_000, whale_row_threshold=100),
+                  sequence_strategy="window", **whale),
     ):
         assert plan.sequence_strategy in ("auto", "window")
         assert not plan.auto_routed_segmented
@@ -890,7 +872,7 @@ def test_auto_strategy_whale_routing(spark, seq_df):
         {"filter": ["category", "==", 0]},
         {"filter": ["category", "==", 1]}], "maxDuration": 3}]}}
     plan = QueryPlan(seq_df, eng.expand(qd, seq_df), "id", "timestamp",
-                     max_group_rows_hint=10_000, whale_row_threshold=100)
+                     **whale)
     assert plan.auto_routed_segmented
     ref = QueryPlan(seq_df, eng.expand(qd, seq_df), "id", "timestamp",
                     sequence_strategy="window").counts().collect()
@@ -902,7 +884,7 @@ def test_auto_strategy_whale_routing(spark, seq_df):
         {"filter": ["category", "==", 0]},
         {"filter": ["category", "==", 1], "rowFound": False}]}]}}
     plan = QueryPlan(seq_df, eng.expand(qr, seq_df), "id", "timestamp",
-                     max_group_rows_hint=10_000, whale_row_threshold=100)
+                     **whale)
     assert plan.auto_routed_segmented
     ref = QueryPlan(seq_df, eng.expand(qr, seq_df), "id", "timestamp",
                     sequence_strategy="window").counts().collect()
@@ -914,11 +896,14 @@ def test_auto_strategy_whale_routing(spark, seq_df):
         {"filter": ["category", ">=", 0]},
         {"filter": ["category", "<=", 2]}]}}
     fplan = QueryPlan(seq_df, eng.expand(fq, seq_df), "id", "timestamp",
-                      max_group_rows_hint=10_000, whale_row_threshold=100)
+                      **whale)
     assert fplan.auto_routed_segmented
     ref = eng.run(seq_df, fq)
-    got = eng.run(seq_df, fq, max_group_rows=10**9)
-    assert got == ref
+    got = eng.run(seq_df, fq, with_stats=True, total_rows=10**8,
+                  group_rows_topk=[95_000_000], segmented_cost_premium=1.5)
+    assert got["stats"]["strategies"]["autoRoutedSegmented"]
+    assert got["funnel"] == ref["funnel"]
+    assert got["query"] == ref["query"]
 
 
 def test_fold_segmented_max_duration_equals_window(spark, seq_df):
@@ -940,9 +925,6 @@ def test_fold_segmented_max_duration_equals_window(spark, seq_df):
         expanded = eng.expand(q, seq_df)
         window = QueryPlan(seq_df, expanded, "id", "timestamp",
                            sequence_strategy="window").counts().collect()
-        fold = QueryPlan(seq_df, expanded, "id", "timestamp",
-                         sequence_strategy="fold").counts().collect()
-        assert fold == window, dur
         for n_seg in (1, 3, 64):
             seg = QueryPlan(seq_df, expanded, "id", "timestamp",
                             sequence_strategy="fold_segmented",
@@ -978,9 +960,6 @@ def test_fold_segmented_max_duration_equals_window(spark, seq_df):
         expanded = eng.expand(q, big)
         window = QueryPlan(big, expanded, "id", "timestamp",
                            sequence_strategy="window").counts().collect()
-        fold = QueryPlan(big, expanded, "id", "timestamp",
-                         sequence_strategy="fold").counts().collect()
-        assert fold == window, q
         for n_seg in (1, 4, 64):
             seg = QueryPlan(big, expanded, "id", "timestamp",
                             sequence_strategy="fold_segmented",
@@ -1071,60 +1050,12 @@ def test_anchor_chain_equals_window_for_absence_steps(spark):
                   ).funnel_step_counts().collect()
     assert key(s) == key(w)
 
-    # plain fold still rejects absence steps (no lookahead)
-    with pytest.raises(ValueError, match="rowFound"):
-        QueryPlan(df, eng.expand({"query": {"conditions": [cases[0]]}}, df),
-                  "id", "timestamp",
-                  sequence_strategy="fold").counts().collect()
-
-
-def test_whale_threshold_scales_with_dataset(spark, seq_df):
-    """The routing threshold is relative when total rows are known: a
-    'whale' that is small relative to a task's uniform share must NOT
-    route (at 1T rows a 5M group is noise), while one several times the
-    per-task share still does. effective = max(absolute floor,
-    whale_task_multiple × total_rows / shuffle_partitions)."""
-    from funnel_rocket_spark.engine import QueryEngine
-    from funnel_rocket_spark.planner.compiler import QueryPlan
-
-    eng = QueryEngine("id", "timestamp")
-    q = {"query": {"conditions": [{"sequence": [
-        {"filter": ["category", "==", 0]},
-        {"filter": ["category", "<=", 2]}]}]}}
-    expanded = eng.expand(q, seq_df)
-    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    # hint 10k > absolute floor 100, but the dataset is "huge": per-task
-    # share = 10M/parts, ×4 multiple >> 10k -> stays window
-    plan = QueryPlan(seq_df, expanded, "id", "timestamp",
-                     max_group_rows_hint=10_000, whale_row_threshold=100,
-                     total_rows_hint=10_000_000)
-    assert not plan.auto_routed_segmented
-    assert plan.effective_whale_threshold == max(100, 4 * 10_000_000 // parts)
-
-    # same hint, tiny dataset: relative term is below the floor -> routes
-    plan = QueryPlan(seq_df, expanded, "id", "timestamp",
-                     max_group_rows_hint=10_000, whale_row_threshold=100,
-                     total_rows_hint=parts)  # per-task share = 1 row
-    assert plan.auto_routed_segmented
-
-    # no total hint: absolute floor alone (back-compat)
-    plan = QueryPlan(seq_df, expanded, "id", "timestamp",
-                     max_group_rows_hint=10_000, whale_row_threshold=100)
-    assert plan.auto_routed_segmented
-    assert plan.effective_whale_threshold == 100
-
-    # engine threads total_rows through run()
-    ref = eng.run(seq_df, q)
-    assert eng.run(seq_df, q, max_group_rows=10**9,
-                   total_rows=10**12) == ref
-
 
 def test_histogram_cost_model_routing(spark, seq_df):
     """With the r11 histogram hint (group_rows_topk + total rows) auto
     routing is a COST MODEL — estimated slowest window task (greedy
     whale packing over the uniform remainder) vs the segmented fold's
-    bounded task × the measured per-row premium — not the binary
+    bounded task × the measured per-row premium. It replaced a binary
     max>threshold test that over-routed the r10 rung's 20M whale
     (window sort 23.2s vs segmented 73.5s)."""
     from funnel_rocket_spark.engine import QueryEngine
@@ -1140,22 +1071,15 @@ def test_histogram_cost_model_routing(spark, seq_df):
     def plan(**kw):
         return QueryPlan(seq_df, expanded, "id", "timestamp", **kw)
 
-    # the r10 rung shape: 20M whale in 100M rows. The old threshold
+    # the r10 rung shape: 20M whale in 100M rows. A max-only threshold
     # test routed it; the cost model must NOT (window task ≈ uniform
     # share + whale << premium × segmented task bound).
-    p = plan(group_rows_topk_hint=[20_000_000], total_rows_hint=10**8,
-             max_group_rows_hint=20_000_000)
+    p = plan(group_rows_topk_hint=[20_000_000], total_rows_hint=10**8)
     assert not p.auto_routed_segmented
     assert p.auto_route_reason == "cost_model_window"
     est = p.route_estimates
     assert est["window_task_rows"] == int(80_000_000 / parts) + 20_000_000
     assert est["segmented_task_rows"] == int(10**8 / parts + 20_000_000 / 64)
-
-    # ...while the legacy max-only hint still routes once past its
-    # threshold (pre-r11 catalog: no histogram to model cost from)
-    legacy = plan(max_group_rows_hint=20_000_000)
-    assert legacy.auto_routed_segmented
-    assert legacy.auto_route_reason == "legacy_threshold"
 
     # a whale that dominates modeled wall-clock routes (premium pinned
     # low so the crossover is reachable at the test's partition count)
@@ -1179,22 +1103,55 @@ def test_histogram_cost_model_routing(spark, seq_df):
     p = plan(group_rows_topk_hint=[3 * 10**9], total_rows_hint=6 * 10**9)
     assert p.auto_routed_segmented and p.auto_route_reason == "hard_cap"
 
-    # histogram without total rows can't model cost -> legacy fallback
+    # histogram without total rows can't model cost -> window anchors
     p = plan(group_rows_topk_hint=[10**9])
     assert not p.auto_routed_segmented
+    assert p.auto_route_reason is None
 
     # engine threads the histogram + its knobs through run(); stats
     # expose the decision inputs; routing never changes answers
     tuned = QueryEngine("id", "timestamp", segmented_cost_premium=1.5)
     ref = tuned.run(seq_df, q, with_stats=True)
-    got = tuned.run(seq_df, q, with_stats=True, max_group_rows=95_000_000,
-                    total_rows=10**8, group_rows_topk=[95_000_000])
+    got = tuned.run(seq_df, q, with_stats=True, total_rows=10**8,
+                    group_rows_topk=[95_000_000])
     assert got["query"] == ref["query"]
     st = got["stats"]["strategies"]
     assert st["sequence"] == "fold_segmented"
     assert st["autoRouteReason"] == "cost_model"
     assert st["groupRowsTopkHint"] == [95_000_000]
     assert st["routeEstimates"]["premium"] == 1.5
+
+
+def test_cost_model_routes_when_shuffle_partitions_is_auto(spark, seq_df,
+                                                          monkeypatch):
+    """spark.sql.shuffle.partitions may be a non-integer ("auto" on
+    AQE-managed platforms). The cost model must then fall back to the
+    context's default parallelism, not silently switch whale routing
+    off."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from funnel_rocket_spark.engine import QueryEngine
+    from funnel_rocket_spark.planner.compiler import QueryPlan
+
+    eng = QueryEngine("id", "timestamp")
+    expanded = eng.expand({"query": {"conditions": [{"sequence": [
+        {"filter": ["category", "==", 0]},
+        {"filter": ["category", "<=", 2]}]}]}}, seq_df)
+    real_get = RuntimeConfig.get
+
+    def fake_get(self, key, *args, **kwargs):
+        if key == "spark.sql.shuffle.partitions":
+            return "auto"
+        return real_get(self, key, *args, **kwargs)
+
+    monkeypatch.setattr(RuntimeConfig, "get", fake_get)
+    p = QueryPlan(seq_df, expanded, "id", "timestamp",
+                  group_rows_topk_hint=[95_000_000], total_rows_hint=10**8,
+                  segmented_cost_premium=1.5)
+    assert p.auto_routed_segmented and p.auto_route_reason == "cost_model"
+    parts = spark.sparkContext.defaultParallelism
+    assert p.route_estimates["segmented_task_rows"] == int(
+        10**8 / parts + 95_000_000 / 64)
 
 
 def test_sorted_layout_hint_keeps_window_anchors(spark, seq_df):
@@ -1230,10 +1187,6 @@ def test_sorted_layout_hint_keeps_window_anchors(spark, seq_df):
              sorted_layout_hint=True)
     assert p.auto_routed_segmented and p.auto_route_reason == "hard_cap"
 
-    # the legacy max-only hint is also overridden
-    p = plan(max_group_rows_hint=20_000_000, sorted_layout_hint=True)
-    assert not p.auto_routed_segmented
-
     # engine derives the hint from the catalog layout record; only the
     # (bucket=group, sort=(group, ts)) shape qualifies
     assert eng._sorted_layout({"buckets": 4, "bucket_columns": ["id"],
@@ -1252,7 +1205,7 @@ def test_stats_expose_chosen_strategies(spark, seq_df):
     decision must be auditable from the result JSON alone."""
     from funnel_rocket_spark.engine import QueryEngine
 
-    eng = QueryEngine("id", "timestamp", whale_row_threshold=100)
+    eng = QueryEngine("id", "timestamp", segmented_cost_premium=1.5)
     q = {"query": {"conditions": [{"sequence": [
         {"filter": ["category", "==", 0]},
         {"filter": ["category", "<=", 2]}]}],
@@ -1261,11 +1214,13 @@ def test_stats_expose_chosen_strategies(spark, seq_df):
     st = res["stats"]["strategies"]
     assert st["sequence"] == "auto" and not st["autoRoutedSegmented"]
     assert st["rowUniverse"] == "join"
-    assert st["effectiveWhaleThreshold"] == 100
+    assert st["autoRouteReason"] is None
 
-    routed = eng.run(seq_df, q, with_stats=True, max_group_rows=10**9)
+    routed = eng.run(seq_df, q, with_stats=True, total_rows=10**8,
+                     group_rows_topk=[95_000_000])
     st2 = routed["stats"]["strategies"]
     assert st2["sequence"] == "fold_segmented" and st2["autoRoutedSegmented"]
-    assert st2["maxGroupRowsHint"] == 10**9
+    assert st2["autoRouteReason"] == "cost_model"
+    assert st2["groupRowsTopkHint"] == [95_000_000]
     # routing never changes answers
     assert routed["query"] == res["query"]

@@ -132,26 +132,6 @@ def test_denorm_join_broadcasts(spark):
     )
 
 
-def test_funnel_fold_path_has_no_window_sort(events, engine):
-    """The explicit fold strategy must NOT pay a partition sort: the
-    steps-done count rides the groupBy (fold aggregate), so the physical
-    plan contains no Window node and no Sort beyond what groupBy needs
-    (none). (The DEFAULT is window anchors — measured ~3× faster at 50M
-    rows — but the fold's window-free guarantee is what makes it worth
-    keeping as an option, so gate it.)"""
-    from funnel_rocket_spark.planner.compiler import QueryPlan
-
-    q = {"query": {}, "funnel": {"sequence": [
-        {"filter": ["event_type", "==", "view"]},
-        {"filter": ["event_type", "==", "purchase"]}]}}
-    plan = QueryPlan(events, engine.plan(events, q).expanded,
-                     "user_id", "ts", sequence_strategy="fold")
-    explained = plan.funnel_step_counts()._sc._jvm.PythonSQLUtils.explainString(
-        plan.funnel_step_counts()._jdf.queryExecution(), "simple")
-    assert "Window" not in explained, explained
-    assert "Sort" not in explained, explained
-
-
 def test_funnel_default_single_data_exchange(events, engine):
     """Default (window-anchor) funnel: the anchors window and the
     per-group aggregate share ONE data exchange on the group key, plus
@@ -424,14 +404,16 @@ def test_segmented_max_duration_plan_is_window_free(events, engine):
         counts._jdf.queryExecution(), "simple")
     assert "Window" not in explained, explained
     assert "partial_count" in explained or "HashAggregate" in explained
-    # and the auto-routed twin compiles to the same strategy
+    # and the auto-routed twin (a stall-scale whale in the group-size
+    # histogram) compiles to the same strategy
     routed = QueryPlan(events, engine.expand(bq_mod.Q_SEQ_MAXDUR, events),
-                       "user_id", "ts", max_group_rows_hint=10**9)
+                       "user_id", "ts", group_rows_topk_hint=[3 * 10**9],
+                       total_rows_hint=6 * 10**9)
     assert routed.sequence_strategy == "fold_segmented"
 
 
 def test_fold_family_universe_hash_join_never_sorts_big_side(events, engine):
-    """Fold-family plans can't window their row universe (flags aren't
+    """Segmented-fold plans can't window their row universe (flags aren't
     window-expressible without the whale sort), so the many-groups-match
     shape is the shuffle_hash semi join: the big side must hash, never
     sort-merge — and values must equal the plain join universe."""

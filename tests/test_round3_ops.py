@@ -951,7 +951,8 @@ def test_windowed_universe_rejects_fold_sequences(spark):
     ev = bq.ts_ns(bq.load_table(spark, SF, "events"))
     eng = QueryEngine("user_id", "ts")
     expanded = eng.expand(UNIVERSE_QUERIES[5], ev)
-    plan = QueryPlan(ev, expanded, "user_id", "ts", sequence_strategy="fold")
+    plan = QueryPlan(ev, expanded, "user_id", "ts",
+                     sequence_strategy="fold_segmented")
     with pytest.raises(ValueError, match="anchor"):
         plan.rows_of_matching_groups(strategy="window").collect()
 

@@ -1,14 +1,16 @@
-"""Interleaved A/B harness (r13): candidate vs control in ONE Spark
-session, alternating runs (ABAB...), min-of-N each — the only
-measurement this sandbox's ambient drift cannot fool (see
-OPTIMIZATION_r12.md's measurement honesty note).
+"""Interleaved A/B harness: candidate vs control in ONE Spark session,
+alternating runs (ABAB...), min-of-N each — the only measurement that
+ambient host drift cannot fool (see OPTIMIZATION_r12.md's measurement
+honesty note).
 
 Usage:
-    python tools/ab_r13.py --env FRS_SPREAD_MODE --a '' --b rr \
-        --runs 3 query [query ...]
+    python tools/ab.py --env spark.sql.adaptive.coalescePartitions.enabled \
+        --a true --b false --runs 3 query [query ...]
 
---a/--b are values for the toggle env var (empty string = unset).
-Variant A is the CANDIDATE (new behavior), B the CONTROL.
+--env names the toggle: a runtime Spark SQL conf (``spark.*``) or an
+environment variable the queries read. --a/--b are its values (empty
+string = unset). Variant A is the CANDIDATE (new behavior), B the
+CONTROL.
 """
 
 from __future__ import annotations
@@ -35,7 +37,7 @@ def main() -> None:
                                                    "/root/testdata/sf0.1"))
     args = ap.parse_args()
 
-    spark = get_spark(app_name="frs-ab-r13")
+    spark = get_spark(app_name="frs-ab")
     spark.sparkContext.setLogLevel("ERROR")
     all_q = benchqueries.queries()
     all_q.update(getattr(benchqueries, "BENCH_VARIANTS", {}))

@@ -906,17 +906,16 @@ def _gc_between_runs(spark) -> None:
 
 def whale_main(n_rows: int, whale_every: int = 5) -> None:
     """Round-9 rung: WHALE-GROUP skew for the per-group sequence/funnel
-    paths. Both strategies partition by group (window sort or
-    collect_list fold), so one bot group holding 1/whale_every of a
-    100M-row stream serializes into a single task — the reference had
-    the same property (group-per-file invariant), but the engine should
-    PROVE the behavior rather than assume it: the window path's
-    partition sort is an EXTERNAL sort (spills, finishes); the fold
-    path's collect_list buffers the whale group as one in-memory array
-    (the known cliff — measured here, not hidden).
+    paths. The window path partitions by group, so one bot group holding
+    1/whale_every of a 100M-row stream serializes into a single task —
+    the reference had the same property (group-per-file invariant), but
+    the engine should PROVE the behavior rather than assume it: the
+    window path's partition sort is an EXTERNAL sort (spills, finishes);
+    the segmented fold splits the whale across ts-range segments; auto
+    picks between them from the group-size histogram.
 
-    Prints timings for sequence-3step and funnel-step-counts under both
-    strategies on (uniform, whale) streams of the same size, the skew
+    Prints timings for each query under window, fold_segmented and auto
+    on (uniform, whale) streams of the same size, the skew
     factor (whale/uniform), and cross-strategy equality of every result
     on the whale stream."""
     n_groups = max(1, n_rows // 100)  # mean group ≈ 100 events
@@ -979,16 +978,13 @@ def whale_main(n_rows: int, whale_every: int = 5) -> None:
         topk = [r["c"] for r in
                 (ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("c"))
                  .orderBy(F.desc("c")).limit(16).collect())]
-        hint = topk[0] if topk else None
-        out[f"max_group_rows.{dist}"] = hint
+        out[f"max_group_rows.{dist}"] = topk[0] if topk else None
         out[f"group_rows_topk.{dist}"] = topk[:3]
 
         def run_once(strat, qname, q, record_route):
             expanded = eng.expand(q, ev)
             plan = QueryPlan(ev, expanded, "user_id", "ts",
                              sequence_strategy=strat,
-                             max_group_rows_hint=(
-                                 hint if strat == "auto" else None),
                              total_rows_hint=(
                                  n_rows if strat == "auto" else None),
                              group_rows_topk_hint=(
@@ -1049,9 +1045,8 @@ def whale_main(n_rows: int, whale_every: int = 5) -> None:
         print(f"# {dist}: warm-up {time.perf_counter()-t0:.1f}s",
               file=sys.stderr)
         combos = [(strat, qname, q)
-                  for strat in ("window", "fold", "fold_segmented", "auto")
-                  for qname, q in qlist
-                  if not (qname == "sequence_absence" and strat == "fold")]
+                  for strat in ("window", "fold_segmented", "auto")
+                  for qname, q in qlist]
         for rnd, order in enumerate((combos, list(reversed(combos)))):
             for strat, qname, q in order:
                 key = f"{dist}.{qname}.{strat}"
@@ -1078,13 +1073,13 @@ def whale_main(n_rows: int, whale_every: int = 5) -> None:
     for dist in ("uniform", "whale"):
         for qname in qnames:
             vals = [out["results"].get(f"{dist}.{qname}.{s_}")
-                    for s_ in ("window", "fold", "fold_segmented", "auto")
+                    for s_ in ("window", "fold_segmented", "auto")
                     if f"{dist}.{qname}.{s_}" in out["results"]]
             out["equal"][f"{dist}.{qname}"] = (
                 all(v == vals[0] for v in vals)
                 and not isinstance(vals[0], str))
     out["skew_factor"] = {}
-    for strat in ("window", "fold", "fold_segmented", "auto"):
+    for strat in ("window", "fold_segmented", "auto"):
         for qname in qnames:
             u = out["timings"].get(f"uniform.{qname}.{strat}")
             w = out["timings"].get(f"whale.{qname}.{strat}")
@@ -1097,7 +1092,7 @@ def whale_main(n_rows: int, whale_every: int = 5) -> None:
     for dist in ("uniform", "whale"):
         for qname in qnames:
             best = min((out["timings"].get(f"{dist}.{qname}.{s}") or 1e18)
-                       for s in ("window", "fold", "fold_segmented"))
+                       for s in ("window", "fold_segmented"))
             a = out["timings"].get(f"{dist}.{qname}.auto")
             out["auto_vs_best"][f"{dist}.{qname}"] = (
                 round(a / best, 2) if a and best < 1e18 else None)
@@ -1321,7 +1316,7 @@ def bucketed_main(n_rows: int, whale_every: int = 5) -> None:
 def universe_main(n_rows: int) -> None:
     """Round-11 rung: the MANY-GROUPS-MATCH row universe across sequence
     strategies. Anchor-strategy plans get the join-free windowed
-    universe; fold-family plans can't (their flags aren't
+    universe; segmented-fold plans can't (their flags aren't
     window-expressible without the whale sort), so past the broadcast
     threshold they take the shuffle_hash semi join — this rung measures
     that path against both the windowed universe (the bar: within
@@ -1353,9 +1348,9 @@ def universe_main(n_rows: int) -> None:
     variants = {
         # engine's anchor-strategy pick: windowed universe (the bar)
         "window.window_universe": (0, "window"),
-        # fold-family before r11: forced sort-merge semi join
+        # segmented fold before r11: forced sort-merge semi join
         "fold_segmented.join_universe": (2**62, "fold_segmented"),
-        # fold-family r11: shuffle_hash semi join
+        # segmented fold r11: shuffle_hash semi join
         "fold_segmented.hash_join_universe": (0, "fold_segmented"),
     }
     out = {"n_rows": n_rows, "n_groups": n_groups, "timings": {},
