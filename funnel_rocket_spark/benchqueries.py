@@ -310,12 +310,15 @@ def _funnel_steps_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _funnel_step_agg_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """countPerValue(event_type) over rows of groups passing funnel step 1
-    (W2 stepAggregations through the real plan path)."""
+    (W2 stepAggregations through the engine's path: every step from the
+    labeled universe in one job, step 1 selected)."""
     df = load_table(spark, sf_dir, "events")
-    plan = _engine().plan(df, Q_FUNNEL)
-    step_rows = plan.funnel_step_rows(1)
-    return plan.aggregation_df(
-        {"column": "event_type", "type": "countPerValue", "top": 10}, step_rows)
+    agg = {"column": "event_type", "type": "countPerValue", "top": 10}
+    plan = _engine().plan(df, {"funnel": {**Q_FUNNEL["funnel"],
+                                          "stepAggregations": [agg]}})
+    steps = list(range(len(Q_FUNNEL["funnel"]["sequence"])))
+    return (plan.funnel_aggregation_df(agg, plan.funnel_labeled(), steps)
+            .filter(F.col("step") == 1).select("value", "count"))
 
 
 Q_SEQ_MULTIFILTER = {"query": {"conditions": [{"sequence": [

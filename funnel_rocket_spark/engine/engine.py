@@ -19,7 +19,7 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
-from funnel_rocket_spark.planner.compiler import QueryPlan
+from funnel_rocket_spark.planner.compiler import DEFAULT_TOP_COUNT, QueryPlan
 from funnel_rocket_spark.validation.validator import ExpandedQuery, expand_and_validate
 
 
@@ -166,6 +166,7 @@ class QueryEngine:
         rows = None
         rows_persisted = False
         rows_strategy = None
+        funnel_strategy = None
         metrics_mgr = None
         if with_stats:
             metrics_mgr = JobGroupMetrics(df.sparkSession)
@@ -183,9 +184,13 @@ class QueryEngine:
                 # by n_groups, column-pruned to (group, __fr_rows, flags).
                 matched = plan.matched_groups()
                 matched.persist(StorageLevel.MEMORY_AND_DISK)
-            counts = plan.counts(matched).collect()[0]
+            # without conditions or query aggregations nothing routes on
+            # the count, and the funnel's counts collect returns it
+            counts = (plan.counts(matched).collect()[0]
+                      if funnel is None or plan._conditions or query_aggs
+                      else None)
             if query_aggs:  # the universe feeds query aggregations only;
-                # the funnel branch derives its own per-group frame
+                # the funnel branch derives its own labeled universe
                 # adaptive universe: the matched-group count is already in
                 # hand. A small set → semi join (AQE broadcasts it); a set
                 # too big to broadcast would sort-merge the whole table, so
@@ -225,108 +230,21 @@ class QueryEngine:
                     # 13 s at 100M rows on the window path)
                     rows.persist(StorageLevel.MEMORY_AND_DISK)
                     rows_persisted = True
+            funnel_block = None
+            if funnel is not None:
+                funnel_block, totals, funnel_strategy = self._run_funnel(
+                    plan, matched,
+                    None if counts is None else counts["matching_groups"])
+                if counts is None:
+                    counts = totals
             result: dict = {
                 "query": {
                     "matchingGroups": counts["matching_groups"],
                     "matchingGroupRows": counts["matching_group_rows"],
                     "aggregations": self._collect_aggregations(plan, query_aggs, rows),
-                }
+                },
+                "funnel": funnel_block,
             }
-
-            if funnel is not None:
-                # the funnel universe reuses the adaptive policy: windowed
-                # condition flags when the matched-group set is beyond
-                # broadcast scale; segmented-fold plans take the
-                # shuffle_hash semi join there instead (no big-side sort)
-                anchors_ok = not (
-                    (plan._seq_specs or plan._funnel_spec is not None)
-                    and plan.sequence_strategy == "fold_segmented")
-                has_conditions = bool(
-                    q.get("query", {}).get("conditions") or [])
-                many_f = (counts["matching_groups"]
-                          > self.universe_window_threshold)
-                uni = ("window" if anchors_ok else "hash_join") \
-                    if many_f and has_conditions else "join"
-                # One row per group; step counts and every step-rows semi
-                # join derive from it (plan-equal rebuilds hit this cache).
-                frows = plan.funnel_per_group(uni, matched=matched)
-                frows.persist(StorageLevel.MEMORY_AND_DISK)
-                step_aggs = funnel.get("stepAggregations") or []
-                end_aggs = funnel.get("endAggregations") or []
-                n_steps = len(funnel["sequence"])
-                # funnel_step_rows re-derives rows_of_matching_groups once
-                # per step-rows job; with step aggregations over several
-                # steps (or step+end aggs) that's several executions of the
-                # same semi-join/window universe. Persist it once — the
-                # plan-equal rebuilds inside funnel_step_rows hit this
-                # cache — mirroring the multi-aggregation rule above.
-                funnel_universe = None
-                universe_consumers = ((n_steps if step_aggs else 0)
-                                      + (1 if end_aggs else 0))
-                if universe_consumers > 1 and not (
-                        rows_persisted and rows_strategy == uni):
-                    funnel_universe = plan.rows_of_matching_groups(
-                        uni, matched=matched)
-                    funnel_universe.persist(StorageLevel.MEMORY_AND_DISK)
-                try:
-                    step_counts = {
-                        r["step"]: r
-                        for r in plan.funnel_step_counts(
-                            uni, matched=matched).collect()
-                    }
-
-                    def step_rows(i: int):
-                        # per-step adaptive: many groups pass → anchor
-                        # filter (join-free) or, for segmented-fold plans,
-                        # the shuffle_hash semi join; few → semi join
-                        # against the cached per-group frame
-                        many = (step_counts[i]["matching_groups"]
-                                > self.universe_window_threshold)
-                        strat = ("window" if anchors_ok
-                                 else "hash_join") if many else "join"
-                        return plan.funnel_step_rows(
-                            i, universe_strategy=uni, step_strategy=strat,
-                            matched=matched)
-
-                    if (step_aggs and n_steps > 1
-                            and self.agg_collect_threads > 1):
-                        # overlap the whole step-agg phase: each step's
-                        # aggregations are independent jobs over the
-                        # persisted per-group frame / universe. serial=True
-                        # suppresses _collect_aggregations' inner pool —
-                        # nesting would run up to threads² concurrent jobs
-                        step_agg_out = self._pool_map(
-                            plan.df, min(n_steps, self.agg_collect_threads),
-                            lambda i: self._collect_aggregations(
-                                plan, step_aggs, step_rows(i), serial=True),
-                            range(n_steps))
-                    else:
-                        step_agg_out = [
-                            self._collect_aggregations(
-                                plan, step_aggs, step_rows(i))
-                            if step_aggs else None
-                            for i in range(n_steps)]
-                    sequence = []
-                    for i in range(n_steps):
-                        sc = step_counts[i]
-                        entry = {
-                            "matchingGroups": sc["matching_groups"],
-                            "matchingGroupRows": sc["matching_group_rows"],
-                            "aggregations": step_agg_out[i],
-                        }
-                        sequence.append(entry)
-                    result["funnel"] = {
-                        "sequence": sequence,
-                        "endAggregations": self._collect_aggregations(
-                            plan, end_aggs, step_rows(n_steps - 1))
-                        if end_aggs else None,
-                    }
-                finally:
-                    frows.unpersist()
-                    if funnel_universe is not None:
-                        funnel_universe.unpersist()
-            else:
-                result["funnel"] = None
             if with_stats:
                 stats = {
                     "engine": "spark",
@@ -342,6 +260,7 @@ class QueryEngine:
                         "routeEstimates": plan.route_estimates,
                         "groupRowsTopkHint": plan.group_rows_topk_hint,
                         "rowUniverse": rows_strategy,
+                        "funnelUniverse": funnel_strategy,
                         "sortedLayout": sorted_layout,
                     },
                     "usedColumns": plan.expanded.used_columns,
@@ -361,17 +280,93 @@ class QueryEngine:
             if matched is not None:
                 matched.unpersist()
 
-    @staticmethod
-    def _pool_map(df: DataFrame, n_workers: int, fn, items) -> list:
-        """ThreadPoolExecutor.map that propagates the calling thread's
-        Spark job group into every worker thread. setJobGroup backs onto
-        thread-LOCAL properties (test-pinned by
-        test_job_group_stats_are_thread_scoped), so jobs submitted from
-        bare pool threads would escape the query's JobGroupMetrics group
-        and silently vanish from the with_stats scan/shuffle counters."""
+    def _run_funnel(self, plan: QueryPlan, matched: Optional[DataFrame],
+                    groups: Optional[int]) -> tuple[dict, dict, str]:
+        """(funnel block, ``funnel_counts`` row, universe strategy), all
+        from ONE labeled universe (``QueryPlan.funnel_labeled``): step
+        counts from its per-group frame, each distinct step/end
+        aggregation spec from one multi-step job (end aggregations are
+        the last step's slot). ``groups``: the matched-group count, when
+        routing already needed it. Past ``universe_window_threshold``
+        anchor plans take the join-free window universe, segmented-fold
+        plans the shuffle_hash join (big side never sorted)."""
+        funnel = plan.q["funnel"]
+        n = len(funnel["sequence"])
+        step_aggs = funnel.get("stepAggregations") or []
+        end_aggs = funnel.get("endAggregations") or []
+        specs = {_spec_key(a): a for a in step_aggs + end_aggs}
+        step_keys = {_spec_key(a) for a in step_aggs}
+        segmented = plan._use_segmented(plan._funnel_spec)
+        many = groups is not None and groups > self.universe_window_threshold
+        if segmented:
+            uni = "hash_join" if many else "join"
+        else:  # without conditions the universe is the table: no join
+            uni = "window" if many or not plan._conditions else "join"
+        cached: list[DataFrame] = []
+        keep = StorageLevel.MEMORY_AND_DISK
+        try:
+            if segmented:
+                per_group = plan.funnel_per_group(uni, matched=matched)
+                if specs:  # read by the counts and the labeled join
+                    cached.append(per_group.persist(keep))
+                totals = plan.funnel_counts(per_group).collect()[0]
+                if totals["matching_groups"] > self.universe_window_threshold:
+                    uni = "hash_join"
+                labeled = plan.funnel_labeled(uni, matched=matched)
+                if len(specs) > 1:
+                    cached.append(labeled.persist(keep))
+            else:
+                # the counts collect materializes the cached labeled
+                # universe (funnel_per_group rebuilds its plan), then every
+                # aggregation reads it: the table is scanned once
+                labeled = plan.funnel_labeled(uni, matched=matched)
+                if specs:
+                    cached.append(labeled.persist(keep))
+                totals = plan.funnel_counts(plan.funnel_per_group(
+                    uni, matched=matched)).collect()[0]
+
+            def values(item) -> dict:
+                key, agg = item
+                steps = list(range(n)) if key in step_keys else [n - 1]
+                adf = plan.funnel_aggregation_df(agg, labeled, steps)
+                got = adf.collect()
+                if agg["type"] == "count":
+                    return {r["step"]: r["count"] for r in got}
+                out: dict = {i: {} for i in steps}
+                for r in sorted(got, key=lambda r: (r["step"], r["rank"])):
+                    out[r["step"]][str(r["value"])] = r[adf.columns[-1]]
+                return out
+
+            by_spec = dict(zip(specs, self._map(plan, values,
+                                                list(specs.items()))))
+        finally:
+            for frame in cached:
+                frame.unpersist()
+
+        def entries(aggs: list[dict], step: int) -> Optional[list[dict]]:
+            return ([_agg_entry(a, by_spec[_spec_key(a)][step]) for a in aggs]
+                    if aggs else None)
+
+        return {
+            "sequence": [{"matchingGroups": totals[f"__g{i}"],
+                          "matchingGroupRows": totals[f"__r{i}"],
+                          "aggregations": entries(step_aggs, i)}
+                         for i in range(n)],
+            "endAggregations": entries(end_aggs, n - 1),
+        }, totals, uni
+
+    def _map(self, plan: QueryPlan, fn, items: list) -> list:
+        """``[fn(x) for x in items]`` for independent tiny-result jobs,
+        submitted concurrently from up to ``agg_collect_threads`` threads
+        so the phase costs ~the slowest job, not the sum. Pool threads
+        inherit the caller's Spark job group: setJobGroup is thread-LOCAL
+        (test_job_group_stats_are_thread_scoped), and jobs escaping the
+        query's JobGroupMetrics group would vanish from its stats."""
         from concurrent.futures import ThreadPoolExecutor
 
-        sc = df.sparkSession.sparkContext
+        if len(items) <= 1 or self.agg_collect_threads == 1:
+            return [fn(x) for x in items]
+        sc = plan.df.sparkSession.sparkContext
         props = {k: sc.getLocalProperty(k)
                  for k in ("spark.jobGroup.id", "spark.job.description",
                            "spark.jobGroup.interruptOnCancel")}
@@ -382,12 +377,12 @@ class QueryEngine:
                     sc.setLocalProperty(k, v)
             return fn(item)
 
-        with ThreadPoolExecutor(n_workers) as ex:
+        with ThreadPoolExecutor(min(len(items),
+                                    self.agg_collect_threads)) as ex:
             return list(ex.map(wrapped, items))
 
     def _collect_aggregations(
         self, plan: QueryPlan, aggs: list[dict], rows: Optional[DataFrame],
-        serial: bool = False,
     ) -> Optional[list[dict]]:
         if not aggs:
             return None
@@ -396,27 +391,26 @@ class QueryEngine:
             adf = plan.aggregation_df(agg, rows)
             collected = adf.collect()
             if agg["type"] == "count":
-                value: object = collected[0]["count"] if collected else 0
-                top = None
-            else:
-                metric = adf.columns[-1]
-                value = {str(r["value"]): r[metric] for r in collected}
-                top = int(agg.get("top", 10))
-            return {
-                "column": agg["column"],
-                "type": agg["type"],
-                "name": agg.get("name"),
-                "top": top,
-                "value": value,
-            }
+                return _agg_entry(agg, collected[0]["count"]
+                                  if collected else 0)
+            metric = adf.columns[-1]
+            return _agg_entry(agg, {str(r["value"]): r[metric]
+                                    for r in collected})
 
-        if serial or len(aggs) == 1 or self.agg_collect_threads == 1:
-            return [one(a) for a in aggs]
-        # N independent tiny-result jobs over the (persisted) universe:
-        # submit them concurrently instead of serially awaiting each —
-        # Spark's scheduler interleaves the jobs across idle cores, so a
-        # multi-aggregation query's agg phase costs ~the slowest job,
-        # not the sum. map() preserves input order for the result JSON.
-        return self._pool_map(plan.df, min(len(aggs),
-                                           self.agg_collect_threads),
-                              one, aggs)
+        return self._map(plan, one, aggs)
+
+
+def _spec_key(agg: dict) -> tuple:
+    """What an aggregation computes — everything but its ``name``."""
+    return tuple(sorted((k, str(v)) for k, v in agg.items() if k != "name"))
+
+
+def _agg_entry(agg: dict, value) -> dict:
+    return {
+        "column": agg["column"],
+        "type": agg["type"],
+        "name": agg.get("name"),
+        "top": (None if agg["type"] == "count"
+                else int(agg.get("top", DEFAULT_TOP_COUNT))),
+        "value": value,
+    }

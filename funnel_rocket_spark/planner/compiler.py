@@ -966,16 +966,49 @@ class QueryPlan:
 
     # ------------------------------- funnel ---------------------------- #
 
-    def funnel_rows(self, matched: Optional[DataFrame] = None
-                    ) -> Optional[DataFrame]:
-        """Row universe with funnel anchor columns attached (reference W2 —
-        funnel runs over rows of groups matching the query conditions,
-        ``query_engine.py:102-104``)."""
-        if self._funnel_spec is None:
+    def funnel_labeled(self, strategy: str = "join",
+                       matched: Optional[DataFrame] = None
+                       ) -> Optional[DataFrame]:
+        """The LABELED funnel universe: every row of the funnel universe
+        (reference W2 — rows of groups matching the query conditions,
+        ``query_engine.py:102-104``), pruned to the group column and the
+        columns the funnel's step and end aggregations read, plus
+        ``__fr_done``, the group's matched-prefix length. "Group passed
+        step i" is ``__fr_done > i`` on any of its rows, so every step
+        count and every step/end aggregation reads this one frame.
+        ``strategy`` picks the universe construction (see
+        ``rows_of_matching_groups``).
+
+        Window-anchor plans compute ``__fr_done`` from the anchors, which
+        are per-group constants on every row: no join, one group-keyed
+        exchange. ``fold_segmented`` plans join the rows once to the
+        fold's (group, ``__fr_done``) frame; ``strategy="hash_join"``
+        hints that join ``shuffle_hash`` (big side shuffled, never
+        sorted) for universes too large to broadcast.
+        """
+        spec = self._funnel_spec
+        if spec is None:
             return None
-        return with_sequence_anchors(
-            self.rows_of_matching_groups(matched=matched),
-            self._funnel_spec, self.group_col, self.ts_col)
+        funnel = self.q["funnel"]
+        keep = [self.group_col]
+        for agg in ((funnel.get("stepAggregations") or [])
+                    + (funnel.get("endAggregations") or [])):
+            for c in (agg["column"], agg.get("otherColumn")):
+                if c and c not in keep:
+                    keep.append(c)
+        rows = self.rows_of_matching_groups(strategy, matched=matched)
+        if self._use_segmented(spec):
+            done = self.funnel_per_group(strategy, matched=matched).select(
+                self.group_col, DONE_COL)
+            if strategy == "hash_join":
+                done = done.hint("shuffle_hash")
+            return rows.select(*keep).join(done, self.group_col)
+        anchored = with_sequence_anchors(rows, spec, self.group_col,
+                                         self.ts_col)
+        done = reduce(operator.add,
+                      [F.col(spec.anchor(i)).isNotNull().cast("int")
+                       for i in range(len(spec.step_preds))])
+        return anchored.select(*keep, done.alias(DONE_COL))
 
     def funnel_per_group(self, strategy: str = "join",
                          matched: Optional[DataFrame] = None
@@ -984,99 +1017,119 @@ class QueryPlan:
         per group of the funnel universe. ``strategy`` picks the universe
         construction (see ``rows_of_matching_groups``).
 
-        Funnel anchors are per-group CONSTANTS, so this tiny frame carries
-        everything any funnel output needs: group passed step i ⇔ done > i.
-        Window anchors are attached first and ``done`` counts non-null
-        anchors (valid because passing step i requires passing i-1);
+        Window-anchor plans aggregate the labeled universe (``done``
+        counts non-null anchors — valid because passing step i requires
+        passing i-1; the groupBy reuses the anchor window's partitioning);
         ``fold_segmented`` plans compute ``done`` with the segmented fold.
         """
         spec = self._funnel_spec
         if spec is None:
             return None
-        rows = self.rows_of_matching_groups(strategy, matched=matched)
         if self._use_segmented(spec):
             return sequence_fold_done_segmented(
-                spec, rows, self.group_col, self.ts_col,
+                spec, self.rows_of_matching_groups(strategy, matched=matched),
+                self.group_col, self.ts_col,
                 self.fold_segments, bounds=self._segment_bounds(spec))
-        anchored = with_sequence_anchors(rows, spec, self.group_col, self.ts_col)
-        pg = anchored.groupBy(self.group_col).agg(
-            F.count(F.lit(1)).alias(ROWS_COL),
-            *[F.first(spec.anchor(i)).alias(spec.anchor(i))
-              for i in range(len(spec.step_preds))],
-        )
-        done = reduce(lambda a, b: a + b,
-                      [F.col(spec.anchor(i)).isNotNull().cast("int")
-                       for i in range(len(spec.step_preds))])
-        return pg.select(self.group_col, ROWS_COL, done.alias(DONE_COL))
+        return self.funnel_labeled(strategy, matched=matched).groupBy(
+            self.group_col).agg(F.count(F.lit(1)).alias(ROWS_COL),
+                                F.max(DONE_COL).alias(DONE_COL))
 
-    def funnel_step_counts(self, strategy: str = "join",
-                           matched: Optional[DataFrame] = None
-                           ) -> Optional[DataFrame]:
-        """Per-step (step, matching_groups, matching_group_rows).
-
-        ONE aggregate over the per-group frame producing all steps' counts
-        as columns, unpivoted with ``inline`` — the n-way union of
-        per-step aggregates (which re-scanned the universe n times) is gone.
-        """
-        spec = self._funnel_spec
-        if spec is None:
-            return None
-        n = len(spec.step_preds)
-        aggs = []
-        for i in range(n):
+    def funnel_counts(self, per_group: DataFrame) -> DataFrame:
+        """ONE row over a ``funnel_per_group`` frame: the universe's
+        ``matching_groups`` / ``matching_group_rows`` and, for each step
+        i, ``__g{i}`` / ``__r{i}`` — the groups that passed step i and
+        their rows. The funnel universe is exactly the matched groups, so
+        the totals double as the query block's counts."""
+        aggs = [F.count(F.lit(1)).alias("matching_groups"),
+                F.coalesce(F.sum(ROWS_COL), F.lit(0))
+                .alias("matching_group_rows")]
+        for i in range(len(self._funnel_spec.step_preds)):
             passed = F.col(DONE_COL) > F.lit(i)
             aggs.append(F.coalesce(F.sum(F.when(passed, 1)), F.lit(0))
                         .alias(f"__g{i}"))
             aggs.append(F.coalesce(F.sum(F.when(passed, F.col(ROWS_COL))),
                                    F.lit(0)).alias(f"__r{i}"))
-        one = self.funnel_per_group(strategy, matched=matched).agg(*aggs)
+        return per_group.agg(*aggs)
+
+    def funnel_step_counts(self, strategy: str = "join",
+                           matched: Optional[DataFrame] = None
+                           ) -> Optional[DataFrame]:
+        """Per-step (step, matching_groups, matching_group_rows): the
+        ``funnel_counts`` row unpivoted with ``inline``."""
+        spec = self._funnel_spec
+        if spec is None:
+            return None
+        one = self.funnel_counts(self.funnel_per_group(strategy,
+                                                       matched=matched))
         return one.select(F.inline(F.array(*[
             F.struct(F.lit(i).alias("step"),
                      F.col(f"__g{i}").alias("matching_groups"),
                      F.col(f"__r{i}").alias("matching_group_rows"))
-            for i in range(n)])))
+            for i in range(len(spec.step_preds))])))
 
-    def funnel_step_rows(self, step: int, universe_strategy: str = "join",
-                         step_strategy: str = "join",
-                         matched: Optional[DataFrame] = None
-                         ) -> Optional[DataFrame]:
-        """All rows of groups that passed funnel step ``step``.
+    def funnel_aggregation_df(self, agg: dict, labeled: DataFrame,
+                              steps: list[int]) -> DataFrame:
+        """One aggregation evaluated for several funnel steps at once over
+        the labeled universe (``funnel_labeled``): for each step i in
+        ``steps``, the same answer as ``aggregation_df`` over the rows of
+        the groups that passed step i (``__fr_done > i``).
 
-        ``step_strategy="join"``: semi join against the per-group frame
-        (AQE broadcasts it — right when few groups pass the step; pass the
-        SAME ``universe_strategy`` the cached per-group frame was built
-        with so the plan-equality cache hits).
-
-        ``step_strategy="window"`` (anchors only): funnel anchors are
-        per-group constants carried on every row, so "passed step i" is
-        simply ``anchor(i) IS NOT NULL`` — a pure filter, no join, for the
-        many-groups-pass case where the semi join would sort-merge the
-        whole universe.
-
-        ``step_strategy="hash_join"``: the semi join with a
-        ``shuffle_hash`` hint — the segmented-fold twin of "window" (see
-        ``rows_of_matching_groups``): universe shuffled, never sorted.
+        ``count`` returns (step, count). Per-value types run ONE
+        ``groupBy(column)`` with per-step conditional aggregates, unpivot
+        to (step, value, metric), drop values absent from a step, and
+        keep each step's top-N as ``row_number() over (partition by step
+        order by metric desc, value asc) <= top`` — the ordering of
+        ``aggregation_df``'s ``orderBy(desc, asc).limit(top)``. Spark
+        plans that filter as a partial ``WindowGroupLimit`` before the
+        exchange, so a high-cardinality column stays bounded per task.
+        Output: (step, rank, value, <metric>); ``rank`` orders a step's
+        top-N.
         """
-        spec = self._funnel_spec
-        if spec is None:
-            return None
-        rows = self.rows_of_matching_groups(universe_strategy,
-                                            matched=matched)
-        if step_strategy == "window":
-            if self._use_segmented(spec):
-                # fold_segmented must refuse, not silently attach
-                # anchors — that window sort is the whale cliff this
-                # strategy exists to avoid
-                raise ValueError(
-                    "step_strategy='window' requires anchor-strategy funnels")
-            anchored = with_sequence_anchors(rows, spec, self.group_col,
-                                             self.ts_col)
-            return (anchored
-                    .filter(F.col(spec.anchor(step)).isNotNull())
-                    .select(*rows.columns))
-        passed = (self.funnel_per_group(universe_strategy, matched=matched)
-                  .filter(F.col(DONE_COL) > F.lit(step))
-                  .select(self.group_col))
-        if step_strategy == "hash_join":
-            passed = passed.hint("shuffle_hash")
-        return rows.join(passed, on=self.group_col, how="left_semi")
+        col, atype = agg["column"], agg["type"]
+        other = agg.get("otherColumn")
+        top = int(agg.get("top", DEFAULT_TOP_COUNT))
+        done = F.col(DONE_COL)
+
+        def unpivot(fields: dict) -> Column:
+            return F.inline(F.array(*[
+                F.struct(F.lit(i).alias("step"),
+                         *[F.col(f"{src}{i}").alias(name)
+                           for name, src in fields.items()])
+                for i in steps]))
+
+        if atype == "count":
+            one = labeled.agg(*[F.count(F.when(done > i, F.col(col)))
+                                .alias(f"__m{i}") for i in steps])
+            return one.select(unpivot({"count": "__m"}))
+        metric = {"countPerValue": "count", "groupsPerValue": "groups",
+                  "sumPerValue": "sum", "meanPerValue": "mean"}[atype]
+        value = F.col(col).alias("value")
+        if atype == "groupsPerValue" and not agg.get("approx", False):
+            # exact distinct groups without an n-fold Expand: one row per
+            # (value, group) first, then plain conditional counts
+            src = labeled.groupBy(value, F.col(self.group_col).alias("__fr_g")
+                                  ).agg(F.max(DONE_COL).alias(DONE_COL))
+            value, member = F.col("value"), F.col("__fr_g")
+        else:
+            src, member = labeled, F.col(self.group_col)
+        per_step = {
+            "countPerValue": lambda i: F.count(F.when(done > i, 1)),
+            "groupsPerValue": lambda i: (
+                F.approx_count_distinct(F.when(done > i, member))
+                if agg.get("approx", False)
+                else F.count(F.when(done > i, member))),
+            "sumPerValue": lambda i: F.sum(F.when(done > i, F.col(other))),
+            "meanPerValue": lambda i: F.avg(F.when(done > i, F.col(other))),
+        }[atype]
+        aggs = []
+        for i in steps:
+            aggs.append(F.count(F.when(done > i, 1)).alias(f"__p{i}"))
+            aggs.append(per_step(i).alias(f"__m{i}"))
+        wide = src.groupBy(value).agg(*aggs)
+        long = wide.select("value", unpivot({"__fr_present": "__p",
+                                             metric: "__m"}))
+        w = Window.partitionBy("step").orderBy(F.desc(metric), F.asc("value"))
+        return (long.filter(F.col("__fr_present") > 0)
+                .withColumn("rank", F.row_number().over(w))
+                .filter(F.col("rank") <= top)
+                .select("step", "rank", "value", metric))

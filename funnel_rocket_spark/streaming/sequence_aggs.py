@@ -7,8 +7,8 @@ This module adds the batch engine's AGGREGATION surface on top of those
 matches — per-step group/row counts (the streaming twin of
 ``QueryPlan.funnel_step_counts``) and per-value aggregations over rows
 of groups that passed a step (the streaming twin of countPerValue /
-sumPerValue / meanPerValue / groupsPerValue evaluated on
-``funnel_step_rows``).
+sumPerValue / meanPerValue / groupsPerValue evaluated by
+``QueryPlan.funnel_aggregation_df`` over the labeled universe).
 
 Design: Spark does not allow a second stateful aggregation downstream
 of ``applyInPandasWithState`` in update mode, and folding row/value
@@ -45,7 +45,7 @@ always a consistent prefix-closed subset under the watermark.
 
 Stream ≡ batch is property-tested in
 tests/test_streaming_equivalence.py against the batch engine's
-``funnel_step_counts`` / ``funnel_step_rows`` on the same rows.
+``funnel_step_counts`` / ``funnel_per_group`` on the same rows.
 """
 
 from __future__ import annotations
@@ -167,7 +167,8 @@ def sequence_step_value_aggs(spark: SparkSession, matches_path: str,
                              n_steps: int) -> DataFrame:
     """Per-value aggregations over rows of groups that passed each step
     — the streaming twin of countPerValue / groupsPerValue /
-    sumPerValue / meanPerValue evaluated on ``funnel_step_rows(step)``.
+    sumPerValue / meanPerValue over the rows of groups with
+    ``__fr_done > step`` (``QueryPlan.funnel_aggregation_df``).
 
     Output: one row per (step, value) with ``count`` (rows carrying the
     value in passing groups), ``groups`` (distinct passing groups

@@ -1214,6 +1214,7 @@ def test_stats_expose_chosen_strategies(spark, seq_df):
     st = res["stats"]["strategies"]
     assert st["sequence"] == "auto" and not st["autoRoutedSegmented"]
     assert st["rowUniverse"] == "join"
+    assert st["funnelUniverse"] is None
     assert st["autoRouteReason"] is None
 
     routed = eng.run(seq_df, q, with_stats=True, total_rows=10**8,
@@ -1224,3 +1225,144 @@ def test_stats_expose_chosen_strategies(spark, seq_df):
     assert st2["groupRowsTopkHint"] == [95_000_000]
     # routing never changes answers
     assert routed["query"] == res["query"]
+
+    # which universe the funnel ran on: window anchors need no join; the
+    # segmented fold joins its done frame back to the rows, with a
+    # shuffle_hash hint past universe_window_threshold
+    fq = {"funnel": {"sequence": [{"filter": ["category", "==", 0]},
+                                  {"filter": ["category", "<=", 2]}],
+                     "endAggregations": [{"column": "price",
+                                          "type": "countPerValue"}]}}
+    answers = []
+    for threshold, strategy, universe in (
+            (10**12, "window", "window"),
+            (10**12, "fold_segmented", "join"),
+            (0, "fold_segmented", "hash_join")):
+        r = QueryEngine("id", "timestamp",
+                        universe_window_threshold=threshold).run(
+            seq_df, fq, with_stats=True, sequence_strategy=strategy)
+        assert r["stats"]["strategies"]["funnelUniverse"] == universe
+        answers.append(r["funnel"])
+    assert answers[0] == answers[1] == answers[2]
+
+
+def _funnel_agg_df(spark):
+    """Eight users over three event types with NULLs in both the
+    aggregated column (``kind``) and ``otherColumn`` (``amount``).
+    Amounts are binary fractions, so every sum and mean is exact in any
+    summation order. Same-timestamp rows (user u5) cannot chain. Kind
+    ``e`` occurs only in a group that passes no step, kind ``f`` only in
+    one that passes step 0 alone: neither may appear after those steps."""
+    import random
+
+    rng = random.Random(7)
+    rows = [(f"u{u}", 10 * j if u != 5 else 10,
+             rng.choice(["view", "click", "purchase", "other"]),
+             rng.choice(["a", "b", "c", "d", None]),
+             rng.choice([1.0, 2.5, 4.0, None]))
+            for u in range(8) for j in range(6 + u)]
+    rows += [("u8", j, "other", "e", 1.0) for j in range(3)]
+    rows += [("u9", j, t, "f", 2.5)
+             for j, t in enumerate(["view", "other", "other"])]
+    return spark.createDataFrame(
+        rows, "uid string, ts long, type string, kind string, amount double")
+
+
+def test_funnel_aggregations_match_per_step_semijoin(spark):
+    """The engine's funnel block — step counts and every step and end
+    aggregation, computed from one labeled universe — equals a per-step
+    reference built here: for each step i, the universe rows semi-joined
+    to the segmented fold's ``funnel_per_group().filter(__fr_done > i)``
+    (independent of the labeled universe's window anchors), then
+    ``aggregation_df``. All five aggregation types; ``top=2`` cuts through
+    ties, so the (metric desc, value asc) order is checked too."""
+    from pyspark.sql import functions as F
+
+    from funnel_rocket_spark.engine import QueryEngine
+    from funnel_rocket_spark.planner.compiler import DONE_COL, QueryPlan
+
+    df = _funnel_agg_df(spark)
+    aggs = [
+        {"column": "kind", "type": "count"},
+        {"column": "kind", "type": "countPerValue", "top": 2},
+        {"column": "kind", "type": "groupsPerValue", "top": 2},
+        {"column": "kind", "type": "groupsPerValue", "top": 2,
+         "approx": True, "name": "approxGroups"},
+        {"column": "kind", "type": "sumPerValue", "otherColumn": "amount",
+         "top": 2},
+        {"column": "kind", "type": "meanPerValue", "otherColumn": "amount",
+         "top": 2},
+    ]
+    funnel = {"sequence": [{"filter": ["type", "==", "view"]},
+                           {"filter": ["type", "==", "click"]},
+                           {"filter": ["type", "==", "purchase"]}],
+              # top=100 shows every value a step's groups carry
+              "stepAggregations": aggs + [{"column": "kind",
+                                           "type": "countPerValue",
+                                           "top": 100, "name": "all"}],
+              # one end spec shared with a step spec, two end-only specs
+              "endAggregations": [
+                  aggs[1],
+                  {"column": "kind", "type": "countPerValue", "top": 1,
+                   "name": "top1"},
+                  {"column": "kind", "type": "sumPerValue",
+                   "otherColumn": "amount", "top": 100, "name": "allSums"}]}
+    condition = {"conditions": [{"filter": ["type", "==", "other"],
+                                 "target": ["count", ">=", 2]}]}
+    eng = QueryEngine("uid", "ts")
+    for query in ({}, condition):
+        q = {"query": query, "funnel": funnel}
+        ref_plan = QueryPlan(df, eng.expand(q, df), "uid", "ts",
+                             sequence_strategy="fold_segmented")
+        pg = ref_plan.funnel_per_group()
+        rows = ref_plan.rows_of_matching_groups()
+        n = len(funnel["sequence"])
+        # the reference's step rows, materialized once per step
+        step_rows = [
+            spark.createDataFrame(
+                rows.join(pg.filter(F.col(DONE_COL) > i).select("uid"),
+                          "uid", "left_semi").collect(), df.schema)
+            for i in range(n)]
+
+        def ref(agg, i):
+            adf = ref_plan.aggregation_df(agg, step_rows[i])
+            got = adf.collect()
+            if agg["type"] == "count":
+                return got[0]["count"]
+            return {str(r["value"]): r[adf.columns[-1]] for r in got}
+
+        def block(aggs_, i):
+            return [(a["type"], a.get("name"), ref(a, i)) for a in aggs_]
+
+        want_counts = {r["step"]: (r["matching_groups"],
+                                   r["matching_group_rows"])
+                       for r in ref_plan.funnel_step_counts().collect()}
+        want_steps = [block(funnel["stepAggregations"], i)
+                      for i in range(n)]
+        want_end = block(funnel["endAggregations"], n - 1)
+        # top=2 cuts through a tie: three kinds share step 0's top
+        # groupsPerValue count, so the value-asc tie-break decides
+        full = sorted(ref({**aggs[2], "top": 100}, 0).values(), reverse=True)
+        assert full[1] == full[2], full
+        assert want_counts[0][0] > want_counts[n - 1][0] > 0
+
+        for strategy in ("window", "fold_segmented"):
+            for threshold in (0, 10**12):
+                res = QueryEngine(
+                    "uid", "ts", universe_window_threshold=threshold).run(
+                        df, q, sequence_strategy=strategy)
+                where = (bool(query), strategy, threshold)
+                steps = res["funnel"]["sequence"]
+                assert {i: (s["matchingGroups"], s["matchingGroupRows"])
+                        for i, s in enumerate(steps)} == want_counts, where
+                for i, s in enumerate(steps):
+                    got = [(a["type"], a["name"], a["value"])
+                           for a in s["aggregations"]]
+                    assert got == want_steps[i], (where, i)
+                    # the top-N keeps the reference's ordering
+                    assert ([list(v) for _, _, v in got if isinstance(v, dict)]
+                            == [list(v) for _, _, v in want_steps[i]
+                                if isinstance(v, dict)]), (where, i)
+                end = [(a["type"], a["name"], a["value"])
+                       for a in res["funnel"]["endAggregations"]]
+                assert end == want_end, where

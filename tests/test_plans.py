@@ -153,6 +153,35 @@ def test_funnel_row_found_false_falls_back_to_window(events, engine):
     assert "Window" in explained
 
 
+def test_funnel_outputs_from_one_labeled_pass(events, engine):
+    """Window-anchor funnel with step and end aggregations: the labeled
+    universe is join-free, the whole query scans the table once (the
+    labeled universe is cached; counts and every aggregation read it),
+    and each aggregation's top-N runs as a WindowGroupLimit, which keeps
+    a high-cardinality column bounded per task."""
+    step_agg = {"column": "event_type", "type": "countPerValue", "top": 3}
+    q = {"funnel": {"sequence": [
+        {"filter": ["event_type", "==", "view"]},
+        {"filter": ["event_type", "==", "purchase"]}],
+        "stepAggregations": [step_agg],
+        "endAggregations": [{"column": "event_type", "type": "sumPerValue",
+                             "otherColumn": "value"}]}}
+    plan = engine.plan(events, q)
+    labeled = plan.funnel_labeled("window")
+    assert "Join" not in formatted_plan(labeled)
+
+    res = engine.run(events, q, with_stats=True)
+    assert res["stats"]["strategies"]["funnelUniverse"] == "window"
+    n_rows = events.count()
+    # cache reads add one input record per columnar batch, not per row
+    assert n_rows <= res["stats"]["worker"]["scannedRows"] < 2 * n_rows
+
+    adf = plan.funnel_aggregation_df(step_agg, labeled, [0, 1])
+    adf.collect()
+    executed = adf._jdf.queryExecution().executedPlan().toString()
+    assert "WindowGroupLimit" in executed, executed
+
+
 def test_time_rollup_single_shuffle(spark):
     """Fixed-window rollup is one partial/final aggregate: exactly one
     exchange on (bucket, keys) + nothing else."""

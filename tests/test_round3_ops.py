@@ -957,26 +957,37 @@ def test_windowed_universe_rejects_fold_sequences(spark):
         plan.rows_of_matching_groups(strategy="window").collect()
 
 
-def test_funnel_step_rows_filter_equals_join(spark):
+def test_funnel_labeled_anchor_equals_join(spark):
+    """The two labeled-universe forms agree row for row at every step:
+    window anchors (join-free) and the segmented fold's done frame
+    joined back to the rows."""
+    from pyspark.sql import functions as F
+
     from funnel_rocket_spark.engine import QueryEngine
+    from funnel_rocket_spark.planner.compiler import DONE_COL
 
     ev = bq.ts_ns(bq.load_table(spark, SF, "events"))
     eng = QueryEngine("user_id", "ts")
     q = {"funnel": {"sequence": [
         {"filter": ["event_type", "==", "view"]},
         {"filter": ["event_type", "==", "click"]},
-        {"filter": ["event_type", "==", "purchase"]}]}}
-    plan = eng.plan(ev, q)
+        {"filter": ["event_type", "==", "purchase"]}],
+        "stepAggregations": [{"column": "event_type",
+                              "type": "sumPerValue",
+                              "otherColumn": "value"}]}}
+    anchor = eng.plan(ev, q, sequence_strategy="window").funnel_labeled()
+    join = eng.plan(ev, q, sequence_strategy="fold_segmented"
+                    ).funnel_labeled()
+    cols = sorted(anchor.columns)
+    assert cols == sorted(join.columns) == sorted(
+        ["user_id", "event_type", "value", DONE_COL])
     for step in range(3):
-        j = plan.funnel_step_rows(step, step_strategy="join")
-        w = plan.funnel_step_rows(step, step_strategy="window")
-        cols = sorted(j.columns)
-        assert cols == sorted(w.columns)
-        assert (sorted(map(tuple, j.select(*cols).collect()))
-                == sorted(map(tuple, w.select(*cols).collect()))), step
-    # the window path is join-free
-    plan_str = formatted_plan(plan.funnel_step_rows(1, step_strategy="window"))
-    assert "Join" not in plan_str, plan_str
+        a, j = (sorted(map(tuple, f.filter(F.col(DONE_COL) > step)
+                           .select(*cols).collect()))
+                for f in (anchor, join))
+        assert a and a == j, step
+    assert "Join" not in formatted_plan(anchor)
+    assert "Join" in formatted_plan(join)
 
 
 def test_engine_funnel_adaptive_matches_join(spark):
