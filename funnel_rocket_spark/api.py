@@ -141,8 +141,7 @@ def create_app(spark=None, catalog_dir: Optional[str] = None,
                 catalog_dir=app.config["CATALOG_DIR"],
                 table=body.get("table"),
                 pattern=body.get("pattern", "*.parquet"),
-                validation_mode=body.get("validation", "full"),
-                calibrate_premium=bool(body.get("calibratePremium", False)))
+                validation_mode=body.get("validation", "full"))
         except Exception:
             _prom.record_query(body.get("name", ""), False,
                                time.monotonic() - t0, job_type="register")
@@ -283,11 +282,7 @@ def create_app(spark=None, catalog_dir: Optional[str] = None,
                                       ds.max_timestamp)
                 result = engine.run(
                     df, query, with_stats=True,
-                    total_rows=ds.total_rows or None,
-                    group_rows_topk=getattr(ds, "group_rows_topk", None),
-                    segmented_cost_premium=getattr(
-                        ds, "segmented_cost_premium", None),
-                    layout=getattr(ds, "layout", None))
+                    layout=ds.layout)
             except Exception:
                 _prom.record_query(name, False, time.monotonic() - t0)
                 raise
@@ -332,12 +327,7 @@ def create_app(spark=None, catalog_dir: Optional[str] = None,
                 try:
                     holder["result"] = engine.run(
                         df, query, with_stats=True,
-                        total_rows=ds.total_rows or None,
-                        group_rows_topk=getattr(ds, "group_rows_topk",
-                                                None),
-                        segmented_cost_premium=getattr(
-                            ds, "segmented_cost_premium", None),
-                        layout=getattr(ds, "layout", None))
+                        layout=ds.layout)
                 except Exception as e:  # surfaced in the stream tail
                     holder["error"] = str(e)
                 finally:

@@ -206,23 +206,19 @@ _GRAMS_SQL = _grams_sql(3)
 # --------------------------------------------------------------------------- #
 # funnel-engine queries (the reference's own query shapes, SURVEY §2)
 
-def _fr_counts(query_json: dict, sequence_strategy: str = "auto"):
+def _fr_counts(query_json: dict):
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         df = load_table(spark, sf_dir, "events")
-        return _engine().plan(
-            df, query_json,
-            sequence_strategy=sequence_strategy).counts()
+        return _engine().plan(df, query_json).counts()
 
     return fn
 
 
-def _fr_groups_only(query_json: dict, sequence_strategy: str = "auto"):
+def _fr_groups_only(query_json: dict):
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         df = load_table(spark, sf_dir, "events")
-        return _engine().plan(
-            df, query_json,
-            sequence_strategy=sequence_strategy).counts().select(
-                "matching_groups")
+        return _engine().plan(df, query_json).counts().select(
+            "matching_groups")
 
     return fn
 
@@ -613,8 +609,7 @@ def _fr_sequence_sorted_layout_fn(spark: SparkSession,
     sf_dir as a ``bucketBy(user_id) sortBy(user_id, ts)`` table
     (``sources.write_bucketed`` aligns one file per bucket —
     FIXTURE_AMORTIZED), then the standard 3-step sequence planned WITH
-    the catalog layout record. The plan must stay on window anchors
-    (``sorted_layout_window`` routing), contain NO Sort node, and
+    the catalog layout record. The plan must contain NO Sort node and
     return exactly the plain-parquet answer — the oracle checks the
     values, the ``sort_free`` column self-certifies the plan shape."""
     from funnel_rocket_spark.plans import count_sorts
@@ -630,13 +625,10 @@ def _fr_sequence_sorted_layout_fn(spark: SparkSession,
         _SORTED_LAYOUT_CACHE[sf_dir] = tbl
     layout = {"buckets": 8, "bucket_columns": ["user_id"],
               "sort_columns": ["user_id", "ts"]}
-    plan = _engine().plan(spark.table(tbl), Q_SEQUENCE, layout=layout,
-                          total_rows=10**8, group_rows_topk=[5_000_000])
-    counts = plan.counts()
-    sort_free = (count_sorts(counts) == 0
-                 and plan.auto_route_reason == "sorted_layout_window")
+    counts = _engine().plan(spark.table(tbl), Q_SEQUENCE,
+                            layout=layout).counts()
     return counts.select("matching_groups", "matching_group_rows",
-                         F.lit(sort_free).alias("sort_free"))
+                         F.lit(count_sorts(counts) == 0).alias("sort_free"))
 
 
 _PQ_INDEX_CACHE: dict = {}
@@ -2734,19 +2726,6 @@ SELECT (SELECT count(*) FROM m)::BIGINT AS matching_groups,
        true AS sort_free
 """,
     ),
-    # the SAME sequence query through the r9 segmented-fold strategy
-    # (per-(group, ts-range-segment) partial folds + exit-table merge —
-    # the whale-group path; compiler.sequence_fold_done_segmented): one
-    # oracle, three strategies, driver-gated like any operator
-    "fr_sequence_segmented": (
-        _fr_counts(Q_SEQUENCE, sequence_strategy="fold_segmented"),
-        "WITH " + _SEQ_STEPS_SQL + """,
-m AS (SELECT user_id FROM s2),
-r AS (SELECT count(*) c FROM events WHERE user_id IN (SELECT user_id FROM m))
-SELECT (SELECT count(*) FROM m)::BIGINT AS matching_groups,
-       (SELECT c FROM r)::BIGINT AS matching_group_rows
-""",
-    ),
     "fr_funnel_steps": (
         _funnel_steps_fn,
         "WITH " + _SEQ_STEPS_SQL + """
@@ -2788,20 +2767,6 @@ s1 AS (SELECT e.user_id FROM events e JOIN s0 ON e.user_id = s0.user_id
 SELECT count(*)::BIGINT AS matching_groups FROM s1
 """,
     ),
-    # the SAME maxDuration sequence through the r10 segmented strategy
-    # (first-anchor join + duration-windowed exit tables — the
-    # whale × maxDuration path; compiler._segmented_fold_max_duration):
-    # one oracle, two strategies, driver-gated like any operator
-    "fr_seq_max_duration_segmented": (
-        _fr_groups_only(Q_SEQ_MAXDUR, sequence_strategy="fold_segmented"),
-        """
-WITH s0 AS (SELECT user_id, min(ts) t FROM events WHERE event_type = 'signup' GROUP BY 1),
-s1 AS (SELECT e.user_id FROM events e JOIN s0 ON e.user_id = s0.user_id
-       AND e.ts > s0.t AND e.ts <= s0.t + INTERVAL 2 DAY
-       WHERE e.event_type = 'purchase' GROUP BY 1)
-SELECT count(*)::BIGINT AS matching_groups FROM s1
-""",
-    ),
     "fr_seq_row_not_found": (
         _fr_groups_only(Q_SEQ_NOT),
         """
@@ -2814,14 +2779,11 @@ s2 AS (SELECT e.user_id FROM events e JOIN ok1 ON e.user_id = ok1.user_id
 SELECT count(*)::BIGINT AS matching_groups FROM s2
 """,
     ),
-    # an absence-step sequence through the r11 anchor-chain form
-    # (chained per-group min aggregates — the whale-safe rowFound:false
-    # path; compiler.sequence_anchor_chain, reached via
-    # sequence_strategy="fold_segmented"). The absence step is SELECTIVE
-    # (high-value errors) so the gate verifies non-zero matches (18
-    # groups at sf0.01) rather than passing on an all-excluded stream.
-    "fr_seq_row_not_found_segmented": (
-        _fr_groups_only(Q_SEQ_NOT_SEL, sequence_strategy="fold_segmented"),
+    # an absence-step sequence whose absence step is SELECTIVE
+    # (high-value errors), so the gate verifies non-zero matches (18
+    # groups at sf0.01) rather than passing on an all-excluded stream
+    "fr_seq_row_not_found_selective": (
+        _fr_groups_only(Q_SEQ_NOT_SEL),
         """
 WITH s0 AS (SELECT user_id, min(ts) t FROM events WHERE event_type = 'signup' GROUP BY 1),
 ok1 AS (SELECT s0.user_id, s0.t FROM s0 WHERE NOT EXISTS (
@@ -4238,7 +4200,7 @@ _DRIVER_PRIORITY = [
     # absorbs ALL of r9, moving the floor to r10). Several of these
     # also share the r12-changed engine.run universe selection
     # (sorted-layout branch threaded through every aggregation/funnel
-    # run) and the registration premium calibration.
+    # run) and the r12 registration profile.
     "ann_ivf_topk", "asof_join_clicks", "audience_segments",
     "behavior_funnel_trend", "dedup_exact", "dedup_incremental_lsh",
     "dedup_minhash_lsh", "dedup_ngram_jaccard", "dedup_pipeline_minhash",
@@ -4254,8 +4216,7 @@ _DRIVER_PRIORITY = [
     "sessionize_events", "text_classifier_score",
     "text_classifier_trained", "text_lm_nll", "text_lm_nll_frames",
     "text_lm_nll_join", "time_rollup_daily",
-    # registration profiling gained the premium-calibration fields
-    # (catalog.measure_segmented_premium) this round
+    # registration profiling changed in r12
     "fr_registration_profile",
     # the remaining 8 slots start on the r10 block (all equally stale;
     # heavy plans first so regressions surface where they cost most)

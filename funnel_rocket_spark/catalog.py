@@ -19,7 +19,7 @@ from __future__ import annotations
 import json
 import os
 import time
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass, field, fields
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,7 +35,6 @@ SUPPORTED_TYPES = {
 }
 
 CATEGORICAL_RATIO = 0.1  # reference config 'dataset.categorical.ratio'
-GROUP_TOPK = 16  # histogram head size for Dataset.group_rows_topk
 TOP_VALUES_COUNT = 20    # reference config 'dataset.categorical.top.count'
 
 
@@ -82,31 +81,6 @@ class Dataset:
     validation_mode: str = "full"
     files_validated: Optional[int] = None
     files_total: Optional[int] = None
-    # Largest single group's row count over the VALIDATED files (exact for
-    # validation_mode="full", a sampled estimate otherwise) — always
-    # group_rows_topk[0]. Informational: the planner routes on the full
-    # histogram head below. Kept because saved catalog JSON loads through
-    # Dataset(**data).
-    max_group_rows: Optional[int] = None
-    # Top-K largest group sizes descending — the r11 group-size HISTOGRAM
-    # head. With this + total_rows the planner routes sequence strategies
-    # on MODELED task cost (estimated slowest window task vs the
-    # segmented fold's bounded task × measured premium; see
-    # planner.compiler.QueryPlan) — the Spark restatement of "the
-    # optimizer, not the user, picks the skew-safe plan". A catalog saved
-    # without it plans on window anchors until re-registered. Under
-    # partial validation the counts are extrapolated from the sample.
-    group_rows_topk: Optional[list[int]] = None
-    # r12: the segmented fold's per-row cost premium over the window
-    # sort, MEASURED on this dataset at registration
-    # (register_dataset(calibrate_premium=True)) instead of assumed —
-    # the cost model's one tunable constant now reflects the dataset's
-    # own schema/row width/group shape. None = not calibrated; the
-    # planner then uses its global default (fit on the 100M whale rung,
-    # tools/rung_whale_100m_r12.json). premium_calibration keeps the
-    # raw slope-fit evidence (per-size timings) for audit.
-    segmented_cost_premium: Optional[float] = None
-    premium_calibration: Optional[dict] = None
 
     def schema_map(self) -> dict[str, str]:
         return {name: info["dtype"] for name, info in self.columns.items()}
@@ -197,127 +171,6 @@ def _validation_subset(files: list[str], mode: str,
     raise DatasetValidationError(f"unknown validation mode: {mode!r}")
 
 
-PREMIUM_SIZES = (100_000, 400_000)  # calibration slope points (rows)
-PREMIUM_BOUNDS = (2.0, 100.0)       # clamp for a noisy measurement
-PREMIUM_MIN_ROWS = 50_000           # below this, overhead drowns the slope
-PREMIUM_MAX_SIZE = 6_400_000        # escalation ladder cap (see below)
-
-
-def measure_segmented_premium(spark: SparkSession, df: DataFrame,
-                      group_col: str, ts_col: str,
-                      sizes: tuple = PREMIUM_SIZES) -> Optional[dict]:
-    """Measure the segmented fold's per-row cost premium over the window
-    sort ON THIS DATASET (r12 — replaces trusting the global constant;
-    VERDICT r11 ask #2).
-
-    Method: take a bounded prefix of the dataset (numeric ts only,
-    relabeled into ONE synthetic group — the premium models the WHALE
-    task, one task processing one huge group, so the calibration
-    reproduces that shape rather than the dataset's average group
-    size, where per-group/per-segment fixed costs drown the per-row
-    term), persist it, and time a canonical 2-step always-true
-    sequence under the ``window`` and ``fold_segmented`` strategies at
-    two sizes. The premium is the ratio of the strategies' per-row
-    SLOPES — (t_large - t_small) deltas cancel each strategy's fixed
-    stage/job overhead, which at calibration scale would otherwise
-    dominate and bias the ratio toward 1. Each point is min-of-2 with
-    interleaved strategy order (same hygiene as the whale rung).
-    Cost: ~8 small Spark jobs at registration time.
-
-    Returns {"premium": float (clamped to PREMIUM_BOUNDS),
-    "timings": {...}, "rows": [n_small, n_large]} or None when the
-    dataset is too small to measure (< PREMIUM_MIN_ROWS rows) or the
-    window slope is below measurement noise.
-    """
-    import time as _time
-
-    from funnel_rocket_spark.planner.compiler import QueryPlan
-    from funnel_rocket_spark.validation import expand_and_validate
-
-    fields = {f.name: f.dataType for f in df.schema.fields}
-    base = df.select(
-        F.lit(0).cast("long").alias("__g"),
-        _numeric(ts_col, fields[ts_col]).cast("long").alias("__ts"))
-    n_large = sizes[-1]
-    cal = base.limit(n_large).persist()
-    frames = []
-    try:
-        total = cal.count()  # materialize once; runs exclude the scan
-        if total < PREMIUM_MIN_ROWS:
-            return None
-        lo = cal.agg(F.min("__ts")).collect()[0][0]
-        q = {"query": {"conditions": [{"sequence": [
-            {"filter": ["__ts", ">=", int(lo)]},
-            {"filter": ["__ts", ">=", int(lo)]}]}]}}
-        # shrink the slope points to the dataset when it's smaller than
-        # the defaults, keeping a 4x size ratio so the slope stands
-        # clear of per-run jitter
-        n_small = min(sizes[0], total // 4)
-        n_large = min(sizes[-1], total)
-        for n in (n_small, n_large):
-            fr = (cal if n >= total else cal.limit(n)).persist()
-            fr.count()
-            frames.append((n, fr))
-        expanded = expand_and_validate(
-            q, dataset_schema={"__g": "bigint", "__ts": "bigint"},
-            group_id_column="__g", timestamp_column="__ts")
-        timings: dict[str, float] = {}
-        strategies = ("window", "fold_segmented")
-        # One shuffle partition for the calibration runs: the cost model
-        # compares SLOWEST-TASK per-row cost, and at calibration sizes a
-        # 32-way parallel stage hides the per-row term entirely inside
-        # fixed overhead (a 400k-row window sort adds ~10 ms of
-        # wall-clock at 32 tasks — unmeasurable). One task makes the
-        # slope the single-task per-row cost directly. Restored in
-        # finally; registration is not concurrent with queries.
-        sess = df.sparkSession
-        old_parts = sess.conf.get("spark.sql.shuffle.partitions")
-        sess.conf.set("spark.sql.shuffle.partitions", "1")
-        try:
-            for order in (strategies, tuple(reversed(strategies))):
-                for strat in order:
-                    for n, fr in frames:
-                        plan = QueryPlan(fr, expanded, "__g", "__ts",
-                                         sequence_strategy=strat)
-                        t0 = _time.perf_counter()
-                        plan.counts().collect()
-                        t = _time.perf_counter() - t0
-                        key = f"{strat}.{n}"
-                        timings[key] = round(
-                            min(t, timings.get(key, float("inf"))), 4)
-        finally:
-            sess.conf.set("spark.sql.shuffle.partitions", old_parts)
-        (n_s, _), (n_l, _) = frames[0], frames[-1]
-        slope_w = (timings[f"window.{n_l}"]
-                   - timings[f"window.{n_s}"]) / (n_l - n_s)
-        slope_s = (timings[f"fold_segmented.{n_l}"]
-                   - timings[f"fold_segmented.{n_s}"]) / (n_l - n_s)
-        # a window slope under ~20 ns/row is inside scheduler jitter at
-        # these sizes — don't divide by noise. If the prefix filled to
-        # the requested size the dataset has (or may have) more rows:
-        # escalate the slope points 4× and remeasure — bigger deltas
-        # lift the window slope clear of the jitter band (sf0.1 events
-        # needed 400k/1.6M where lineitem measured fine at 100k/400k).
-        # The cap bounds the escalation ladder (100k/400k → 400k/1.6M →
-        # 1.6M/6.4M); a too-small dataset stops recursing after one
-        # level because its next prefix can't fill.
-        if slope_w < 2e-8 or slope_s <= 0:
-            if total == sizes[-1] and sizes[-1] < PREMIUM_MAX_SIZE:
-                return measure_segmented_premium(
-                    spark, df, group_col, ts_col,
-                    sizes=tuple(s * 4 for s in sizes))
-            return None
-        premium = max(PREMIUM_BOUNDS[0],
-                      min(PREMIUM_BOUNDS[1], slope_s / slope_w))
-        return {"premium": round(premium, 2), "timings": timings,
-                "rows": [n_s, n_l]}
-    finally:
-        cal.unpersist()
-        for _, fr in frames:
-            if fr is not cal:
-                fr.unpersist()
-
-
 def register_dataset(
     spark: SparkSession,
     name: str,
@@ -330,7 +183,6 @@ def register_dataset(
     table: Optional[str] = None,
     pattern: str = "*.parquet",
     validation_mode: str = "full",
-    calibrate_premium: bool = False,
 ) -> Dataset:
     """Validate + profile a dataset; optionally persist to a catalog dir.
     Source is either a Parquet ``basepath`` or a saved ``table`` (e.g.
@@ -446,36 +298,6 @@ def register_dataset(
         ds.max_timestamp = row["__max_ts"]
 
         if profile:
-            # Whale detector input: the TOP-K largest rows-per-group
-            # counts (map-side partial counts collapse the exchange to
-            # ~n_groups rows, then orderBy+limit is a TakeOrdered — top-K
-            # per partition merged on the driver, never a full sort; one
-            # extra registration-time job). QueryPlan's auto
-            # sequence-strategy routing models task cost from this
-            # histogram head; max_group_rows stays as topk[0].
-            topk = [r["__c"] for r in
-                    (df_val.groupBy(group_id_column)
-                     .agg(F.count(F.lit(1)).alias("__c"))
-                     .orderBy(F.desc("__c")).limit(GROUP_TOPK).collect())]
-            if topk and partial:
-                # partial validation scanned a file SUBSET: the subset
-                # counts UNDERestimate a whale (unsafe direction — the
-                # whale stays unrouted). Extrapolate assuming each group
-                # spreads uniformly across files (true for hash- or
-                # round-robin-partitioned layouts; a whale concentrated
-                # in the unscanned files is undetectable from any
-                # sample). Errs toward protection, which costs a bounded
-                # premium; the miss costs an unbounded task.
-                scale = len(files) / max(len(val_files), 1)
-                topk = [int(c * scale) for c in topk]
-            ds.group_rows_topk = [int(c) for c in topk] or None
-            ds.max_group_rows = int(topk[0]) if topk else None
-            if calibrate_premium:
-                cal = measure_segmented_premium(
-                    spark, df_val, group_id_column, timestamp_column)
-                if cal:
-                    ds.segmented_cost_premium = cal["premium"]
-                    ds.premium_calibration = cal
             total = max(row["__rows"], 1)
             categorical_strings = []
             for col_name, info in columns.items():
@@ -521,9 +343,13 @@ def register_dataset(
 
 
 def load_dataset(catalog_dir: str, name: str) -> Dataset:
+    """Read a saved catalog entry. Keys that are not ``Dataset`` fields
+    are dropped, so entries written by older versions (which carried
+    since-removed profile fields) keep loading."""
     with open(os.path.join(catalog_dir, f"{name}.json")) as fh:
         data = json.load(fh)
-    return Dataset(**data)
+    known = {f.name for f in fields(Dataset)}
+    return Dataset(**{k: v for k, v in data.items() if k in known})
 
 
 class DatasetInUseError(RuntimeError):

@@ -34,14 +34,11 @@ def cmd_register(args) -> int:
     ds = register_dataset(
         spark, args.name, args.basepath, args.group_id_column,
         args.timestamp_column, catalog_dir=args.catalog,
-        pattern=args.pattern, validation_mode=args.validation,
-        calibrate_premium=args.calibrate_premium)
+        pattern=args.pattern, validation_mode=args.validation)
     out = {
         "dataset": ds.name, "rows": ds.total_rows, "groups": ds.total_groups,
         "unsupportedColumns": ds.unsupported_columns,
         "validationMode": ds.validation_mode}
-    if ds.segmented_cost_premium is not None:
-        out["segmentedCostPremium"] = ds.segmented_cost_premium
     if ds.files_total is not None:
         out["filesValidated"] = ds.files_validated
         out["filesTotal"] = ds.files_total
@@ -142,12 +139,7 @@ def cmd_run(args) -> int:
         spark = get_spark()
         engine = QueryEngine(ds.group_id_column, ds.timestamp_column)
         result = engine.run(ds.load(spark), query,
-                            total_rows=ds.total_rows or None,
-                            group_rows_topk=getattr(ds, "group_rows_topk",
-                                                    None),
-                            segmented_cost_premium=getattr(
-                                ds, "segmented_cost_premium", None),
-                            layout=getattr(ds, "layout", None))
+                            layout=ds.layout)
     except QueryValidationError as e:
         print(f"error: invalid query: {e}", file=sys.stderr)
         return 1
@@ -201,11 +193,6 @@ def main(argv=None) -> int:
     p.add_argument("--validation", default="full", type=str.lower,
                    choices=["single", "first_last", "sample", "full"],
                    help="file subset the validation/profile scan reads")
-    p.add_argument("--calibrate-premium", action="store_true",
-                   help="measure the segmented-fold cost premium on this "
-                        "dataset (a few extra sub-second Spark jobs); the "
-                        "sequence-strategy cost model then uses the "
-                        "measured value instead of the global default")
     p.add_argument("--skip-uniques", action="store_true",
                    help="accepted for reference-script compatibility "
                         "(no disjointness requirement on Spark)")

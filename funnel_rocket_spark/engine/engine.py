@@ -34,18 +34,9 @@ class QueryEngine:
 
     def __init__(self, group_id_column: str, timestamp_column: str,
                  universe_window_threshold: int = 4_000_000,
-                 agg_collect_threads: int = 8,
-                 segmented_cost_premium: float = 20.0,
-                 whale_hard_cap_rows: int = 2_000_000_000):
+                 agg_collect_threads: int = 8):
         self.group_id_column = group_id_column
         self.timestamp_column = timestamp_column
-        # sequence_strategy="auto" routes on a COST MODEL over the
-        # registration profile's group-size histogram (group_rows_topk)
-        # — see QueryPlan.__init__ and docs/operating.md for the two
-        # knobs below (the measured interpreted-fold premium per row,
-        # and the absolute task-size stall guard).
-        self.segmented_cost_premium = segmented_cost_premium
-        self.whale_hard_cap_rows = whale_hard_cap_rows
         # matched-group count above which the row universe switches from
         # the semi join (broadcastable below this) to window flags — see
         # QueryPlan.rows_of_matching_groups
@@ -71,31 +62,12 @@ class QueryEngine:
         )
 
     def plan(self, df: DataFrame, query: dict, validate_schema: bool = True,
-             sequence_strategy: str = "auto",
-             fold_segments: int = 64,
-             total_rows: Optional[int] = None,
-             group_rows_topk: Optional[list[int]] = None,
-             segmented_cost_premium: Optional[float] = None,
              layout: Optional[dict] = None) -> QueryPlan:
-        sorted_layout = self._sorted_layout(layout)
-        if sorted_layout:
+        if self._sorted_layout(layout):
             self._enable_sorted_scan(df)
         expanded = self.expand(query, df if validate_schema else None)
         return QueryPlan(df, expanded, self.group_id_column,
-                         self.timestamp_column,
-                         sequence_strategy=sequence_strategy,
-                         fold_segments=fold_segments,
-                         total_rows_hint=total_rows,
-                         group_rows_topk_hint=group_rows_topk,
-                         # per-dataset premium measured at registration
-                         # (catalog.measure_segmented_premium) wins over
-                         # the engine's global default
-                         segmented_cost_premium=(
-                             segmented_cost_premium
-                             if segmented_cost_premium is not None
-                             else self.segmented_cost_premium),
-                         whale_hard_cap_rows=self.whale_hard_cap_rows,
-                         sorted_layout_hint=sorted_layout)
+                         self.timestamp_column)
 
     def _sorted_layout(self, layout: Optional[dict]) -> bool:
         """True when the dataset's declared layout
@@ -130,11 +102,7 @@ class QueryEngine:
             "spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
 
     def run(self, df: DataFrame, query: dict, validate_schema: bool = True,
-            with_stats: bool = False, sequence_strategy: str = "auto",
-            fold_segments: int = 64,
-            total_rows: Optional[int] = None,
-            group_rows_topk: Optional[list[int]] = None,
-            segmented_cost_premium: Optional[float] = None,
+            with_stats: bool = False,
             layout: Optional[dict] = None) -> dict:
         """Execute and return the reference-shaped result JSON.
 
@@ -152,13 +120,7 @@ class QueryEngine:
 
         t0 = _time.perf_counter()
         plan = self.plan(df, query, validate_schema=validate_schema,
-                         sequence_strategy=sequence_strategy,
-                         fold_segments=fold_segments,
-                         total_rows=total_rows,
-                         group_rows_topk=group_rows_topk,
-                         segmented_cost_premium=segmented_cost_premium,
                          layout=layout)
-        sorted_layout = plan.sorted_layout_hint
         q = plan.q
 
         query_aggs = q.get("query", {}).get("aggregations") or []
@@ -177,11 +139,9 @@ class QueryEngine:
                 # the matched-group frame feeds counts AND every
                 # join-universe build side below: persist it so the
                 # condition pass runs ONCE per query, not once per
-                # consumer. Before r11 the semi-join universe re-ran the
-                # whole per-group aggregation (for a fold_segmented plan,
-                # the most expensive stage in the query) as its build
-                # side. The frame is one row per matched group — bounded
-                # by n_groups, column-pruned to (group, __fr_rows, flags).
+                # consumer, not again as the semi join's build side. The
+                # frame is one row per matched group — bounded by
+                # n_groups, column-pruned to (group, __fr_rows, flags).
                 matched = plan.matched_groups()
                 matched.persist(StorageLevel.MEMORY_AND_DISK)
             # without conditions or query aggregations nothing routes on
@@ -196,20 +156,10 @@ class QueryEngine:
                 # too big to broadcast would sort-merge the whole table, so
                 # evaluate the same conditions as window flags instead —
                 # join-free, measured 2.9× at 100M rows with 71% of groups
-                # matching. Segmented-fold sequences can't window their flags
-                # (that would re-introduce the whale partition sort the
-                # fold was chosen to avoid), so past the threshold they
-                # take the shuffle_hash semi join — big side shuffled but
-                # never sorted (r11; within ~1.1× of the windowed
-                # universe on the 100M rung, tools/scale_check.py
-                # universe).
-                many = (counts["matching_groups"]
-                        > self.universe_window_threshold)
-                segmented = (plan._seq_specs
-                             and plan.sequence_strategy == "fold_segmented")
+                # matching.
                 rows_strategy = (
-                    ("hash_join" if segmented else "window")
-                    if many else "join")
+                    "window" if counts["matching_groups"]
+                    > self.universe_window_threshold else "join")
                 # NOTE (r12, measured): a declared sorted layout does
                 # NOT flip this choice to "window" unconditionally —
                 # on bucketBy(group)+sortBy(group, ts) the semi join's
@@ -250,18 +200,12 @@ class QueryEngine:
                     "engine": "spark",
                     "success": True,
                     "totalSeconds": round(_time.perf_counter() - t0, 4),
-                    # which physical plans the optimizer actually chose —
-                    # the observability that makes the r10 skew routing
+                    # which physical plans the engine actually chose,
                     # auditable from a result JSON alone
                     "strategies": {
-                        "sequence": plan.sequence_strategy,
-                        "autoRoutedSegmented": plan.auto_routed_segmented,
-                        "autoRouteReason": plan.auto_route_reason,
-                        "routeEstimates": plan.route_estimates,
-                        "groupRowsTopkHint": plan.group_rows_topk_hint,
                         "rowUniverse": rows_strategy,
                         "funnelUniverse": funnel_strategy,
-                        "sortedLayout": sorted_layout,
+                        "sortedLayout": self._sorted_layout(layout),
                     },
                     "usedColumns": plan.expanded.used_columns,
                     "sparkAppId": df.sparkSession.sparkContext.applicationId,
@@ -287,43 +231,26 @@ class QueryEngine:
         counts from its per-group frame, each distinct step/end
         aggregation spec from one multi-step job (end aggregations are
         the last step's slot). ``groups``: the matched-group count, when
-        routing already needed it. Past ``universe_window_threshold``
-        anchor plans take the join-free window universe, segmented-fold
-        plans the shuffle_hash join (big side never sorted)."""
+        routing already needed it. Past ``universe_window_threshold`` the
+        funnel takes the join-free window universe."""
         funnel = plan.q["funnel"]
         n = len(funnel["sequence"])
         step_aggs = funnel.get("stepAggregations") or []
         end_aggs = funnel.get("endAggregations") or []
         specs = {_spec_key(a): a for a in step_aggs + end_aggs}
         step_keys = {_spec_key(a) for a in step_aggs}
-        segmented = plan._use_segmented(plan._funnel_spec)
         many = groups is not None and groups > self.universe_window_threshold
-        if segmented:
-            uni = "hash_join" if many else "join"
-        else:  # without conditions the universe is the table: no join
-            uni = "window" if many or not plan._conditions else "join"
-        cached: list[DataFrame] = []
-        keep = StorageLevel.MEMORY_AND_DISK
+        # without conditions the universe is the table: no join
+        uni = "window" if many or not plan._conditions else "join"
+        # the counts collect materializes the cached labeled universe
+        # (funnel_per_group rebuilds its plan), then every aggregation
+        # reads it: the table is scanned once
+        labeled = plan.funnel_labeled(uni, matched=matched)
+        if specs:
+            labeled.persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            if segmented:
-                per_group = plan.funnel_per_group(uni, matched=matched)
-                if specs:  # read by the counts and the labeled join
-                    cached.append(per_group.persist(keep))
-                totals = plan.funnel_counts(per_group).collect()[0]
-                if totals["matching_groups"] > self.universe_window_threshold:
-                    uni = "hash_join"
-                labeled = plan.funnel_labeled(uni, matched=matched)
-                if len(specs) > 1:
-                    cached.append(labeled.persist(keep))
-            else:
-                # the counts collect materializes the cached labeled
-                # universe (funnel_per_group rebuilds its plan), then every
-                # aggregation reads it: the table is scanned once
-                labeled = plan.funnel_labeled(uni, matched=matched)
-                if specs:
-                    cached.append(labeled.persist(keep))
-                totals = plan.funnel_counts(plan.funnel_per_group(
-                    uni, matched=matched)).collect()[0]
+            totals = plan.funnel_counts(plan.funnel_per_group(
+                uni, matched=matched)).collect()[0]
 
             def values(item) -> dict:
                 key, agg = item
@@ -340,8 +267,8 @@ class QueryEngine:
             by_spec = dict(zip(specs, self._map(plan, values,
                                                 list(specs.items()))))
         finally:
-            for frame in cached:
-                frame.unpersist()
+            if specs:
+                labeled.unpersist()
 
         def entries(aggs: list[dict], step: int) -> Optional[list[dict]]:
             return ([_agg_entry(a, by_spec[_spec_key(a)][step]) for a in aggs]

@@ -115,6 +115,16 @@ def get_spark(
         # re-runs of an identical plan recompile instead of hitting the cache
         # (static conf — must be set before the first codegen).
         .config("spark.sql.codegen.cache.maxEntries", "2000")
+        # An external sorter's iterator opens a reader for EVERY spill
+        # file up front, and with read-ahead each reader holds two 1 MB
+        # heap buffers on top of its 1 MB record buffer. A whale group's
+        # sequence pass spills its sort and window buffers into hundreds
+        # of files, so those buffers alone can exhaust a small heap:
+        # measured on tools/scale_check.py whalespill (40M rows, one
+        # 30M-row user, local[4], 1 GB heap) the maxDuration sequence
+        # died with "Java heap space" with read-ahead and completed in
+        # 84 s without it.
+        .config("spark.unsafe.sorter.spill.read.ahead.enabled", "false")
         # InferFiltersFromGenerate synthesizes `size(arr) > 0` below every
         # explode; PushDownPredicates then substitutes the filter through
         # the projections that DERIVE the array, planting the whole

@@ -19,10 +19,9 @@ def spark():
 def _pin_shuffle_partitions():
     """Tests that drive product entry points (cli.main, api) call
     get_spark() with its DEFAULT partition count, which reconfigures the
-    session-scoped fixture's runtime SQL confs for every later test —
-    the cost-model routing test reads spark.sql.shuffle.partitions and
-    silently changed behavior at 32. Restore the conftest value after
-    each test so ordering can't leak confs."""
+    session-scoped fixture's runtime SQL confs for every later test.
+    Restore the conftest value after each test so ordering can't leak
+    confs."""
     yield
     active = SparkSession.getActiveSession()
     if active is not None:

@@ -247,3 +247,44 @@ def test_prom_label_escaping():
             {"dataset": 'we"ird\\name\nx', "success": "true"})
     text = reg.exposition()
     assert r'dataset="we\"ird\\name\nx"' in text
+
+
+def test_catalog_entry_with_removed_profile_keys_still_loads(spark, tmp_path):
+    """Catalog JSON written by earlier versions carries profile keys the
+    Dataset no longer has (group-size histogram, segmented-fold cost
+    premium). Such an entry must still load through the API and answer
+    a sequence query exactly like a freshly registered dataset."""
+    from dataclasses import asdict
+
+    from funnel_rocket_spark.catalog import register_dataset
+    from funnel_rocket_spark.engine import QueryEngine
+
+    catalog = tmp_path / "cat"
+    ds = register_dataset(spark, "old", SF_EVENTS, "user_id", "ts")
+    saved = {**asdict(ds),
+             "max_group_rows": 30,
+             "group_rows_topk": [30, 28, 27],
+             "segmented_cost_premium": 11.8,
+             "premium_calibration": {
+                 "premium": 11.8, "rows": [100000, 400000],
+                 "timings": {"window.100000": 0.21,
+                             "window.400000": 0.25,
+                             "fold_segmented.100000": 0.4,
+                             "fold_segmented.400000": 0.9}}}
+    catalog.mkdir()
+    (catalog / "old.json").write_text(json.dumps(saved))
+
+    app = create_app(spark=spark, catalog_dir=str(catalog))
+    app.config["TESTING"] = True
+    q = {"query": {"conditions": [{"sequence": [
+        {"filter": ["event_type", "==", "view"]},
+        {"filter": ["event_type", "==", "purchase"]}]}]}}
+    with app.test_client() as c:
+        r = c.post("/datasets/old/query", json=q)
+        assert r.status_code == 200, r.get_data(as_text=True)
+        body = r.get_json()
+        assert c.get("/datasets/old/schema").status_code == 200
+
+    want = QueryEngine("user_id", "ts").run(ds.load(spark), q)
+    assert body["query"] == want["query"]
+    assert body["query"]["matchingGroups"] > 0

@@ -53,98 +53,7 @@ def test_catalog_roundtrip(spark, tmp_path):
     assert loaded.group_id_column == "uid"
     assert loaded.columns["price"]["coltype"] == "FLOAT"
     assert loaded.columns["price"]["max"] == pytest.approx(148.5)
-    # whale-detector profile stat: 100 rows over 10 uids = 10 each,
-    # exact, and it survives the JSON roundtrip (old catalog files
-    # without the key load as None)
-    assert loaded.max_group_rows == 10
-    # r11 histogram head: all 10 groups (≤ GROUP_TOPK) descending,
-    # max_group_rows stays its first entry
-    assert loaded.group_rows_topk == [10] * 10
-
-
-def test_premium_calibration_measured_and_persisted(spark, tmp_path):
-    """r12 (VERDICT r11 ask #2): ``register_dataset(calibrate_premium=
-    True)`` MEASURES the segmented fold's per-row cost premium on the
-    dataset itself (slope fit over two single-task sizes) instead of
-    trusting the planner's global constant; the value persists through
-    the catalog JSON and wins over the engine default at plan time."""
-    from funnel_rocket_spark.catalog import (PREMIUM_BOUNDS,
-                                             load_dataset,
-                                             measure_segmented_premium,
-                                             register_dataset)
-    from funnel_rocket_spark.engine import QueryEngine
-
-    # below PREMIUM_MIN_ROWS the slope would be pure jitter: refuse
-    tiny = spark.range(1000).select(
-        (F.col("id") % 10).alias("uid"), F.col("id").alias("ts"))
-    assert measure_segmented_premium(spark, tiny, "uid", "ts") is None
-
-    src = tmp_path / "data"
-    spark.range(400_000).select(
-        (F.col("id") % 100).alias("uid"), F.col("id").alias("ts"),
-        (F.col("id") % 7).alias("kind"),
-    ).write.parquet(str(src))
-    # at the DEFAULT slope points (100k/400k rows) the single-task
-    # window delta is tens of ms — far above the noise-refusal floor
-    # (a 60k-row dataset shrank the points to 15k/60k, whose ~1 ms
-    # delta the measurement honestly refused on a fast box). One retry
-    # tolerates a momentarily-loaded machine without masking a real
-    # failure: two straight refusals at this size means the slope fit
-    # is broken.
-    for _attempt in range(2):
-        ds = register_dataset(spark, "calibrated", str(src), "uid", "ts",
-                              catalog_dir=str(tmp_path / "cat"),
-                              calibrate_premium=True)
-        if ds.segmented_cost_premium is not None:
-            break
-    p = ds.segmented_cost_premium
-    assert p is not None
-    assert PREMIUM_BOUNDS[0] <= p <= PREMIUM_BOUNDS[1]
-    # raw slope-fit evidence kept for audit
-    assert ds.premium_calibration["premium"] == p
-    assert len(ds.premium_calibration["timings"]) == 4
-    assert ds.premium_calibration["rows"] == [100_000, 400_000]
-
-    loaded = load_dataset(str(tmp_path / "cat"), "calibrated")
-    assert loaded.segmented_cost_premium == p
-
-    # the measured value reaches the cost model: route_estimates carry
-    # it instead of the engine's global default
-    eng = QueryEngine("uid", "ts")
-    q = {"query": {"conditions": [{"sequence": [
-        {"filter": ["kind", "==", 0]}, {"filter": ["kind", "==", 1]}]}]}}
-    plan = eng.plan(loaded.load(spark), q,
-                    total_rows=loaded.total_rows,
-                    group_rows_topk=loaded.group_rows_topk,
-                    segmented_cost_premium=loaded.segmented_cost_premium)
-    assert plan.route_estimates["premium"] == p
-
-
-def test_premium_calibration_noise_escalation(spark, monkeypatch):
-    """r12: when the window slope sits in the noise floor AND the
-    calibration prefix filled to the requested size (the dataset may
-    have more rows), the slope points escalate 4× and remeasure; a
-    prefix that can't fill stops the ladder with an honest None. A
-    frozen clock makes every timing identical (slope 0 = guaranteed
-    noise refusal), so the test pins the ladder walk itself: 100k/400k
-    → 400k/1.6M, then stop because the 1M-row frame can't fill 1.6M."""
-    import time as _time
-
-    from funnel_rocket_spark import catalog as cat
-
-    calls = []
-    orig = cat.measure_segmented_premium
-
-    def spy(spark_, df_, g, ts, sizes=cat.PREMIUM_SIZES):
-        calls.append(sizes)
-        return orig(spark_, df_, g, ts, sizes)
-
-    monkeypatch.setattr(cat, "measure_segmented_premium", spy)
-    monkeypatch.setattr(_time, "perf_counter", lambda: 0.0)
-    million = spark.range(1_000_000).select(
-        (F.col("id") % 10).alias("uid"), F.col("id").alias("ts"))
-    assert spy(spark, million, "uid", "ts") is None
-    assert calls == [(100_000, 400_000), (400_000, 1_600_000)]
+    assert loaded == ds
 
 
 def test_catalog_partial_validation_modes(spark, tmp_path):
@@ -181,13 +90,6 @@ def test_catalog_partial_validation_modes(spark, tmp_path):
     assert ds.total_rows == 600
     assert (ds.validation_mode, ds.files_validated, ds.files_total) == \
         ("first_last", 2, 6)
-    # whale estimate EXTRAPOLATES under partial validation (a subset max
-    # underestimates in the unsafe direction): subset max is 40 rows/uid
-    # over 2 files -> x6/2 = 120, matching the true full-scan 100/uid
-    # within the uniform-spread assumption (and erring protective)
-    assert ds.max_group_rows == 40 * 6 // 2
-    # the whole histogram head extrapolates the same way
-    assert ds.group_rows_topk == [40 * 6 // 2] * 5
 
     # single: only part-0
     ds2 = register_dataset(spark, "p2", str(src), "uid", "ts",

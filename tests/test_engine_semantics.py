@@ -586,60 +586,6 @@ def test_matching_group_ids_export(spark, sdf, tmp_path):
     assert [r["id"] for r in back.collect()] == ["d"]
 
 
-def test_sequence_strategies_agree(spark, sdf, seq_df):
-    """fold_segmented and window (default) strategies must produce
-    identical results."""
-    from funnel_rocket_spark.engine import QueryEngine
-    from funnel_rocket_spark.planner.compiler import QueryPlan
-
-    eng = QueryEngine("id", "timestamp")
-    queries = [
-        {"query": {"conditions": [{"sequence": [
-            {"filter": ["category", "==", 0]},
-            {"filter": ["category", "<=", 2]},
-            {"filter": ["category", "<", 0]}]}]}},
-        {"query": {"conditions": [{"sequence": [
-            {"filter": ["category", ">=", 3]},
-            {"filter": ["category", "==", 0]}], "maxDuration": 3}]}},
-    ]
-    for q in queries:
-        expanded = eng.expand(q, seq_df)
-        seg = QueryPlan(seq_df, expanded, "id", "timestamp",
-                        sequence_strategy="fold_segmented").counts().collect()
-        window = QueryPlan(seq_df, expanded, "id", "timestamp",
-                           sequence_strategy="window").counts().collect()
-        assert seg == window, q
-
-
-def test_funnel_strategies_agree(spark, seq_df):
-    """Funnel step counts via the segmented fold (done > i) must equal
-    the window-anchor path (anchor i non-null) step by step."""
-    from funnel_rocket_spark.engine import QueryEngine
-    from funnel_rocket_spark.planner.compiler import QueryPlan
-
-    eng = QueryEngine("id", "timestamp")
-    funnels = [
-        {"sequence": [{"filter": ["category", ">=", 0]},
-                      {"filter": ["category", "<=", 2]},
-                      {"filter": ["category", "==", 1]}]},
-        {"sequence": [{"filter": ["category", ">=", 3]},
-                      {"filter": ["category", "==", 0]}],
-         "maxDuration": 3},
-    ]
-    for fn in funnels:
-        q = {"query": {}, "funnel": fn}
-        expanded = eng.expand(q, seq_df)
-        seg = QueryPlan(seq_df, expanded, "id", "timestamp",
-                        sequence_strategy="fold_segmented"
-                        ).funnel_step_counts().collect()
-        window = QueryPlan(seq_df, expanded, "id", "timestamp",
-                           sequence_strategy="window"
-                           ).funnel_step_counts().collect()
-        key = lambda rs: [(r["step"], r["matching_groups"],
-                           r["matching_group_rows"]) for r in rs]
-        assert key(seg) == key(window), fn
-
-
 def test_kitchen_sink_query(spark):
     """Maximal query in the spirit of the reference's
     tests/utils/base_query_example.json: every feature at once — timeframe,
@@ -730,465 +676,44 @@ def test_kitchen_sink_query(spark):
     assert result["funnel"]["endAggregations"] is not None
 
 
-def test_fold_segmented_equals_other_strategies(spark, seq_df):
-    """The segmented fold (per-(group, ts-range-segment) partial folds +
-    exit-table merge) must equal window exactly — on the tiny fixture,
-    on a seeded random stream with HEAVY timestamp ties (ties stress the
-    bucket-assignment invariant: tied ts must never split across
-    segments, or strict-> entry anchors would be wrong), and across
-    segment counts including the degenerate n_segments=1 (one
-    whole-group fold) and n_segments far above the distinct-ts count."""
-    import random
-
+def test_stats_expose_chosen_strategies(spark, seq_df):
+    """with_stats reports WHICH physical plans ran — the universe
+    choices must be auditable from the result JSON alone."""
     from funnel_rocket_spark.engine import QueryEngine
-    from funnel_rocket_spark.planner.compiler import QueryPlan
 
     eng = QueryEngine("id", "timestamp")
     q = {"query": {"conditions": [{"sequence": [
         {"filter": ["category", "==", 0]},
-        {"filter": ["category", "<=", 2]},
-        {"filter": ["category", "<", 0]}]}]}}
-    expanded = eng.expand(q, seq_df)
-    window = QueryPlan(seq_df, expanded, "id", "timestamp",
-                       sequence_strategy="window").counts().collect()
-    for n_seg in (1, 3, 64):
-        seg = QueryPlan(seq_df, expanded, "id", "timestamp",
-                        sequence_strategy="fold_segmented",
-                        fold_segments=n_seg).counts().collect()
-        assert seg == window, n_seg
+        {"filter": ["category", "<=", 2]}]}],
+        "aggregations": [{"column": "category", "type": "count"}]}}
+    res = eng.run(seq_df, q, with_stats=True)
+    assert res["stats"]["strategies"] == {
+        "rowUniverse": "join", "funnelUniverse": None, "sortedLayout": False}
 
-    rng = random.Random(42)
-    rows = [{"id": g, "timestamp": float(rng.randrange(12)),  # many ties
-             "category": rng.randrange(-1, 5), "price": 1}
-            for g in range(200) for _ in range(rng.randrange(1, 30))]
-    big = spark.createDataFrame(pd.DataFrame(rows))
-    eng2 = QueryEngine("id", "timestamp")
-    queries = [
-        {"query": {"conditions": [{"sequence": [
-            {"filter": ["category", "==", 0]},
-            {"filter": ["category", ">=", 3]}]}]}},
-        {"query": {"conditions": [
-            {"sequence": [{"filter": ["category", "==", 1]},
-                          {"filter": ["category", "==", 2]},
-                          {"filter": ["category", "==", 3]}]},
-            {"filter": ["price", ">", 0], "target": ["count", ">=", 5]}]}},
-    ]
-    for q in queries:
-        expanded = eng2.expand(q, big)
-        window = QueryPlan(big, expanded, "id", "timestamp",
-                           sequence_strategy="window").counts().collect()
-        for n_seg in (1, 4, 64):
-            seg = QueryPlan(big, expanded, "id", "timestamp",
-                            sequence_strategy="fold_segmented",
-                            fold_segments=n_seg).counts().collect()
-            assert seg == window, (q, n_seg)
+    # which universe the funnel ran on: the semi join below
+    # universe_window_threshold, the join-free window universe past it,
+    # and always the window universe without conditions (no join needed)
+    funnel = {"sequence": [{"filter": ["category", "==", 0]},
+                           {"filter": ["category", "<=", 2]}],
+              "endAggregations": [{"column": "price",
+                                   "type": "countPerValue"}]}
+    fq = {"query": {"conditions": [{"filter": ["price", ">=", 2]}]},
+          "funnel": funnel}
+    answers = []
+    for query, threshold, universe in ((fq, 10**12, "join"),
+                                       (fq, 0, "window"),
+                                       ({"funnel": funnel}, 10**12,
+                                        "window")):
+        r = QueryEngine("id", "timestamp",
+                        universe_window_threshold=threshold).run(
+            seq_df, query, with_stats=True)
+        assert r["stats"]["strategies"]["funnelUniverse"] == universe
+        answers.append(r["funnel"])
+    assert answers[0] == answers[1] != answers[2]
+    assert [s["matchingGroups"] for s in answers[0]["sequence"]] == [2, 1]
 
-    # funnel step counts agree too (the per-group done vector feeds them)
-    fq = {"query": {}, "funnel": {"sequence": [
-        {"filter": ["category", ">=", 0]},
-        {"filter": ["category", "<=", 2]},
-        {"filter": ["category", "==", 1]}]}}
-    expanded = eng2.expand(fq, big)
-    key = lambda rs: [(r["step"], r["matching_groups"],  # noqa: E731
-                       r["matching_group_rows"]) for r in rs]
-    window = QueryPlan(big, expanded, "id", "timestamp",
-                       sequence_strategy="window"
-                       ).funnel_step_counts().collect()
-    seg = QueryPlan(big, expanded, "id", "timestamp",
-                    sequence_strategy="fold_segmented", fold_segments=7
-                    ).funnel_step_counts().collect()
-    assert key(seg) == key(window)
-
-
-def test_fold_segmented_rejects_unsupported(seq_df):
-    """fold_segmented takes the anchor-chain form for rowFound:false
-    since r11 and must MATCH the window path instead of raising; unknown
-    strategy names (including the removed whole-group ``"fold"``) are
-    refused at construction."""
-    import pytest as _pytest
-
-    from funnel_rocket_spark.engine import QueryEngine
-    from funnel_rocket_spark.planner.compiler import QueryPlan
-
-    eng = QueryEngine("id", "timestamp")
-    qr = {"query": {"conditions": [{"sequence": [
-        {"filter": ["category", "==", 0]},
-        {"filter": ["category", "==", 1], "rowFound": False}]}]}}
-    expanded = eng.expand(qr, seq_df)
-    ref = QueryPlan(seq_df, expanded, "id", "timestamp",
-                    sequence_strategy="window").counts().collect()
-    got = QueryPlan(seq_df, expanded, "id", "timestamp",
-                    sequence_strategy="fold_segmented").counts().collect()
-    assert got == ref
-
-    for name in ("nope", "fold"):
-        with _pytest.raises(ValueError, match="sequence_strategy"):
-            QueryPlan(seq_df, eng.expand({"query": {}}, seq_df), "id",
-                      "timestamp", sequence_strategy=name)
-
-
-def test_auto_strategy_whale_routing(spark, seq_df):
-    """sequence_strategy="auto" + a group-size histogram whose whale
-    dominates the modeled window task routes to the segmented fold —
-    same counts, no flag. No hint (or small groups) keeps window
-    anchors; since r11 EVERY spec shape is segmentable (maxDuration via
-    the first-anchor join, rowFound:false via the anchor chain) so whale
-    hints route them all; the engine threads Dataset.group_rows_topk
-    through run()."""
-    from funnel_rocket_spark.engine import QueryEngine
-    from funnel_rocket_spark.planner.compiler import QueryPlan
-
-    # premium pinned low so the crossover is reachable at the test's
-    # partition count (see test_histogram_cost_model_routing)
-    whale = dict(group_rows_topk_hint=[95_000_000], total_rows_hint=10**8,
-                 segmented_cost_premium=1.5)
-    eng = QueryEngine("id", "timestamp")
-    q = {"query": {"conditions": [{"sequence": [
-        {"filter": ["category", "==", 0]},
-        {"filter": ["category", "<=", 2]}]}]}}
-    expanded = eng.expand(q, seq_df)
-
-    baseline = QueryPlan(seq_df, expanded, "id", "timestamp",
-                         sequence_strategy="window").counts().collect()
-
-    routed = QueryPlan(seq_df, expanded, "id", "timestamp", **whale)
-    assert routed.sequence_strategy == "fold_segmented"
-    assert routed.auto_routed_segmented
-    assert routed.counts().collect() == baseline
-
-    for plan in (
-        QueryPlan(seq_df, expanded, "id", "timestamp"),  # no hint
-        QueryPlan(seq_df, expanded, "id", "timestamp",   # small groups
-                  group_rows_topk_hint=[99], total_rows_hint=10**8,
-                  segmented_cost_premium=1.5),
-        QueryPlan(seq_df, expanded, "id", "timestamp",   # explicit window
-                  sequence_strategy="window", **whale),
-    ):
-        assert plan.sequence_strategy in ("auto", "window")
-        assert not plan.auto_routed_segmented
-
-    # maxDuration IS segmentable now (first-anchor-join form): routes
-    qd = {"query": {"conditions": [{"sequence": [
-        {"filter": ["category", "==", 0]},
-        {"filter": ["category", "==", 1]}], "maxDuration": 3}]}}
-    plan = QueryPlan(seq_df, eng.expand(qd, seq_df), "id", "timestamp",
-                     **whale)
-    assert plan.auto_routed_segmented
-    ref = QueryPlan(seq_df, eng.expand(qd, seq_df), "id", "timestamp",
-                    sequence_strategy="window").counts().collect()
-    assert plan.counts().collect() == ref
-
-    # rowFound:false is segmentable since r11 (anchor-chain form): a
-    # whale hint routes it too, and values match the window path
-    qr = {"query": {"conditions": [{"sequence": [
-        {"filter": ["category", "==", 0]},
-        {"filter": ["category", "==", 1], "rowFound": False}]}]}}
-    plan = QueryPlan(seq_df, eng.expand(qr, seq_df), "id", "timestamp",
-                     **whale)
-    assert plan.auto_routed_segmented
-    ref = QueryPlan(seq_df, eng.expand(qr, seq_df), "id", "timestamp",
-                    sequence_strategy="window").counts().collect()
-    assert plan.counts().collect() == ref
-
-    # a funnel with a whale hint routes too, and end-to-end run() accepts
-    # the hint (engine → plan threading)
-    fq = {"query": {}, "funnel": {"sequence": [
-        {"filter": ["category", ">=", 0]},
-        {"filter": ["category", "<=", 2]}]}}
-    fplan = QueryPlan(seq_df, eng.expand(fq, seq_df), "id", "timestamp",
-                      **whale)
-    assert fplan.auto_routed_segmented
-    ref = eng.run(seq_df, fq)
-    got = eng.run(seq_df, fq, with_stats=True, total_rows=10**8,
-                  group_rows_topk=[95_000_000], segmented_cost_premium=1.5)
-    assert got["stats"]["strategies"]["autoRoutedSegmented"]
-    assert got["funnel"] == ref["funnel"]
-    assert got["query"] == ref["query"]
-
-
-def test_fold_segmented_max_duration_equals_window(spark, seq_df):
-    """The first-anchor-join segmented form of maxDuration must equal
-    the window path exactly: tiny fixture, seeded tie-heavy stream,
-    duration values hitting the inclusive boundary, the single-step
-    degenerate case, groups whose step-0 anchor exists but whose window
-    holds no events, and funnel step counts."""
-    import random
-
-    from funnel_rocket_spark.engine import QueryEngine
-    from funnel_rocket_spark.planner.compiler import QueryPlan
-
-    eng = QueryEngine("id", "timestamp")
-    for dur in (0, 1, 2, 3, 100):
-        q = {"query": {"conditions": [{"sequence": [
-            {"filter": ["category", "==", 0]},
-            {"filter": ["category", "<=", 2]}], "maxDuration": dur}]}}
-        expanded = eng.expand(q, seq_df)
-        window = QueryPlan(seq_df, expanded, "id", "timestamp",
-                           sequence_strategy="window").counts().collect()
-        for n_seg in (1, 3, 64):
-            seg = QueryPlan(seq_df, expanded, "id", "timestamp",
-                            sequence_strategy="fold_segmented",
-                            fold_segments=n_seg).counts().collect()
-            assert seg == window, (dur, n_seg)
-
-    rng = random.Random(7)
-    rows = [{"id": g, "timestamp": float(rng.randrange(12)),  # many ties
-             "category": rng.randrange(-1, 5), "price": 1}
-            for g in range(200) for _ in range(rng.randrange(1, 30))]
-    big = spark.createDataFrame(pd.DataFrame(rows))
-    queries = [
-        # 3-step with a mid-range duration: some groups time out mid-way
-        {"query": {"conditions": [{"sequence": [
-            {"filter": ["category", "==", 1]},
-            {"filter": ["category", "==", 2]},
-            {"filter": ["category", "==", 3]}], "maxDuration": 4}]}},
-        # duration 0: only same-ts follow-ups — strict > makes most fail
-        {"query": {"conditions": [{"sequence": [
-            {"filter": ["category", "==", 0]},
-            {"filter": ["category", ">=", 3]}], "maxDuration": 0}]}},
-        # single step: duration trivially satisfied at the anchor
-        {"query": {"conditions": [{"sequence": [
-            {"filter": ["category", "==", 4]}], "maxDuration": 1}]}},
-        # mixed with a plain filter condition (shared groupBy pass)
-        {"query": {"conditions": [
-            {"sequence": [{"filter": ["category", "==", 0]},
-                          {"filter": ["category", "==", 2]}],
-             "maxDuration": 3},
-            {"filter": ["price", ">", 0], "target": ["count", ">=", 5]}]}},
-    ]
-    for q in queries:
-        expanded = eng.expand(q, big)
-        window = QueryPlan(big, expanded, "id", "timestamp",
-                           sequence_strategy="window").counts().collect()
-        for n_seg in (1, 4, 64):
-            seg = QueryPlan(big, expanded, "id", "timestamp",
-                            sequence_strategy="fold_segmented",
-                            fold_segments=n_seg).counts().collect()
-            assert seg == window, (q, n_seg)
-
-    # funnel with maxDuration: per-step done vector must agree
-    fq = {"query": {}, "funnel": {"sequence": [
-        {"filter": ["category", ">=", 0]},
-        {"filter": ["category", "<=", 2]},
-        {"filter": ["category", "==", 1]}], "maxDuration": 5}}
-    expanded = eng.expand(fq, big)
-    key = lambda rs: [(r["step"], r["matching_groups"],  # noqa: E731
-                       r["matching_group_rows"]) for r in rs]
-    window = QueryPlan(big, expanded, "id", "timestamp",
-                       sequence_strategy="window"
-                       ).funnel_step_counts().collect()
-    seg = QueryPlan(big, expanded, "id", "timestamp",
-                    sequence_strategy="fold_segmented", fold_segments=7
-                    ).funnel_step_counts().collect()
-    assert key(seg) == key(window)
-
-
-def test_anchor_chain_equals_window_for_absence_steps(spark):
-    """rowFound:false under fold_segmented takes the r11 anchor-chain
-    form (chained per-group min aggregates — no window, no per-group
-    array): it must equal the window-anchor path exactly across absence
-    position (first/mid/last/all/single), maxDuration interaction, a
-    tie-heavy stream, and funnel step counts."""
-    import random
-
-    from funnel_rocket_spark.engine import QueryEngine
-    from funnel_rocket_spark.planner.compiler import QueryPlan
-
-    rng = random.Random(42)
-    rows = [{"id": g, "timestamp": float(rng.randrange(12)),  # many ties
-             "category": rng.randrange(-1, 5), "price": 1}
-            for g in range(300) for _ in range(rng.randrange(1, 30))]
-    df = spark.createDataFrame(pd.DataFrame(rows))
-    eng = QueryEngine("id", "timestamp")
-    seqs = [
-        # absence mid-step
-        [{"filter": ["category", "==", 0]},
-         {"filter": ["category", "==", 1], "rowFound": False},
-         {"filter": ["category", "==", 2]}],
-        # absence-first (anchors the sentinel through)
-        [{"filter": ["category", "==", 4], "rowFound": False},
-         {"filter": ["category", "==", 1]},
-         {"filter": ["category", "==", 2]}],
-        # absence-last
-        [{"filter": ["category", "==", 0]},
-         {"filter": ["category", "==", 3], "rowFound": False}],
-        # all-absence
-        [{"filter": ["category", "==", 4], "rowFound": False},
-         {"filter": ["category", "==", -1], "rowFound": False}],
-        # single absence step
-        [{"filter": ["category", "==", 4], "rowFound": False}],
-    ]
-    cases = [{"sequence": s} for s in seqs] + [
-        # maxDuration × absence: mid-step and absence-first (the
-        # duration window must anchor at the first FOUND step)
-        {"sequence": seqs[0], "maxDuration": 4},
-        {"sequence": seqs[1], "maxDuration": 3},
-    ]
-    for cond in cases:
-        q = {"query": {"conditions": [cond]}}
-        expanded = eng.expand(q, df)
-        w = QueryPlan(df, expanded, "id", "timestamp",
-                      sequence_strategy="window").counts().collect()
-        for n_seg in (1, 4, 64):
-            s = QueryPlan(df, expanded, "id", "timestamp",
-                          sequence_strategy="fold_segmented",
-                          fold_segments=n_seg).counts().collect()
-            assert s == w, (cond, n_seg)
-
-    # funnel with an absence step under fold_segmented
-    fq = {"query": {}, "funnel": {"sequence": [
-        {"filter": ["category", ">=", 0]},
-        {"filter": ["category", "==", 4], "rowFound": False},
-        {"filter": ["category", "<=", 2]}]}}
-    expanded = eng.expand(fq, df)
-    key = lambda rs: [(r["step"], r["matching_groups"],  # noqa: E731
-                       r["matching_group_rows"]) for r in rs]
-    w = QueryPlan(df, expanded, "id", "timestamp",
-                  sequence_strategy="window").funnel_step_counts().collect()
-    s = QueryPlan(df, expanded, "id", "timestamp",
-                  sequence_strategy="fold_segmented"
-                  ).funnel_step_counts().collect()
-    assert key(s) == key(w)
-
-
-def test_histogram_cost_model_routing(spark, seq_df):
-    """With the r11 histogram hint (group_rows_topk + total rows) auto
-    routing is a COST MODEL — estimated slowest window task (greedy
-    whale packing over the uniform remainder) vs the segmented fold's
-    bounded task × the measured per-row premium. It replaced a binary
-    max>threshold test that over-routed the r10 rung's 20M whale
-    (window sort 23.2s vs segmented 73.5s)."""
-    from funnel_rocket_spark.engine import QueryEngine
-    from funnel_rocket_spark.planner.compiler import QueryPlan
-
-    eng = QueryEngine("id", "timestamp")
-    q = {"query": {"conditions": [{"sequence": [
-        {"filter": ["category", "==", 0]},
-        {"filter": ["category", "<=", 2]}]}]}}
-    expanded = eng.expand(q, seq_df)
-    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    def plan(**kw):
-        return QueryPlan(seq_df, expanded, "id", "timestamp", **kw)
-
-    # the r10 rung shape: 20M whale in 100M rows. A max-only threshold
-    # test routed it; the cost model must NOT (window task ≈ uniform
-    # share + whale << premium × segmented task bound).
-    p = plan(group_rows_topk_hint=[20_000_000], total_rows_hint=10**8)
-    assert not p.auto_routed_segmented
-    assert p.auto_route_reason == "cost_model_window"
-    est = p.route_estimates
-    assert est["window_task_rows"] == int(80_000_000 / parts) + 20_000_000
-    assert est["segmented_task_rows"] == int(10**8 / parts + 20_000_000 / 64)
-
-    # a whale that dominates modeled wall-clock routes (premium pinned
-    # low so the crossover is reachable at the test's partition count)
-    p = plan(group_rows_topk_hint=[95_000_000], total_rows_hint=10**8,
-             segmented_cost_premium=1.5)
-    assert p.auto_routed_segmented and p.auto_route_reason == "cost_model"
-    assert p.counts().collect() == plan(
-        sequence_strategy="window").counts().collect()
-
-    # many mid-size whales spread across partitions: no single task
-    # dominates, so no routing (the max-only test can't see this).
-    # Shape chosen so the window side wins for any partition count the
-    # suite might run under (1M whales: LPT gives whale + uniform share
-    # per task, under the 1.5x-premium segmented bound up to ~64 parts)
-    p = plan(group_rows_topk_hint=[1_000_000] * 16, total_rows_hint=10**8,
-             segmented_cost_premium=1.5)
-    assert not p.auto_routed_segmented
-
-    # the hard cap fires on stall-scale whales even when modeled
-    # wall-clock still favors the window sort
-    p = plan(group_rows_topk_hint=[3 * 10**9], total_rows_hint=6 * 10**9)
-    assert p.auto_routed_segmented and p.auto_route_reason == "hard_cap"
-
-    # histogram without total rows can't model cost -> window anchors
-    p = plan(group_rows_topk_hint=[10**9])
-    assert not p.auto_routed_segmented
-    assert p.auto_route_reason is None
-
-    # engine threads the histogram + its knobs through run(); stats
-    # expose the decision inputs; routing never changes answers
-    tuned = QueryEngine("id", "timestamp", segmented_cost_premium=1.5)
-    ref = tuned.run(seq_df, q, with_stats=True)
-    got = tuned.run(seq_df, q, with_stats=True, total_rows=10**8,
-                    group_rows_topk=[95_000_000])
-    assert got["query"] == ref["query"]
-    st = got["stats"]["strategies"]
-    assert st["sequence"] == "fold_segmented"
-    assert st["autoRouteReason"] == "cost_model"
-    assert st["groupRowsTopkHint"] == [95_000_000]
-    assert st["routeEstimates"]["premium"] == 1.5
-
-
-def test_cost_model_routes_when_shuffle_partitions_is_auto(spark, seq_df,
-                                                          monkeypatch):
-    """spark.sql.shuffle.partitions may be a non-integer ("auto" on
-    AQE-managed platforms). The cost model must then fall back to the
-    context's default parallelism, not silently switch whale routing
-    off."""
-    from pyspark.sql.conf import RuntimeConfig
-
-    from funnel_rocket_spark.engine import QueryEngine
-    from funnel_rocket_spark.planner.compiler import QueryPlan
-
-    eng = QueryEngine("id", "timestamp")
-    expanded = eng.expand({"query": {"conditions": [{"sequence": [
-        {"filter": ["category", "==", 0]},
-        {"filter": ["category", "<=", 2]}]}]}}, seq_df)
-    real_get = RuntimeConfig.get
-
-    def fake_get(self, key, *args, **kwargs):
-        if key == "spark.sql.shuffle.partitions":
-            return "auto"
-        return real_get(self, key, *args, **kwargs)
-
-    monkeypatch.setattr(RuntimeConfig, "get", fake_get)
-    p = QueryPlan(seq_df, expanded, "id", "timestamp",
-                  group_rows_topk_hint=[95_000_000], total_rows_hint=10**8,
-                  segmented_cost_premium=1.5)
-    assert p.auto_routed_segmented and p.auto_route_reason == "cost_model"
-    parts = spark.sparkContext.defaultParallelism
-    assert p.route_estimates["segmented_task_rows"] == int(
-        10**8 / parts + 95_000_000 / 64)
-
-
-def test_sorted_layout_hint_keeps_window_anchors(spark, seq_df):
-    """r12: a declared bucketBy(group)+sortBy(group, ts) layout removes
-    the whale sort the segmented fold exists to dodge, so auto routing
-    stays on window anchors even when the histogram cost model would
-    route — EXCEPT past the hard cap, where WindowExec's per-group row
-    buffer (spilled, not sorted) keeps the straggler risk."""
-    from funnel_rocket_spark.engine import QueryEngine
-    from funnel_rocket_spark.planner.compiler import QueryPlan
-
-    eng = QueryEngine("id", "timestamp")
-    q = {"query": {"conditions": [{"sequence": [
-        {"filter": ["category", "==", 0]},
-        {"filter": ["category", "<=", 2]}]}]}}
-    expanded = eng.expand(q, seq_df)
-
-    def plan(**kw):
-        return QueryPlan(seq_df, expanded, "id", "timestamp", **kw)
-
-    # the cost-model-routes shape from test_histogram_cost_model_routing
-    # ... unless the layout is declared sorted
-    routed = plan(group_rows_topk_hint=[95_000_000], total_rows_hint=10**8,
-                  segmented_cost_premium=1.5)
-    assert routed.auto_routed_segmented
-    p = plan(group_rows_topk_hint=[95_000_000], total_rows_hint=10**8,
-             segmented_cost_premium=1.5, sorted_layout_hint=True)
-    assert not p.auto_routed_segmented
-    assert p.auto_route_reason == "sorted_layout_window"
-
-    # hard cap still wins over the layout
-    p = plan(group_rows_topk_hint=[3 * 10**9], total_rows_hint=6 * 10**9,
-             sorted_layout_hint=True)
-    assert p.auto_routed_segmented and p.auto_route_reason == "hard_cap"
-
-    # engine derives the hint from the catalog layout record; only the
-    # (bucket=group, sort=(group, ts)) shape qualifies
+    # the engine derives sortedLayout from the catalog layout record;
+    # only the (bucket=group, sort=(group, ts)) shape qualifies
     assert eng._sorted_layout({"buckets": 4, "bucket_columns": ["id"],
                                "sort_columns": ["id", "timestamp"]})
     assert not eng._sorted_layout(None)
@@ -1198,52 +723,6 @@ def test_sorted_layout_hint_keeps_window_anchors(spark, seq_df):
                                    "bucket_columns": ["category"],
                                    "sort_columns": ["category",
                                                     "timestamp"]})
-
-
-def test_stats_expose_chosen_strategies(spark, seq_df):
-    """with_stats reports WHICH physical plans ran — the routing
-    decision must be auditable from the result JSON alone."""
-    from funnel_rocket_spark.engine import QueryEngine
-
-    eng = QueryEngine("id", "timestamp", segmented_cost_premium=1.5)
-    q = {"query": {"conditions": [{"sequence": [
-        {"filter": ["category", "==", 0]},
-        {"filter": ["category", "<=", 2]}]}],
-        "aggregations": [{"column": "category", "type": "count"}]}}
-    res = eng.run(seq_df, q, with_stats=True)
-    st = res["stats"]["strategies"]
-    assert st["sequence"] == "auto" and not st["autoRoutedSegmented"]
-    assert st["rowUniverse"] == "join"
-    assert st["funnelUniverse"] is None
-    assert st["autoRouteReason"] is None
-
-    routed = eng.run(seq_df, q, with_stats=True, total_rows=10**8,
-                     group_rows_topk=[95_000_000])
-    st2 = routed["stats"]["strategies"]
-    assert st2["sequence"] == "fold_segmented" and st2["autoRoutedSegmented"]
-    assert st2["autoRouteReason"] == "cost_model"
-    assert st2["groupRowsTopkHint"] == [95_000_000]
-    # routing never changes answers
-    assert routed["query"] == res["query"]
-
-    # which universe the funnel ran on: window anchors need no join; the
-    # segmented fold joins its done frame back to the rows, with a
-    # shuffle_hash hint past universe_window_threshold
-    fq = {"funnel": {"sequence": [{"filter": ["category", "==", 0]},
-                                  {"filter": ["category", "<=", 2]}],
-                     "endAggregations": [{"column": "price",
-                                          "type": "countPerValue"}]}}
-    answers = []
-    for threshold, strategy, universe in (
-            (10**12, "window", "window"),
-            (10**12, "fold_segmented", "join"),
-            (0, "fold_segmented", "hash_join")):
-        r = QueryEngine("id", "timestamp",
-                        universe_window_threshold=threshold).run(
-            seq_df, fq, with_stats=True, sequence_strategy=strategy)
-        assert r["stats"]["strategies"]["funnelUniverse"] == universe
-        answers.append(r["funnel"])
-    assert answers[0] == answers[1] == answers[2]
 
 
 def _funnel_agg_df(spark):
@@ -1271,15 +750,17 @@ def _funnel_agg_df(spark):
 def test_funnel_aggregations_match_per_step_semijoin(spark):
     """The engine's funnel block — step counts and every step and end
     aggregation, computed from one labeled universe — equals a per-step
-    reference built here: for each step i, the universe rows semi-joined
-    to the segmented fold's ``funnel_per_group().filter(__fr_done > i)``
-    (independent of the labeled universe's window anchors), then
-    ``aggregation_df``. All five aggregation types; ``top=2`` cuts through
-    ties, so the (metric desc, value asc) order is checked too."""
-    from pyspark.sql import functions as F
+    reference built here: each group's passed-step count from a
+    pure-Python transcription of the reference's iterated-min loop
+    (strict ``>``, as in test_property_differential), independent of
+    window anchors; then, for each step i, ``aggregation_df`` over the
+    universe rows of the groups that passed step i. All five aggregation
+    types; ``top=2`` cuts through ties, so the (metric desc, value asc)
+    order is checked too."""
+    import math
 
     from funnel_rocket_spark.engine import QueryEngine
-    from funnel_rocket_spark.planner.compiler import DONE_COL, QueryPlan
+    from funnel_rocket_spark.planner.compiler import QueryPlan
 
     df = _funnel_agg_df(spark)
     aggs = [
@@ -1312,16 +793,26 @@ def test_funnel_aggregations_match_per_step_semijoin(spark):
     eng = QueryEngine("uid", "ts")
     for query in ({}, condition):
         q = {"query": query, "funnel": funnel}
-        ref_plan = QueryPlan(df, eng.expand(q, df), "uid", "ts",
-                             sequence_strategy="fold_segmented")
-        pg = ref_plan.funnel_per_group()
-        rows = ref_plan.rows_of_matching_groups()
+        ref_plan = QueryPlan(df, eng.expand(q, df), "uid", "ts")
+        rows = ref_plan.rows_of_matching_groups().collect()
         n = len(funnel["sequence"])
+        step_types = [st["filter"][2] for st in funnel["sequence"]]
+        # per group: anchor = min ts of the step's rows with ts > the
+        # previous anchor; done = how many steps chained
+        done = {}
+        for uid in {r["uid"] for r in rows}:
+            grp = [r for r in rows if r["uid"] == uid]
+            anchor, done[uid] = -math.inf, 0
+            for t in step_types:
+                hits = [r["ts"] for r in grp
+                        if r["type"] == t and r["ts"] > anchor]
+                if not hits:
+                    break
+                anchor, done[uid] = min(hits), done[uid] + 1
         # the reference's step rows, materialized once per step
         step_rows = [
             spark.createDataFrame(
-                rows.join(pg.filter(F.col(DONE_COL) > i).select("uid"),
-                          "uid", "left_semi").collect(), df.schema)
+                [r for r in rows if done[r["uid"]] > i], df.schema)
             for i in range(n)]
 
         def ref(agg, i):
@@ -1334,9 +825,9 @@ def test_funnel_aggregations_match_per_step_semijoin(spark):
         def block(aggs_, i):
             return [(a["type"], a.get("name"), ref(a, i)) for a in aggs_]
 
-        want_counts = {r["step"]: (r["matching_groups"],
-                                   r["matching_group_rows"])
-                       for r in ref_plan.funnel_step_counts().collect()}
+        want_counts = {i: (sum(d > i for d in done.values()),
+                           sum(done[r["uid"]] > i for r in rows))
+                       for i in range(n)}
         want_steps = [block(funnel["stepAggregations"], i)
                       for i in range(n)]
         want_end = block(funnel["endAggregations"], n - 1)
@@ -1346,23 +837,21 @@ def test_funnel_aggregations_match_per_step_semijoin(spark):
         assert full[1] == full[2], full
         assert want_counts[0][0] > want_counts[n - 1][0] > 0
 
-        for strategy in ("window", "fold_segmented"):
-            for threshold in (0, 10**12):
-                res = QueryEngine(
-                    "uid", "ts", universe_window_threshold=threshold).run(
-                        df, q, sequence_strategy=strategy)
-                where = (bool(query), strategy, threshold)
-                steps = res["funnel"]["sequence"]
-                assert {i: (s["matchingGroups"], s["matchingGroupRows"])
-                        for i, s in enumerate(steps)} == want_counts, where
-                for i, s in enumerate(steps):
-                    got = [(a["type"], a["name"], a["value"])
-                           for a in s["aggregations"]]
-                    assert got == want_steps[i], (where, i)
-                    # the top-N keeps the reference's ordering
-                    assert ([list(v) for _, _, v in got if isinstance(v, dict)]
-                            == [list(v) for _, _, v in want_steps[i]
-                                if isinstance(v, dict)]), (where, i)
-                end = [(a["type"], a["name"], a["value"])
-                       for a in res["funnel"]["endAggregations"]]
-                assert end == want_end, where
+        for threshold in (0, 10**12):
+            res = QueryEngine(
+                "uid", "ts", universe_window_threshold=threshold).run(df, q)
+            where = (bool(query), threshold)
+            steps = res["funnel"]["sequence"]
+            assert {i: (s["matchingGroups"], s["matchingGroupRows"])
+                    for i, s in enumerate(steps)} == want_counts, where
+            for i, s in enumerate(steps):
+                got = [(a["type"], a["name"], a["value"])
+                       for a in s["aggregations"]]
+                assert got == want_steps[i], (where, i)
+                # the top-N keeps the reference's ordering
+                assert ([list(v) for _, _, v in got if isinstance(v, dict)]
+                        == [list(v) for _, _, v in want_steps[i]
+                            if isinstance(v, dict)]), (where, i)
+            end = [(a["type"], a["name"], a["value"])
+                   for a in res["funnel"]["endAggregations"]]
+            assert end == want_end, where

@@ -81,9 +81,7 @@ def test_sorted_bucketed_layout_is_sort_free(spark, engine):
     """r12: write_bucketed(sort_col) aligns one file per bucket, so the
     scan DECLARES (group, ts) ordering and the window-anchor sequence
     plan contains no Sort node at all — the layout that makes window
-    anchors whale-flat (the partition sort was the whale cliff). The
-    engine, told the layout, must (a) keep auto on window anchors and
-    (b) take the window row universe at every matched-set size."""
+    anchors whale-flat (the partition sort was the whale cliff)."""
     from funnel_rocket_spark.plans import count_sorts
     from funnel_rocket_spark.sources.ingest import write_bucketed
 
@@ -95,7 +93,6 @@ def test_sorted_bucketed_layout_is_sort_free(spark, engine):
     try:
         bdf = spark.table(table)
         seq = engine.plan(bdf, bq.Q_SEQUENCE, layout=layout)
-        assert not seq.auto_routed_segmented
         assert count_sorts(seq.counts()) == 0, formatted_plan(seq.counts())
         assert count_exchanges(seq.counts()) == 1  # final reduce only
 
@@ -415,101 +412,3 @@ def test_bpe_tokenize_reads_only_needed_columns(spark, tmp_path):
     assert "Exchange" not in plan
     rs = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
     assert rs and "lang" not in rs[0] and "extra" not in rs[0]
-
-
-def test_segmented_max_duration_plan_is_window_free(events, engine):
-    """The maxDuration segmented form must keep the whale-proof
-    property: no Window node anywhere (the first-anchor is a groupBy
-    min, the duration bound a row filter, the fold a groupBy
-    aggregate), with partial aggregation (map-side combine) on the
-    group-keyed aggregates."""
-    from funnel_rocket_spark import benchqueries as bq_mod
-    from funnel_rocket_spark.planner.compiler import QueryPlan
-
-    plan = QueryPlan(events, engine.expand(bq_mod.Q_SEQ_MAXDUR, events),
-                     "user_id", "ts", sequence_strategy="fold_segmented")
-    counts = plan.counts()
-    explained = counts._sc._jvm.PythonSQLUtils.explainString(
-        counts._jdf.queryExecution(), "simple")
-    assert "Window" not in explained, explained
-    assert "partial_count" in explained or "HashAggregate" in explained
-    # and the auto-routed twin (a stall-scale whale in the group-size
-    # histogram) compiles to the same strategy
-    routed = QueryPlan(events, engine.expand(bq_mod.Q_SEQ_MAXDUR, events),
-                       "user_id", "ts", group_rows_topk_hint=[3 * 10**9],
-                       total_rows_hint=6 * 10**9)
-    assert routed.sequence_strategy == "fold_segmented"
-
-
-def test_fold_family_universe_hash_join_never_sorts_big_side(events, engine):
-    """Segmented-fold plans can't window their row universe (flags aren't
-    window-expressible without the whale sort), so the many-groups-match
-    shape is the shuffle_hash semi join: the big side must hash, never
-    sort-merge — and values must equal the plain join universe."""
-    from funnel_rocket_spark import benchqueries as bq_mod
-    from funnel_rocket_spark.planner.compiler import QueryPlan
-
-    plan = QueryPlan(events, engine.expand(bq_mod.Q_SEQUENCE, events),
-                     "user_id", "ts", sequence_strategy="fold_segmented")
-    hashed = plan.rows_of_matching_groups(strategy="hash_join")
-    n = hashed.count()  # finalize AQE
-    executed = hashed._jdf.queryExecution().executedPlan().toString()
-    assert "ShuffledHashJoin" in executed, executed
-    assert "SortMergeJoin" not in executed, executed
-    assert n == plan.rows_of_matching_groups(strategy="join").count()
-
-
-def test_engine_picks_hash_join_universe_for_fold_family(events):
-    """Adaptive universe: many matched groups + fold-family sequence →
-    rowUniverse=hash_join (was: silent fall-back to the sort-merge
-    join); anchor-strategy plans keep the windowed universe."""
-    from funnel_rocket_spark import benchqueries as bq_mod
-
-    eng = QueryEngine("user_id", "ts", universe_window_threshold=0)
-    q = dict(bq_mod.Q_SEQUENCE)
-    q = {"query": {"conditions": q["query"]["conditions"],
-                   "aggregations": [{"column": "event_type",
-                                     "type": "countPerValue"}]}}
-    ref = eng.run(events, q, with_stats=True)
-    assert ref["stats"]["strategies"]["rowUniverse"] == "window"
-    folded = eng.run(events, q, with_stats=True,
-                     sequence_strategy="fold_segmented")
-    assert folded["stats"]["strategies"]["rowUniverse"] == "hash_join"
-    assert folded["query"] == ref["query"]
-
-
-def test_anchor_chain_plan_is_window_free(events, engine):
-    """rowFound:false under fold_segmented (the r11 anchor-chain form)
-    must keep the whale-proof property: no Window node, no collect_list
-    — the anchors are chained per-group MIN aggregates with map-side
-    partial combine."""
-    from funnel_rocket_spark import benchqueries as bq_mod
-    from funnel_rocket_spark.planner.compiler import QueryPlan
-
-    plan = QueryPlan(events, engine.expand(bq_mod.Q_SEQ_NOT, events),
-                     "user_id", "ts", sequence_strategy="fold_segmented")
-    counts = plan.counts()
-    explained = counts._sc._jvm.PythonSQLUtils.explainString(
-        counts._jdf.queryExecution(), "simple")
-    assert "Window" not in explained, explained
-    assert "collect_list" not in explained, explained
-    assert "partial_min" in explained or "HashAggregate" in explained
-
-
-def test_segmented_max_duration_reuses_base_agg(events, engine):
-    """_segmented_fold_max_duration references its base aggregate (rows
-    count + first anchor) twice — duration-window join and final
-    coalesce. Both must resolve to ONE executed aggregate via exchange /
-    query-stage reuse, or the full-stream aggregate runs twice per query
-    (the r10 ADVICE finding)."""
-    import re
-
-    from funnel_rocket_spark import benchqueries as bq_mod
-    from funnel_rocket_spark.planner.compiler import QueryPlan
-
-    plan = QueryPlan(events, engine.expand(bq_mod.Q_SEQ_MAXDUR, events),
-                     "user_id", "ts", sequence_strategy="fold_segmented")
-    counts = plan.counts()
-    counts.collect()  # AQE finalizes stage reuse only on execution
-    executed = counts._jdf.queryExecution().executedPlan().toString()
-    assert re.search(r"Reused(Exchange|QueryStage)", executed), executed

@@ -356,54 +356,3 @@ def test_universe_strategies_agree_on_random_queries(spark, engine, rows,
         return sorted((repr(t) for t in map(tuple, df.select(*cols).collect())))
 
     assert norm(join_df) == norm(win_df), query
-
-
-@settings(max_examples=8, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture,
-                                 HealthCheck.too_slow])
-@given(rows=data_st,
-       steps=st.lists(
-           st.tuples(st.sampled_from(["red", "green", "blue"]),
-                     st.sampled_from([True, True, True, False])),
-           min_size=1, max_size=3),
-       max_dur=st.one_of(st.none(), st.integers(min_value=0, max_value=15)),
-       n_seg=st.sampled_from([1, 3, 16]))
-def test_all_strategies_agree_on_random_sequences(spark, engine, rows,
-                                                  steps, max_dur, n_seg):
-    """Strategy equivalence fuzzed: window anchors, segmented fold
-    (random segment counts — including 1, one whole-group fold, and
-    counts above the distinct-ts count), and the auto-routed segmented
-    plan must produce identical counts on random tie-heavy streams, with
-    and without maxDuration, and with random ``rowFound:false`` steps
-    (the r11 anchor-chain form of fold_segmented). This is the property
-    the skew routing rests on: routing can never change answers, only
-    plan shape."""
-    from funnel_rocket_spark.planner.compiler import QueryPlan
-
-    pdf = pd.DataFrame(rows)
-    pdf["price"] = pdf["price"].astype("float64")
-    sdf = spark.createDataFrame(
-        pdf, schema="id string, timestamp bigint, price double, cat string")
-    cond: dict = {"sequence": [
-        {"filter": ["cat", "==", s]} if found
-        else {"filter": ["cat", "==", s], "rowFound": False}
-        for s, found in steps]}
-    if max_dur is not None:
-        cond["maxDuration"] = max_dur
-    q = {"query": {"conditions": [cond]}}
-    expanded = engine.expand(q, sdf)
-
-    def counts(**kw):
-        return QueryPlan(sdf, expanded, "id", "timestamp",
-                         **kw).counts().collect()
-
-    window = counts(sequence_strategy="window")
-    seg = counts(sequence_strategy="fold_segmented", fold_segments=n_seg)
-    assert seg == window, (rows, steps, max_dur, n_seg)
-    # a stall-scale whale in the group-size histogram forces auto routing
-    routed_plan = QueryPlan(sdf, expanded, "id", "timestamp",
-                            group_rows_topk_hint=[3 * 10**9],
-                            total_rows_hint=6 * 10**9,
-                            fold_segments=n_seg)
-    assert routed_plan.sequence_strategy == "fold_segmented"
-    assert routed_plan.counts().collect() == window

@@ -944,23 +944,10 @@ def test_engine_adaptive_universe_matches_join_results(spark):
     assert low == high
 
 
-def test_windowed_universe_rejects_fold_sequences(spark):
-    from funnel_rocket_spark.engine import QueryEngine
-    from funnel_rocket_spark.planner.compiler import QueryPlan
-
-    ev = bq.ts_ns(bq.load_table(spark, SF, "events"))
-    eng = QueryEngine("user_id", "ts")
-    expanded = eng.expand(UNIVERSE_QUERIES[5], ev)
-    plan = QueryPlan(ev, expanded, "user_id", "ts",
-                     sequence_strategy="fold_segmented")
-    with pytest.raises(ValueError, match="anchor"):
-        plan.rows_of_matching_groups(strategy="window").collect()
-
-
 def test_funnel_labeled_anchor_equals_join(spark):
     """The two labeled-universe forms agree row for row at every step:
-    window anchors (join-free) and the segmented fold's done frame
-    joined back to the rows."""
+    rows semi-joined to the matched groups, and the join-free window
+    universe; both label each row from the window anchors."""
     from pyspark.sql import functions as F
 
     from funnel_rocket_spark.engine import QueryEngine
@@ -968,26 +955,28 @@ def test_funnel_labeled_anchor_equals_join(spark):
 
     ev = bq.ts_ns(bq.load_table(spark, SF, "events"))
     eng = QueryEngine("user_id", "ts")
-    q = {"funnel": {"sequence": [
-        {"filter": ["event_type", "==", "view"]},
-        {"filter": ["event_type", "==", "click"]},
-        {"filter": ["event_type", "==", "purchase"]}],
-        "stepAggregations": [{"column": "event_type",
-                              "type": "sumPerValue",
-                              "otherColumn": "value"}]}}
-    anchor = eng.plan(ev, q, sequence_strategy="window").funnel_labeled()
-    join = eng.plan(ev, q, sequence_strategy="fold_segmented"
-                    ).funnel_labeled()
-    cols = sorted(anchor.columns)
-    assert cols == sorted(join.columns) == sorted(
+    q = {"query": {"conditions": [{"filter": ["event_type", "==", "click"],
+                                   "target": ["count", ">=", 2]}]},
+         "funnel": {"sequence": [
+             {"filter": ["event_type", "==", "view"]},
+             {"filter": ["event_type", "==", "click"]},
+             {"filter": ["event_type", "==", "purchase"]}],
+             "stepAggregations": [{"column": "event_type",
+                                   "type": "sumPerValue",
+                                   "otherColumn": "value"}]}}
+    plan = eng.plan(ev, q)
+    join = plan.funnel_labeled("join")
+    window = plan.funnel_labeled("window")
+    cols = sorted(join.columns)
+    assert cols == sorted(window.columns) == sorted(
         ["user_id", "event_type", "value", DONE_COL])
     for step in range(3):
-        a, j = (sorted(map(tuple, f.filter(F.col(DONE_COL) > step)
+        j, w = (sorted(map(tuple, f.filter(F.col(DONE_COL) > step)
                            .select(*cols).collect()))
-                for f in (anchor, join))
-        assert a and a == j, step
-    assert "Join" not in formatted_plan(anchor)
+                for f in (join, window))
+        assert j and j == w, step
     assert "Join" in formatted_plan(join)
+    assert "Join" not in formatted_plan(window)
 
 
 def test_engine_funnel_adaptive_matches_join(spark):

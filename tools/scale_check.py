@@ -9,6 +9,8 @@ Not part of the driver gates — this is the "would the plan survive a
 tests/test_plans.py pin the shapes; this script pins the slope).
 
 Usage: python tools/scale_check.py [n_rows] [n_groups]
+       python tools/scale_check.py <rung> [args]   (see main() for rungs;
+       e.g. ``whalespill 40000000 0.75 1g`` writes tools/rung_whale_spill.json)
 """
 
 from __future__ import annotations
@@ -32,19 +34,21 @@ NANOS_DAY = 86_400_000_000_000
 
 
 def synthesize(spark, n_rows: int, n_groups: int, path: str,
-               whale_every: int | None = None) -> None:
+               whale_share: float | None = None) -> None:
     """Deterministic event stream: hash-derived users/types/values, 90
     days of activity. xxhash64 is fine here — no cross-engine oracle,
-    just volume. ``whale_every=k`` plants a pathological WHALE group:
-    every k-th row lands in user_id -1 (a bot holding 1/k of the whole
-    stream), the rest hash uniformly — the skew shape a per-group
-    window sort must survive."""
+    just volume. ``whale_share=s`` plants a pathological WHALE group:
+    a fraction s of the rows (those with ``id % 1000 < 1000 s``) lands
+    in user_id -1, a bot holding that share of the whole stream; the
+    rest hash uniformly — the skew shape a per-group window sort must
+    survive."""
     types = F.array(*[F.lit(t) for t in
                       ("view", "view", "view", "click", "click",
                        "purchase", "signup", "error")])
     uid = F.pmod(F.xxhash64("id"), F.lit(n_groups))
-    if whale_every:
-        uid = F.when(F.pmod(F.col("id"), F.lit(whale_every)) == 0,
+    if whale_share:
+        uid = F.when(F.pmod(F.col("id"), F.lit(1000))
+                     < F.lit(round(whale_share * 1000)),
                      F.lit(-1)).otherwise(uid)
     df = (
         spark.range(n_rows)
@@ -878,19 +882,6 @@ def kmeans_main(n_vecs: int, dim: int = 64) -> None:
 
 
 
-def _plan_hash(plan, qname: str) -> str:
-    """Physical-plan fingerprint, expr/plan ids normalized away."""
-    import hashlib
-    import re as _re
-
-    from funnel_rocket_spark.plans import formatted_plan
-    dfq = (plan.funnel_step_counts() if qname == "funnel_steps"
-           else plan.counts())
-    norm = _re.sub(r"plan_id=\d+", "plan_id=X",
-                   _re.sub(r"#\d+", "#X", formatted_plan(dfq)))
-    return hashlib.md5(norm.encode()).hexdigest()
-
-
 def _gc_between_runs(spark) -> None:
     """Untimed inter-run cleanup, same hygiene as bench.py's loop (r12;
     without it the whale rung's uniform stream showed a MONOTONIC
@@ -904,228 +895,275 @@ def _gc_between_runs(spark) -> None:
     spark.sparkContext._jvm.System.gc()
 
 
-def whale_main(n_rows: int, whale_every: int = 5) -> None:
-    """Round-9 rung: WHALE-GROUP skew for the per-group sequence/funnel
-    paths. The window path partitions by group, so one bot group holding
-    1/whale_every of a 100M-row stream serializes into a single task —
-    the reference had the same property (group-per-file invariant), but
-    the engine should PROVE the behavior rather than assume it: the
-    window path's partition sort is an EXTERNAL sort (spills, finishes);
-    the segmented fold splits the whale across ts-range segments; auto
-    picks between them from the group-size histogram.
+# The whale rungs' four query shapes. maxDuration is a 30-day bound over
+# the 90-day stream (nanos), so it splits groups.
+WHALE_SEQ_STEPS = [("signup", True), ("click", True), ("purchase", True)]
+WHALE_ABSENCE_STEPS = [("signup", True), ("error", False),
+                       ("purchase", True)]
+WHALE_FUNNEL_STEPS = [("view", True), ("click", True), ("purchase", True)]
+WHALE_MAX_DURATION = 30 * NANOS_DAY
 
-    Prints timings for each query under window, fold_segmented and auto
-    on (uniform, whale) streams of the same size, the skew
-    factor (whale/uniform), and cross-strategy equality of every result
-    on the whale stream."""
+
+def _steps_json(steps) -> list[dict]:
+    return [{"filter": ["event_type", "==", t]} if found
+            else {"filter": ["event_type", "==", t], "rowFound": False}
+            for t, found in steps]
+
+
+WHALE_SHAPES = {
+    "sequence_3step": (WHALE_SEQ_STEPS, None, {"query": {"conditions": [
+        {"sequence": _steps_json(WHALE_SEQ_STEPS)}]}}),
+    "sequence_maxdur": (WHALE_SEQ_STEPS, WHALE_MAX_DURATION,
+                        {"query": {"conditions": [
+                            {"sequence": _steps_json(WHALE_SEQ_STEPS),
+                             "maxDuration": WHALE_MAX_DURATION}]}}),
+    "sequence_absence": (WHALE_ABSENCE_STEPS, None,
+                         {"query": {"conditions": [
+                             {"sequence": _steps_json(
+                                 WHALE_ABSENCE_STEPS)}]}}),
+    "funnel_aggs": (WHALE_FUNNEL_STEPS, None, {"query": {}, "funnel": {
+        "sequence": _steps_json(WHALE_FUNNEL_STEPS),
+        "stepAggregations": [{"column": "event_type",
+                              "type": "countPerValue"}],
+        "endAggregations": [{"column": "event_type",
+                             "type": "sumPerValue",
+                             "otherColumn": "value"}]}}),
+}
+
+
+def _matched_groups(result: dict) -> list[int]:
+    """Groups passing each funnel step, or the sequence's matched groups
+    as a one-element list."""
+    if result.get("funnel"):
+        return [s["matchingGroups"] for s in result["funnel"]["sequence"]]
+    return [result["query"]["matchingGroups"]]
+
+
+def _duckdb_step_groups(con, path: str, steps, max_duration=None,
+                        funnel: bool = False) -> list[int]:
+    """The same per-step group counts from DuckDB over the same parquet:
+    the reference's iterated-min recurrence as chained SQL aggregates
+    (anchor = min ts of the step's rows strictly after the previous
+    anchor; an absence step passes iff no such row exists and carries
+    the anchor over). Steps after the first must also lie within
+    ``max_duration`` of the first anchor. The first step must be a
+    found step."""
+    assert steps[0][1], "first step must be rowFound"
+    dur = (f" AND e.ts <= p.f + {int(max_duration)}"
+           if max_duration is not None else "")
+    ctes = [f"s0 AS (SELECT user_id, min(ts) a, min(ts) f FROM ev "
+            f"WHERE event_type = '{steps[0][0]}' GROUP BY 1)"]
+    for i, (etype, found) in enumerate(steps[1:], start=1):
+        scope = (f"e.user_id = p.user_id AND e.event_type = '{etype}' "
+                 f"AND e.ts > p.a{dur}")
+        if found:
+            ctes.append(
+                f"s{i} AS (SELECT p.user_id, min(e.ts) a, any_value(p.f) f "
+                f"FROM s{i - 1} p JOIN ev e ON {scope} GROUP BY 1)")
+        else:
+            ctes.append(
+                f"s{i} AS (SELECT * FROM s{i - 1} p WHERE NOT EXISTS "
+                f"(SELECT 1 FROM ev e WHERE {scope}))")
+    idx = range(len(steps)) if funnel else [len(steps) - 1]
+    sql = (f"CREATE OR REPLACE VIEW ev AS SELECT * FROM read_parquet("
+           f"'{path}/*.parquet');\n"
+           "WITH " + ",\n".join(ctes) + "\nSELECT "
+           + ", ".join(f"(SELECT count(*) FROM s{i})" for i in idx))
+    return [int(v) for v in con.sql(sql).fetchone()]
+
+
+def whale_main(n_rows: int, whale_share: float = 0.2) -> None:
+    """WHALE-GROUP skew for the per-group sequence/funnel paths. Window
+    anchors partition by group, so one bot group holding ``whale_share``
+    of a 100M-row stream serializes into a single task — the reference
+    had the same property (group-per-file invariant), but the engine
+    should PROVE the behavior rather than assume it: the partition sort
+    is an EXTERNAL sort (spills, finishes).
+
+    Prints timings for each shape on (uniform, whale) streams of the
+    same size and the skew factor (whale/uniform). Same hygiene as
+    every rung here: one untimed warm-up pass per stream, every shape
+    run twice (the second pass in reversed order), min-of-2 reported,
+    max/min spread printed."""
     n_groups = max(1, n_rows // 100)  # mean group ≈ 100 events
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     upath = os.path.join(here, ".scratch",
                          f"events_{n_rows}_{n_groups}.parquet")
     wpath = os.path.join(here, ".scratch",
-                         f"events_whale_{n_rows}_{whale_every}.parquet")
+                         f"events_whale_{n_rows}_{whale_share}.parquet")
 
     spark = get_spark(app_name="scale-check-whale",
                       extra_conf={"spark.driver.memory": os.environ.get(
                           "SPARK_DRIVER_MEM", "16g")})
     spark.sparkContext.setLogLevel("ERROR")
-    for path, we in ((upath, None), (wpath, whale_every)):
+    for path, share in ((upath, None), (wpath, whale_share)):
         if not os.path.exists(path):
             t0 = time.perf_counter()
-            synthesize(spark, n_rows, n_groups, path, whale_every=we)
+            synthesize(spark, n_rows, n_groups, path, whale_share=share)
             print(f"# synthesized {path}: {time.perf_counter()-t0:.1f}s",
                   file=sys.stderr)
 
-    from funnel_rocket_spark.planner.compiler import QueryPlan
-
     eng = QueryEngine("user_id", "ts")
-    seq_q = {"query": {"conditions": [
-        {"sequence": [{"filter": ["event_type", "==", "signup"]},
-                      {"filter": ["event_type", "==", "click"]},
-                      {"filter": ["event_type", "==", "purchase"]}]}]}}
-    fun_q = {"query": {}, "funnel": {"sequence": [
-        {"filter": ["event_type", "==", "view"]},
-        {"filter": ["event_type", "==", "purchase"]}]}}
-    # maxDuration × whale: the r10 first-anchor-join segmented form — a
-    # 30-day bound over the 90-day stream (nanos), so it splits groups
-    dur_q = {"query": {"conditions": [
-        {"sequence": [{"filter": ["event_type", "==", "signup"]},
-                      {"filter": ["event_type", "==", "click"]},
-                      {"filter": ["event_type", "==", "purchase"]}],
-         "maxDuration": 30 * NANOS_DAY}]}}
-    # rowFound:false × whale: the r11 anchor-chain segmented form —
-    # fold/fold_segmented-as-exit-table can't express lookahead, so this
-    # row is the evidence that absence plans now have a whale-safe shape
-    # (and what the window path costs on the same whale)
-    abs_q = {"query": {"conditions": [
-        {"sequence": [{"filter": ["event_type", "==", "signup"]},
-                      {"filter": ["event_type", "==", "error"],
-                       "rowFound": False},
-                      {"filter": ["event_type", "==", "purchase"]}]}]}}
-
-    out = {"n_rows": n_rows, "whale_every": whale_every,
+    out = {"n_rows": n_rows, "whale_share": whale_share,
            "n_groups": n_groups, "timings": {}, "timings_runs": {},
-           "timing_spread": {}, "results": {}}
-    qlist = (("sequence_3step", seq_q), ("funnel_steps", fun_q),
-             ("sequence_maxdur", dur_q), ("sequence_absence", abs_q))
+           "timing_spread": {}, "matched_groups": {}}
     for dist, path in (("uniform", upath), ("whale", wpath)):
         ev = spark.read.parquet(path)
         if dist == "whale":
             out["whale_rows"] = ev.filter(F.col("user_id") == -1).count()
-        # the registration profile's whale-detector stats (same job
-        # register_dataset runs): the r11 histogram head feeds the
-        # "auto" cost model below
-        topk = [r["c"] for r in
-                (ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("c"))
-                 .orderBy(F.desc("c")).limit(16).collect())]
-        out[f"max_group_rows.{dist}"] = topk[0] if topk else None
-        out[f"group_rows_topk.{dist}"] = topk[:3]
-
-        def run_once(strat, qname, q, record_route):
-            expanded = eng.expand(q, ev)
-            plan = QueryPlan(ev, expanded, "user_id", "ts",
-                             sequence_strategy=strat,
-                             total_rows_hint=(
-                                 n_rows if strat == "auto" else None),
-                             group_rows_topk_hint=(
-                                 topk if strat == "auto" else None))
-            if strat == "auto" and record_route:
-                # no flag, no operator knowledge: the histogram cost
-                # model decides. r11 acceptance: auto must run within
-                # 1.1x of the best single strategy on BOTH streams
-                # (the r10 max>threshold hint routed the 20M whale to
-                # the segmented fold, 3x off the window sort)
-                out[f"auto_routed.{dist}.{qname}"] = (
-                    plan.sequence_strategy
-                    if plan.auto_routed_segmented else "window")
-                out[f"auto_route_reason.{dist}.{qname}"] = \
-                    plan.auto_route_reason
-                out[f"route_estimates.{dist}.{qname}"] = \
-                    plan.route_estimates
-                # machine-check that auto's physical plan is the routed
-                # strategy's plan, byte-identical modulo expr/plan ids:
-                # any auto-vs-best gap is then machine variance by
-                # construction, not a plan difference (r12 — the r11
-                # rung's auto_vs_best<1 confusion)
-                routed = (plan.sequence_strategy
-                          if plan.auto_routed_segmented else "window")
-                rp = QueryPlan(ev, expanded, "user_id", "ts",
-                               sequence_strategy=routed)
-                out[f"plan_identity.{dist}.{qname}"] = (
-                    _plan_hash(plan, qname) == _plan_hash(rp, qname))
-            t0 = time.perf_counter()
-            if qname == "funnel_steps":
-                rows = plan.funnel_step_counts().collect()
-                res = [(r["step"], r["matching_groups"],
-                        r["matching_group_rows"]) for r in rows]
-            else:
-                rows = plan.counts().collect()
-                res = sorted(map(tuple, rows))
-            elapsed = round(time.perf_counter() - t0, 2)
-            _gc_between_runs(spark)
-            return elapsed, res
-
-        # Measurement hygiene (r12; VERDICT r11 finding #1): the r11 rung
-        # timed each (strategy, query) ONCE in fixed strategy-major order,
-        # so the first combos paid page-cache + codegen warm-up that the
-        # later ones didn't — identical plans timed 4.5x apart
-        # (uniform.sequence_3step: window 35.09s vs auto=window 7.68s),
-        # contaminating the premium calibration and making auto_vs_best<1
-        # claims physically meaningless. Fix: (a) one UNTIMED warm-up pass
-        # per stream that scans every column the queries touch; (b) every
-        # combo runs twice — round 2 in reversed order, so each combo runs
-        # once early and once late — and the reported timing is the min;
-        # (c) timing_spread = max/min per combo is printed so the rung
-        # itself proves same-plan runs now agree (acceptance: ~1.2x).
-        t0 = time.perf_counter()
         ev.groupBy("event_type").agg(
             F.count(F.lit(1)), F.max("ts"), F.max("user_id"),
-            F.max("event_id")).collect()
-        _, _ = run_once("window", "sequence_3step", seq_q, False)
-        print(f"# {dist}: warm-up {time.perf_counter()-t0:.1f}s",
-              file=sys.stderr)
-        combos = [(strat, qname, q)
-                  for strat in ("window", "fold_segmented", "auto")
-                  for qname, q in qlist]
-        for rnd, order in enumerate((combos, list(reversed(combos)))):
-            for strat, qname, q in order:
-                key = f"{dist}.{qname}.{strat}"
-                try:
-                    t, res = run_once(strat, qname, q, rnd == 0)
-                    out["timings_runs"].setdefault(key, []).append(t)
-                    if key not in out["results"]:
-                        out["results"][key] = res
-                    print(f"# run{rnd} {key}: {t}s", file=sys.stderr)
-                except Exception as e:
-                    out["timings_runs"].setdefault(key, []).append(None)
-                    out["results"][key] = f"ERROR: {str(e)[:120]}"
-        for key, runs in out["timings_runs"].items():
-            ok = [t for t in runs if t is not None]
-            out["timings"][key] = min(ok) if ok else None
-            out["timing_spread"][key] = (
-                round(max(ok) / min(ok), 2) if len(ok) > 1 and min(ok) > 0
-                else None)
-
-    # cross-strategy equality per (dist, query); skew factor per strategy
-    out["equal"] = {}
-    qnames = ("sequence_3step", "funnel_steps", "sequence_maxdur",
-              "sequence_absence")
-    for dist in ("uniform", "whale"):
-        for qname in qnames:
-            vals = [out["results"].get(f"{dist}.{qname}.{s_}")
-                    for s_ in ("window", "fold_segmented", "auto")
-                    if f"{dist}.{qname}.{s_}" in out["results"]]
-            out["equal"][f"{dist}.{qname}"] = (
-                all(v == vals[0] for v in vals)
-                and not isinstance(vals[0], str))
-    out["skew_factor"] = {}
-    for strat in ("window", "fold_segmented", "auto"):
-        for qname in qnames:
-            u = out["timings"].get(f"uniform.{qname}.{strat}")
-            w = out["timings"].get(f"whale.{qname}.{strat}")
-            out["skew_factor"][f"{qname}.{strat}"] = (
-                round(w / u, 2) if u and w else None)
-    # r11 acceptance metric: auto vs the best single strategy per
-    # (stream, query) — the cost model is judged on never being far
-    # from the best pick, on uniform AND whale
-    out["auto_vs_best"] = {}
-    for dist in ("uniform", "whale"):
-        for qname in qnames:
-            best = min((out["timings"].get(f"{dist}.{qname}.{s}") or 1e18)
-                       for s in ("window", "fold_segmented"))
-            a = out["timings"].get(f"{dist}.{qname}.auto")
-            out["auto_vs_best"][f"{dist}.{qname}"] = (
-                round(a / best, 2) if a and best < 1e18 else None)
-    # Re-derive the segmented cost premium from the CLEAN timings
-    # (r12): premium = per-row cost of the segmented fold's slowest
-    # task over the window sort's slowest task, using the cost model's
-    # own task-row estimates. The r11 constant (20.0) was fit on
-    # order-contaminated single runs; this block reports what min-of-2
-    # interleaved runs actually support, per (stream, query) and as a
-    # median — planner default and the per-dataset calibration bounds
-    # (planner/compiler.py) should track the median here.
-    out["premium_measured"] = {}
-    samples = []
-    for dist in ("uniform", "whale"):
-        for qname in qnames:
-            est = out.get(f"route_estimates.{dist}.{qname}")
-            t_w = out["timings"].get(f"{dist}.{qname}.window")
-            t_s = out["timings"].get(f"{dist}.{qname}.fold_segmented")
-            if not (est and t_w and t_s):
-                continue
-            p = ((t_s / est["segmented_task_rows"])
-                 / (t_w / est["window_task_rows"]))
-            out["premium_measured"][f"{dist}.{qname}"] = round(p, 2)
-            samples.append(p)
-    if samples:
-        samples.sort()
-        out["premium_measured"]["median"] = round(
-            samples[len(samples) // 2], 2)
-    del out["results"]  # counts only matter for the equality verdict
+            F.max("event_id")).collect()  # warm-up: page cache + codegen
+        names = list(WHALE_SHAPES)
+        for rnd, order in enumerate((names, list(reversed(names)))):
+            for name in order:
+                key = f"{dist}.{name}"
+                t0 = time.perf_counter()
+                res = eng.run(ev, WHALE_SHAPES[name][2])
+                t = round(time.perf_counter() - t0, 2)
+                _gc_between_runs(spark)
+                out["timings_runs"].setdefault(key, []).append(t)
+                out["matched_groups"][key] = _matched_groups(res)
+                print(f"# run{rnd} {key}: {t}s", file=sys.stderr)
+    for key, runs in out["timings_runs"].items():
+        out["timings"][key] = min(runs)
+        out["timing_spread"][key] = round(max(runs) / max(min(runs), 0.01),
+                                          2)
+    out["skew_factor"] = {
+        name: round(out["timings"][f"whale.{name}"]
+                    / max(out["timings"][f"uniform.{name}"], 0.01), 2)
+        for name in WHALE_SHAPES}
     print(json.dumps(out))
 
 
-def bucketed_main(n_rows: int, whale_every: int = 5) -> None:
+def _spill_path(n_rows: int, whale_share: float) -> str:
+    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    return os.path.join(here, ".scratch",
+                        f"events_whale_{n_rows}_{whale_share}_spill.parquet")
+
+
+def _spill_session(driver_mem: str):
+    spark = get_spark(app_name="scale-check-whale-spill", master="local[4]",
+                      shuffle_partitions=4,
+                      extra_conf={"spark.driver.memory": driver_mem})
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def whale_spill_shapes_main(n_rows: int, whale_share: float,
+                            driver_mem: str, names: list[str]) -> None:
+    """Child process of :func:`whale_spill_main`: run ``names`` back to
+    back in ONE fresh JVM and print one JSON record per shape (seconds,
+    memory and disk spill, failed tasks, matched groups, or the error)."""
+    spark = _spill_session(driver_mem)
+    ev = spark.read.parquet(_spill_path(n_rows, whale_share))
+    eng = QueryEngine("user_id", "ts")
+    for name in names:
+        rec: dict = {"shape": name}
+        t0 = time.perf_counter()
+        try:
+            res = eng.run(ev, WHALE_SHAPES[name][2], with_stats=True)
+        except Exception as e:  # noqa: BLE001 — recorded, not raised
+            # an OOM kills the JVM: later shapes record their own errors
+            res, rec["error"] = None, str(e)[:300]
+        rec["seconds"] = round(time.perf_counter() - t0, 1)
+        if res is not None:
+            st = res["stats"]
+            rec["memory_spill_bytes"] = st["worker"]["memorySpilledBytes"]
+            rec["disk_spill_bytes"] = st["worker"]["diskSpilledBytes"]
+            rec["failed_tasks"] = st["invoker"]["failedTasks"]
+            rec["matched_groups"] = _matched_groups(res)
+            _gc_between_runs(spark)
+        print(json.dumps(rec), flush=True)
+
+
+def whale_spill_main(n_rows: int, whale_share: float = 0.75,
+                     driver_mem: str = "1g",
+                     out_path: str | None = None) -> None:
+    """The whale rung under MEMORY PRESSURE: one group holds
+    ``whale_share`` of an ``n_rows`` stream (the rest spread over
+    ``n_rows / 200`` other groups) and the driver JVM — which hosts the
+    local executors — gets only ``driver_mem``, so the whale's window
+    partition sort and window buffer cannot fit and must spill. Runs on
+    ``local[4]`` with 4 shuffle partitions.
+
+    Each of the four whale shapes runs once through ``QueryEngine.run``
+    with stats in its own fresh JVM (``shapes``), then all four run back
+    to back in one JVM (``one_jvm``), each pass in a child process so an
+    out-of-memory crash is recorded rather than fatal. Records seconds,
+    memory and disk spill, failed tasks, and the matched-group counts
+    next to DuckDB's over the same parquet (per step for the funnel).
+    Writes ``tools/rung_whale_spill.json`` (or ``out_path``)."""
+    import subprocess
+
+    import duckdb
+
+    n_groups = max(1, n_rows // 200)
+    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    path = _spill_path(n_rows, whale_share)
+    out_path = out_path or os.path.join(here, "tools",
+                                        "rung_whale_spill.json")
+    spark = _spill_session(driver_mem)
+    if not os.path.exists(path):
+        t0 = time.perf_counter()
+        synthesize(spark, n_rows, n_groups, path, whale_share=whale_share)
+        print(f"# synthesized {path}: {time.perf_counter()-t0:.1f}s",
+              file=sys.stderr)
+    whale_rows = (spark.read.parquet(path)
+                  .filter(F.col("user_id") == -1).count())
+    version = spark.version
+    spark.stop()
+
+    con = duckdb.connect()
+    con.sql("SET memory_limit = '2GB'")
+    con.sql("SET threads = 2")
+    want = {name: _duckdb_step_groups(con, path, steps, max_dur,
+                                      funnel="funnel" in q)
+            for name, (steps, max_dur, q) in WHALE_SHAPES.items()}
+
+    def run_child(names: list[str]) -> dict:
+        proc = subprocess.run(
+            [sys.executable, os.path.abspath(__file__), "whalespill",
+             str(n_rows), str(whale_share), driver_mem, ",".join(names)],
+            capture_output=True, text=True)
+        recs = {}
+        for ln in proc.stdout.splitlines():
+            if ln.startswith("{"):
+                rec = json.loads(ln)
+                recs[rec.pop("shape")] = rec
+        for name in names:
+            rec = recs.setdefault(name, {
+                "error": f"child exited {proc.returncode} first"})
+            rec["duckdb_groups"] = want[name]
+            rec["match"] = rec.get("matched_groups") == want[name]
+            print(f"# {name}: {rec}", file=sys.stderr)
+        return recs
+
+    def completed(recs: dict) -> bool:
+        return all("error" not in r and r["failed_tasks"] == 0
+                   and r["match"] for r in recs.values())
+
+    mem_kb = next(int(ln.split()[1]) for ln in open("/proc/meminfo")
+                  if ln.startswith("MemTotal:"))
+    out = {"n_rows": n_rows, "whale_share": whale_share,
+           "other_groups": n_groups, "whale_rows": whale_rows,
+           "host": {"cpus": os.cpu_count(),
+                    "mem_gb": round(mem_kb / 2**20, 1)},
+           "spark": {"master": "local[4]", "driver_memory": driver_mem,
+                     "shuffle_partitions": 4, "version": version},
+           "shapes": {}, "one_jvm": {}}
+    for name in WHALE_SHAPES:
+        out["shapes"].update(run_child([name]))
+    out["one_jvm"] = run_child(list(WHALE_SHAPES))
+    out["all_completed_and_match"] = completed(out["shapes"])
+    out["one_jvm_completed_and_match"] = completed(out["one_jvm"])
+    with open(out_path, "w") as fh:
+        json.dump(out, fh, indent=2)
+        fh.write("\n")
+    print(json.dumps(out))
+
+
+def bucketed_main(n_rows: int, whale_share: float = 0.2) -> None:
     """r12 rung: the DECLARED-LAYOUT preference (VERDICT r11 ask #7).
 
     On a ``bucketBy(group) sortBy(group, ts)`` table (one file per
@@ -1133,11 +1171,8 @@ def bucketed_main(n_rows: int, whale_every: int = 5) -> None:
     delivers the distribution + ordering every per-group plan needs, so:
 
     (a) the window-anchor sequence pass runs with NO exchange and NO
-        sort — measured here against the same plan on plain parquet and
-        against the segmented fold on the same bucketed table, on
-        uniform AND whale streams. If window-on-layout is whale-flat
-        and beats segmented, auto's ``sorted_layout_window`` routing
-        (planner/compiler.py) is justified;
+        sort — measured here against the same plan on plain parquet, on
+        uniform AND whale streams;
     (b) the row universe's matched-count threshold stops mattering —
         the window flags pass is compared against the semi join at a
         SELECTIVE (~2% of groups) and a BROAD (~75%) matched set. If
@@ -1153,16 +1188,16 @@ def bucketed_main(n_rows: int, whale_every: int = 5) -> None:
     upath = os.path.join(here, ".scratch",
                          f"events_{n_rows}_{n_groups}.parquet")
     wpath = os.path.join(here, ".scratch",
-                         f"events_whale_{n_rows}_{whale_every}.parquet")
+                         f"events_whale_{n_rows}_{whale_share}.parquet")
     spark = get_spark(app_name="scale-check-bucketed", extra_conf={
         "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "16g"),
         "spark.sql.warehouse.dir": os.path.join(here, ".scratch",
                                                 "warehouse")})
     spark.sparkContext.setLogLevel("ERROR")
-    for path, we in ((upath, None), (wpath, whale_every)):
+    for path, share in ((upath, None), (wpath, whale_share)):
         if not os.path.exists(path):
             t0 = time.perf_counter()
-            synthesize(spark, n_rows, n_groups, path, whale_every=we)
+            synthesize(spark, n_rows, n_groups, path, whale_share=share)
             print(f"# synthesized {path}: {time.perf_counter()-t0:.1f}s",
                   file=sys.stderr)
 
@@ -1192,30 +1227,17 @@ def bucketed_main(n_rows: int, whale_every: int = 5) -> None:
            "timings_runs": {}, "timing_spread": {}, "results": {},
            "plan_gates": {}}
 
-    # -------- (a) sequence strategies on the declared layout ---------- #
+    # -------- (a) window anchors on the declared layout vs parquet ----- #
     for dist in ("uniform", "whale"):
         bdf = spark.table(tables[dist])
         pdf = spark.read.parquet(upath if dist == "uniform" else wpath)
-        topk = [int(r[0]) for r in bdf.groupBy("user_id").count()
-                .orderBy(F.desc("count")).limit(3)
-                .select("count").collect()]
         variants = {
-            "window_layout": lambda: eng.plan(
-                bdf, seq_q, sequence_strategy="window"),
-            "auto_layout": lambda: eng.plan(
-                bdf, seq_q, total_rows=n_rows, group_rows_topk=topk,
-                layout=layout),
-            "fold_segmented_layout": lambda: eng.plan(
-                bdf, seq_q, sequence_strategy="fold_segmented"),
-            "window_parquet": lambda: eng.plan(
-                pdf, seq_q, sequence_strategy="window"),
+            "window_layout": lambda: eng.plan(bdf, seq_q, layout=layout),
+            "window_parquet": lambda: eng.plan(pdf, seq_q),
         }
-        # plan gates, recorded in the rung itself: the layout variants
-        # must be sort-free, single-exchange; auto must stay on window
-        gate = eng.plan(bdf, seq_q, total_rows=n_rows,
-                        group_rows_topk=topk, layout=layout)
-        out["plan_gates"][f"{dist}.auto_route_reason"] = \
-            gate.auto_route_reason
+        # plan gates, recorded in the rung itself: the layout plan must
+        # be sort-free and single-exchange
+        gate = eng.plan(bdf, seq_q, layout=layout)
         out["plan_gates"][f"{dist}.sorts"] = count_sorts(gate.counts())
         out["plan_gates"][f"{dist}.exchanges"] = \
             count_exchanges(gate.counts())
@@ -1276,7 +1298,7 @@ def bucketed_main(n_rows: int, whale_every: int = 5) -> None:
             _gc_between_runs(spark)
             return elapsed, res
 
-        strategies = ("join", "window", "hash_join")
+        strategies = ("join", "window")
         run_universe("window")  # warm-up
         for rnd, names in enumerate((strategies,
                                      tuple(reversed(strategies)))):
@@ -1304,24 +1326,15 @@ def bucketed_main(n_rows: int, whale_every: int = 5) -> None:
                     / max(out["timings"][f"{dist}.seq.window_parquet"],
                           0.01), 2)
         for dist in ("uniform", "whale")}
-    out["auto_vs_segmented"] = {
-        dist: round(out["timings"][f"{dist}.seq.auto_layout"]
-                    / max(out["timings"]
-                          [f"{dist}.seq.fold_segmented_layout"], 0.01), 2)
-        for dist in ("uniform", "whale")}
     del out["results"]
     print(json.dumps(out))
 
 
 def universe_main(n_rows: int) -> None:
-    """Round-11 rung: the MANY-GROUPS-MATCH row universe across sequence
-    strategies. Anchor-strategy plans get the join-free windowed
-    universe; segmented-fold plans can't (their flags aren't
-    window-expressible without the whale sort), so past the broadcast
-    threshold they take the shuffle_hash semi join — this rung measures
-    that path against both the windowed universe (the bar: within
-    ~1.2×) and the sort-merge join it replaces, on an aggregation query
-    whose sequence condition matches most groups."""
+    """The MANY-GROUPS-MATCH row universe: the join-free windowed
+    universe (the engine's pick past ``universe_window_threshold``)
+    against the sort-merge semi join it replaces, on an aggregation
+    query whose sequence condition matches most groups."""
     n_groups = max(1, n_rows // 100)
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     path = os.path.join(here, ".scratch",
@@ -1345,34 +1358,27 @@ def universe_main(n_rows: int) -> None:
                       {"filter": ["event_type", "==", "click"]}]}],
         "aggregations": [{"column": "event_type", "type": "countPerValue",
                           "top": 10}]}}
-    variants = {
-        # engine's anchor-strategy pick: windowed universe (the bar)
-        "window.window_universe": (0, "window"),
-        # segmented fold before r11: forced sort-merge semi join
-        "fold_segmented.join_universe": (2**62, "fold_segmented"),
-        # segmented fold r11: shuffle_hash semi join
-        "fold_segmented.hash_join_universe": (0, "fold_segmented"),
-    }
+    thresholds = {"window_universe": 0, "join_universe": 2**62}
     out = {"n_rows": n_rows, "n_groups": n_groups, "timings": {},
            "universe": {}}
     results = {}
-    for name, (threshold, strat) in variants.items():
+    for name, threshold in thresholds.items():
         eng = QueryEngine("user_id", "ts",
                           universe_window_threshold=threshold)
-        res = eng.run(ev, q, with_stats=True, sequence_strategy=strat)
+        res = eng.run(ev, q, with_stats=True)
         results[name] = res["query"]
         out["universe"][name] = res["stats"]["strategies"]["rowUniverse"]
         t0 = time.perf_counter()
-        res = eng.run(ev, q, sequence_strategy=strat)
+        res = eng.run(ev, q)
         out["timings"][name] = round(time.perf_counter() - t0, 2)
         out["matched_groups"] = res["query"]["matchingGroups"]
         print(f"# {name}: {out['timings'][name]}s "
               f"(universe={out['universe'][name]})", file=sys.stderr)
     vals = list(results.values())
     out["equal"] = all(v == vals[0] for v in vals)
-    w = out["timings"]["window.window_universe"]
-    h = out["timings"]["fold_segmented.hash_join_universe"]
-    out["hash_join_vs_window"] = round(h / w, 2) if w else None
+    w = out["timings"]["window_universe"]
+    j = out["timings"]["join_universe"]
+    out["join_vs_window"] = round(j / w, 2) if w else None
     out["match_fraction"] = round(out["matched_groups"] / n_groups, 3)
     print(json.dumps(out))
 
@@ -1867,12 +1873,21 @@ def main() -> None:
         return
     if len(sys.argv) > 1 and sys.argv[1] == "whale":
         whale_main(int(sys.argv[2]) if len(sys.argv) > 2 else 100_000_000,
-                   int(sys.argv[3]) if len(sys.argv) > 3 else 5)
+                   float(sys.argv[3]) if len(sys.argv) > 3 else 0.2)
+        return
+    if len(sys.argv) > 1 and sys.argv[1] == "whalespill":
+        args = (int(sys.argv[2]) if len(sys.argv) > 2 else 40_000_000,
+                float(sys.argv[3]) if len(sys.argv) > 3 else 0.75,
+                sys.argv[4] if len(sys.argv) > 4 else "1g")
+        if len(sys.argv) > 5:  # child: the named shapes in one JVM
+            whale_spill_shapes_main(*args, sys.argv[5].split(","))
+        else:
+            whale_spill_main(*args)
         return
     if len(sys.argv) > 1 and sys.argv[1] == "bucketed":
         bucketed_main(int(sys.argv[2]) if len(sys.argv) > 2
                       else 100_000_000,
-                      int(sys.argv[3]) if len(sys.argv) > 3 else 5)
+                      float(sys.argv[3]) if len(sys.argv) > 3 else 0.2)
         return
     if len(sys.argv) > 1 and sys.argv[1] == "universe":
         universe_main(int(sys.argv[2]) if len(sys.argv) > 2
