@@ -230,7 +230,8 @@ def _fr_aggregation(query_json: dict, agg: dict, post=None):
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         df = load_table(spark, sf_dir, "events")
         plan = _engine().plan(df, q)
-        ((_agg, out),) = plan.aggregations()
+        out = (plan.aggregation_df(agg, plan.labeled(), [0])
+               .drop("slot", "rank"))
         return post(out) if post else out
 
     return fn
@@ -307,14 +308,15 @@ def _funnel_steps_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _funnel_step_agg_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """countPerValue(event_type) over rows of groups passing funnel step 1
     (W2 stepAggregations through the engine's path: every step from the
-    labeled universe in one job, step 1 selected)."""
+    labeled universe in one job, step 1's slot selected)."""
     df = load_table(spark, sf_dir, "events")
     agg = {"column": "event_type", "type": "countPerValue", "top": 10}
     plan = _engine().plan(df, {"funnel": {**Q_FUNNEL["funnel"],
                                           "stepAggregations": [agg]}})
-    steps = list(range(len(Q_FUNNEL["funnel"]["sequence"])))
-    return (plan.funnel_aggregation_df(agg, plan.funnel_labeled(), steps)
-            .filter(F.col("step") == 1).select("value", "count"))
+    # slot i + 1 holds the rows of the groups that passed step i
+    slots = list(range(1, len(Q_FUNNEL["funnel"]["sequence"]) + 1))
+    return (plan.aggregation_df(agg, plan.labeled(), slots)
+            .filter(F.col("slot") == 2).select("value", "count"))
 
 
 Q_SEQ_MULTIFILTER = {"query": {"conditions": [{"sequence": [
@@ -454,7 +456,7 @@ def _ann_ivf_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute-force k-th best), the standard ANN-benchmark definition — it is
     insensitive to tie-ordering between equal-scoring neighbors. Both
     sides round cosine to 6 decimals with identical semantics, so the
-    comparison is deterministic run-to-run (seeded k-means quantizer).
+    comparison is deterministic run-to-run (deterministic k-means quantizer).
 
     The floor is deliberately conservative: the synthetic test embeddings
     are near-uniform (little cluster structure), so probing 4/16 cells
@@ -464,14 +466,12 @@ def _ann_ivf_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     k, bound = 10, 0.2
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    # frames quantizer (r13): the deterministic in-repo kmeans_lloyd —
-    # 1 seed collect + 2 Lloyd jobs instead of Spark ML fit()'s ~28
-    # sequential jobs (k-means|| init passes dominate a one-shot build).
-    # Measured recall with it: 0.7-1.0 per query across sf0.001/0.01/0.1
-    # vs the 0.2 floor (ML quantizer measured 0.3-0.9 — the swap only
-    # WIDENS the certification margin).
+    # the deterministic in-repo kmeans_lloyd quantizer: 1 seed collect +
+    # 2 Lloyd jobs. Measured recall with it: 0.7-1.0 per query across
+    # sf0.001/0.01/0.1 vs the 0.2 floor (Spark ML's KMeans, the former
+    # quantizer, measured 0.3-0.9 in ~28 sequential jobs).
     ivf = similarity.ivf_topk(emb, queries, k=k, n_clusters=16,
-                              n_probe=4, quantizer="frames", max_iter=2)
+                              n_probe=4, max_iter=2)
     brute = similarity.cosine_topk(emb, queries, k=k)
     kth = brute.groupBy("query_id").agg(F.min("cosine_sim").alias("__kth"))
     per_q = (ivf.join(F.broadcast(kth), "query_id")
@@ -494,13 +494,11 @@ def _ann_ivf_full_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-for-value (the partial-probe entry stays rows-only)."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    # frames quantizer with rounds=0 (centers = the 8 lowest-id vectors,
-    # no Lloyd jobs at all): quantizer quality is irrelevant when every
-    # cell is probed — the result is brute-force-exact for ANY
-    # assignment. Replaces ML KMeans(max_iter=1, random init), whose
-    # fit() alone was ~8 sequential driver jobs.
+    # max_iter=0 (centers = the 8 lowest-id vectors, no Lloyd jobs at
+    # all): quantizer quality is irrelevant when every cell is probed —
+    # the result is brute-force-exact for ANY assignment.
     return similarity.ivf_topk(emb, queries, k=10, n_clusters=8, n_probe=8,
-                               quantizer="frames", max_iter=0)
+                               max_iter=0)
 
 
 _IVF_INDEX_CACHE: dict = {}
@@ -806,13 +804,13 @@ def _fr_groups_approx_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
          "approx": True, "top": 10}]}}
     df = load_table(spark, sf_dir, "events")
     plan = _engine().plan(df, q)
-    ((_agg, out),) = plan.aggregations()
-    approx_col = out.columns[1]  # (value, groups) per the exact twin
+    out = plan.aggregation_df(q["query"]["aggregations"][0], plan.labeled(),
+                              [0])
     exact = (df.groupBy(F.col("event_type").alias("value"))
              .agg(F.countDistinct("user_id").alias("__exact")))
     return (out.join(F.broadcast(exact), "value")
             .select("value",
-                    (F.abs(F.col(approx_col) - F.col("__exact"))
+                    (F.abs(F.col("groups") - F.col("__exact"))
                      / F.col("__exact") <= 0.15).alias("within_tol")))
 
 

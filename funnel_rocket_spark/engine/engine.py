@@ -22,6 +22,16 @@ from pyspark.storagelevel import StorageLevel
 from funnel_rocket_spark.planner.compiler import DEFAULT_TOP_COUNT, QueryPlan
 from funnel_rocket_spark.validation.validator import ExpandedQuery, expand_and_validate
 
+# matched-group count above which the labeled universe's rows come from
+# window flags instead of the semi join (broadcastable below this) — see
+# QueryPlan.rows_of_matching_groups
+UNIVERSE_WINDOW_THRESHOLD = 4_000_000
+# a query's independent aggregation jobs are submitted from this many
+# threads (Spark schedules concurrent jobs; the shared universe is
+# persisted, and Spark's per-partition cache locking means concurrent
+# first-computes block rather than duplicate). 1 = serial.
+AGG_COLLECT_THREADS = 8
+
 
 class QueryEngine:
     """Runs validated queries over a DataFrame keyed by (group, timestamp).
@@ -32,21 +42,9 @@ class QueryEngine:
     tiny aggregates.
     """
 
-    def __init__(self, group_id_column: str, timestamp_column: str,
-                 universe_window_threshold: int = 4_000_000,
-                 agg_collect_threads: int = 8):
+    def __init__(self, group_id_column: str, timestamp_column: str):
         self.group_id_column = group_id_column
         self.timestamp_column = timestamp_column
-        # matched-group count above which the row universe switches from
-        # the semi join (broadcastable below this) to window flags — see
-        # QueryPlan.rows_of_matching_groups
-        self.universe_window_threshold = universe_window_threshold
-        # multi-aggregation queries submit their N independent aggregate
-        # jobs from this many threads (Spark schedules concurrent jobs;
-        # the shared universe is persisted, and Spark's per-partition
-        # cache locking means concurrent first-computes block rather
-        # than duplicate). 1 = serial.
-        self.agg_collect_threads = max(1, int(agg_collect_threads))
 
     def expand(self, query: dict, df: Optional[DataFrame] = None) -> ExpandedQuery:
         schema = (
@@ -125,75 +123,99 @@ class QueryEngine:
 
         query_aggs = q.get("query", {}).get("aggregations") or []
         funnel = q.get("funnel")
-        rows = None
-        rows_persisted = False
-        rows_strategy = None
-        funnel_strategy = None
+        n = len(funnel["sequence"]) if funnel else 0
+        step_aggs = (funnel or {}).get("stepAggregations") or []
+        end_aggs = (funnel or {}).get("endAggregations") or []
+        # each distinct aggregation spec -> the universe slots it reads
+        # (QueryPlan.aggregation_df): 0 for the query block, i + 1 for
+        # funnel step i, n for the end aggregations
+        specs: dict[tuple, tuple[dict, set]] = {}
+        for aggs, slots in ((query_aggs, [0]), (step_aggs, range(1, n + 1)),
+                            (end_aggs, [n])):
+            for a in aggs:
+                specs.setdefault(_spec_key(a), (a, set()))[1].update(slots)
+        needs_universe = bool(specs) or funnel is not None
+        universe = None
+        labeled = None
+        cached = False
         metrics_mgr = None
         if with_stats:
             metrics_mgr = JobGroupMetrics(df.sparkSession)
             metrics_mgr.__enter__()
         matched = None
         try:
-            if plan._conditions and (query_aggs or funnel is not None):
-                # the matched-group frame feeds counts AND every
-                # join-universe build side below: persist it so the
-                # condition pass runs ONCE per query, not once per
-                # consumer, not again as the semi join's build side. The
-                # frame is one row per matched group — bounded by
-                # n_groups, column-pruned to (group, __fr_rows, flags).
+            counts = totals = None
+            if plan._conditions and needs_universe:
+                # the matched-group frame feeds counts AND the semi
+                # join's build side: persist it so the condition pass
+                # runs ONCE per query. The frame is one row per matched
+                # group — bounded by n_groups, column-pruned to (group,
+                # __fr_rows, flags).
                 matched = plan.matched_groups()
                 matched.persist(StorageLevel.MEMORY_AND_DISK)
-            # without conditions or query aggregations nothing routes on
-            # the count, and the funnel's counts collect returns it
-            counts = (plan.counts(matched).collect()[0]
-                      if funnel is None or plan._conditions or query_aggs
-                      else None)
-            if query_aggs:  # the universe feeds query aggregations only;
-                # the funnel branch derives its own labeled universe
-                # adaptive universe: the matched-group count is already in
-                # hand. A small set → semi join (AQE broadcasts it); a set
-                # too big to broadcast would sort-merge the whole table, so
-                # evaluate the same conditions as window flags instead —
-                # join-free, measured 2.9× at 100M rows with 71% of groups
-                # matching.
-                rows_strategy = (
-                    "window" if counts["matching_groups"]
-                    > self.universe_window_threshold else "join")
-                # NOTE (r12, measured): a declared sorted layout does
-                # NOT flip this choice to "window" unconditionally —
-                # on bucketBy(group)+sortBy(group, ts) the semi join's
-                # big side is ALSO exchange-free and sort-free (the
-                # declared order satisfies the SMJ), and the join
-                # reuses the persisted matched frame while the window
-                # pass re-evaluates conditions as flags. The 100M rung
-                # (tools/rung_bucketed_100m_r12.json) has the join at
-                # 1.16 s vs window 1.84 s selective and 1.69 vs 1.92
-                # broad, so the matched-count threshold stays the
-                # right picker on every layout.
-                rows = plan.rows_of_matching_groups(strategy=rows_strategy,
-                                                    matched=matched)
-                if len(query_aggs) > 1:
-                    # caching the universe pays only when several
-                    # aggregations read it; for one consumer the
-                    # materialization is pure overhead (measured 35 s vs
-                    # 13 s at 100M rows on the window path)
-                    rows.persist(StorageLevel.MEMORY_AND_DISK)
-                    rows_persisted = True
-            funnel_block = None
-            if funnel is not None:
-                funnel_block, totals, funnel_strategy = self._run_funnel(
-                    plan, matched,
-                    None if counts is None else counts["matching_groups"])
-                if counts is None:
-                    counts = totals
+            if plan._conditions or not needs_universe:
+                counts = plan.counts(matched).collect()[0]
+            if needs_universe:
+                if plan._conditions:
+                    # the matched-group count is in hand. A small set →
+                    # semi join (AQE broadcasts it); a set too big to
+                    # broadcast would sort-merge the whole table, so
+                    # evaluate the same conditions as window flags
+                    # instead — join-free, measured 2.9× at 100M rows
+                    # with 71% of groups matching. A declared sorted
+                    # layout keeps this choice: the 100M bucketed rung
+                    # (tools/rung_bucketed_100m_r12.json) measured the
+                    # join at or below the window flags there too.
+                    universe = ("window" if counts["matching_groups"]
+                                > UNIVERSE_WINDOW_THRESHOLD else "join")
+                labeled = plan.labeled(universe or "join", matched=matched)
+                # the funnel's counts, and without conditions the
+                # query's, come from the universe
+                counted = funnel is not None or counts is None
+                readers = len(specs) + counted
+                if readers > 1:
+                    # caching pays only when several jobs read the
+                    # universe; for one the materialization is pure
+                    # overhead (measured 35 s vs 13 s at 100M rows on
+                    # the window universe)
+                    labeled.persist(StorageLevel.MEMORY_AND_DISK)
+                    cached = True
+                if counted:
+                    totals = plan.universe_counts(labeled).collect()[0]
+                    if counts is None:
+                        counts = totals
+
+            def values(item: tuple[dict, set]) -> dict:
+                agg, slots = item
+                adf = plan.aggregation_df(agg, labeled, sorted(slots))
+                got = adf.collect()
+                if agg["type"] == "count":
+                    return {r["slot"]: r["count"] for r in got}
+                out: dict = {s: {} for s in slots}
+                for r in sorted(got, key=lambda r: (r["slot"], r["rank"])):
+                    out[r["slot"]][str(r["value"])] = r[adf.columns[-1]]
+                return out
+
+            by_spec = dict(zip(specs, self._map(plan, values,
+                                                list(specs.values()))))
+
+            def entries(aggs: list[dict], slot: int) -> Optional[list[dict]]:
+                return ([_agg_entry(a, by_spec[_spec_key(a)][slot])
+                         for a in aggs] if aggs else None)
+
             result: dict = {
                 "query": {
                     "matchingGroups": counts["matching_groups"],
                     "matchingGroupRows": counts["matching_group_rows"],
-                    "aggregations": self._collect_aggregations(plan, query_aggs, rows),
+                    "aggregations": entries(query_aggs, 0),
                 },
-                "funnel": funnel_block,
+                "funnel": None if funnel is None else {
+                    "sequence": [{"matchingGroups": totals[f"__g{i}"],
+                                  "matchingGroupRows": totals[f"__r{i}"],
+                                  "aggregations": entries(step_aggs, i + 1)}
+                                 for i in range(n)],
+                    "endAggregations": entries(end_aggs, n),
+                },
             }
             if with_stats:
                 stats = {
@@ -203,8 +225,7 @@ class QueryEngine:
                     # which physical plans the engine actually chose,
                     # auditable from a result JSON alone
                     "strategies": {
-                        "rowUniverse": rows_strategy,
-                        "funnelUniverse": funnel_strategy,
+                        "universe": universe,
                         "sortedLayout": self._sorted_layout(layout),
                     },
                     "usedColumns": plan.expanded.used_columns,
@@ -219,79 +240,21 @@ class QueryEngine:
         finally:
             if metrics_mgr is not None:
                 metrics_mgr.__exit__(None, None, None)
-            if rows_persisted:
-                rows.unpersist()
+            if cached:
+                labeled.unpersist()
             if matched is not None:
                 matched.unpersist()
 
-    def _run_funnel(self, plan: QueryPlan, matched: Optional[DataFrame],
-                    groups: Optional[int]) -> tuple[dict, dict, str]:
-        """(funnel block, ``funnel_counts`` row, universe strategy), all
-        from ONE labeled universe (``QueryPlan.funnel_labeled``): step
-        counts from its per-group frame, each distinct step/end
-        aggregation spec from one multi-step job (end aggregations are
-        the last step's slot). ``groups``: the matched-group count, when
-        routing already needed it. Past ``universe_window_threshold`` the
-        funnel takes the join-free window universe."""
-        funnel = plan.q["funnel"]
-        n = len(funnel["sequence"])
-        step_aggs = funnel.get("stepAggregations") or []
-        end_aggs = funnel.get("endAggregations") or []
-        specs = {_spec_key(a): a for a in step_aggs + end_aggs}
-        step_keys = {_spec_key(a) for a in step_aggs}
-        many = groups is not None and groups > self.universe_window_threshold
-        # without conditions the universe is the table: no join
-        uni = "window" if many or not plan._conditions else "join"
-        # the counts collect materializes the cached labeled universe
-        # (funnel_per_group rebuilds its plan), then every aggregation
-        # reads it: the table is scanned once
-        labeled = plan.funnel_labeled(uni, matched=matched)
-        if specs:
-            labeled.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            totals = plan.funnel_counts(plan.funnel_per_group(
-                uni, matched=matched)).collect()[0]
-
-            def values(item) -> dict:
-                key, agg = item
-                steps = list(range(n)) if key in step_keys else [n - 1]
-                adf = plan.funnel_aggregation_df(agg, labeled, steps)
-                got = adf.collect()
-                if agg["type"] == "count":
-                    return {r["step"]: r["count"] for r in got}
-                out: dict = {i: {} for i in steps}
-                for r in sorted(got, key=lambda r: (r["step"], r["rank"])):
-                    out[r["step"]][str(r["value"])] = r[adf.columns[-1]]
-                return out
-
-            by_spec = dict(zip(specs, self._map(plan, values,
-                                                list(specs.items()))))
-        finally:
-            if specs:
-                labeled.unpersist()
-
-        def entries(aggs: list[dict], step: int) -> Optional[list[dict]]:
-            return ([_agg_entry(a, by_spec[_spec_key(a)][step]) for a in aggs]
-                    if aggs else None)
-
-        return {
-            "sequence": [{"matchingGroups": totals[f"__g{i}"],
-                          "matchingGroupRows": totals[f"__r{i}"],
-                          "aggregations": entries(step_aggs, i)}
-                         for i in range(n)],
-            "endAggregations": entries(end_aggs, n - 1),
-        }, totals, uni
-
     def _map(self, plan: QueryPlan, fn, items: list) -> list:
         """``[fn(x) for x in items]`` for independent tiny-result jobs,
-        submitted concurrently from up to ``agg_collect_threads`` threads
+        submitted concurrently from up to ``AGG_COLLECT_THREADS`` threads
         so the phase costs ~the slowest job, not the sum. Pool threads
         inherit the caller's Spark job group: setJobGroup is thread-LOCAL
         (test_job_group_stats_are_thread_scoped), and jobs escaping the
         query's JobGroupMetrics group would vanish from its stats."""
         from concurrent.futures import ThreadPoolExecutor
 
-        if len(items) <= 1 or self.agg_collect_threads == 1:
+        if len(items) <= 1 or AGG_COLLECT_THREADS == 1:
             return [fn(x) for x in items]
         sc = plan.df.sparkSession.sparkContext
         props = {k: sc.getLocalProperty(k)
@@ -304,27 +267,8 @@ class QueryEngine:
                     sc.setLocalProperty(k, v)
             return fn(item)
 
-        with ThreadPoolExecutor(min(len(items),
-                                    self.agg_collect_threads)) as ex:
+        with ThreadPoolExecutor(min(len(items), AGG_COLLECT_THREADS)) as ex:
             return list(ex.map(wrapped, items))
-
-    def _collect_aggregations(
-        self, plan: QueryPlan, aggs: list[dict], rows: Optional[DataFrame],
-    ) -> Optional[list[dict]]:
-        if not aggs:
-            return None
-
-        def one(agg: dict) -> dict:
-            adf = plan.aggregation_df(agg, rows)
-            collected = adf.collect()
-            if agg["type"] == "count":
-                return _agg_entry(agg, collected[0]["count"]
-                                  if collected else 0)
-            metric = adf.columns[-1]
-            return _agg_entry(agg, {str(r["value"]): r[metric]
-                                    for r in collected})
-
-        return self._map(plan, one, aggs)
 
 
 def _spec_key(agg: dict) -> tuple:

@@ -349,10 +349,8 @@ def embedding_dup_pairs(df: DataFrame, threshold: float = 0.99,
         block_pairs, schema="id_a long, id_b long, cosine_sim double")
 
 
-def ivf_index(corpus: DataFrame, n_clusters: int = 16, seed: int = 42,
-              max_iter: int = 8, id_col: str = "vec_id",
-              vec_col: str = "embedding", init_mode: str = "k-means||",
-              quantizer: str = "ml"):
+def ivf_index(corpus: DataFrame, n_clusters: int = 16, max_iter: int = 8,
+              id_col: str = "vec_id", vec_col: str = "embedding"):
     """Build an IVF (inverted-file) index: k-means coarse quantizer.
 
     Returns ``(assigned, centers)`` — the cell-assigned corpus DataFrame
@@ -361,61 +359,29 @@ def ivf_index(corpus: DataFrame, n_clusters: int = 16, seed: int = 42,
     ``assigned`` out partitioned by ``__cell`` (and persist the centers) and
     every subsequent :func:`ivf_search` is a pruned read + per-cell scoring.
 
-    ``quantizer`` picks the k-means implementation:
-
-    - ``"ml"`` (default) — Spark ML ``KMeans`` (k-means|| init). Quality
-      reference, but ``fit()`` runs ~3 jobs per init step + iteration:
-      ~28 sequential driver round-trips for a 16-cell coarse quantizer,
-      which DOMINATES a one-shot index build on anything but a huge
-      corpus.
-    - ``"frames"`` — the in-repo deterministic :func:`kmeans_lloyd`
-      (seeded init from the k lowest ids, ``max_iter`` Lloyd rounds,
-      centers rounded per round): one tiny seed collect + one job per
-      round. A coarse quantizer does not need converged centers — cells
-      only route probes — and the per-cell recall stays comfortably
-      above the self-certifying floors (measured in the catalog
-      queries). Assignment (max-cosine, ties to lowest index) runs as a
-      codegen'd expression over ALL corpus rows — zero vectors land in
-      cell 0 rather than being dropped.
+    The quantizer is the in-repo deterministic :func:`kmeans_lloyd`
+    (init from the k lowest ids, ``max_iter`` Lloyd rounds, centers
+    rounded per round): one tiny seed collect + one job per round. A
+    coarse quantizer does not need converged centers — cells only route
+    probes — and the per-cell recall stays comfortably above the
+    self-certifying floors (measured in the catalog queries).
     """
     corpus = drop_null_vectors(corpus, vec_col).select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col))
-    if not corpus.head(1):  # KMeans.fit throws on an empty dataset
+    if not corpus.head(1):  # no rows to seed the centers from
         return corpus.withColumn("__cell", F.lit(0).cast("int")), []
-    if quantizer == "frames":
-        _, centers = kmeans_lloyd(corpus, k=n_clusters, rounds=max_iter,
-                                  id_col=id_col, vec_col=vec_col)
-        centers = [list(c) for c in centers]
-        # Arrow GEMM assignment, not _assign_expr: a k×dim literal
-        # expression at IVF sizes (16 × 64) generates a codegen method
-        # Janino chokes on (measured: 86 s for 500 rows); the batched
-        # GEMM is one numpy matmul per batch. Zero vectors land in cell
-        # 0 either way (all-zero sims, argmax keeps the first).
-        assigned = _gemm_assign(corpus, centers, id_col, vec_col) \
-            .withColumnRenamed("cluster", "__cell")
-        return assigned, centers
-    if quantizer != "ml":
-        raise ValueError(f"quantizer must be ml|frames: {quantizer!r}")
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-    ml_corpus = corpus.withColumn("__features", array_to_vector(F.col(vec_col)))
-    # Spark ML's KMeans no longer persists an uncached input itself, so
-    # every k-means|| init pass and Lloyd iteration re-ran the scan +
-    # array_to_vector conversion. Persisting changes neither values nor
-    # partitioning (the seeded init samples the same partitions), and the
-    # assignment transform below reads the same cache. Measured at sf0.1:
-    # ann_ivf_topk 2.36 → 1.79 s, ann_ivf_fullprobe 1.23 → 1.04 s.
-    from funnel_rocket_spark.operators.dedup import bounded_persist
-    ml_corpus = bounded_persist(ml_corpus)
-    # A coarse quantizer doesn't need converged Lloyd iterations — cell
-    # boundaries just need to be stable enough to route probes.
-    # init_mode="random" skips the (itself iterative) k-means|| init passes —
-    # right when cell quality barely matters (e.g. full-probe verification).
-    km = KMeans(k=n_clusters, seed=seed, maxIter=max_iter, initMode=init_mode,
-                featuresCol="__features", predictionCol="__cell")
-    model = km.fit(ml_corpus)
-    assigned = model.transform(ml_corpus).select(id_col, vec_col, "__cell")
-    return assigned, model.clusterCenters()
+    _, centers = kmeans_lloyd(corpus, k=n_clusters, rounds=max_iter,
+                              id_col=id_col, vec_col=vec_col)
+    centers = [list(c) for c in centers]
+    # Arrow GEMM assignment, not _assign_expr: a k×dim literal
+    # expression at IVF sizes (16 × 64) generates a codegen method
+    # Janino chokes on (measured: 86 s for 500 rows); the batched
+    # GEMM is one numpy matmul per batch. Assignment (max-cosine, ties
+    # to the lowest index) covers ALL corpus rows: zero vectors land in
+    # cell 0 (all-zero sims, argmax keeps the first).
+    assigned = _gemm_assign(corpus, centers, id_col, vec_col) \
+        .withColumnRenamed("cluster", "__cell")
+    return assigned, centers
 
 
 def save_ivf_index(assigned: DataFrame, centers, path: str) -> None:
@@ -523,21 +489,17 @@ def ivf_search(assigned: DataFrame, centers, queries: DataFrame, k: int = 10,
 
 
 def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
-             n_clusters: int = 16, n_probe: int = 4, seed: int = 42,
-             max_iter: int = 8,
+             n_clusters: int = 16, n_probe: int = 4, max_iter: int = 8,
              id_col: str = "vec_id", vec_col: str = "embedding",
-             query_id_col: str = "query_id",
-             init_mode: str = "k-means||",
-             quantizer: str = "ml") -> DataFrame:
+             query_id_col: str = "query_id") -> DataFrame:
     """One-shot IVF approximate top-k: :func:`ivf_index` + :func:`ivf_search`.
 
     Convenience wrapper — production reuse should build the index once and
     search it many times (index build dominates one-shot cost).
     """
-    assigned, centers = ivf_index(corpus, n_clusters=n_clusters, seed=seed,
+    assigned, centers = ivf_index(corpus, n_clusters=n_clusters,
                                   max_iter=max_iter, id_col=id_col,
-                                  vec_col=vec_col, init_mode=init_mode,
-                                  quantizer=quantizer)
+                                  vec_col=vec_col)
     return ivf_search(assigned, centers, queries, k=k, n_probe=n_probe,
                       id_col=id_col, vec_col=vec_col,
                       query_id_col=query_id_col)
@@ -1256,7 +1218,7 @@ def _pq_assign(S, cbk):
 
 
 def ivf_pq_index(corpus: DataFrame, n_clusters: int = 16, m: int = 8,
-                 n_bits: int = 8, rounds: int = 4, seed: int = 42,
+                 n_bits: int = 8, rounds: int = 4,
                  max_iter: int = 8, id_col: str = "vec_id",
                  vec_col: str = "embedding",
                  train_rows: int = 1 << 20):
@@ -1279,8 +1241,9 @@ def ivf_pq_index(corpus: DataFrame, n_clusters: int = 16, m: int = 8,
     arithmetic and the suite's cosine scores are exact duals
     (L2² = 2 − 2·cos on unit vectors).
 
-    Deterministic for fixed (data, params): seeded coarse k-means, codebook
-    seeds = the K lowest-id residual subvectors, ties to the lowest code.
+    Deterministic for fixed (data, params): the coarse k-means and the
+    codebooks both seed from the lowest ids (codebook seeds = the K
+    lowest-id residual subvectors), ties to the lowest code.
 
     ``train_rows`` caps the codebook TRAINING set FAISS-style: above the
     cap, training reads a deterministic xxhash64(id)-gated sample —
@@ -1303,12 +1266,11 @@ def ivf_pq_index(corpus: DataFrame, n_clusters: int = 16, m: int = 8,
                                    .alias(vec_col)),
                            id_col, vec_col)
     # PERSIST the normalized frame before the k-means fit: the
-    # normalization is an interpreted HOF projection, and Spark-ML KMeans
-    # re-evaluates its input per iteration — uncached, the coarse fit
-    # measured 77.7 s at 1M×64 vs 10.7 s on a materialized frame (the
-    # dominant term of the r4 164 s build the VERDICT flagged).
+    # normalization is an interpreted HOF projection, and every Lloyd
+    # round re-reads its input — uncached, a coarse fit measured 77.7 s
+    # at 1M×64 vs 10.7 s on a materialized frame.
     unit = bounded_persist(unit)
-    assigned, centers = ivf_index(unit, n_clusters=n_clusters, seed=seed,
+    assigned, centers = ivf_index(unit, n_clusters=n_clusters,
                                   max_iter=max_iter, id_col=id_col,
                                   vec_col=vec_col)
     if not centers:  # empty corpus: empty index, dimensionless codebooks
@@ -1557,8 +1519,7 @@ def ivf_pq_search(codes_df: DataFrame, centers, codebooks,
 
 def ivf_pq_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
                 n_clusters: int = 16, m: int = 8, n_bits: int = 6,
-                n_probe: int = 4, rounds: int = 4, seed: int = 42,
-                max_iter: int = 8,
+                n_probe: int = 4, rounds: int = 4, max_iter: int = 8,
                 id_col: str = "vec_id", vec_col: str = "embedding",
                 query_id_col: str = "query_id",
                 rerank: bool = False,
@@ -1569,7 +1530,7 @@ def ivf_pq_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     cell) and searches many times."""
     codes, centers, cb = ivf_pq_index(
         corpus, n_clusters=n_clusters, m=m, n_bits=n_bits, rounds=rounds,
-        seed=seed, max_iter=max_iter, id_col=id_col, vec_col=vec_col)
+        max_iter=max_iter, id_col=id_col, vec_col=vec_col)
     return ivf_pq_search(codes, centers, cb, queries, k=k, n_probe=n_probe,
                          id_col=id_col, vec_col=vec_col,
                          query_id_col=query_id_col,

@@ -14,7 +14,7 @@ group.** All conditions are evaluated in a single ``groupBy(group_id)`` pass:
         (sum_matching(pred1, X) < 350).alias("__cond_1"),
         ...)
     matched = per_group.filter(relation)      # "$0 and ($1 or $2)"
-    rows    = df.join(matched, G, "left_semi")  # universe for aggregations
+    rows    = df.join(matched, G, "left_semi")  # the labeled universe's rows
 
 Sequence conditions need per-row comparisons against per-group running state;
 those are computed as window aggregates over ``Window.partitionBy(G)`` *before*
@@ -359,7 +359,8 @@ class QueryPlan:
                                 matched: Optional[DataFrame] = None
                                 ) -> DataFrame:
         """All rows of matching groups (reference F5/J1 semi-filter,
-        ``helpers/pandas.py:20-37``): the universe for aggregations + funnel.
+        ``helpers/pandas.py:20-37``): the rows of the labeled universe
+        (``labeled``) that every aggregation and the funnel read.
 
         ``strategy="join"`` (default): a left-semi join on the group key —
         AQE broadcasts when the matched-group set is small. The right
@@ -409,72 +410,35 @@ class QueryPlan:
                                F.coalesce(flag, F.lit(False)))
         return df.filter(self.relation_column()).select(*original_cols)
 
-    # ----------------------------- aggregations ----------------------- #
+    # ------------------------- labeled universe ----------------------- #
 
-    def aggregation_df(self, agg: dict, rows: DataFrame) -> DataFrame:
-        """One aggregation (reference A4-A8, ``query_engine.py:61-67``) over a
-        row universe. Per-value maps return (value, <agg>) DataFrames trimmed to
-        exact top-K by value desc — the reference's per-worker grace-factor
-        approximation (A10) is unnecessary under Spark's exact partial/final agg.
-        """
-        col, atype = agg["column"], agg["type"]
-        other = agg.get("otherColumn")
-        top = int(agg.get("top", DEFAULT_TOP_COUNT))
-        if atype == "count":
-            return rows.agg(F.count(F.col(col)).alias("count"))
-        # approx=true switches groupsPerValue to HLL approx_count_distinct —
-        # the scale option SURVEY §2.4/A6 calls for (exact is the default,
-        # matching the reference)
-        groups_agg = (
-            F.approx_count_distinct(F.col(self.group_col))
-            if agg.get("approx", False)
-            else F.count_distinct(F.col(self.group_col))
-        ).alias("groups")
-        per_value = {
-            "countPerValue": F.count(F.lit(1)).alias("count"),
-            "groupsPerValue": groups_agg,
-            "sumPerValue": F.sum(F.col(other)).alias("sum") if other else None,
-            "meanPerValue": F.avg(F.col(other)).alias("mean") if other else None,
-        }[atype]
-        out = rows.groupBy(F.col(col).alias("value")).agg(per_value)
-        metric = out.columns[-1]
-        return out.orderBy(F.desc(metric), F.asc("value")).limit(top)
-
-    def aggregations(self, rows: Optional[DataFrame] = None) -> list[tuple[dict, DataFrame]]:
-        aggs = self.q.get("query", {}).get("aggregations") or []
-        if not aggs:
-            return []
-        rows = rows if rows is not None else self.rows_of_matching_groups()
-        return [(a, self.aggregation_df(a, rows)) for a in aggs]
-
-    # ------------------------------- funnel ---------------------------- #
-
-    def funnel_labeled(self, strategy: str = "join",
-                       matched: Optional[DataFrame] = None
-                       ) -> Optional[DataFrame]:
-        """The LABELED funnel universe: every row of the funnel universe
-        (reference W2 — rows of groups matching the query conditions,
-        ``query_engine.py:102-104``), pruned to the group column and the
-        columns the funnel's step and end aggregations read, plus
-        ``__fr_done``, the group's matched-prefix length. "Group passed
-        step i" is ``__fr_done > i`` on any of its rows, so every step
-        count and every step/end aggregation reads this one frame.
-        ``strategy`` picks the universe construction (see
+    def labeled(self, strategy: str = "join",
+                matched: Optional[DataFrame] = None) -> DataFrame:
+        """The query's LABELED universe: every row of the matching groups
+        (reference F5/W2, ``query_engine.py:102-104``), pruned to the
+        group column and the columns the query, step and end
+        aggregations read, plus ``__fr_done``: the group's matched
+        funnel-prefix length, the constant 0 without a funnel. "Group
+        passed step i" is ``__fr_done > i`` on any of its rows, so the
+        query's counts, every funnel step count and every aggregation
+        read this one frame (see ``aggregation_df`` for the slots).
+        ``strategy`` and ``matched`` pick the row construction (see
         ``rows_of_matching_groups``). ``__fr_done`` comes from the
         anchors, which are per-group constants on every row, so labeling
         adds no join.
         """
-        spec = self._funnel_spec
-        if spec is None:
-            return None
-        funnel = self.q["funnel"]
+        funnel = self.q.get("funnel") or {}
         keep = [self.group_col]
-        for agg in ((funnel.get("stepAggregations") or [])
+        for agg in ((self.q.get("query", {}).get("aggregations") or [])
+                    + (funnel.get("stepAggregations") or [])
                     + (funnel.get("endAggregations") or [])):
             for c in (agg["column"], agg.get("otherColumn")):
                 if c and c not in keep:
                     keep.append(c)
         rows = self.rows_of_matching_groups(strategy, matched=matched)
+        spec = self._funnel_spec
+        if spec is None:
+            return rows.select(*keep, F.lit(0).alias(DONE_COL))
         anchored = with_sequence_anchors(rows, spec, self.group_col,
                                          self.ts_col)
         done = reduce(operator.add,
@@ -482,72 +446,79 @@ class QueryPlan:
                        for i in range(len(spec.step_preds))])
         return anchored.select(*keep, done.alias(DONE_COL))
 
+    def _labeled_per_group(self, labeled: DataFrame) -> DataFrame:
+        return labeled.groupBy(self.group_col).agg(
+            F.count(F.lit(1)).alias(ROWS_COL), F.max(DONE_COL).alias(DONE_COL))
+
     def funnel_per_group(self, strategy: str = "join",
                          matched: Optional[DataFrame] = None
                          ) -> Optional[DataFrame]:
         """(group, __fr_rows, __fr_done): row count + completed-step count
-        per group of the funnel universe. ``strategy`` picks the universe
-        construction (see ``rows_of_matching_groups``). It aggregates the
-        labeled universe: ``done`` counts non-null anchors, valid because
-        passing step i requires passing i-1; the groupBy reuses the anchor
-        window's partitioning.
+        per group of the funnel universe (``labeled``). ``done`` counts
+        non-null anchors, valid because passing step i requires passing
+        i-1; the groupBy reuses the anchor window's partitioning.
         """
         if self._funnel_spec is None:
             return None
-        return self.funnel_labeled(strategy, matched=matched).groupBy(
-            self.group_col).agg(F.count(F.lit(1)).alias(ROWS_COL),
-                                F.max(DONE_COL).alias(DONE_COL))
+        return self._labeled_per_group(self.labeled(strategy, matched))
 
-    def funnel_counts(self, per_group: DataFrame) -> DataFrame:
-        """ONE row over a ``funnel_per_group`` frame: the universe's
-        ``matching_groups`` / ``matching_group_rows`` and, for each step
-        i, ``__g{i}`` / ``__r{i}`` — the groups that passed step i and
-        their rows. The funnel universe is exactly the matched groups, so
-        the totals double as the query block's counts."""
+    def universe_counts(self, labeled: DataFrame) -> DataFrame:
+        """ONE row over a ``labeled`` universe: its ``matching_groups`` /
+        ``matching_group_rows`` and, for each funnel step i, ``__g{i}`` /
+        ``__r{i}`` — the groups that passed step i and their rows. The
+        universe is exactly the matched groups, so the totals double as
+        the query block's counts."""
         aggs = [F.count(F.lit(1)).alias("matching_groups"),
                 F.coalesce(F.sum(ROWS_COL), F.lit(0))
                 .alias("matching_group_rows")]
-        for i in range(len(self._funnel_spec.step_preds)):
+        steps = len(self._funnel_spec.step_preds) if self._funnel_spec else 0
+        for i in range(steps):
             passed = F.col(DONE_COL) > F.lit(i)
             aggs.append(F.coalesce(F.sum(F.when(passed, 1)), F.lit(0))
                         .alias(f"__g{i}"))
             aggs.append(F.coalesce(F.sum(F.when(passed, F.col(ROWS_COL))),
                                    F.lit(0)).alias(f"__r{i}"))
-        return per_group.agg(*aggs)
+        return self._labeled_per_group(labeled).agg(*aggs)
 
     def funnel_step_counts(self, strategy: str = "join",
                            matched: Optional[DataFrame] = None
                            ) -> Optional[DataFrame]:
         """Per-step (step, matching_groups, matching_group_rows): the
-        ``funnel_counts`` row unpivoted with ``inline``."""
+        ``universe_counts`` row unpivoted with ``inline``."""
         spec = self._funnel_spec
         if spec is None:
             return None
-        one = self.funnel_counts(self.funnel_per_group(strategy,
-                                                       matched=matched))
+        one = self.universe_counts(self.labeled(strategy, matched))
         return one.select(F.inline(F.array(*[
             F.struct(F.lit(i).alias("step"),
                      F.col(f"__g{i}").alias("matching_groups"),
                      F.col(f"__r{i}").alias("matching_group_rows"))
             for i in range(len(spec.step_preds))])))
 
-    def funnel_aggregation_df(self, agg: dict, labeled: DataFrame,
-                              steps: list[int]) -> DataFrame:
-        """One aggregation evaluated for several funnel steps at once over
-        the labeled universe (``funnel_labeled``): for each step i in
-        ``steps``, the same answer as ``aggregation_df`` over the rows of
-        the groups that passed step i (``__fr_done > i``).
+    # ----------------------------- aggregations ----------------------- #
 
-        ``count`` returns (step, count). Per-value types run ONE
-        ``groupBy(column)`` with per-step conditional aggregates, unpivot
-        to (step, value, metric), drop values absent from a step, and
-        keep each step's top-N as ``row_number() over (partition by step
-        order by metric desc, value asc) <= top`` — the ordering of
-        ``aggregation_df``'s ``orderBy(desc, asc).limit(top)``. Spark
+    def aggregation_df(self, agg: dict, labeled: DataFrame,
+                       slots: list[int]) -> DataFrame:
+        """One aggregation (reference A4-A8, ``query_engine.py:61-67``)
+        evaluated for several slots of the labeled universe (``labeled``)
+        at once. Slot s covers the rows with ``__fr_done >= s``: slot 0
+        is every universe row (the query block), slot i + 1 the rows of
+        the groups that passed funnel step i, and the end aggregations
+        read the last step's slot.
+
+        ``count`` returns (slot, count). Per-value types run ONE
+        ``groupBy(column)`` with per-slot conditional aggregates, unpivot
+        to (slot, value, metric), drop values absent from a slot, and
+        keep each slot's exact top-N as ``row_number() over (partition
+        by slot order by metric desc, value asc) <= top`` — the
+        reference's per-worker grace-factor approximation (A10) is
+        unnecessary under Spark's exact partial/final aggregation. Spark
         plans that filter as a partial ``WindowGroupLimit`` before the
         exchange, so a high-cardinality column stays bounded per task.
-        Output: (step, rank, value, <metric>); ``rank`` orders a step's
-        top-N.
+        Output: (slot, rank, value, <metric>); ``rank`` orders a slot's
+        top-N. ``approx: true`` switches groupsPerValue to HLL
+        ``approx_count_distinct`` (SURVEY §2.4/A6; exact is the default,
+        matching the reference).
         """
         col, atype = agg["column"], agg["type"]
         other = agg.get("otherColumn")
@@ -556,14 +527,14 @@ class QueryPlan:
 
         def unpivot(fields: dict) -> Column:
             return F.inline(F.array(*[
-                F.struct(F.lit(i).alias("step"),
-                         *[F.col(f"{src}{i}").alias(name)
+                F.struct(F.lit(s).alias("slot"),
+                         *[F.col(f"{src}{s}").alias(name)
                            for name, src in fields.items()])
-                for i in steps]))
+                for s in slots]))
 
         if atype == "count":
-            one = labeled.agg(*[F.count(F.when(done > i, F.col(col)))
-                                .alias(f"__m{i}") for i in steps])
+            one = labeled.agg(*[F.count(F.when(done >= s, F.col(col)))
+                                .alias(f"__m{s}") for s in slots])
             return one.select(unpivot({"count": "__m"}))
         metric = {"countPerValue": "count", "groupsPerValue": "groups",
                   "sumPerValue": "sum", "meanPerValue": "mean"}[atype]
@@ -576,24 +547,24 @@ class QueryPlan:
             value, member = F.col("value"), F.col("__fr_g")
         else:
             src, member = labeled, F.col(self.group_col)
-        per_step = {
-            "countPerValue": lambda i: F.count(F.when(done > i, 1)),
-            "groupsPerValue": lambda i: (
-                F.approx_count_distinct(F.when(done > i, member))
+        per_slot = {
+            "countPerValue": lambda s: F.count(F.when(done >= s, 1)),
+            "groupsPerValue": lambda s: (
+                F.approx_count_distinct(F.when(done >= s, member))
                 if agg.get("approx", False)
-                else F.count(F.when(done > i, member))),
-            "sumPerValue": lambda i: F.sum(F.when(done > i, F.col(other))),
-            "meanPerValue": lambda i: F.avg(F.when(done > i, F.col(other))),
+                else F.count(F.when(done >= s, member))),
+            "sumPerValue": lambda s: F.sum(F.when(done >= s, F.col(other))),
+            "meanPerValue": lambda s: F.avg(F.when(done >= s, F.col(other))),
         }[atype]
         aggs = []
-        for i in steps:
-            aggs.append(F.count(F.when(done > i, 1)).alias(f"__p{i}"))
-            aggs.append(per_step(i).alias(f"__m{i}"))
+        for s in slots:
+            aggs.append(F.count(F.when(done >= s, 1)).alias(f"__p{s}"))
+            aggs.append(per_slot(s).alias(f"__m{s}"))
         wide = src.groupBy(value).agg(*aggs)
         long = wide.select("value", unpivot({"__fr_present": "__p",
                                              metric: "__m"}))
-        w = Window.partitionBy("step").orderBy(F.desc(metric), F.asc("value"))
+        w = Window.partitionBy("slot").orderBy(F.desc(metric), F.asc("value"))
         return (long.filter(F.col("__fr_present") > 0)
                 .withColumn("rank", F.row_number().over(w))
                 .filter(F.col("rank") <= top)
-                .select("step", "rank", "value", metric))
+                .select("slot", "rank", "value", metric))

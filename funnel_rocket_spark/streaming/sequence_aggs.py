@@ -8,7 +8,7 @@ matches — per-step group/row counts (the streaming twin of
 ``QueryPlan.funnel_step_counts``) and per-value aggregations over rows
 of groups that passed a step (the streaming twin of countPerValue /
 sumPerValue / meanPerValue / groupsPerValue evaluated by
-``QueryPlan.funnel_aggregation_df`` over the labeled universe).
+``QueryPlan.aggregation_df`` over the labeled universe's step slots).
 
 Design: Spark does not allow a second stateful aggregation downstream
 of ``applyInPandasWithState`` in update mode, and folding row/value
@@ -168,7 +168,8 @@ def sequence_step_value_aggs(spark: SparkSession, matches_path: str,
     """Per-value aggregations over rows of groups that passed each step
     — the streaming twin of countPerValue / groupsPerValue /
     sumPerValue / meanPerValue over the rows of groups with
-    ``__fr_done > step`` (``QueryPlan.funnel_aggregation_df``).
+    ``__fr_done > step`` (``QueryPlan.aggregation_df``, slot
+    ``step + 1``).
 
     Output: one row per (step, value) with ``count`` (rows carrying the
     value in passing groups), ``groups`` (distinct passing groups

@@ -69,11 +69,17 @@ def test_job_group_stats_are_thread_scoped(spark):
     assert snaps["li"]["worker"]["scannedRows"] == n_lineitem
 
 
-def test_concurrent_aggregation_collection_matches_serial(spark):
-    """agg_collect_threads>1 submits a multi-aggregation query's N
-    aggregate jobs (and the funnel step-agg phase) concurrently; the
-    result JSON must be byte-identical to the serial engine."""
+def test_concurrent_aggregation_collection_matches_serial(spark,
+                                                         monkeypatch):
+    """AGG_COLLECT_THREADS>1 submits a query's independent aggregation
+    jobs (query, step and end specs) concurrently; the result JSON must
+    be byte-identical to the serial engine."""
     from funnel_rocket_spark import QueryEngine
+    from funnel_rocket_spark.engine import engine as engine_mod
+
+    def run(threads, *args, **kwargs):
+        monkeypatch.setattr(engine_mod, "AGG_COLLECT_THREADS", threads)
+        return QueryEngine("user_id", "ts").run(*args, **kwargs)
 
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     q = {"query": {"conditions": [
@@ -91,21 +97,27 @@ def test_concurrent_aggregation_collection_matches_serial(spark):
             "stepAggregations": [
                 {"column": "event_type", "type": "countPerValue",
                  "top": 5}]}}
-    serial = QueryEngine("user_id", "ts", agg_collect_threads=1).run(ev, q)
-    conc = QueryEngine("user_id", "ts", agg_collect_threads=8).run(ev, q)
+    serial = run(1, ev, q)
+    conc = run(8, ev, q)
     assert serial == conc
     assert conc["query"]["aggregations"][1]["type"] == "sumPerValue"
     assert all(s["aggregations"] for s in conc["funnel"]["sequence"])
 
 
-def test_concurrent_aggregation_jobs_stay_in_stats_job_group(spark):
+def test_concurrent_aggregation_jobs_stay_in_stats_job_group(spark,
+                                                            monkeypatch):
     """setJobGroup is thread-local, so aggregation jobs submitted from
     pool worker threads would escape the query's JobGroupMetrics group —
     and with_stats would silently under-report scan volume for every
-    multi-aggregation query at the default agg_collect_threads=8. The
+    multi-aggregation query at the default AGG_COLLECT_THREADS=8. The
     pool must propagate the caller's job group: serial and concurrent
     runs of the same query must report the SAME worker-side counters."""
     from funnel_rocket_spark import QueryEngine
+    from funnel_rocket_spark.engine import engine as engine_mod
+
+    def run(threads, *args, **kwargs):
+        monkeypatch.setattr(engine_mod, "AGG_COLLECT_THREADS", threads)
+        return QueryEngine("user_id", "ts").run(*args, **kwargs)
 
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     q = {"query": {"conditions": [
@@ -116,10 +128,8 @@ def test_concurrent_aggregation_jobs_stay_in_stats_job_group(spark):
              "otherColumn": "value", "top": 10},
             {"column": "event_type", "type": "groupsPerValue",
              "top": 10}]}}
-    serial = QueryEngine("user_id", "ts", agg_collect_threads=1).run(
-        ev, q, with_stats=True)
-    conc = QueryEngine("user_id", "ts", agg_collect_threads=8).run(
-        ev, q, with_stats=True)
+    serial = run(1, ev, q, with_stats=True)
+    conc = run(8, ev, q, with_stats=True)
     sw, cw = serial["stats"]["worker"], conc["stats"]["worker"]
     assert cw["scannedRows"] == sw["scannedRows"]
     assert cw["scannedRows"] > 0

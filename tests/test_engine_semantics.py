@@ -676,10 +676,11 @@ def test_kitchen_sink_query(spark):
     assert result["funnel"]["endAggregations"] is not None
 
 
-def test_stats_expose_chosen_strategies(spark, seq_df):
+def test_stats_expose_chosen_strategies(spark, seq_df, monkeypatch):
     """with_stats reports WHICH physical plans ran — the universe
-    choices must be auditable from the result JSON alone."""
+    choice must be auditable from the result JSON alone."""
     from funnel_rocket_spark.engine import QueryEngine
+    from funnel_rocket_spark.engine import engine as engine_mod
 
     eng = QueryEngine("id", "timestamp")
     q = {"query": {"conditions": [{"sequence": [
@@ -687,30 +688,38 @@ def test_stats_expose_chosen_strategies(spark, seq_df):
         {"filter": ["category", "<=", 2]}]}],
         "aggregations": [{"column": "category", "type": "count"}]}}
     res = eng.run(seq_df, q, with_stats=True)
-    assert res["stats"]["strategies"] == {
-        "rowUniverse": "join", "funnelUniverse": None, "sortedLayout": False}
+    assert res["stats"]["strategies"] == {"universe": "join",
+                                          "sortedLayout": False}
 
-    # which universe the funnel ran on: the semi join below
-    # universe_window_threshold, the join-free window universe past it,
-    # and always the window universe without conditions (no join needed)
+    # which universe the query ran on: the semi join below
+    # UNIVERSE_WINDOW_THRESHOLD, the join-free window universe past it,
+    # and none built from conditions without them (the universe is the
+    # table), with or without query aggregations
     funnel = {"sequence": [{"filter": ["category", "==", 0]},
                            {"filter": ["category", "<=", 2]}],
               "endAggregations": [{"column": "price",
                                    "type": "countPerValue"}]}
-    fq = {"query": {"conditions": [{"filter": ["price", ">=", 2]}]},
+    aggs = [{"column": "category", "type": "countPerValue"}]
+    fq = {"query": {"conditions": [{"filter": ["price", ">=", 2]}],
+                    "aggregations": aggs},
           "funnel": funnel}
     answers = []
-    for query, threshold, universe in ((fq, 10**12, "join"),
-                                       (fq, 0, "window"),
-                                       ({"funnel": funnel}, 10**12,
-                                        "window")):
-        r = QueryEngine("id", "timestamp",
-                        universe_window_threshold=threshold).run(
-            seq_df, query, with_stats=True)
-        assert r["stats"]["strategies"]["funnelUniverse"] == universe
-        answers.append(r["funnel"])
-    assert answers[0] == answers[1] != answers[2]
-    assert [s["matchingGroups"] for s in answers[0]["sequence"]] == [2, 1]
+    for query, threshold, universe in (
+            (fq, 10**12, "join"), (fq, 0, "window"),
+            ({"funnel": funnel}, 0, None),
+            ({"query": {"aggregations": aggs}, "funnel": funnel}, 0, None)):
+        monkeypatch.setattr(engine_mod, "UNIVERSE_WINDOW_THRESHOLD",
+                            threshold)
+        r = QueryEngine("id", "timestamp").run(seq_df, query,
+                                               with_stats=True)
+        assert r["stats"]["strategies"]["universe"] == universe, query
+        answers.append(r)
+    assert answers[0]["query"] == answers[1]["query"]
+    assert answers[0]["funnel"] == answers[1]["funnel"] != answers[2]["funnel"]
+    assert answers[2]["funnel"] == answers[3]["funnel"]
+    assert answers[3]["query"]["aggregations"] is not None
+    assert [s["matchingGroups"]
+            for s in answers[0]["funnel"]["sequence"]] == [2, 1]
 
     # the engine derives sortedLayout from the catalog layout record;
     # only the (bucket=group, sort=(group, ts)) shape qualifies
@@ -747,20 +756,54 @@ def _funnel_agg_df(spark):
         rows, "uid string, ts long, type string, kind string, amount double")
 
 
-def test_funnel_aggregations_match_per_step_semijoin(spark):
-    """The engine's funnel block — step counts and every step and end
-    aggregation, computed from one labeled universe — equals a per-step
-    reference built here: each group's passed-step count from a
-    pure-Python transcription of the reference's iterated-min loop
+def _ref_aggregation(agg: dict, rows: list, group_col: str):
+    """One aggregation over ``rows`` in pure Python, shaped like the
+    engine's result value: the reference's definitions (A4-A8) with
+    Spark's NULL rules (count skips NULLs, an all-NULL sum or mean is
+    NULL) and the (metric desc, value asc) top-N order, NULLs last in
+    the metric and first in the value. An ``approx`` groupsPerValue is
+    referenced by the exact count: at this data's cardinalities (at most
+    ten groups per value) HLL++'s linear counting returns it exactly."""
+    col, atype = agg["column"], agg["type"]
+    if atype == "count":
+        return sum(r[col] is not None for r in rows)
+    by_value: dict = {}
+    for r in rows:
+        by_value.setdefault(r[col], []).append(r)
+    other = agg.get("otherColumn")
+
+    def metric(vrows):
+        if atype == "countPerValue":
+            return len(vrows)
+        if atype == "groupsPerValue":
+            return len({r[group_col] for r in vrows})
+        xs = [r[other] for r in vrows if r[other] is not None]
+        if not xs:
+            return None
+        return sum(xs) if atype == "sumPerValue" else sum(xs) / len(xs)
+
+    ranked = sorted(((metric(vr), v) for v, vr in by_value.items()),
+                    key=lambda mv: (mv[0] is None, -(mv[0] or 0),
+                                    mv[1] is not None, mv[1] or ""))
+    return {str(v): m for m, v in ranked[:int(agg.get("top", 10))]}
+
+
+def test_funnel_aggregations_match_per_step_semijoin(spark, monkeypatch):
+    """The engine's query and funnel blocks — counts and every query,
+    step and end aggregation, computed from one labeled universe —
+    equal a reference built here in pure Python over the collected
+    rows: the condition's matching groups; each group's passed-step
+    count from a transcription of the reference's iterated-min loop
     (strict ``>``, as in test_property_differential), independent of
-    window anchors; then, for each step i, ``aggregation_df`` over the
-    universe rows of the groups that passed step i. All five aggregation
-    types; ``top=2`` cuts through ties, so the (metric desc, value asc)
-    order is checked too."""
+    window anchors; then each aggregation over the universe rows
+    (query block) and over the rows of the groups that passed step i.
+    All five aggregation types; ``top=2`` cuts through ties, so the
+    (metric desc, value asc) order is checked too. Both universe
+    constructions (join and window) run."""
     import math
 
     from funnel_rocket_spark.engine import QueryEngine
-    from funnel_rocket_spark.planner.compiler import QueryPlan
+    from funnel_rocket_spark.engine import engine as engine_mod
 
     df = _funnel_agg_df(spark)
     aggs = [
@@ -788,15 +831,24 @@ def test_funnel_aggregations_match_per_step_semijoin(spark):
                    "name": "top1"},
                   {"column": "kind", "type": "sumPerValue",
                    "otherColumn": "amount", "top": 100, "name": "allSums"}]}
+    # query aggregations: specs shared with the step and end blocks
+    # (names are unique per query) plus one of their own
+    query_aggs = (aggs[:3] + [{**aggs[3], "name": "approxQuery"}] + aggs[4:]
+                  + [{"column": "type", "type": "countPerValue", "top": 3,
+                      "name": "types"}])
     condition = {"conditions": [{"filter": ["type", "==", "other"],
                                  "target": ["count", ">=", 2]}]}
-    eng = QueryEngine("uid", "ts")
+    all_rows = df.collect()
+    n = len(funnel["sequence"])
+    step_types = [st["filter"][2] for st in funnel["sequence"]]
     for query in ({}, condition):
-        q = {"query": query, "funnel": funnel}
-        ref_plan = QueryPlan(df, eng.expand(q, df), "uid", "ts")
-        rows = ref_plan.rows_of_matching_groups().collect()
-        n = len(funnel["sequence"])
-        step_types = [st["filter"][2] for st in funnel["sequence"]]
+        q = {"query": {**query, "aggregations": query_aggs},
+             "funnel": funnel}
+        others = {}
+        for r in all_rows:
+            others[r["uid"]] = others.get(r["uid"], 0) + (r["type"] == "other")
+        rows = [r for r in all_rows
+                if not query or others[r["uid"]] >= 2]
         # per group: anchor = min ts of the step's rows with ts > the
         # previous anchor; done = how many steps chained
         done = {}
@@ -809,49 +861,46 @@ def test_funnel_aggregations_match_per_step_semijoin(spark):
                 if not hits:
                     break
                 anchor, done[uid] = min(hits), done[uid] + 1
-        # the reference's step rows, materialized once per step
-        step_rows = [
-            spark.createDataFrame(
-                [r for r in rows if done[r["uid"]] > i], df.schema)
-            for i in range(n)]
+        step_rows = [[r for r in rows if done[r["uid"]] > i]
+                     for i in range(n)]
 
-        def ref(agg, i):
-            adf = ref_plan.aggregation_df(agg, step_rows[i])
-            got = adf.collect()
-            if agg["type"] == "count":
-                return got[0]["count"]
-            return {str(r["value"]): r[adf.columns[-1]] for r in got}
+        def block(aggs_, rows_):
+            return [(a["type"], a.get("name"),
+                     _ref_aggregation(a, rows_, "uid")) for a in aggs_]
 
-        def block(aggs_, i):
-            return [(a["type"], a.get("name"), ref(a, i)) for a in aggs_]
-
+        want_query = block(query_aggs, rows)
         want_counts = {i: (sum(d > i for d in done.values()),
-                           sum(done[r["uid"]] > i for r in rows))
-                       for i in range(n)}
-        want_steps = [block(funnel["stepAggregations"], i)
+                           len(step_rows[i])) for i in range(n)}
+        want_steps = [block(funnel["stepAggregations"], step_rows[i])
                       for i in range(n)]
-        want_end = block(funnel["endAggregations"], n - 1)
+        want_end = block(funnel["endAggregations"], step_rows[n - 1])
         # top=2 cuts through a tie: three kinds share step 0's top
         # groupsPerValue count, so the value-asc tie-break decides
-        full = sorted(ref({**aggs[2], "top": 100}, 0).values(), reverse=True)
+        full = sorted(_ref_aggregation({**aggs[2], "top": 100},
+                                       step_rows[0], "uid").values(),
+                      reverse=True)
         assert full[1] == full[2], full
         assert want_counts[0][0] > want_counts[n - 1][0] > 0
 
         for threshold in (0, 10**12):
-            res = QueryEngine(
-                "uid", "ts", universe_window_threshold=threshold).run(df, q)
+            monkeypatch.setattr(engine_mod, "UNIVERSE_WINDOW_THRESHOLD",
+                                threshold)
+            res = QueryEngine("uid", "ts").run(df, q)
             where = (bool(query), threshold)
+            assert (res["query"]["matchingGroups"],
+                    res["query"]["matchingGroupRows"]) == (len(done),
+                                                           len(rows)), where
+            blocks = [(res["query"]["aggregations"], want_query)]
             steps = res["funnel"]["sequence"]
             assert {i: (s["matchingGroups"], s["matchingGroupRows"])
                     for i, s in enumerate(steps)} == want_counts, where
-            for i, s in enumerate(steps):
-                got = [(a["type"], a["name"], a["value"])
-                       for a in s["aggregations"]]
-                assert got == want_steps[i], (where, i)
+            blocks += [(s["aggregations"], want_steps[i])
+                       for i, s in enumerate(steps)]
+            blocks.append((res["funnel"]["endAggregations"], want_end))
+            for k, (got_aggs, want) in enumerate(blocks):
+                got = [(a["type"], a["name"], a["value"]) for a in got_aggs]
+                assert got == want, (where, k)
                 # the top-N keeps the reference's ordering
                 assert ([list(v) for _, _, v in got if isinstance(v, dict)]
-                        == [list(v) for _, _, v in want_steps[i]
-                            if isinstance(v, dict)]), (where, i)
-            end = [(a["type"], a["name"], a["value"])
-                   for a in res["funnel"]["endAggregations"]]
-            assert end == want_end, where
+                        == [list(v) for _, _, v in want
+                            if isinstance(v, dict)]), (where, k)

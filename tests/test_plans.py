@@ -102,7 +102,7 @@ def test_sorted_bucketed_layout_is_sort_free(spark, engine):
         assert count_sorts(plain.counts()) >= 1
 
         # engine run: values identical either way; the layout is
-        # surfaced in stats, but the row universe KEEPS the adaptive
+        # surfaced in stats, but the universe KEEPS the adaptive
         # matched-count choice — the 100M bucketed rung measured the
         # semi join at-or-below the window flags at both matched-set
         # sizes on this layout (the SMJ's big side is also
@@ -116,8 +116,8 @@ def test_sorted_bucketed_layout_is_sort_free(spark, engine):
                          with_stats=True)
         assert got["query"] == ref["query"]
         assert got["stats"]["strategies"]["sortedLayout"] is True
-        assert got["stats"]["strategies"]["rowUniverse"] == "join"
-        assert ref["stats"]["strategies"]["rowUniverse"] == "join"
+        assert got["stats"]["strategies"]["universe"] == "join"
+        assert ref["stats"]["strategies"]["universe"] == "join"
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
@@ -155,7 +155,9 @@ def test_funnel_outputs_from_one_labeled_pass(events, engine):
     universe is join-free, the whole query scans the table once (the
     labeled universe is cached; counts and every aggregation read it),
     and each aggregation's top-N runs as a WindowGroupLimit, which keeps
-    a high-cardinality column bounded per task."""
+    a high-cardinality column bounded per task. Query aggregations read
+    the same universe: with a condition the query scans the table twice
+    (the condition pass, then the universe), without one once."""
     step_agg = {"column": "event_type", "type": "countPerValue", "top": 3}
     q = {"funnel": {"sequence": [
         {"filter": ["event_type", "==", "view"]},
@@ -164,19 +166,32 @@ def test_funnel_outputs_from_one_labeled_pass(events, engine):
         "endAggregations": [{"column": "event_type", "type": "sumPerValue",
                              "otherColumn": "value"}]}}
     plan = engine.plan(events, q)
-    labeled = plan.funnel_labeled("window")
+    labeled = plan.labeled()
     assert "Join" not in formatted_plan(labeled)
 
     res = engine.run(events, q, with_stats=True)
-    assert res["stats"]["strategies"]["funnelUniverse"] == "window"
+    assert res["stats"]["strategies"]["universe"] is None
     n_rows = events.count()
     # cache reads add one input record per columnar batch, not per row
     assert n_rows <= res["stats"]["worker"]["scannedRows"] < 2 * n_rows
 
-    adf = plan.funnel_aggregation_df(step_agg, labeled, [0, 1])
+    adf = plan.aggregation_df(step_agg, labeled, [1, 2])
     adf.collect()
     executed = adf._jdf.queryExecution().executedPlan().toString()
     assert "WindowGroupLimit" in executed, executed
+
+    # a query aggregation, a step aggregation and an end aggregation of
+    # the same spec: one universe, one aggregation job
+    combined = {"query": {"aggregations": [step_agg]},
+                "funnel": {**q["funnel"], "endAggregations": [step_agg]}}
+    res = engine.run(events, combined, with_stats=True)
+    assert res["stats"]["strategies"]["universe"] is None
+    assert n_rows <= res["stats"]["worker"]["scannedRows"] < 2 * n_rows
+    cond = {**combined, "query": {**combined["query"], "conditions": [
+        {"filter": ["event_type", "==", "purchase"]}]}}
+    res = engine.run(events, cond, with_stats=True)
+    assert res["stats"]["strategies"]["universe"] == "join"
+    assert n_rows <= res["stats"]["worker"]["scannedRows"] < 2.5 * n_rows
 
 
 def test_time_rollup_single_shuffle(spark):

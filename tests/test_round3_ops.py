@@ -928,20 +928,28 @@ def test_windowed_universe_plan_is_join_free(spark):
     assert count_exchanges(out) == 1, p  # one group-keyed window exchange
 
 
-def test_engine_adaptive_universe_matches_join_results(spark):
+def test_engine_adaptive_universe_matches_join_results(spark, monkeypatch):
     """Force the window path (threshold 0) and compare the full engine
     result JSON against the join path (threshold huge)."""
     from funnel_rocket_spark.engine import QueryEngine
+    from funnel_rocket_spark.engine import engine as engine_mod
 
     ev = bq.ts_ns(bq.load_table(spark, SF, "events"))
     q = {"query": {"conditions": [
         {"filter": ["event_type", "==", "purchase"], "target": ["count", ">=", 1]}],
         "aggregations": [{"column": "event_type", "type": "countPerValue",
                           "top": 10}]}}
-    low = QueryEngine("user_id", "ts", universe_window_threshold=0).run(ev, q)
-    high = QueryEngine("user_id", "ts",
-                       universe_window_threshold=10**12).run(ev, q)
-    assert low == high
+    results = []
+    for threshold in (0, 10**12):
+        monkeypatch.setattr(engine_mod, "UNIVERSE_WINDOW_THRESHOLD",
+                            threshold)
+        results.append(QueryEngine("user_id", "ts").run(ev, q,
+                                                        with_stats=True))
+    low, high = results
+    assert low["stats"]["strategies"]["universe"] == "window"
+    assert high["stats"]["strategies"]["universe"] == "join"
+    assert {k: low[k] for k in ("query", "funnel")} == \
+        {k: high[k] for k in ("query", "funnel")}
 
 
 def test_funnel_labeled_anchor_equals_join(spark):
@@ -965,8 +973,8 @@ def test_funnel_labeled_anchor_equals_join(spark):
                                    "type": "sumPerValue",
                                    "otherColumn": "value"}]}}
     plan = eng.plan(ev, q)
-    join = plan.funnel_labeled("join")
-    window = plan.funnel_labeled("window")
+    join = plan.labeled("join")
+    window = plan.labeled("window")
     cols = sorted(join.columns)
     assert cols == sorted(window.columns) == sorted(
         ["user_id", "event_type", "value", DONE_COL])
@@ -979,8 +987,9 @@ def test_funnel_labeled_anchor_equals_join(spark):
     assert "Join" not in formatted_plan(window)
 
 
-def test_engine_funnel_adaptive_matches_join(spark):
+def test_engine_funnel_adaptive_matches_join(spark, monkeypatch):
     from funnel_rocket_spark.engine import QueryEngine
+    from funnel_rocket_spark.engine import engine as engine_mod
 
     ev = bq.ts_ns(bq.load_table(spark, SF, "events"))
     q = {"query": {"conditions": [
@@ -992,10 +1001,17 @@ def test_engine_funnel_adaptive_matches_join(spark):
                                   "type": "countPerValue", "top": 5}],
             "endAggregations": [{"column": "event_type",
                                  "type": "countPerValue", "top": 5}]}}
-    low = QueryEngine("user_id", "ts", universe_window_threshold=0).run(ev, q)
-    high = QueryEngine("user_id", "ts",
-                       universe_window_threshold=10**12).run(ev, q)
-    assert low == high
+    results = []
+    for threshold in (0, 10**12):
+        monkeypatch.setattr(engine_mod, "UNIVERSE_WINDOW_THRESHOLD",
+                            threshold)
+        results.append(QueryEngine("user_id", "ts").run(ev, q,
+                                                        with_stats=True))
+    low, high = results
+    assert low["stats"]["strategies"]["universe"] == "window"
+    assert high["stats"]["strategies"]["universe"] == "join"
+    assert {k: low[k] for k in ("query", "funnel")} == \
+        {k: high[k] for k in ("query", "funnel")}
 
 
 def test_exact_substring_spans_fingerprint_invariant(spark, docs):

@@ -1,7 +1,7 @@
-"""Round-13 optimization profiler: profile_r12 plus a PER-STAGE breakdown
-and a job timeline, so the round's question — where do the remaining
-seconds of each top query go: which stage's CPU, or driver gaps between
-jobs — is answered by measurement instead of plan-reading.
+"""Round-13 optimization profiler: per-query timings and plans plus a
+PER-STAGE breakdown and a job timeline, so the round's question — where
+do the remaining seconds of each top query go: which stage's CPU, or
+driver gaps between jobs — is answered by measurement instead of plan-reading.
 
 Usage:
     python tools/profile_r13.py [--sf SF_DIR] [--runs N] [--plans TAG]

@@ -27,6 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from funnel_rocket_spark import benchqueries as bq  # noqa: E402
 from funnel_rocket_spark.engine import QueryEngine  # noqa: E402
+from funnel_rocket_spark.engine import engine as engine_mod  # noqa: E402
 from funnel_rocket_spark.operators import behavior, temporal  # noqa: E402
 from funnel_rocket_spark.session import get_spark  # noqa: E402
 
@@ -1289,9 +1290,9 @@ def bucketed_main(n_rows: int, whale_share: float = 0.2) -> None:
         out[f"universe.{sel}.matched_groups"] = n_match
 
         def run_universe(strategy):
-            rows = plan.rows_of_matching_groups(strategy, matched=matched)
+            labeled = plan.labeled(strategy, matched=matched)
             agg = plan.aggregation_df(
-                agg_q["query"]["aggregations"][0], rows)
+                agg_q["query"]["aggregations"][0], labeled, [0])
             t0 = time.perf_counter()
             res = sorted(map(tuple, agg.collect()))
             elapsed = round(time.perf_counter() - t0, 2)
@@ -1332,7 +1333,7 @@ def bucketed_main(n_rows: int, whale_share: float = 0.2) -> None:
 
 def universe_main(n_rows: int) -> None:
     """The MANY-GROUPS-MATCH row universe: the join-free windowed
-    universe (the engine's pick past ``universe_window_threshold``)
+    universe (the engine's pick past ``UNIVERSE_WINDOW_THRESHOLD``)
     against the sort-merge semi join it replaces, on an aggregation
     query whose sequence condition matches most groups."""
     n_groups = max(1, n_rows // 100)
@@ -1359,18 +1360,20 @@ def universe_main(n_rows: int) -> None:
         "aggregations": [{"column": "event_type", "type": "countPerValue",
                           "top": 10}]}}
     thresholds = {"window_universe": 0, "join_universe": 2**62}
+    default_threshold = engine_mod.UNIVERSE_WINDOW_THRESHOLD
     out = {"n_rows": n_rows, "n_groups": n_groups, "timings": {},
            "universe": {}}
     results = {}
     for name, threshold in thresholds.items():
-        eng = QueryEngine("user_id", "ts",
-                          universe_window_threshold=threshold)
+        engine_mod.UNIVERSE_WINDOW_THRESHOLD = threshold
+        eng = QueryEngine("user_id", "ts")
         res = eng.run(ev, q, with_stats=True)
         results[name] = res["query"]
-        out["universe"][name] = res["stats"]["strategies"]["rowUniverse"]
+        out["universe"][name] = res["stats"]["strategies"]["universe"]
         t0 = time.perf_counter()
         res = eng.run(ev, q)
         out["timings"][name] = round(time.perf_counter() - t0, 2)
+        engine_mod.UNIVERSE_WINDOW_THRESHOLD = default_threshold
         out["matched_groups"] = res["query"]["matchingGroups"]
         print(f"# {name}: {out['timings'][name]}s "
               f"(universe={out['universe'][name]})", file=sys.stderr)
