@@ -248,27 +248,25 @@ class QueryEngine:
     def _map(self, plan: QueryPlan, fn, items: list) -> list:
         """``[fn(x) for x in items]`` for independent tiny-result jobs,
         submitted concurrently from up to ``AGG_COLLECT_THREADS`` threads
-        so the phase costs ~the slowest job, not the sum. Pool threads
-        inherit the caller's Spark job group: setJobGroup is thread-LOCAL
-        (test_job_group_stats_are_thread_scoped), and jobs escaping the
-        query's JobGroupMetrics group would vanish from its stats."""
+        so the phase costs ~the slowest job, not the sum. Spark's job
+        group, job description and scheduler pool are thread-LOCAL
+        properties (test_job_group_stats_are_thread_scoped), so each
+        item runs under ``inheritable_thread_target``, which hands the
+        pool thread a copy of the caller's properties: the jobs stay in
+        the query's JobGroupMetrics group and in the request's pool.
+        Each item gets its own copy — threads sharing one would
+        overwrite each other's SQL execution id."""
         from concurrent.futures import ThreadPoolExecutor
+
+        from pyspark import inheritable_thread_target
 
         if len(items) <= 1 or AGG_COLLECT_THREADS == 1:
             return [fn(x) for x in items]
-        sc = plan.df.sparkSession.sparkContext
-        props = {k: sc.getLocalProperty(k)
-                 for k in ("spark.jobGroup.id", "spark.job.description",
-                           "spark.jobGroup.interruptOnCancel")}
-
-        def wrapped(item):
-            for k, v in props.items():
-                if v is not None:
-                    sc.setLocalProperty(k, v)
-            return fn(item)
-
+        session = plan.df.sparkSession
         with ThreadPoolExecutor(min(len(items), AGG_COLLECT_THREADS)) as ex:
-            return list(ex.map(wrapped, items))
+            futures = [ex.submit(inheritable_thread_target(session)(fn), x)
+                       for x in items]
+            return [f.result() for f in futures]
 
 
 def _spec_key(agg: dict) -> tuple:

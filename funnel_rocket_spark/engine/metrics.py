@@ -12,7 +12,8 @@ Collection is scoped with a JOB GROUP: ``setJobGroup`` is thread-local in
 Spark, so each query's collects tag only their own jobs even when multiple
 queries share one driver (the job-server scenario). Reading the status
 store afterwards costs no Spark job — it's the same in-memory KV store the
-(disabled) UI would render.
+(disabled) UI would render. The same reads give the per-stage rows and
+job intervals that ``tools/profile.py`` prints.
 """
 
 from __future__ import annotations
@@ -23,13 +24,20 @@ import uuid
 class JobGroupMetrics:
     """Context manager: tag all jobs run inside with a unique group id,
     then :meth:`snapshot` aggregates their stage metrics into a
-    reference-shaped dict. Failures anywhere in the JVM plumbing degrade
-    to partial/empty stats, never to a query failure."""
+    reference-shaped dict and keeps one row per stage in
+    :attr:`stages`; :meth:`job_intervals` times the group's jobs. The
+    only reader of Spark's status store outside the benchmark. Failures
+    anywhere in the JVM plumbing degrade to partial/empty stats, never
+    to a query failure."""
 
     def __init__(self, spark, description: str = "funnel-rocket-spark query"):
         self.spark = spark
         self.group_id = f"frs-{uuid.uuid4().hex[:12]}"
         self.description = description
+        # per-stage rows of the last snapshot: stage, name, tasks,
+        # failedTasks, wallSeconds, scheduler pool and the worker
+        # block's keys
+        self.stages: list[dict] = []
 
     def __enter__(self):
         self.spark.sparkContext.setJobGroup(self.group_id, self.description)
@@ -61,16 +69,9 @@ class JobGroupMetrics:
                 "jvmGcSeconds": 0.0, "peakExecutionMemory": 0,
             },
         }
+        self.stages = []
         try:
-            # AppStatusListener is fed by the ASYNC listener bus — a
-            # snapshot taken right after the last collect can miss the
-            # final task/stage events under load. Drain the bus first
-            # (bounded wait) so the store is complete; guarded because
-            # waitUntilEmpty is private[spark] plumbing.
-            try:
-                sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-            except Exception:
-                pass
+            _drain_listener_bus(sc)
             tracker = sc.statusTracker()
             job_ids = tracker.getJobIdsForGroup(self.group_id)
             stage_ids = set()
@@ -79,13 +80,6 @@ class JobGroupMetrics:
                 if info is not None:
                     stage_ids.update(info.stageIds)
             out["invoker"]["jobs"] = len(job_ids)
-            import copy
-
-            # snapshot the counters BEFORE the reflective fill: it can
-            # throw mid-loop (after N stages are already summed), and the
-            # tracker fallback would then add every stage's tasks/stages
-            # ON TOP of the partial sums — double-counted stats
-            pre = copy.deepcopy((out["invoker"], out["worker"]))
             try:
                 self._fill_from_status_store(sc, stage_ids, out)
             except Exception:
@@ -93,7 +87,6 @@ class JobGroupMetrics:
                 # private Spark plumbing; a Spark minor-version bump may
                 # break it. Degrade to the PUBLIC StatusTracker API —
                 # task/stage counts survive, byte/row volumes don't.
-                out["invoker"], out["worker"] = copy.deepcopy(pre)
                 out["partial"] = True
                 out["statsSource"] = "statusTracker"
                 self._fill_from_tracker(tracker, stage_ids, out)
@@ -115,48 +108,83 @@ class JobGroupMetrics:
             out["partial"] = True  # plumbing changed: degrade, don't fail
         return out
 
+    def job_intervals(self) -> list[dict]:
+        """``{"job", "submittedMs", "completedMs"}`` (epoch ms) for each
+        finished job of this group, in submission order. The job ids come
+        from the status tracker's per-group lookup, so the cost follows
+        the group's job count, not every job the driver has run. [] on a
+        plumbing mismatch."""
+        sc = self.spark.sparkContext
+        out = []
+        try:
+            _drain_listener_bus(sc)
+            store = sc._jsc.sc().statusStore()
+            for jid in sc.statusTracker().getJobIdsForGroup(self.group_id):
+                job = store.job(int(jid))
+                sub, done = job.submissionTime(), job.completionTime()
+                if sub.isDefined() and done.isDefined():
+                    out.append({"job": int(jid),
+                                "submittedMs": sub.get().getTime(),
+                                "completedMs": done.get().getTime()})
+        except Exception:
+            return []
+        return sorted(out, key=lambda r: r["submittedMs"])
+
     def _fill_from_status_store(self, sc, stage_ids, out: dict) -> None:
         """Full metrics via the driver's AppStatusStore (private plumbing,
         reached by py4j reflection — the caller falls back to
-        :meth:`_fill_from_tracker` if any of it moved)."""
+        :meth:`_fill_from_tracker` if any of it moved). Every stage is
+        read before ``out`` is touched, so a failure mid-loop leaves no
+        partial sums for the fallback to add to."""
         store = sc._jsc.sc().statusStore()
         # Scala default args surface as $default$N helper methods.
         defaults = [getattr(store, f"stageAttempt$default${i}")()
                     for i in (3, 4, 5, 6)]
-        w = out["worker"]
-        heaviest = (None, -1)  # (stage id, completed tasks)
+        rows = []
         for sid in sorted(stage_ids):
             try:
                 data = store.stageAttempt(int(sid), 0, *defaults)._1()
             except Exception:
                 continue  # skipped stage: planned but never run
-            out["invoker"]["stages"] += 1
-            out["invoker"]["totalTasks"] += data.numCompleteTasks()
-            out["invoker"]["failedTasks"] += data.numFailedTasks()
-            if data.numCompleteTasks() > heaviest[1]:
-                heaviest = (int(sid), data.numCompleteTasks())
-            w["scannedRows"] += data.inputRecords()
-            w["scannedBytes"] += data.inputBytes()
-            w["outputRows"] += data.outputRecords()
-            w["outputBytes"] += data.outputBytes()
-            w["shuffleReadBytes"] += data.shuffleReadBytes()
-            w["shuffleReadRecords"] += data.shuffleReadRecords()
-            w["shuffleWriteBytes"] += data.shuffleWriteBytes()
-            w["shuffleWriteRecords"] += data.shuffleWriteRecords()
-            w["memorySpilledBytes"] += data.memoryBytesSpilled()
-            w["diskSpilledBytes"] += data.diskBytesSpilled()
-            w["executorRunSeconds"] += data.executorRunTime() / 1000.0
-            w["executorCpuSeconds"] += data.executorCpuTime() / 1e9
-            w["jvmGcSeconds"] += data.jvmGcTime() / 1000.0
-            w["peakExecutionMemory"] = max(w["peakExecutionMemory"],
-                                           data.peakExecutionMemory())
+            rows.append({
+                "stage": int(sid),
+                "name": str(data.name())[:80],
+                "tasks": data.numCompleteTasks(),
+                "failedTasks": data.numFailedTasks(),
+                "wallSeconds": _wall_seconds(data),
+                "pool": str(data.schedulingPool()),
+                "scannedRows": data.inputRecords(),
+                "scannedBytes": data.inputBytes(),
+                "outputRows": data.outputRecords(),
+                "outputBytes": data.outputBytes(),
+                "shuffleReadBytes": data.shuffleReadBytes(),
+                "shuffleReadRecords": data.shuffleReadRecords(),
+                "shuffleWriteBytes": data.shuffleWriteBytes(),
+                "shuffleWriteRecords": data.shuffleWriteRecords(),
+                "memorySpilledBytes": data.memoryBytesSpilled(),
+                "diskSpilledBytes": data.diskBytesSpilled(),
+                "executorRunSeconds": data.executorRunTime() / 1000.0,
+                "executorCpuSeconds": data.executorCpuTime() / 1e9,
+                "jvmGcSeconds": data.jvmGcTime() / 1000.0,
+                "peakExecutionMemory": data.peakExecutionMemory(),
+            })
+        inv, w = out["invoker"], out["worker"]
+        inv["stages"] += len(rows)
+        inv["totalTasks"] += sum(r["tasks"] for r in rows)
+        inv["failedTasks"] += sum(r["failedTasks"] for r in rows)
+        for k in w:
+            vals = [r[k] for r in rows]
+            w[k] = (max([w[k], *vals]) if k == "peakExecutionMemory"
+                    else sum(vals, w[k]))
+        self.stages = rows
         # Task-duration distribution of the heaviest stage — the Spark
         # analog of the reference worker's per-task totalTime percentiles
         # (docs/api.md:712-723). Per-stage (tasks within one stage are
         # the comparable fan-out unit, like the reference's one-task-
         # per-part fleet).
-        if heaviest[0] is not None:
-            dist = self._task_duration_quantiles(sc, heaviest[0])
+        if rows:
+            heaviest = max(rows, key=lambda r: r["tasks"])
+            dist = self._task_duration_quantiles(sc, heaviest["stage"])
             if dist:
                 w["taskTime"] = dist
 
@@ -194,6 +222,30 @@ class JobGroupMetrics:
                     for i, lab in enumerate(labels)}
         except Exception:
             return None
+
+
+def _drain_listener_bus(sc) -> None:
+    """AppStatusListener is fed by the ASYNC listener bus — a read taken
+    right after the last collect can miss the final task/stage/job
+    events under load. Drain the bus first (bounded wait) so the store
+    is complete; guarded because waitUntilEmpty is private[spark]
+    plumbing."""
+    try:
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    except Exception:
+        pass
+
+
+def _wall_seconds(data):
+    """First task launch to stage completion of one ``StageData``, or
+    None when either end is unset (a skipped stage launches no task)."""
+    first = data.firstTaskLaunchedTime()
+    if not first.isDefined():
+        return None
+    done = data.completionTime()
+    if not done.isDefined():
+        return None
+    return round((done.get().getTime() - first.get().getTime()) / 1000.0, 3)
 
 
 def dataset_stats(df) -> dict:

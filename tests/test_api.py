@@ -288,3 +288,102 @@ def test_catalog_entry_with_removed_profile_keys_still_loads(spark, tmp_path):
     want = QueryEngine("user_id", "ts").run(ds.load(spark), q)
     assert body["query"] == want["query"]
     assert body["query"]["matchingGroups"] > 0
+
+
+_STATS_QUERY = {
+    "query": {"conditions": [{"filter": ["event_type", "==", "purchase"]}],
+              "aggregations": [{"column": "event_type",
+                                "type": "countPerValue", "top": 5}]},
+    "funnel": {"sequence": [{"filter": ["event_type", "==", "view"]},
+                            {"filter": ["event_type", "==", "purchase"]}]}}
+
+
+def test_stats_fallback_keeps_counts_and_result(spark, monkeypatch):
+    """The statusTracker fallback, reached through an engine query: the
+    snapshot is marked partial, counts the same jobs, stages and tasks as
+    the full path over the same job group, reports zero volumes, and the
+    query result itself does not change."""
+    from funnel_rocket_spark import QueryEngine
+    from funnel_rocket_spark.engine.metrics import JobGroupMetrics
+
+    ev = spark.read.parquet(SF_EVENTS)
+    eng = QueryEngine("user_id", "ts")
+    full = eng.run(ev, _STATS_QUERY, with_stats=True)
+    with JobGroupMetrics(spark, "fallback counts") as jg:
+        eng.run(ev, _STATS_QUERY)
+        store_snap = jg.snapshot()
+
+        def boom(self, sc, stage_ids, out):
+            raise RuntimeError("simulated: private statusStore plumbing moved")
+
+        monkeypatch.setattr(JobGroupMetrics, "_fill_from_status_store", boom)
+        tracker_snap = jg.snapshot()
+    degraded = eng.run(ev, _STATS_QUERY, with_stats=True)
+
+    assert "partial" not in store_snap
+    assert store_snap["worker"]["scannedRows"] > 0
+    for snap in (tracker_snap, degraded["stats"]):
+        assert snap["partial"] is True
+        assert snap["statsSource"] == "statusTracker"
+        assert all(v == 0 for v in snap["worker"].values())
+    assert tracker_snap["invoker"] == store_snap["invoker"]
+    assert jg.stages == []
+    full.pop("stats"), degraded.pop("stats")
+    assert degraded == full
+
+
+def test_stage_rows_and_job_intervals_cover_the_snapshot(spark, monkeypatch):
+    """The per-stage rows a snapshot keeps add up to its totals, and the
+    job-interval reader returns one interval per job the snapshot
+    counted."""
+    from funnel_rocket_spark import QueryEngine
+    from funnel_rocket_spark.engine import metrics
+
+    made = []
+
+    class Recording(metrics.JobGroupMetrics):
+        # the engine imports the class at call time, so it makes these
+        def __init__(self, *args, **kwargs):
+            super().__init__(*args, **kwargs)
+            made.append(self)
+
+    monkeypatch.setattr(metrics, "JobGroupMetrics", Recording)
+    res = QueryEngine("user_id", "ts").run(
+        spark.read.parquet(SF_EVENTS), _STATS_QUERY, with_stats=True)
+    (jg,) = made
+    inv, w = res["stats"]["invoker"], res["stats"]["worker"]
+    assert w["scannedRows"] > 0
+    assert len(jg.stages) == inv["stages"]
+    assert sum(s["tasks"] for s in jg.stages) == inv["totalTasks"]
+    assert sum(s["scannedRows"] for s in jg.stages) == w["scannedRows"]
+    intervals = jg.job_intervals()
+    assert len(intervals) == inv["jobs"] > 0
+    assert all(j["completedMs"] >= j["submittedMs"] for j in intervals)
+    assert [j["submittedMs"] for j in intervals] == \
+        sorted(j["submittedMs"] for j in intervals)
+
+
+def test_profile_tool_reports_one_catalog_query(spark, tmp_path, capsys):
+    """``tools/profile.py``'s routine on the shared session: the summary
+    line, a record whose stage rows and job timeline match its own
+    counts, and the plan written where the caller said."""
+    import importlib.util
+    import os
+
+    path = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "tools", "profile.py")
+    spec = importlib.util.spec_from_file_location("frs_profile_tool", path)
+    tool = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(tool)
+
+    sf = os.path.dirname(SF_EVENTS)
+    report = tool.profile(spark, sf, ["fr_funnel_step_agg"], runs=1,
+                          plans_dir=str(tmp_path / "plans"))
+    rec = report["fr_funnel_step_agg"]
+    assert rec["min_s"] > 0 and rec["build_s"] >= 0
+    assert rec["jobs"] == len(rec["job_timeline"]) > 0
+    assert rec["tasks"] == sum(s["tasks"] for s in rec["stage_rows"]) > 0
+    assert rec["job_gaps_s"] >= 0
+    assert "fr_funnel_step_agg: min=" in capsys.readouterr().out
+    plan = (tmp_path / "plans" / "fr_funnel_step_agg.txt").read_text()
+    assert "Physical Plan" in plan

@@ -139,3 +139,40 @@ def test_concurrent_aggregation_jobs_stay_in_stats_job_group(spark,
     # (pre-fix, the group missed them and under-counted drastically)
     assert conc["stats"]["invoker"]["totalTasks"] >= \
         serial["stats"]["invoker"]["totalTasks"]
+
+
+def test_aggregation_jobs_run_in_callers_scheduler_pool(spark, monkeypatch):
+    """The scheduler pool is thread-local like the job group: the API
+    tags each request's thread with its pool (``X-Query-Pool``), and the
+    aggregation jobs the engine submits from its pool threads must run
+    in that pool too, or under FAIR scheduling they leave the request's
+    tier. Only stages that ran are checked: a skipped stage never
+    reaches the scheduler and reports Spark's default pool."""
+    from funnel_rocket_spark import QueryEngine
+    from funnel_rocket_spark.engine import engine as engine_mod
+    from funnel_rocket_spark.engine.metrics import JobGroupMetrics
+
+    monkeypatch.setattr(engine_mod, "AGG_COLLECT_THREADS", 8)
+    ev = spark.read.parquet(f"{SF}/events.parquet")
+    q = {"query": {"aggregations": [
+            {"column": "event_type", "type": "countPerValue", "top": 10},
+            {"column": "event_type", "type": "sumPerValue",
+             "otherColumn": "value", "top": 10}]},
+         "funnel": {"sequence": [
+            {"filter": ["event_type", "==", "view"]},
+            {"filter": ["event_type", "==", "purchase"]}],
+            "endAggregations": [
+                {"column": "event_type", "type": "groupsPerValue",
+                 "top": 5}]}}
+    sc = spark.sparkContext
+    with JobGroupMetrics(spark, "pool test") as jg:
+        sc.setLocalProperty("spark.scheduler.pool", "frs-tier-test")
+        try:
+            QueryEngine("user_id", "ts").run(ev, q)
+        finally:
+            sc.setLocalProperty("spark.scheduler.pool", None)
+        jg.snapshot()
+    ran = [s for s in jg.stages if s["tasks"]]
+    # universe counts + three aggregation specs, at least one stage each
+    assert len(ran) >= 4
+    assert {s["pool"] for s in ran} == {"frs-tier-test"}
