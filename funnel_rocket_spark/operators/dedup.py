@@ -22,7 +22,7 @@ Scale notes are on each function.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -224,6 +224,15 @@ def shingle_frame(df: DataFrame, text_col: str, id_col: str, n: int = 3,
     return toks_df.selectExpr("id", _ngrams_sql("toks", n) + " AS grams")
 
 
+def content_digest(col: Column) -> Column:
+    """The exact-dedup content digest: md5 over the RAW text. Null text
+    hashes to the null digest, its OWN duplicate class distinct from
+    ``md5('')`` (a groupBy or dropDuplicates keeps nulls together).
+    'Hello  World' and 'hello world' are DIFFERENT content; near-dup
+    normalization belongs to the MinHash family."""
+    return F.md5(col.cast("binary"))
+
+
 def exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                      min_count: int = 2) -> DataFrame:
     """Exact dedup via content digest: (content_hash, n_docs, keep_id).
@@ -234,7 +243,7 @@ def exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
     those).
     """
     return (
-        df.select(F.md5(F.col(text_col).cast("binary")).alias("content_hash"),
+        df.select(content_digest(F.col(text_col)).alias("content_hash"),
                   F.col(id_col))
         .groupBy("content_hash")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.min(id_col).alias("keep_id"))

@@ -219,6 +219,34 @@ def with_sequence_anchors(df: DataFrame, spec: SequenceSpec, group_col: str,
     return df
 
 
+def per_group_counts(per_group: DataFrame, n_steps: int) -> DataFrame:
+    """ONE row over a per-group frame (``__fr_rows``, ``__fr_done``): its
+    ``matching_groups`` / ``matching_group_rows`` and, for each funnel
+    step i, ``__g{i}`` / ``__r{i}`` — the groups with ``__fr_done > i``
+    and their rows. Conditional sums in one aggregate, never one job per
+    step."""
+    aggs = [F.count(F.lit(1)).alias("matching_groups"),
+            F.coalesce(F.sum(ROWS_COL), F.lit(0))
+            .alias("matching_group_rows")]
+    for i in range(n_steps):
+        passed = F.col(DONE_COL) > F.lit(i)
+        aggs.append(F.coalesce(F.sum(F.when(passed, 1)), F.lit(0))
+                    .alias(f"__g{i}"))
+        aggs.append(F.coalesce(F.sum(F.when(passed, F.col(ROWS_COL))),
+                               F.lit(0)).alias(f"__r{i}"))
+    return per_group.agg(*aggs)
+
+
+def unpivot_step_counts(counts: DataFrame, n_steps: int) -> DataFrame:
+    """A ``per_group_counts`` row as per-step rows (step,
+    matching_groups, matching_group_rows), unpivoted with ``inline``."""
+    return counts.select(F.inline(F.array(*[
+        F.struct(F.lit(i).alias("step"),
+                 F.col(f"__g{i}").alias("matching_groups"),
+                 F.col(f"__r{i}").alias("matching_group_rows"))
+        for i in range(n_steps)])))
+
+
 class QueryPlan:
     """Lazy compilation of one expanded query over one DataFrame.
 
@@ -463,37 +491,23 @@ class QueryPlan:
         return self._labeled_per_group(self.labeled(strategy, matched))
 
     def universe_counts(self, labeled: DataFrame) -> DataFrame:
-        """ONE row over a ``labeled`` universe: its ``matching_groups`` /
-        ``matching_group_rows`` and, for each funnel step i, ``__g{i}`` /
-        ``__r{i}`` — the groups that passed step i and their rows. The
-        universe is exactly the matched groups, so the totals double as
-        the query block's counts."""
-        aggs = [F.count(F.lit(1)).alias("matching_groups"),
-                F.coalesce(F.sum(ROWS_COL), F.lit(0))
-                .alias("matching_group_rows")]
+        """``per_group_counts`` over a ``labeled`` universe. The universe
+        is exactly the matched groups, so its totals double as the query
+        block's counts."""
         steps = len(self._funnel_spec.step_preds) if self._funnel_spec else 0
-        for i in range(steps):
-            passed = F.col(DONE_COL) > F.lit(i)
-            aggs.append(F.coalesce(F.sum(F.when(passed, 1)), F.lit(0))
-                        .alias(f"__g{i}"))
-            aggs.append(F.coalesce(F.sum(F.when(passed, F.col(ROWS_COL))),
-                                   F.lit(0)).alias(f"__r{i}"))
-        return self._labeled_per_group(labeled).agg(*aggs)
+        return per_group_counts(self._labeled_per_group(labeled), steps)
 
     def funnel_step_counts(self, strategy: str = "join",
                            matched: Optional[DataFrame] = None
                            ) -> Optional[DataFrame]:
         """Per-step (step, matching_groups, matching_group_rows): the
-        ``universe_counts`` row unpivoted with ``inline``."""
+        ``universe_counts`` row through ``unpivot_step_counts``."""
         spec = self._funnel_spec
         if spec is None:
             return None
-        one = self.universe_counts(self.labeled(strategy, matched))
-        return one.select(F.inline(F.array(*[
-            F.struct(F.lit(i).alias("step"),
-                     F.col(f"__g{i}").alias("matching_groups"),
-                     F.col(f"__r{i}").alias("matching_group_rows"))
-            for i in range(len(spec.step_preds))])))
+        return unpivot_step_counts(
+            self.universe_counts(self.labeled(strategy, matched)),
+            len(spec.step_preds))
 
     # ----------------------------- aggregations ----------------------- #
 

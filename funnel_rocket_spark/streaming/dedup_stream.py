@@ -4,13 +4,11 @@ watermark-bounded state store.
 EXTENSION beyond the reference (funnel-rocket is strictly batch). This is
 the continuous twin of ``operators.dedup.exact_duplicates``: an unbounded
 document stream is filtered to first-seen content, where "seen" is the
-md5 digest of the RAW text — byte-identical to the batch digest (null
-text hashes to the null digest, its OWN duplicate class distinct from
-``md5('')``, exactly like the batch groupBy), so a doc dropped here is
-exactly a doc the batch exact dedup would have dropped.
-Near-dup normalization (case/whitespace) belongs to the MinHash family,
-not here: an exact-dedup stream must never delete data the batch exact
-contract keeps.
+batch operator's own ``content_digest`` (md5 of the RAW text; null text
+is its own duplicate class), so a doc dropped here is exactly a doc the
+batch exact dedup would have dropped. Near-dup normalization
+(case/whitespace) belongs to the MinHash family, not here: an exact-dedup
+stream must never delete data the batch exact contract keeps.
 
 Scale notes: state is keyed by the digest — uniformly distributed by
 construction, no skew. ``dropDuplicatesWithinWatermark`` evicts digest
@@ -25,15 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def content_digest(col) -> F.Column:
-    """md5 over the RAW text — identical to the batch
-    ``exact_duplicates`` digest (``md5(text cast binary)``): null text
-    hashes to the null digest, its OWN duplicate class distinct from
-    ``md5('')`` (dropDuplicates groups nulls together, exactly like the
-    batch groupBy). 'Hello  World' and 'hello world' are DIFFERENT
-    content here, exactly as in the batch contract."""
-    return F.md5(col.cast("binary"))
+from funnel_rocket_spark.operators.dedup import content_digest
 
 
 def streaming_exact_dedup(docs: DataFrame, ts_col: str,

@@ -1,18 +1,26 @@
 """Incremental funnel over Structured Streaming.
 
-EXTENSION beyond the reference: funnel-rocket is strictly batch
-(``/root/reference/docs/api.md:93-128`` — its "streaming" is HTTP progress
-chunks). The natural Spark expression of an always-on funnel is
-``applyInPandasWithState``: per-group state carries (furthest step reached,
-anchor timestamp of that step); each micro-batch advances state with the same
-greedy earliest-event semantics as the batch engine (strict ``ts >`` anchor,
-reference ``query_engine.py:221-249``).
+EXTENSION beyond the reference: funnel-rocket is strictly batch (its
+"streaming" is HTTP progress chunks, reference ``docs/api.md:93-128``).
+The natural Spark expression of an always-on funnel is
+``applyInPandasWithState``: per-group state carries (furthest step
+reached, anchor timestamp of that step, first anchor); each micro-batch
+advances it with the batch engine's greedy earliest-event semantics
+(strict ``ts >`` anchor, reference ``query_engine.py:221-249``).
+
+The steps are the engine's own: ``sequence_stream.sequence_step_mask``
+validates them against the stream's schema (shorthand is accepted, an
+unknown column or operator raises ``QueryValidationError`` at call time)
+and compiles them with ``filters_to_column`` into a step bitmask that
+Catalyst evaluates before the stateful operator — regex is Java's, as
+in the batch engine. Each micro-batch reaches the operator as
+``(ts, mask)`` pairs and folds through ``sequence_stream.fold_steps``.
 
 Semantics/caveats:
-* Within a batch, events are sorted by ts — intra-batch disorder is fine.
+* Intra-batch disorder is fine: the fold takes minima, not an order.
 * Cross-batch late events cannot retroactively advance an earlier step
-  (standard streaming trade-off; a watermark-delay + re-sort stage can be
-  put in front if bounded disorder must be tolerated).
+  (standard streaming trade-off; ``watermarked_sequence_match`` handles
+  bounded disorder).
 * ``rowFound: false`` steps are rejected — absence-over-unbounded-future is
   not decidable incrementally.
 """
@@ -21,47 +29,21 @@ from __future__ import annotations
 
 from typing import Iterable, Iterator, Tuple
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from funnel_rocket_spark.streaming.sequence_stream import (
+    fold_steps,
+    sequence_step_mask,
+)
+
 # schemas are built per-call from the actual group/ts column types:
 # forcing anchor_ts through double would quantize int64 epoch-nanos to
 # ~256 ns steps and break strict ts > anchor comparisons — the exact
 # hazard planner.compiler.ts_numeric documents for the batch engine
-
-
-def _pandas_filter(pdf: pd.DataFrame, f: dict) -> pd.Series:
-    """Single filter with the engine's null semantics, on Pandas (the
-    in-state mirror of planner.compiler.filter_to_column)."""
-    col, op, value = pdf[f["column"]], f["op"], f["value"]
-    if op == "==":
-        return col == value
-    if op == "!=":
-        return (col != value) | col.isna()
-    if op == "contains":
-        return col.str.contains(value, regex=False, na=False)
-    if op == "not contains":
-        # nulls MATCH 'not contains' — same as the batch engine's
-        # coalesce(~contains, true) (planner.compiler.filter_to_column)
-        return ~col.str.contains(value, regex=False, na=False)
-    if op == "regex":
-        return col.str.contains(value, regex=True, na=False)
-    return {"<": col < value, "<=": col <= value,
-            ">": col > value, ">=": col >= value}[op]
-
-
-def _step_pred(pdf: pd.DataFrame, step: dict) -> pd.Series:
-    filters = []
-    if "filter" in step:
-        filters.append(step["filter"])
-    if "filters" in step:
-        filters.extend(step["filters"])
-    mask = pd.Series(True, index=pdf.index)
-    for f in filters:
-        mask &= _pandas_filter(pdf, f)
-    return mask
 
 
 def incremental_funnel(
@@ -82,82 +64,52 @@ def incremental_funnel(
     per-group state carries that anchor, so the bound holds across
     micro-batches).
     """
-    for step in sequence:
-        if step.get("rowFound", True) is False:
-            raise NotImplementedError(
-                "rowFound:false cannot be evaluated incrementally")
-    n_steps = len(sequence)
-    # Null-ts rows are inert (the batch engine's null-coalesced predicates
-    # never match them) — drop them BEFORE the stateful operator: besides
-    # implementing that contract, a null in an int64 ts column would force
-    # the Arrow->pandas conversion to float64 and quantize epoch-nanos for
-    # the whole batch, breaking strict ts > anchor chains
-    events = events.where(F.col(ts_col).isNotNull())
+    steps, mask = sequence_step_mask(events, sequence, group_col, ts_col)
+    if any(step.get("rowFound", True) is False for step in steps):
+        raise NotImplementedError(
+            "rowFound:false cannot be evaluated incrementally")
+    row_found = [True] * len(steps)
     g_type = events.schema[group_col].dataType.simpleString()
     ts_type = events.schema[ts_col].dataType.simpleString()
-    ts_is_int = ts_type in ("long", "bigint", "int", "integer",
-                            "smallint", "tinyint")
     out_schema = (f"group_id {g_type}, steps_completed int, "
                   f"anchor_ts {ts_type}")
     state_schema = (f"steps_completed int, anchor_ts {ts_type}, "
                     f"first_ts {ts_type}")
+    # Null-ts rows are inert (the batch engine's null-coalesced predicates
+    # never match them) and so are rows matching no step: drop both
+    # before the stateful operator. Besides implementing that contract,
+    # a null in an int64 ts column would force the Arrow->pandas
+    # conversion to float64 and quantize epoch-nanos for the whole batch
+    reduced = (events
+               .select(F.col(group_col), F.col(ts_col).alias("__ts"),
+                       mask.alias("__mask"))
+               .where(F.col("__ts").isNotNull() & (F.col("__mask") != 0)))
 
     def update(
         key: Tuple,
         batches: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterable[pd.DataFrame]:
-        if state.exists:
-            steps_done, anchor, first = state.get
-        else:
-            steps_done, anchor, first = 0, None, None
-
-        # ONE sorted frame per micro-batch: the Arrow iterator chunks a
-        # big group's batch at maxRecordsPerBatch, and sorting each chunk
-        # independently would make the result depend on arbitrary chunk
-        # boundaries — the docstring promises intra-BATCH disorder is fine
+        done, anchor, first = state.get if state.exists else (0, None, None)
+        # ONE fold over all of the micro-batch's Arrow chunks: folding
+        # chunk by chunk would make a chunk boundary act like a batch
+        # boundary. Column dtypes carry through — int64 nanos stay exact
         chunks = list(batches)
-        pdf = (pd.concat(chunks, ignore_index=True)
-               if len(chunks) > 1 else (chunks[0] if chunks else None))
-        advanced = False
-        if pdf is not None and len(pdf):
-            pdf = pdf.sort_values(ts_col)
-            preds = [_step_pred(pdf, s) for s in sequence]
-            for idx in pdf.index:
-                if steps_done >= n_steps:
-                    break
-                # One event advances at most one step (strict ts > anchor
-                # also prevents same-timestamp chaining, like the batch path)
-                if preds[steps_done].loc[idx]:
-                    raw = pdf.at[idx, ts_col]
-                    if pd.isna(raw):
-                        # a null-ts row is inert like the batch engine's
-                        # null-coalesced predicates — advancing on NaN
-                        # would poison the anchor and disable every later
-                        # ordering/duration check
-                        continue
-                    # keep the column's own arithmetic: int64 nanos stay
-                    # exact; float stays float
-                    ts_val = int(raw) if ts_is_int else float(raw)
-                    if anchor is not None and ts_val <= anchor:
-                        continue
-                    if (max_duration is not None and steps_done > 0
-                            and ts_val > first + max_duration):
-                        continue
-                    anchor = ts_val
-                    if steps_done == 0:
-                        first = ts_val
-                    steps_done += 1
-                    advanced = True
-
-        if advanced:
-            state.update((steps_done, anchor, first))
+        if not chunks:  # a timeout call carries no rows
+            return
+        ts = np.concatenate([c["__ts"].to_numpy() for c in chunks])
+        mk = np.concatenate([c["__mask"].to_numpy(np.int64) for c in chunks])
+        was = done
+        done, anchor, first = fold_steps(ts, mk, done, anchor, first,
+                                         row_found, max_duration)
+        if done > was:
+            state.update((done, anchor, first))
             yield pd.DataFrame(
-                {"group_id": [key[0]], "steps_completed": [steps_done],
+                {"group_id": [key[0]], "steps_completed": [done],
                  "anchor_ts": [anchor]}
             )
 
-    return events.groupBy(group_col).applyInPandasWithState(
+    return reduced.groupBy(group_col).applyInPandasWithState(
         update,
         outputStructType=out_schema,
         stateStructType=state_schema,

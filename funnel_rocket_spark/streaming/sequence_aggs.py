@@ -1,14 +1,15 @@
-"""Aggregations over watermarked streaming sequence matches (r12).
+"""Aggregations over watermarked streaming sequence matches.
 
-The r11 :func:`~funnel_rocket_spark.streaming.sequence_stream.
-watermarked_sequence_match` operator emits per-group scalars
+:func:`~funnel_rocket_spark.streaming.sequence_stream.
+watermarked_sequence_match` emits per-group scalars
 ``(group_id, steps_completed, anchor_ts, matched)`` in update mode.
 This module adds the batch engine's AGGREGATION surface on top of those
-matches — per-step group/row counts (the streaming twin of
-``QueryPlan.funnel_step_counts``) and per-value aggregations over rows
-of groups that passed a step (the streaming twin of countPerValue /
-sumPerValue / meanPerValue / groupsPerValue evaluated by
-``QueryPlan.aggregation_df`` over the labeled universe's step slots).
+matches — per-step group/row counts (``QueryPlan.funnel_step_counts``,
+computed by the same ``planner.compiler`` functions over the stores'
+per-group frame) and per-value aggregations over rows of groups that
+passed a step (the streaming twin of countPerValue / sumPerValue /
+meanPerValue / groupsPerValue evaluated by ``QueryPlan.aggregation_df``
+over the labeled universe's step slots).
 
 Design: Spark does not allow a second stateful aggregation downstream
 of ``applyInPandasWithState`` in update mode, and folding row/value
@@ -18,7 +19,7 @@ as two INDEPENDENT streaming queries over the same source, each the
 cheapest possible shape:
 
 * the match stream — per-group scalar state, Python only at the
-  per-group fold (unchanged);
+  per-group fold;
 * a per-``(group, value)`` partial-counts stream — a plain update-mode
   ``groupBy().agg()``: JVM/Tungsten state, map-side combinable, no
   Python anywhere.
@@ -56,7 +57,13 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-ROWS = "__fr_rows"
+from funnel_rocket_spark.planner.compiler import (
+    DONE_COL,
+    ROWS_COL as ROWS,
+    per_group_counts,
+    unpivot_step_counts,
+)
+
 MSUM = "__fr_msum"
 BATCH = "__fr_batch"
 
@@ -139,27 +146,16 @@ def sequence_step_counts(spark: SparkSession, matches_path: str,
     the sum of their TOTAL row counts (every arrived row of the group,
     step-matching or not, exactly like the batch per-group frame).
 
-    Same one-pass shape as the batch plan: conditional sums per step in
-    ONE aggregate, unpivoted with ``inline`` — never one job per step.
+    The per-group frame goes through the batch plan's own
+    ``per_group_counts`` and ``unpivot_step_counts``.
     """
     m = read_latest(spark, matches_path, ["group_id"]) \
-        .select("group_id", "steps_completed")
+        .select("group_id", F.col("steps_completed").alias(DONE_COL))
     rows = (read_latest(spark, partials_path, ["group_id", "value"])
             .groupBy("group_id").agg(F.sum(ROWS).alias(ROWS)))
-    j = m.join(rows, "group_id", "left").na.fill({ROWS: 0})
-    aggs = []
-    for i in range(n_steps):
-        passed = F.col("steps_completed") > F.lit(i)
-        aggs.append(F.coalesce(F.sum(F.when(passed, 1)), F.lit(0))
-                    .alias(f"__g{i}"))
-        aggs.append(F.coalesce(F.sum(F.when(passed, F.col(ROWS))),
-                               F.lit(0)).alias(f"__r{i}"))
-    one = j.agg(*aggs)
-    return one.select(F.inline(F.array(*[
-        F.struct(F.lit(i).alias("step"),
-                 F.col(f"__g{i}").alias("matching_groups"),
-                 F.col(f"__r{i}").alias("matching_group_rows"))
-        for i in range(n_steps)])))
+    per_group = m.join(rows, "group_id", "left").na.fill({ROWS: 0})
+    return unpivot_step_counts(per_group_counts(per_group, n_steps),
+                               n_steps)
 
 
 def sequence_step_value_aggs(spark: SparkSession, matches_path: str,

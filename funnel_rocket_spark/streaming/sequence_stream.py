@@ -1,27 +1,29 @@
 """Watermarked sequence conditions over Structured Streaming.
 
-The batch engine's crown-jewel operator — ordered sequence matching with
-strict ``ts >`` anchor advancement (reference semantics:
-``/root/reference/frocket/engine/query_engine.py:221-249``) — in
-incremental form. :func:`incremental_funnel` (r9) already folds
-sequences per micro-batch, but its equivalence contract requires
-TIME-ORDERED batch boundaries: an event arriving after a later-ts event
-in a previous batch can never advance an earlier step.
+The batch engine's ordered sequence matching — strict ``ts >`` anchor
+advancement, reference ``frocket/engine/query_engine.py:221-249`` — in
+incremental form, built from the engine's own parts:
 
-:func:`watermarked_sequence_match` removes that restriction up to the
+* :func:`sequence_step_mask` runs the steps through the engine's
+  validator against the stream's schema (shorthand filters are accepted;
+  an unknown column or operator raises ``QueryValidationError`` at call
+  time) and compiles them with the engine's ``filters_to_column`` into
+  one bitmask column. Null semantics and the regex dialect (Java, as in
+  ``rlike``) are the batch engine's, and events reach state as
+  ``(event-time, step bitmask)`` pairs. A mask holds at most 63 steps.
+* :func:`fold_steps` is the one fold: it advances a group's
+  ``(steps, anchor, first)`` by iterated masked min, the batch
+  window-anchor recurrence. ``incremental_funnel`` folds each
+  micro-batch with it; :func:`watermarked_sequence_match` folds its
+  sealed prefix and resolves bounded absence with it.
+
+:func:`watermarked_sequence_match` tolerates disorder up to the
 watermark delay, the standard Spark bounded-disorder contract:
 
-* Incoming events are reduced JVM-side to ``(event-time, step bitmask)``
-  pairs — the step predicates are compiled by the SAME
-  ``planner.compiler.filter_to_column`` the batch engine uses, so null
-  semantics match by construction and no event columns ride into state.
 * Per-group state buffers the pairs that are still inside the watermark
   window. Once the event-time watermark passes an event, no
   earlier-timestamped event can arrive (Spark's watermark guarantee), so
-  the prefix below the watermark is SEALED: it folds through the batch
-  recurrence (greedy earliest-event, strict ``ts > anchor``, optional
-  ``maxDuration`` from the greedy first anchor) in exact event-time
-  order and leaves state.
+  the prefix below the watermark is SEALED: it folds and leaves state.
 * Groups with buffered events but no new arrivals are driven by an
   EVENT-TIME TIMEOUT (``GroupStateTimeout.EventTimeTimeout``): the
   timeout is re-armed to just past the oldest buffered event, so the
@@ -35,48 +37,92 @@ filter — the documented watermark trade-off.
 ``rowFound: false`` (absence steps) is supported when ``maxDuration``
 bounds the window and the first step is a found step: the group buffers
 its duration window ``(first_anchor, first_anchor + maxDuration]`` and
-resolves ONCE — with full lookahead, exactly the batch window-anchor
-recurrence — when the watermark passes the horizon (after which no
-in-window event can arrive, so "no row matched" is final). State for
-such groups is bounded by the duration window. UNBOUNDED absence (no
-``maxDuration``) stays an honest ``NotImplementedError`` seam: "no
-matching row, ever" is not decidable under finite state.
+resolves ONCE, with full lookahead, when the watermark passes the
+horizon (after which no in-window event can arrive, so "no row matched"
+is final). State for such groups is bounded by the duration window.
+UNBOUNDED absence (no ``maxDuration``) stays an honest
+``NotImplementedError`` seam: "no matching row, ever" is not decidable
+under finite state.
 """
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
 from typing import Iterable, Iterator, Tuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from funnel_rocket_spark.planner.compiler import filters_to_column
+from funnel_rocket_spark.validation.validator import (
+    QueryValidationError,
+    expand_and_validate,
+)
+
 LONG_MIN = -(2**63)
+MAX_STEPS = 63  # one bit per step in a signed 64-bit mask
 
 
-def _step_mask_column(sequence: list[dict]):
-    """AND-of-filters per step, OR-folded into one bitmask column —
-    evaluated by Catalyst before the stateful operator, so state holds
-    two longs per event regardless of how wide the event rows are."""
-    from ..planner.compiler import filter_to_column
+def sequence_step_mask(events: DataFrame, sequence: list[dict],
+                       group_col: str, ts_col: str) -> tuple[list, Column]:
+    """(expanded steps, step bitmask Column) for ``sequence`` over
+    ``events``. The steps go through the batch engine's validator against
+    the stream's schema, so shorthand filters expand and an unknown
+    column, operator or value type raises ``QueryValidationError`` here,
+    at call time. Bit i of the mask is step i's predicate, compiled by the
+    engine's ``filters_to_column`` and evaluated by Catalyst before the
+    stateful operator, so state holds two longs per event however wide
+    the event rows are."""
+    if len(sequence) > MAX_STEPS:
+        raise QueryValidationError(
+            f"Sequence has {len(sequence)} steps; streaming sequences keep "
+            f"one bit per step and stop at the {MAX_STEPS}-step bitmask "
+            "limit")
+    schema = {f.name: f.dataType.simpleString()
+              for f in events.schema.fields}
+    steps = expand_and_validate(
+        {"funnel": {"sequence": sequence}}, dataset_schema=schema,
+        group_id_column=group_col, timestamp_column=ts_col,
+    ).query["funnel"]["sequence"]
+    mask = reduce(operator.add,
+                  [F.when(filters_to_column(step), F.lit(1 << i))
+                   .otherwise(F.lit(0)) for i, step in enumerate(steps)],
+                  F.lit(0).cast("long"))
+    return steps, mask
 
-    mask = F.lit(0).cast("long")
-    for i, step in enumerate(sequence):
-        filters = []
-        if "filter" in step:
-            filters.append(step["filter"])
-        if "filters" in step:
-            filters.extend(step["filters"])
-        pred = F.lit(True)
-        for f in filters:
-            f = (f if isinstance(f, dict)
-                 else {"column": f[0], "op": f[1], "value": f[2]})
-            pred = pred & filter_to_column(f)
-        mask = mask + F.when(pred, F.lit(1 << i)).otherwise(F.lit(0))
-    return mask
+
+def fold_steps(ts: np.ndarray, mask: np.ndarray, steps: int, anchor,
+               first, row_found: list[bool],
+               max_duration=None) -> tuple[int, object, object]:
+    """Advance one group's ``(steps, anchor, first)`` over events
+    ``(ts, step bitmask)`` in any order, by iterated masked min: step i's
+    scope is the events matching bit i strictly after the previous anchor
+    (no bound before step 0) and, past step 0, within ``max_duration`` of
+    the first anchor. A found step anchors at the earliest event in scope;
+    an absent step (``row_found[i]`` false) passes, anchor unchanged, only
+    if its scope is empty — so absence is final only over a sealed
+    window. This is the batch ``with_sequence_anchors`` recurrence, and
+    it equals the greedy event-order walk: an event tied with the anchor
+    can never chain."""
+    while steps < len(row_found):
+        hit = ((mask >> steps) & 1).astype(bool)
+        if steps:
+            hit &= ts > anchor
+            if max_duration is not None:
+                hit &= ts <= first + max_duration
+        if hit.any() != row_found[steps]:
+            break  # a found step needs an event in scope, an absent one none
+        if row_found[steps]:
+            anchor = ts[hit].min().item()
+            if steps == 0:
+                first = anchor
+        steps += 1
+    return steps, anchor, first
 
 
 def watermarked_sequence_match(
@@ -111,8 +157,8 @@ def watermarked_sequence_match(
     data for them or not. Always-on streams need no heartbeats as long
     as events keep flowing.
     """
-    row_found = [step.get("rowFound", True) is not False
-                 for step in sequence]
+    steps, mask = sequence_step_mask(events, sequence, group_col, ts_col)
+    row_found = [step.get("rowFound", True) is not False for step in steps]
     has_absence = not all(row_found)
     if has_absence and (max_duration is None or not row_found[0]):
         # UNBOUNDED absence stays the honest seam: "no matching row,
@@ -128,7 +174,7 @@ def watermarked_sequence_match(
         raise ValueError(
             f"{ts_col} must be TIMESTAMP for watermarking — convert "
             "int64-nano axes with streaming.nanos_to_timestamp first")
-    n_steps = len(sequence)
+    n_steps = len(steps)
     max_dur_us = None if max_duration is None else int(max_duration * 1e6)
     g_type = events.schema[group_col].dataType.simpleString()
     out_schema = (f"group_id {g_type}, steps_completed int, "
@@ -147,31 +193,22 @@ def watermarked_sequence_match(
                .select(F.col(group_col),
                        F.col(ts_col).alias("__wm_ts"),
                        F.unix_micros(F.col(ts_col)).alias("__ts"),
-                       _step_mask_column(sequence).alias("__mask"))
+                       mask.alias("__mask"))
                .withWatermark("__wm_ts", watermark))
 
-    def _resolve_absence(window_evs: list, first: int) -> tuple[int, int]:
-        """The window-anchor recurrence over one group's fully-sealed
-        duration window (first, first + maxDuration] — the same
-        semantics the batch ``with_sequence_anchors`` evaluates: found
-        steps anchor at the min matching ts past the previous anchor;
-        an absence step passes iff NO row matches past the previous
-        anchor (within the window), anchor passing through. Returns
-        (steps_completed, last_anchor)."""
-        a_prev, done = first, 1
-        for i in range(1, n_steps):
-            if row_found[i]:
-                cand = [t for t, m in window_evs
-                        if (m >> i) & 1 and t > a_prev]
-                if not cand:
-                    break
-                a_prev = min(cand)
-            elif any((m >> i) & 1 and t > a_prev for t, m in window_evs):
-                break  # a matching row anywhere in scope kills absence
-            done += 1
-        return done, a_prev
+    def emit(key, done: int, anchor: int) -> pd.DataFrame:
+        return pd.DataFrame(
+            {"group_id": [key[0]], "steps_completed": [done],
+             "anchor_ts": [anchor], "matched": [done >= n_steps]})
 
-    def _absence_update(key, buf, state):
+    def keep(state, done, anchor, first, ts, mk, arm_us) -> None:
+        """Store the fold scalars and the buffer, and fire the timeout as
+        soon as the watermark passes ``arm_us`` (strictly past the
+        current watermark)."""
+        state.update((done, anchor, first, ts.tolist(), mk.tolist()))
+        state.setTimeoutTimestamp(arm_us // 1000 + 1)
+
+    def absence_update(key, ts, mk, seal_us, state):
         """Bounded-absence path: buffer the duration window, resolve
         ONCE when the watermark passes ``first + maxDuration`` (then the
         whole window is sealed — lookahead is safe), and drop the group
@@ -180,7 +217,6 @@ def watermarked_sequence_match(
         eventual anchor can only be ≥ the watermark, so they can never
         land in scope); once known, only (first, first+maxDuration]
         events are kept."""
-        seal_us = state.getCurrentWatermarkMs() * 1000
         if state.exists and state.get[0] != 0:
             # already resolved: the batch first anchor is the GLOBAL
             # min step-0 ts, so later events can never re-open the
@@ -188,36 +224,30 @@ def watermarked_sequence_match(
             return
         first = state.get[2] if state.exists else LONG_MIN
         if first == LONG_MIN:
-            sealed_a0 = [t for t, m in buf if t < seal_us and m & 1]
-            if sealed_a0:
-                first = min(sealed_a0)
-        if first != LONG_MIN:
-            horizon = first + max_dur_us
-            buf = [(t, m) for t, m in buf if first < t <= horizon]
-            if seal_us > horizon:  # ts == horizon is in scope: strict
-                done, anch = _resolve_absence(sorted(buf), first)
-                # tombstone: resolved groups keep only the scalar fold
-                # state (like matched groups on the found-only path)
-                state.update((done, anch, first, [], []))
-                yield pd.DataFrame(
-                    {"group_id": [key[0]], "steps_completed": [done],
-                     "anchor_ts": [anch], "matched": [done >= n_steps]})
-                return
-        else:
+            sealed_a0 = ts[(ts < seal_us) & ((mk & 1) == 1)]
+            if len(sealed_a0):
+                first = sealed_a0.min().item()
+        if first == LONG_MIN:
             # no step-0 match sealed yet → any future anchor is ≥ the
             # watermark, so sealed events can never be in its scope
-            buf = [(t, m) for t, m in buf if t >= seal_us]
-        if buf or first != LONG_MIN:
-            state.update((0, LONG_MIN, first,
-                          [t for t, _ in buf], [m for _, m in buf]))
-            # resolution fires when the watermark passes the horizon;
-            # before the anchor exists, when it passes the oldest
-            # buffered event (both strictly > current watermark)
-            arm = (first + max_dur_us if first != LONG_MIN
-                   else min(t for t, _ in buf))
-            state.setTimeoutTimestamp(arm // 1000 + 1)
-        elif state.exists:
-            state.remove()
+            live = ts >= seal_us
+            ts, mk = ts[live], mk[live]
+            if len(ts):
+                keep(state, 0, LONG_MIN, first, ts, mk, ts.min().item())
+            elif state.exists:
+                state.remove()
+            return
+        horizon = first + max_dur_us
+        if seal_us > horizon:  # ts == horizon is in scope: strict
+            done, anchor, _ = fold_steps(ts, mk, 1, first, first,
+                                         row_found, max_dur_us)
+            # tombstone: resolved groups keep only the scalar fold
+            # state (like matched groups on the found-only path)
+            state.update((done, anchor, first, [], []))
+            yield emit(key, done, anchor)
+            return
+        live = (ts > first) & (ts <= horizon)
+        keep(state, 0, LONG_MIN, first, ts[live], mk[live], horizon)
 
     def update(
         key: Tuple,
@@ -225,75 +255,41 @@ def watermarked_sequence_match(
         state: GroupState,
     ) -> Iterable[pd.DataFrame]:
         if state.exists:
-            steps, anchor, first, buf_ts, buf_mask = state.get
-            buf = list(zip(buf_ts, buf_mask))
+            done, anchor, first, buf_ts, buf_mask = state.get
         else:
-            steps, anchor, first, buf = 0, LONG_MIN, LONG_MIN, []
+            done, anchor, first, buf_ts, buf_mask = (
+                0, LONG_MIN, LONG_MIN, [], [])
+        ts_parts = [np.asarray(buf_ts, dtype=np.int64)]
+        mk_parts = [np.asarray(buf_mask, dtype=np.int64)]
         for pdf in batches:
-            if len(pdf):
-                pdf = pdf[pdf["__mask"] != 0]  # no-step rows are inert
-                buf.extend(zip(pdf["__ts"].astype("int64"),
-                               pdf["__mask"].astype("int64")))
-        buf = [(int(t), int(m)) for t, m in buf]
+            batch_mk = pdf["__mask"].to_numpy(np.int64)
+            step_rows = batch_mk != 0  # no-step rows are inert
+            ts_parts.append(pdf["__ts"].to_numpy(np.int64)[step_rows])
+            mk_parts.append(batch_mk[step_rows])
+        ts, mk = np.concatenate(ts_parts), np.concatenate(mk_parts)
+        seal_us = state.getCurrentWatermarkMs() * 1000
 
         if has_absence:
-            yield from _absence_update(key, buf, state)
+            yield from absence_update(key, ts, mk, seal_us, state)
             return
 
         # Spark's watermark guarantee: no future row's event time is
         # below the current watermark, so the strictly-below prefix is
-        # final — fold it and drop it. The greedy event-order fold
-        # ("each event advances at most one step, strict ts > anchor")
-        # is equivalent to ITERATED MASKED MIN — for each step, the
-        # earliest sealed event matching the step bit strictly past the
-        # previous anchor (an event tied with the anchor can never
-        # chain, min > anchor excludes it exactly like the ordered
-        # walk) — so the fold is n_steps numpy reductions instead of a
-        # Python loop + sort over every sealed event (r12; the replay
-        # throughput boundary in docs/operators.md).
-        seal_us = state.getCurrentWatermarkMs() * 1000
-        if buf:
-            ts_arr = np.fromiter((t for t, _ in buf), dtype=np.int64,
-                                 count=len(buf))
-            mk_arr = np.fromiter((m for _, m in buf), dtype=np.int64,
-                                 count=len(buf))
-            sealed_sel = ts_arr < seal_us
-            s_ts, s_mk = ts_arr[sealed_sel], mk_arr[sealed_sel]
-            buf = [(int(t), int(m)) for t, m in
-                   zip(ts_arr[~sealed_sel], mk_arr[~sealed_sel])]
-        else:
-            s_ts = s_mk = None
-
-        advanced = False
-        while (s_ts is not None and len(s_ts) and steps < n_steps):
-            ok = ((s_mk >> steps) & 1).astype(bool) & (s_ts > anchor)
-            if max_dur_us is not None and steps > 0:
-                ok &= s_ts <= first + max_dur_us
-            if not ok.any():
-                break
-            t = int(s_ts[ok].min())
-            if steps == 0:
-                first = t  # greedy first anchor (earliest step-0 match)
-            anchor = t
-            steps += 1
-            advanced = True
-
-        if buf and steps < n_steps:
-            state.update((steps, anchor, first,
-                          [t for t, _ in buf], [m for _, m in buf]))
-            # re-arm: fire as soon as the watermark passes the oldest
-            # buffered event (must be strictly past the current
-            # watermark — oldest//1000 >= wm_ms by the seal above)
-            state.setTimeoutTimestamp(min(t for t, _ in buf) // 1000 + 1)
-        elif advanced or state.exists:
+        # final — fold it and drop it
+        sealed = ts < seal_us
+        was = done
+        done, anchor, first = fold_steps(ts[sealed], mk[sealed], done,
+                                         anchor, first, row_found,
+                                         max_dur_us)
+        ts, mk = ts[~sealed], mk[~sealed]
+        if len(ts) and done < n_steps:
+            keep(state, done, anchor, first, ts, mk, ts.min().item())
+        elif done > was or state.exists:
             # matched groups and drained buffers keep only the scalar
             # fold state; timeout stays unarmed (nothing left to seal)
-            state.update((steps, anchor, first, [], []))
-
-        if advanced:
-            yield pd.DataFrame(
-                {"group_id": [key[0]], "steps_completed": [steps],
-                 "anchor_ts": [anchor], "matched": [steps >= n_steps]})
+            state.update((done, anchor, first, [], []))
+        if done > was:
+            yield emit(key, done, anchor)
 
     return reduced.groupBy(group_col).applyInPandasWithState(
         update,

@@ -1,12 +1,13 @@
 """The docs name only code that exists: every backticked
-``QueryPlan.<name>``, ``QueryEngine.<name>`` and ``engine.<NAME>`` in
-README.md and docs/*.md resolves in the package, and no doc names a
-keyword of the deleted sequence strategies."""
+``QueryPlan.<name>``, ``QueryEngine.<name>``, ``engine.<NAME>`` and
+``streaming.<name>`` in README.md and docs/*.md resolves in the package,
+and no doc names a keyword of the deleted sequence strategies."""
 
 import glob
 import os
 import re
 
+from funnel_rocket_spark import streaming
 from funnel_rocket_spark.engine import engine
 from funnel_rocket_spark.engine.engine import QueryEngine
 from funnel_rocket_spark.planner.compiler import QueryPlan
@@ -15,10 +16,11 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DOCS = [os.path.join(ROOT, "README.md"),
         *sorted(glob.glob(os.path.join(ROOT, "docs", "*.md")))]
 OWNERS = {"QueryPlan": QueryPlan, "QueryEngine": QueryEngine,
-          "engine": engine}
+          "engine": engine, "streaming": streaming}
 # ``engine.<NAME>`` is a module constant; a lowercase ``engine.x`` or a
 # path such as ``engine/engine.py`` is not a reference to check
-REFERENCE = re.compile(r"(?<![\w./])(?:(QueryPlan|QueryEngine)\.(\w+)"
+REFERENCE = re.compile(r"(?<![\w./])"
+                       r"(?:(QueryPlan|QueryEngine|streaming)\.(\w+)"
                        r"|(engine)\.([A-Z][A-Z0-9_]*)\b)")
 DELETED_KEYWORDS = ("sequence_strategy", "fold_segmented",
                     "sequence_anchor_chain", "whale_row_threshold",

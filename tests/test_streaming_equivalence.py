@@ -11,10 +11,11 @@ Scope note: `incremental_funnel` documents that cross-batch LATE events
 cannot retroactively advance a step, so equivalence is asserted for
 time-ordered batch boundaries (events sorted by ts, split anywhere) —
 exactly the contract the docstring promises. Within a batch, order is
-arbitrary (the operator re-sorts).
+arbitrary (the fold takes minima, not an order).
 """
 
 import pandas as pd
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -24,7 +25,9 @@ from funnel_rocket_spark.streaming import (incremental_funnel,
                                            streaming_exact_dedup,
                                            streaming_session_stats,
                                            streaming_time_rollup,
-                                           streaming_value_counts)
+                                           streaming_value_counts,
+                                           watermarked_sequence_match)
+from funnel_rocket_spark.validation import QueryValidationError
 
 SEQ = [{"filter": {"column": "etype", "op": "==", "value": "view"}},
        {"filter": {"column": "etype", "op": "==", "value": "click"}},
@@ -94,6 +97,85 @@ def test_incremental_funnel_stream_equals_batch_engine(spark, tmp_path):
         assert got == want, (rows, cuts, got, want)
 
     prop()
+
+
+# Steps go through the batch engine's validator and predicates, so the
+# stream accepts what the engine accepts — shorthand filters, Java-dialect
+# regex (a Unicode class, an inline flag after the first character) —
+# and returns the engine's answer on it.
+ENGINE_STEPS = {
+    "shorthand": [{"filter": ["etype", "==", "view"]},
+                  {"filter": ["etype", "==", "click"]}],
+    "unicode_class_regex": [{"filter": ["etype", "regex", r"^\p{Lu}"]},
+                            {"filter": ["etype", "==", "click"]}],
+    "inline_flag_regex": [{"filter": ["etype", "regex", "v(?i)IEW"]},
+                          {"filter": ["etype", "==", "click"]}],
+}
+
+
+@pytest.mark.parametrize("name", sorted(ENGINE_STEPS))
+def test_incremental_funnel_engine_predicates_equal_batch(spark, tmp_path,
+                                                          name):
+    seq = ENGINE_STEPS[name]
+    rows = [{"user_id": 1, "ts": 1.0, "etype": "view"},
+            {"user_id": 1, "ts": 2.0, "etype": "click"},
+            {"user_id": 2, "ts": 1.0, "etype": "View"},
+            {"user_id": 2, "ts": 3.0, "etype": "click"},
+            {"user_id": 3, "ts": 1.0, "etype": "vIEW"},
+            {"user_id": 3, "ts": 4.0, "etype": "click"},
+            {"user_id": 4, "ts": 2.0, "etype": None},
+            {"user_id": 4, "ts": 5.0, "etype": "click"},
+            {"user_id": 5, "ts": 6.0, "etype": "Click"}]
+    indir, ckpt = tmp_path / "in", tmp_path / "ckpt"
+    indir.mkdir()
+    for i, chunk in enumerate(_split(rows, [4])):
+        pd.DataFrame(chunk).to_parquet(indir / f"b{i:02d}.parquet")
+    stream = (spark.readStream
+              .schema("user_id long, ts double, etype string")
+              .option("maxFilesPerTrigger", "1")
+              .parquet(str(indir)))
+    q = (incremental_funnel(stream, seq, "user_id", "ts")
+         .writeStream.format("memory").queryName(f"funnel_engine_{name}")
+         .outputMode("update")
+         .option("checkpointLocation", str(ckpt))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    got = {r["group_id"]: r["m"] for r in spark.sql(
+        f"SELECT group_id, max(steps_completed) AS m "
+        f"FROM funnel_engine_{name} GROUP BY group_id").collect()}
+
+    df = spark.createDataFrame(pd.DataFrame(rows))
+    plan = QueryEngine("user_id", "ts").plan(df, {"funnel": {"sequence": seq}})
+    want = {r["user_id"]: r["__fr_done"]
+            for r in plan.funnel_per_group().collect()
+            if r["__fr_done"] > 0}
+    assert want and got == want, (got, want)
+
+
+CALL_TIME_ERRORS = {
+    "unknown_column": ([{"filter": ["nope", "==", "view"]}],
+                       "Unknown column 'nope'"),
+    "unknown_op": ([{"filter": ["etype", "~", "view"]}],
+                   "does not match schema"),
+    "64_steps": ([{"filter": ["etype", "==", "view"]}] * 64,
+                 "63-step bitmask limit"),
+}
+
+
+@pytest.mark.parametrize("operator", ["incremental_funnel",
+                                      "watermarked_sequence_match"])
+@pytest.mark.parametrize("case", sorted(CALL_TIME_ERRORS))
+def test_streaming_sequences_raise_validation_errors_at_call_time(
+        spark, operator, case):
+    seq, message = CALL_TIME_ERRORS[case]
+    stream = (spark.readStream.format("rate").load()
+              .select(F.col("value").alias("user_id"),
+                      F.col("timestamp").alias("ts"),
+                      F.lit("view").alias("etype")))
+    op = {"incremental_funnel": incremental_funnel,
+          "watermarked_sequence_match": watermarked_sequence_match}[operator]
+    with pytest.raises(QueryValidationError, match=message):
+        op(stream, seq, "user_id", "ts")
 
 
 # Windowed-aggregation equivalence template (rollup / value counts /

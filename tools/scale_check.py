@@ -21,9 +21,12 @@ import os
 import sys
 import time
 
-from pyspark.sql import functions as F
+# tools/ is sys.path[0] for a script run from here, and its profile.py
+# would shadow the standard library's (cProfile, which pyspark imports,
+# imports it): put the repository root there instead
+sys.path[0] = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from pyspark.sql import functions as F  # noqa: E402
 
 from funnel_rocket_spark import benchqueries as bq  # noqa: E402
 from funnel_rocket_spark.engine import QueryEngine  # noqa: E402
