@@ -14,24 +14,27 @@ the result — the reference's chunked-progress behavior (``apiserver.py:
 125-172``), with Spark's StatusTracker supplying stage progress in place of
 Lambda task polling.
 
-Concurrency model (r12): one SparkContext serves all requests, but each
-request runs on its OWN ``SparkSession.newSession()`` clone — shared
-executors, shared block-manager cache, ISOLATED runtime SQL conf, so a
-query that flips a dynamic conf at its plan chokepoint (the sorted-layout
-``bucketedTableScan.outputOrdering`` enable) can never leak it into a
-neighbor compiling at the same instant. Each request thread also tags its
-jobs with a per-request ``spark.scheduler.pool`` local property (thread-
-local under PySpark's pinned-thread mode): under ``spark.scheduler.mode=
-FAIR`` (``get_spark(fair_scheduler=True)``, opt-in env
-``FUNNEL_ROCKET_FAIR=1`` in ``main``) Spark then shares cores fairly
-across in-flight queries instead of FIFO-starving short queries behind a
-whale — the serving shape the reference gets from per-request Lambda
-fan-out (``apiserver.py`` + invoker). Throughput/fairness evidence:
+Every query route takes one path from the registered dataset to the
+result: ``catalog.prepare_query`` reads the entry, marks it used and
+validates the query on the request thread (so an invalid query is an
+HTTP 400 on both routes), then the query runs on the server's one shared
+``SparkSession`` — on the request thread, or on a worker thread while the
+stream route reports progress. Planning writes no session conf (the
+sorted-layout scan flag is set once by ``session.get_spark``), so
+concurrent requests need no per-request session. Each request tags its
+jobs with its own ``spark.scheduler.pool`` local property (thread-local
+under PySpark's pinned-thread mode): under ``spark.scheduler.mode=FAIR``
+(``get_spark(fair_scheduler=True)``, opt-in env ``FUNNEL_ROCKET_FAIR=1``
+in ``main``) Spark then shares cores fairly across in-flight queries
+instead of FIFO-starving short queries behind a whale — the serving
+shape the reference gets from per-request Lambda fan-out
+(``apiserver.py`` + invoker). Throughput/fairness evidence:
 ``tools/scale_check.py concurrent`` (tools/rung_concurrent_r12.json).
 """
 
 from __future__ import annotations
 
+import fnmatch
 import json
 import os
 import threading
@@ -44,16 +47,14 @@ from funnel_rocket_spark.catalog import (
     DatasetInUseError,
     DatasetValidationError,
     load_dataset,
+    prepare_query,
     register_dataset,
-    touch_last_used,
     unregister_dataset,
 )
-from funnel_rocket_spark.engine import QueryEngine
 from funnel_rocket_spark.engine.prom import CONTENT_TYPE as PROM_CONTENT_TYPE
 from funnel_rocket_spark.engine.prom import PromRegistry
 from funnel_rocket_spark.session import get_spark
 from funnel_rocket_spark.validation import QueryValidationError
-from funnel_rocket_spark.validation.validator import check_timeframe_scale
 
 
 def pool_for_request(request_id: str, tier: Optional[str]) -> str:
@@ -97,6 +98,7 @@ def create_app(spark=None, catalog_dir: Optional[str] = None,
              if max_inflight else None)
     app.config["QUERY_GATE"] = _gate  # exposed for tests/operability
     _spark = spark or get_spark(app_name="funnel-rocket-spark-api")
+    sc = _spark.sparkContext
     # Prometheus registry, one per server process — the reference's
     # invoker owns its registry the same way (prom_adapter.py:28-29).
     _prom = PromRegistry()
@@ -199,8 +201,9 @@ def create_app(spark=None, catalog_dir: Optional[str] = None,
     @app.route("/datasets/<name>/parts")
     def parts(name):
         # Reference admin route (apiserver.py:208-213): the dataset's part
-        # files + sizes. Local filesystem basepaths list their parquet
-        # parts; table-backed datasets report the table name only.
+        # files + sizes. Local filesystem basepaths list the parquet parts
+        # registration matched; table-backed datasets report the table
+        # name only.
         ds = _dataset(name)
         if ds.table:
             return jsonify({"table": ds.table, "totalParts": None,
@@ -210,7 +213,7 @@ def create_app(spark=None, catalog_dir: Optional[str] = None,
         out = []
         if os.path.isdir(local):
             for fn in sorted(os.listdir(local)):
-                if fn.endswith(".parquet"):
+                if fnmatch.fnmatch(fn, ds.pattern or "*.parquet"):
                     out.append({
                         "name": fn,
                         "size": os.path.getsize(os.path.join(local, fn))})
@@ -258,51 +261,41 @@ def create_app(spark=None, catalog_dir: Optional[str] = None,
 
     def _run_admitted(name: str, query: dict, should_stream: bool,
                       _release):
-        ds = _dataset(name)
-        touch_last_used(app.config["CATALOG_DIR"], name)
-        engine = QueryEngine(ds.group_id_column, ds.timestamp_column)
-        # Per-request isolation (r12): a newSession() clone shares the
-        # context (executors, cached blocks) but owns its runtime SQL
-        # conf, so concurrent requests can't observe each other's
-        # dynamic-conf plan decisions. The scheduler-pool local property
-        # is thread-local (pinned-thread mode) and names an on-demand
-        # pool per request — under FAIR mode Spark shares cores across
-        # pools; under default FIFO it is inert metadata.
         request_id = _request_id()
-        session = _spark.newSession()
         pool = pool_for_request(request_id,
                                 request.headers.get("X-Query-Pool"))
-        df = ds.load(session)
-        if not should_stream:
-            t0 = time.monotonic()
-            session.sparkContext.setLocalProperty(
-                "spark.scheduler.pool", pool)
+        t0 = time.monotonic()
+        # Validation runs here, on the request thread, for both routes:
+        # an invalid query gets the HTTP 400 QueryValidationError
+        # contract (with its "kind" field), never an in-band error tail
+        # of a 200 stream — streaming changes how results are delivered,
+        # not how validation fails.
+        try:
+            run = prepare_query(_spark, app.config["CATALOG_DIR"], name,
+                                query)
+        except QueryValidationError:
+            _prom.record_query(name, False, time.monotonic() - t0)
+            raise
+
+        def execute() -> dict:
+            # the scheduler-pool property is thread-local: set it on the
+            # thread that runs the query
+            sc.setLocalProperty("spark.scheduler.pool", pool)
             try:
-                check_timeframe_scale(query, ds.min_timestamp,
-                                      ds.max_timestamp)
-                result = engine.run(
-                    df, query, with_stats=True,
-                    layout=ds.layout)
+                result = run(with_stats=True)
             except Exception:
                 _prom.record_query(name, False, time.monotonic() - t0)
                 raise
             finally:
-                session.sparkContext.setLocalProperty(
-                    "spark.scheduler.pool", None)
+                sc.setLocalProperty("spark.scheduler.pool", None)
             _prom.record_query(name, True, time.monotonic() - t0,
                                result.get("stats"))
-            result.update({"success": True, "requestId": request_id})
+            return {**result, "success": True, "requestId": request_id}
+
+        if not should_stream:
+            result = execute()
             _release()
             return jsonify(result)
-
-        # Validation must run synchronously so an invalid query still
-        # produces the HTTP 400 QueryValidationError contract (with its
-        # "kind" field) rather than an in-band error tail — streaming only
-        # changes how *results* are delivered, not how validation fails.
-        # plan() compiles the full validated query lazily (no Spark jobs),
-        # so schema/shape errors raise HERE, not in the worker thread.
-        check_timeframe_scale(query, ds.min_timestamp, ds.max_timestamp)
-        engine.plan(df, query)
 
         def generate():
             # the admission slot is held for the GENERATOR's lifetime —
@@ -316,42 +309,26 @@ def create_app(spark=None, catalog_dir: Optional[str] = None,
 
         def _generate():
             holder: dict = {}
-            t0 = time.monotonic()
 
             def work():
-                # the worker is a fresh Python thread: the scheduler-pool
-                # property must be set HERE (thread-local), not on the
-                # request handler thread that spawned it
-                session.sparkContext.setLocalProperty(
-                    "spark.scheduler.pool", pool)
                 try:
-                    holder["result"] = engine.run(
-                        df, query, with_stats=True,
-                        layout=ds.layout)
+                    holder["result"] = execute()
                 except Exception as e:  # surfaced in the stream tail
                     holder["error"] = str(e)
-                finally:
-                    session.sparkContext.setLocalProperty(
-                        "spark.scheduler.pool", None)
 
             t = threading.Thread(target=work, daemon=True)
             t.start()
-            tracker = _spark.sparkContext.statusTracker()
+            tracker = sc.statusTracker()
             while t.is_alive():
                 stages = tracker.getActiveStageIds()
                 yield json.dumps({"stage": "running",
                                   "activeSparkStages": len(stages)}) + "\n"
                 t.join(timeout=0.25)
             if "error" in holder:
-                _prom.record_query(name, False, time.monotonic() - t0)
                 yield json.dumps({"success": False,
                                   "errorMessage": holder["error"]}) + "\n"
             else:
-                _prom.record_query(name, True, time.monotonic() - t0,
-                                   holder["result"].get("stats"))
-                final = dict(holder["result"])
-                final.update({"success": True, "requestId": request_id})
-                yield json.dumps(final) + "\n"
+                yield json.dumps(holder["result"]) + "\n"
 
         return Response(stream_with_context(generate()),
                         mimetype="application/x-ndjson")

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from funnel_rocket_spark.engine import QueryEngine
+from funnel_rocket_spark.engine.engine import SORTED_SCAN_CONF
 from funnel_rocket_spark.operators import (
     audiences,
     behavior,
@@ -607,7 +608,7 @@ def _fr_sequence_sorted_layout_fn(spark: SparkSession,
     sf_dir as a ``bucketBy(user_id) sortBy(user_id, ts)`` table
     (``sources.write_bucketed`` aligns one file per bucket —
     FIXTURE_AMORTIZED), then the standard 3-step sequence planned WITH
-    the catalog layout record. The plan must contain NO Sort node and
+    the scan's declared sort order. The plan must contain NO Sort node and
     return exactly the plain-parquet answer — the oracle checks the
     values, the ``sort_free`` column self-certifies the plan shape."""
     from funnel_rocket_spark.plans import count_sorts
@@ -621,10 +622,10 @@ def _fr_sequence_sorted_layout_fn(spark: SparkSession,
             write_bucketed(load_table(spark, sf_dir, "events"), tbl,
                            "user_id", num_buckets=8, sort_col="ts")
         _SORTED_LAYOUT_CACHE[sf_dir] = tbl
-    layout = {"buckets": 8, "bucket_columns": ["user_id"],
-              "sort_columns": ["user_id", "ts"]}
-    counts = _engine().plan(spark.table(tbl), Q_SEQUENCE,
-                            layout=layout).counts()
+    # the scan reports the table's sort order only under this conf
+    # (session.get_spark sets it; driver sessions may not have it)
+    spark.conf.set(SORTED_SCAN_CONF, "true")
+    counts = _engine().plan(spark.table(tbl), Q_SEQUENCE).counts()
     return counts.select("matching_groups", "matching_group_rows",
                          F.lit(count_sorts(counts) == 0).alias("sort_free"))
 

@@ -20,11 +20,14 @@ import json
 import os
 import time
 from dataclasses import asdict, dataclass, field, fields
-from typing import Optional
+from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from funnel_rocket_spark.engine import QueryEngine
+from funnel_rocket_spark.validation.validator import check_timeframe_scale
 
 SUPPORTED_TYPES = {
     "tinyint": "INT", "smallint": "INT", "int": "INT", "bigint": "INT",
@@ -81,14 +84,19 @@ class Dataset:
     validation_mode: str = "full"
     files_validated: Optional[int] = None
     files_total: Optional[int] = None
-
-    def schema_map(self) -> dict[str, str]:
-        return {name: info["dtype"] for name, info in self.columns.items()}
+    # the file-name glob registration discovered the parts with; None when
+    # it read basepath whole (a single file, a remote URI, or a glob that
+    # matched nothing)
+    pattern: Optional[str] = None
 
     def load(self, spark: SparkSession) -> DataFrame:
+        """The registered rows: the files registration validated."""
         if self.table:
             return spark.table(self.table)
-        return spark.read.parquet(self.basepath)
+        reader = spark.read
+        if self.pattern:
+            reader = reader.option("pathGlobFilter", self.pattern)
+        return reader.parquet(self.basepath)
 
 
 def _coltype(dtype: T.DataType) -> Optional[str]:
@@ -251,7 +259,8 @@ def register_dataset(
         layout=_table_layout(spark, table) if table else None,
         validation_mode=validation_mode if files is not None else "full",
         files_validated=len(val_files) if val_files is not None else None,
-        files_total=len(files) if files is not None else None)
+        files_total=len(files) if files is not None else None,
+        pattern=pattern if files is not None else None)
 
     if validate or profile:
         ts_num = _numeric(timestamp_column, fields[timestamp_column])
@@ -350,6 +359,28 @@ def load_dataset(catalog_dir: str, name: str) -> Dataset:
         data = json.load(fh)
     known = {f.name for f in fields(Dataset)}
     return Dataset(**{k: v for k, v in data.items() if k in known})
+
+
+def prepare_query(spark: SparkSession, catalog_dir: str, name: str,
+                  query: dict) -> Callable[..., dict]:
+    """The one path from a catalog entry to a result (the reference's
+    ``invoker_api._build_query_job``): read entry ``name``, mark it used,
+    check and validate ``query`` against it — raising
+    ``FileNotFoundError`` or ``QueryValidationError`` before any Spark
+    job — and return ``run(with_stats=False)``, which runs the query with
+    the dataset's columns and layout."""
+    ds = load_dataset(catalog_dir, name)
+    touch_last_used(catalog_dir, name)
+    check_timeframe_scale(query, ds.min_timestamp, ds.max_timestamp)
+    engine = QueryEngine(ds.group_id_column, ds.timestamp_column)
+    df = ds.load(spark)
+    expanded = engine.expand(query, df)
+
+    def run(with_stats: bool = False) -> dict:
+        return engine.run(df, expanded, with_stats=with_stats,
+                          layout=ds.layout)
+
+    return run
 
 
 class DatasetInUseError(RuntimeError):

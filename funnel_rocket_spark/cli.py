@@ -19,10 +19,9 @@ import json
 import os
 import sys
 
-from funnel_rocket_spark.catalog import load_dataset, register_dataset
-from funnel_rocket_spark.engine import QueryEngine
-from funnel_rocket_spark.session import get_spark
-from funnel_rocket_spark.validation.validator import check_timeframe_scale
+from funnel_rocket_spark.catalog import prepare_query, register_dataset
+from funnel_rocket_spark.session import get_spark, spark_conf
+from funnel_rocket_spark.validation import QueryValidationError
 
 DEFAULT_CATALOG_DIR = os.environ.get(
     "FUNNEL_ROCKET_CATALOG", os.path.expanduser("~/.funnel_rocket_spark")
@@ -99,19 +98,8 @@ def cmd_config(args) -> int:
     """Reference parity: ``config`` prints the effective configuration
     (reference dumps its config dict). Here: catalog location plus the
     Spark session settings the engine launches with."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    print(json.dumps({
-        "catalog.dir": args.catalog,
-        "spark.master": f"local[{cpus}]",
-        "spark.sql.shuffle.partitions": int(cpus),
-        "spark.sql.adaptive.enabled": True,
-        "spark.sql.adaptive.coalescePartitions.enabled": True,
-        "spark.sql.adaptive.skewJoin.enabled": True,
-        "spark.sql.execution.arrow.pyspark.enabled": True,
-        "spark.sql.parquet.filterPushdown": True,
-        "spark.sql.legacy.parquet.nanosAsLong": True,
-        "spark.sql.session.timeZone": "UTC",
-    }, indent=2))
+    print(json.dumps({"catalog.dir": args.catalog, **spark_conf()},
+                     indent=2))
     return 0
 
 
@@ -124,22 +112,12 @@ def cmd_run(args) -> int:
         with open(args.file) as fh:
             query = json.load(fh)
     try:
-        ds = load_dataset(args.catalog, args.name)
+        run = prepare_query(get_spark(), args.catalog, args.name, query)
+        result = run()
     except FileNotFoundError:
         print(f"error: dataset '{args.name}' is not registered "
               f"(catalog: {args.catalog})", file=sys.stderr)
         return 2
-    from funnel_rocket_spark.catalog import touch_last_used
-    from funnel_rocket_spark.validation import QueryValidationError
-
-    touch_last_used(args.catalog, args.name)
-
-    try:
-        check_timeframe_scale(query, ds.min_timestamp, ds.max_timestamp)
-        spark = get_spark()
-        engine = QueryEngine(ds.group_id_column, ds.timestamp_column)
-        result = engine.run(ds.load(spark), query,
-                            layout=ds.layout)
     except QueryValidationError as e:
         print(f"error: invalid query: {e}", file=sys.stderr)
         return 1

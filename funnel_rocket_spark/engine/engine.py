@@ -26,6 +26,8 @@ from funnel_rocket_spark.validation.validator import ExpandedQuery, expand_and_v
 # window flags instead of the semi join (broadcastable below this) — see
 # QueryPlan.rows_of_matching_groups
 UNIVERSE_WINDOW_THRESHOLD = 4_000_000
+# the session conf under which a bucketed scan reports its sortBy order
+SORTED_SCAN_CONF = "spark.sql.legacy.bucketedTableScan.outputOrdering"
 # a query's independent aggregation jobs are submitted from this many
 # threads (Spark schedules concurrent jobs; the shared universe is
 # persisted, and Spark's per-partition cache locking means concurrent
@@ -46,24 +48,22 @@ class QueryEngine:
         self.group_id_column = group_id_column
         self.timestamp_column = timestamp_column
 
-    def expand(self, query: dict, df: Optional[DataFrame] = None) -> ExpandedQuery:
-        schema = (
-            {f.name: f.dataType.simpleString() for f in df.schema.fields}
-            if df is not None
-            else None
-        )
+    def expand(self, query: dict, df: DataFrame) -> ExpandedQuery:
+        """Validate ``query`` against ``df``'s schema and expand it."""
         return expand_and_validate(
             query,
-            dataset_schema=schema,
+            dataset_schema={f.name: f.dataType.simpleString()
+                            for f in df.schema.fields},
             group_id_column=self.group_id_column,
             timestamp_column=self.timestamp_column,
         )
 
-    def plan(self, df: DataFrame, query: dict, validate_schema: bool = True,
-             layout: Optional[dict] = None) -> QueryPlan:
-        if self._sorted_layout(layout):
-            self._enable_sorted_scan(df)
-        expanded = self.expand(query, df if validate_schema else None)
+    def plan(self, df: DataFrame,
+             query: dict | ExpandedQuery) -> QueryPlan:
+        """Compile ``query`` over ``df`` (no Spark job); a query already
+        expanded by :meth:`expand` against ``df`` is not validated again."""
+        expanded = (query if isinstance(query, ExpandedQuery)
+                    else self.expand(query, df))
         return QueryPlan(df, expanded, self.group_id_column,
                          self.timestamp_column)
 
@@ -75,7 +75,9 @@ class QueryEngine:
         ``sortBy(group_id, ts)``. On that layout the scan itself
         satisfies the window-anchor pass's required distribution and
         ordering — no exchange, no sort (Spark reports the file order
-        only for single-file buckets; ``sources.write_bucketed``
+        only for single-file buckets, and only under
+        ``spark.sql.legacy.bucketedTableScan.outputOrdering``, which
+        ``session.get_spark`` turns on; ``sources.write_bucketed``
         aligns one file per bucket for exactly this reason)."""
         if not layout:
             return False
@@ -84,22 +86,7 @@ class QueryEngine:
                 and sort[:2] == [self.group_id_column,
                                  self.timestamp_column])
 
-    @staticmethod
-    def _enable_sorted_scan(df: DataFrame) -> None:
-        """Since Spark 3.0 a bucketed scan reports its sortBy order only
-        under ``spark.sql.legacy.bucketedTableScan.outputOrdering`` —
-        gated off by default because the plan then depends on the
-        files-per-bucket count (SPARK-28595). It stays CORRECT with the
-        flag on: Spark still refuses to report ordering for multi-file
-        buckets, and ``sources.write_bucketed`` aligns one file per
-        bucket precisely so this reports. Enabled at the engine
-        chokepoint (dynamic session conf) whenever a declared sorted
-        layout reaches plan() — without it the first Window re-sorts
-        the data the layout already ordered."""
-        df.sparkSession.conf.set(
-            "spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-
-    def run(self, df: DataFrame, query: dict, validate_schema: bool = True,
+    def run(self, df: DataFrame, query: dict | ExpandedQuery,
             with_stats: bool = False,
             layout: Optional[dict] = None) -> dict:
         """Execute and return the reference-shaped result JSON.
@@ -117,8 +104,7 @@ class QueryEngine:
                                                         dataset_stats)
 
         t0 = _time.perf_counter()
-        plan = self.plan(df, query, validate_schema=validate_schema,
-                         layout=layout)
+        plan = self.plan(df, query)
         q = plan.q
 
         query_aggs = q.get("query", {}).get("aggregations") or []
@@ -218,6 +204,10 @@ class QueryEngine:
                 },
             }
             if with_stats:
+                # the scan keeps the layout's order only under the flag
+                sorted_layout = (self._sorted_layout(layout) and
+                                 df.sparkSession.conf.get(SORTED_SCAN_CONF)
+                                 == "true")
                 stats = {
                     "engine": "spark",
                     "success": True,
@@ -226,7 +216,7 @@ class QueryEngine:
                     # auditable from a result JSON alone
                     "strategies": {
                         "universe": universe,
-                        "sortedLayout": self._sorted_layout(layout),
+                        "sortedLayout": sorted_layout,
                     },
                     "usedColumns": plan.expanded.used_columns,
                     "sparkAppId": df.sparkSession.sparkContext.applicationId,

@@ -13,7 +13,7 @@ Spark, so each query's collects tag only their own jobs even when multiple
 queries share one driver (the job-server scenario). Reading the status
 store afterwards costs no Spark job — it's the same in-memory KV store the
 (disabled) UI would render. The same reads give the per-stage rows and
-job intervals that ``tools/profile.py`` prints.
+job intervals that ``tools/spark_profile.py`` prints.
 """
 
 from __future__ import annotations

@@ -42,33 +42,19 @@ def write_fair_allocation(pools: dict, path: str | None = None) -> str:
     return path
 
 
-def get_spark(
-    app_name: str = "funnel-rocket-spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
-    extra_conf: dict | None = None,
-    fair_scheduler: bool = False,
-    fair_pools: dict | None = None,
-) -> SparkSession:
-    """``fair_scheduler=True`` starts the context with
-    ``spark.scheduler.mode=FAIR`` — the multi-tenant serving shape: each
-    concurrent request runs its jobs in its own on-demand scheduler pool
-    (``spark.scheduler.pool`` local property, set per request thread by
-    the API server), and Spark shares executor cores fairly ACROSS pools
-    instead of letting one big query's FIFO jobs starve the short ones
-    behind it. This is a context-level (static) setting — it only takes
-    effect when this call actually creates the context, so a serving
-    process must opt in up front; ``getOrCreate`` on a live context
-    ignores it silently."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions",
-                str(shuffle_partitions or int(cpus)))
+def spark_conf(master: str | None = None,
+               shuffle_partitions: int | None = None) -> dict:
+    """The settings every engine session launches with: ``get_spark``
+    applies them and ``cli config`` prints them. Values are JSON types
+    (the builder renders booleans as ``true``/``false``)."""
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    partitions = shuffle_partitions or cpus
+    return {
+        "spark.master": master or f"local[{cpus}]",
+        "spark.sql.adaptive.enabled": True,
+        "spark.sql.adaptive.coalescePartitions.enabled": True,
+        "spark.sql.adaptive.skewJoin.enabled": True,
+        "spark.sql.shuffle.partitions": partitions,
         # Fan big shuffles wider than the core count and let AQE coalesce
         # the small ones back down: with a fixed N-partition shuffle, a
         # 50M-row window pass spills (measured 25s → 11s at 256 initial
@@ -76,8 +62,8 @@ def get_spark(
         # handful of tasks via coalescePartitions. This is the
         # scale-correct shape: initial partitions sized for the BIGGEST
         # shuffle, AQE right-sizes the rest at runtime.
-        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-                str(max(256, 8 * int(shuffle_partitions or int(cpus)))))
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum":
+            max(256, 8 * partitions),
         # ...but don't let the coalescer re-create the spill: AQE sizes
         # merged partitions by COMPRESSED shuffle bytes, and a sort-based
         # window inflates those ~5-10× in memory. At the 64m default a
@@ -86,7 +72,7 @@ def get_spark(
         # 10.2 s — back on the linear scaling line from 50M. Small
         # aggregates still coalesce to few tasks (their byte totals are
         # tiny either way).
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16m",
         # Let AQE right-size the partitioning of CACHED plans too (off by
         # default): persisted frames otherwise materialize at the full
         # initialPartitionNum — a bounded candidate/matched frame cached
@@ -99,22 +85,29 @@ def get_spark(
         # the cached partitioning is no longer guaranteed) doesn't bite
         # here: every bounded_persist frame is re-keyed by its consumers
         # anyway.
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-                "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": True,
+        # Since Spark 3.0 a bucketed scan reports its sortBy order only
+        # under this flag — off by default because the plan then depends
+        # on the files-per-bucket count (SPARK-28595). Plans stay CORRECT
+        # with it on: Spark still reports no ordering for multi-file
+        # buckets, and ``sources.write_bucketed`` aligns one file per
+        # bucket so that a declared (group, ts) layout reports it and the
+        # engine's first Window does not re-sort what the layout ordered.
+        "spark.sql.legacy.bucketedTableScan.outputOrdering": True,
+        "spark.sql.execution.arrow.pyspark.enabled": True,
+        "spark.sql.parquet.filterPushdown": True,
         # Testdata events.parquet uses TIMESTAMP(NANOS), which Spark 4 only
         # reads as int64 under this flag (a numeric ts, like the reference's).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        "spark.sql.legacy.parquet.nanosAsLong": True,
         # NTZ timestamps are interpreted in the session tz when cast; pin to
         # UTC so epoch conversions are machine-independent.
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        "spark.sql.session.timeZone": "UTC",
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "8g"),
         # The generated-class cache defaults to 100 entries; a session running
         # the full query catalog compiles several hundred codegen stages, so
         # re-runs of an identical plan recompile instead of hitting the cache
         # (static conf — must be set before the first codegen).
-        .config("spark.sql.codegen.cache.maxEntries", "2000")
+        "spark.sql.codegen.cache.maxEntries": 2000,
         # An external sorter's iterator opens a reader for EVERY spill
         # file up front, and with read-ahead each reader holds two 1 MB
         # heap buffers on top of its 1 MB record buffer. A whale group's
@@ -124,7 +117,7 @@ def get_spark(
         # 30M-row user, local[4], 1 GB heap) the maxDuration sequence
         # died with "Java heap space" with read-ahead and completed in
         # 84 s without it.
-        .config("spark.unsafe.sorter.spill.read.ahead.enabled", "false")
+        "spark.unsafe.sorter.spill.read.ahead.enabled": False,
         # InferFiltersFromGenerate synthesizes `size(arr) > 0` below every
         # explode; PushDownPredicates then substitutes the filter through
         # the projections that DERIVE the array, planting the whole
@@ -137,11 +130,34 @@ def get_spark(
         # dedup_incremental_lsh -0.37 s, decontaminate_ngram -0.31 s;
         # catalog canaries at sf0.1 a wash. Stored-array explodes lose
         # only a rarely-selective scan filter.
-        .config("spark.sql.optimizer.excludedRules",
-                "org.apache.spark.sql.catalyst.optimizer."
-                "InferFiltersFromGenerate")
-        .config("spark.ui.enabled", "false")
-    )
+        "spark.sql.optimizer.excludedRules":
+            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
+        "spark.ui.enabled": False,
+    }
+
+
+def get_spark(
+    app_name: str = "funnel-rocket-spark",
+    master: str | None = None,
+    shuffle_partitions: int | None = None,
+    extra_conf: dict | None = None,
+    fair_scheduler: bool = False,
+    fair_pools: dict | None = None,
+) -> SparkSession:
+    """A session with :func:`spark_conf`'s settings.
+
+    ``fair_scheduler=True`` starts the context with
+    ``spark.scheduler.mode=FAIR`` — the multi-tenant serving shape: each
+    concurrent request runs its jobs in its own on-demand scheduler pool
+    (``spark.scheduler.pool`` local property, set per request thread by
+    the API server), and Spark shares executor cores fairly ACROSS pools
+    instead of letting one big query's FIFO jobs starve the short ones
+    behind it. This is a context-level (static) setting — it only takes
+    effect when this call actually creates the context, so a serving
+    process must opt in up front; ``getOrCreate`` on a live context
+    ignores it silently."""
+    builder = SparkSession.builder.appName(app_name).config(
+        map=spark_conf(master, shuffle_partitions))
     if fair_scheduler or fair_pools:
         builder = builder.config("spark.scheduler.mode", "FAIR")
     if fair_pools:

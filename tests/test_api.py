@@ -364,14 +364,14 @@ def test_stage_rows_and_job_intervals_cover_the_snapshot(spark, monkeypatch):
 
 
 def test_profile_tool_reports_one_catalog_query(spark, tmp_path, capsys):
-    """``tools/profile.py``'s routine on the shared session: the summary
+    """``tools/spark_profile.py``'s routine on the shared session: the summary
     line, a record whose stage rows and job timeline match its own
     counts, and the plan written where the caller said."""
     import importlib.util
     import os
 
     path = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "tools", "profile.py")
+        os.path.abspath(__file__))), "tools", "spark_profile.py")
     spec = importlib.util.spec_from_file_location("frs_profile_tool", path)
     tool = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(tool)
@@ -387,3 +387,100 @@ def test_profile_tool_reports_one_catalog_query(spark, tmp_path, capsys):
     assert "fr_funnel_step_agg: min=" in capsys.readouterr().out
     plan = (tmp_path / "plans" / "fr_funnel_step_agg.txt").read_text()
     assert "Physical Plan" in plan
+
+
+def test_query_reads_only_the_registered_pattern(spark, tmp_path):
+    """A dataset registered with a ``pattern`` answers over the files that
+    pattern matched, not every parquet file under its basepath. A glob
+    that matched nothing registers (and queries) the whole basepath, and
+    a catalog entry written before ``pattern`` was recorded still loads
+    and reads every file, as before."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    data = tmp_path / "data"
+    data.mkdir()
+    shutil.copy(SF_EVENTS, data / "events.parquet")
+    pq.write_table(pq.read_table(SF_EVENTS).slice(0, 700),
+                   data / "other.parquet")
+
+    catalog = tmp_path / "cat"
+    app = create_app(spark=spark, catalog_dir=str(catalog))
+    app.config["TESTING"] = True
+    with app.test_client() as c:
+        for name, pattern in (("one", "events.parquet"),
+                              ("all", "*.parquet"),
+                              ("nomatch", "nothing*.parquet")):
+            r = c.post("/datasets/register", json={
+                "name": name, "basepath": str(data), "pattern": pattern,
+                "group_id_column": "user_id", "timestamp_column": "ts"})
+            assert r.status_code == 200, r.get_data(as_text=True)
+
+        def rows(name):
+            r = c.get(f"/datasets/{name}/empty-query")
+            assert r.status_code == 200, r.get_data(as_text=True)
+            return r.get_json()["query"]["matchingGroupRows"]
+
+        assert rows("one") == 1000
+        assert [p["name"] for p in
+                c.get("/datasets/one/parts").get_json()["parts"]] == \
+            ["events.parquet"]
+        assert rows("all") == 1700
+        assert rows("nomatch") == 1700
+
+        entry = json.loads((catalog / "one.json").read_text())
+        assert entry["pattern"] == "events.parquet"
+        del entry["pattern"]
+        (catalog / "old.json").write_text(json.dumps(entry))
+        assert rows("old") == 1700
+
+
+def _prom_samples(client, series: str) -> float:
+    for line in client.get("/metrics").get_data(as_text=True).splitlines():
+        if line.startswith(series + " "):
+            return float(line.split()[-1])
+    return 0.0
+
+
+def test_stream_and_sync_routes_answer_alike(spark, tmp_path):
+    """One path serves both routes: the last ``?stream=true`` line equals
+    the plain response for the same query, except its request id and
+    timing fields, and every query route adds one sample to
+    ``/metrics``."""
+    app = create_app(spark=spark, catalog_dir=str(tmp_path / "cat"))
+    app.config["TESTING"] = True
+    series = ('query_requests_total{dataset="ev",success="true",'
+              'type="query"}')
+    with app.test_client() as c:
+        assert c.post("/datasets/register", json={
+            "name": "ev", "basepath": SF_EVENTS,
+            "group_id_column": "user_id",
+            "timestamp_column": "ts"}).status_code == 200
+
+        def counted(call) -> str:
+            before = _prom_samples(c, series)
+            r = call()
+            assert r.status_code == 200
+            body = r.get_data(as_text=True)  # runs a stream to its end
+            assert _prom_samples(c, series) == before + 1
+            return body
+
+        sync = json.loads(counted(lambda: c.post("/datasets/ev/query",
+                                                 json=_STATS_QUERY)))
+        stream = counted(lambda: c.post("/datasets/ev/query?stream=true",
+                                        json=_STATS_QUERY))
+        final = json.loads(stream.splitlines()[-1])
+        counted(lambda: c.get("/datasets/ev/empty-query"))
+        counted(lambda: c.get("/datasets/ev/empty-query?stream=true"))
+
+    assert final["requestId"] != sync["requestId"]
+    sync_stats, final_stats = sync.pop("stats"), final.pop("stats")
+    del sync["requestId"], final["requestId"]
+    assert final == sync and final["success"] is True
+    assert final_stats.keys() == sync_stats.keys()
+    for key in ("engine", "strategies", "usedColumns", "dataset"):
+        assert final_stats[key] == sync_stats[key], key
+    assert final_stats["invoker"]["jobs"] == sync_stats["invoker"]["jobs"]
+    assert (final_stats["worker"]["scannedRows"]
+            == sync_stats["worker"]["scannedRows"])

@@ -70,6 +70,23 @@ def test_cli_config(capsys):
     assert "catalog.dir" in conf
 
 
+def test_cli_config_prints_the_live_session_conf(spark, capsys, monkeypatch):
+    """``config`` prints ``session.spark_conf``, the settings get_spark
+    applies, so every printed Spark key reads the same value on a
+    get_spark session."""
+    from funnel_rocket_spark.session import get_spark
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")  # the test session's local[4]
+    live = get_spark().conf
+    rc, out = _run(capsys, "config")
+    printed = json.loads(out)
+    assert rc == 0 and printed.pop("catalog.dir")
+    assert printed["spark.sql.legacy.bucketedTableScan.outputOrdering"]
+    for key, value in printed.items():
+        want = str(value).lower() if isinstance(value, bool) else str(value)
+        assert live.get(key) == want, key
+
+
 def test_packaging_installed_entry_point(tmp_path):
     """Installability parity with the reference's pip distribution
     (/root/reference/setup.py:13): install into a CLEAN venv and drive the
@@ -79,16 +96,24 @@ def test_packaging_installed_entry_point(tmp_path):
     `wheel` package PEP 517 builds require; with wheel present,
     `pip install .` resolves through pyproject.toml identically."""
     import os
+    import shutil
     import subprocess
     import sys
 
+    # build from a copy, so the install leaves nothing in the checkout
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    src = tmp_path / "src"
+    shutil.copytree(os.path.join(repo, "funnel_rocket_spark"),
+                    src / "funnel_rocket_spark",
+                    ignore=shutil.ignore_patterns("__pycache__"))
+    for name in ("setup.py", "pyproject.toml"):
+        shutil.copy(os.path.join(repo, name), src)
     venv = tmp_path / "venv"
     subprocess.run([sys.executable, "-m", "venv", "--system-site-packages",
                     str(venv)], check=True)
     py = str(venv / "bin" / "python")
-    subprocess.run([py, "setup.py", "-q", "install"], cwd=repo, check=True,
-                   capture_output=True)
+    subprocess.run([py, "setup.py", "-q", "install"], cwd=str(src),
+                   check=True, capture_output=True)
     exe = str(venv / "bin" / "funnel-rocket-spark")
     assert os.path.exists(exe)
     assert os.path.exists(str(venv / "bin" / "funnel-rocket-spark-api"))

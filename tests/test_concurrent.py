@@ -1,16 +1,11 @@
 """Concurrent multi-tenant serving — the reference serves many queries at
 once (each HTTP request fans out its own Lambda tasks,
 ``/root/reference/frocket/apiserver.py`` + invoker); the Spark engine's
-equivalent is one SparkContext shared by per-request ``newSession()``
-clones with per-request scheduler pools (api.py ``_run``). These tests
-pin the two properties that shape depends on:
-
-- results under concurrency equal serial results (same engine, racing
-  identical plans included — shared cache-manager entries must not
-  corrupt either run);
-- a clone's dynamic SQL conf (the sorted-layout enable the engine flips
-  at its plan chokepoint) is invisible to the base session and to
-  sibling clones compiling at the same time.
+equivalent is one shared SparkSession with per-request scheduler pools
+(api.py ``_run``). These tests pin what that shape depends on: results
+under concurrency equal serial results (same engine, racing identical
+plans included — shared cache-manager entries must not corrupt either
+run), and pool tags stay on their own request thread.
 
 The FAIR-mode throughput/fairness story needs a fresh context and 20M
 rows — that lives in ``tools/scale_check.py concurrent``
@@ -56,13 +51,12 @@ def test_concurrent_queries_match_serial(spark):
     results = {}
 
     def worker(tid, q):
-        session = spark.newSession()
-        session.sparkContext.setLocalProperty(
+        spark.sparkContext.setLocalProperty(
             "spark.scheduler.pool", f"frs-{tid}")
         try:
-            results[tid] = eng.run(session.read.parquet(SF_EVENTS), q)
+            results[tid] = eng.run(spark.read.parquet(SF_EVENTS), q)
         finally:
-            session.sparkContext.setLocalProperty(
+            spark.sparkContext.setLocalProperty(
                 "spark.scheduler.pool", None)
 
     with ThreadPoolExecutor(max_workers=4) as pool:
@@ -70,24 +64,6 @@ def test_concurrent_queries_match_serial(spark):
             f.result()
 
     assert results == serial
-
-
-def test_newsession_conf_isolation(spark):
-    """A per-request clone owns its runtime SQL conf: the engine's
-    sorted-layout enable on one clone must not leak to the base session
-    or to a sibling clone created before OR after the flip."""
-    conf_key = "spark.sql.legacy.bucketedTableScan.outputOrdering"
-    base_before = spark.conf.get(conf_key, "false")
-    sibling_before = spark.newSession()
-    clone = spark.newSession()
-    clone.conf.set(conf_key, "true")
-    sibling_after = spark.newSession()
-    assert clone.conf.get(conf_key) == "true"
-    assert spark.conf.get(conf_key, "false") == base_before
-    assert sibling_before.conf.get(conf_key, "false") != "true"
-    assert sibling_after.conf.get(conf_key, "false") != "true"
-    # clones share the context (executors, cache) — only conf is private
-    assert clone.sparkContext is spark.sparkContext
 
 
 def test_scheduler_pool_property_is_thread_local(spark):

@@ -92,7 +92,7 @@ def test_sorted_bucketed_layout_is_sort_free(spark, engine):
               "sort_columns": ["user_id", "ts"]}
     try:
         bdf = spark.table(table)
-        seq = engine.plan(bdf, bq.Q_SEQUENCE, layout=layout)
+        seq = engine.plan(bdf, bq.Q_SEQUENCE)
         assert count_sorts(seq.counts()) == 0, formatted_plan(seq.counts())
         assert count_exchanges(seq.counts()) == 1  # final reduce only
 
@@ -118,6 +118,34 @@ def test_sorted_bucketed_layout_is_sort_free(spark, engine):
         assert got["stats"]["strategies"]["sortedLayout"] is True
         assert got["stats"]["strategies"]["universe"] == "join"
         assert ref["stats"]["strategies"]["universe"] == "join"
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_engine_leaves_callers_session_conf_alone(spark, engine):
+    """Planning and running a query on a declared sorted layout writes
+    no session conf: on a session whose sorted-scan flag is unset, the
+    flag stays unset, the scan keeps its sort, stats report no sorted
+    layout, and the answer equals the plain-parquet one."""
+    from funnel_rocket_spark.engine.engine import SORTED_SCAN_CONF
+    from funnel_rocket_spark.plans import count_sorts
+    from funnel_rocket_spark.sources.ingest import write_bucketed
+
+    table = "events_sorted_bucketed_conf_test"
+    write_bucketed(bq.load_table(spark, SF, "events"), table, "user_id",
+                   num_buckets=4, sort_col="ts")
+    layout = {"buckets": 4, "bucket_columns": ["user_id"],
+              "sort_columns": ["user_id", "ts"]}
+    session = spark.newSession()
+    session.conf.unset(SORTED_SCAN_CONF)
+    try:
+        bdf = session.table(table)
+        got = engine.run(bdf, bq.Q_SEQUENCE, with_stats=True, layout=layout)
+        assert session.conf.get(SORTED_SCAN_CONF) == "false"
+        assert count_sorts(engine.plan(bdf, bq.Q_SEQUENCE).counts()) >= 1
+        assert got["stats"]["strategies"]["sortedLayout"] is False
+        ref = engine.run(bq.load_table(spark, SF, "events"), bq.Q_SEQUENCE)
+        assert got["query"] == ref["query"]
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 

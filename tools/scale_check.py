@@ -21,10 +21,7 @@ import os
 import sys
 import time
 
-# tools/ is sys.path[0] for a script run from here, and its profile.py
-# would shadow the standard library's (cProfile, which pyspark imports,
-# imports it): put the repository root there instead
-sys.path[0] = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -1221,8 +1218,6 @@ def bucketed_main(n_rows: int, whale_share: float = 0.2) -> None:
         tables[dist] = tbl
 
     eng = QueryEngine("user_id", "ts")
-    layout = {"buckets": n_buckets, "bucket_columns": ["user_id"],
-              "sort_columns": ["user_id", "ts"]}
     seq_q = {"query": {"conditions": [
         {"sequence": [{"filter": ["event_type", "==", "signup"]},
                       {"filter": ["event_type", "==", "click"]},
@@ -1236,12 +1231,12 @@ def bucketed_main(n_rows: int, whale_share: float = 0.2) -> None:
         bdf = spark.table(tables[dist])
         pdf = spark.read.parquet(upath if dist == "uniform" else wpath)
         variants = {
-            "window_layout": lambda: eng.plan(bdf, seq_q, layout=layout),
+            "window_layout": lambda: eng.plan(bdf, seq_q),
             "window_parquet": lambda: eng.plan(pdf, seq_q),
         }
         # plan gates, recorded in the rung itself: the layout plan must
         # be sort-free and single-exchange
-        gate = eng.plan(bdf, seq_q, layout=layout)
+        gate = eng.plan(bdf, seq_q)
         out["plan_gates"][f"{dist}.sorts"] = count_sorts(gate.counts())
         out["plan_gates"][f"{dist}.exchanges"] = \
             count_exchanges(gate.counts())
@@ -1393,22 +1388,20 @@ def concurrent_main(n_rows: int, n_threads: int = 8,
                     scheduler: str = "fair") -> None:
     """Round-12 rung: MULTI-TENANT SERVING. The reference serves many
     queries at once (each HTTP request fans out its own Lambda tasks);
-    the Spark engine's equivalent is one SparkContext in FAIR scheduler
-    mode, one ``newSession()`` clone + one on-demand scheduler pool per
-    in-flight query — exactly what ``api.py`` now does per request.
+    the Spark engine's equivalent is one shared SparkSession in FAIR
+    scheduler mode with one on-demand scheduler pool per in-flight query
+    — exactly what ``api.py`` does per request.
     This rung PROVES that shape at scale:
 
     - correctness under concurrency: every result dict from the
-      threaded run equals the serial run's (same engine, same session-
-      clone isolation the API server uses);
+      threaded run equals the serial run's (same engine, same shared
+      session the API server uses);
     - throughput: wall-clock for the same 16-query mixed workload,
       serial vs 4 vs ``n_threads`` threads — overlap hides driver-side
       planning + the low-parallelism tail stages of each query;
     - fairness: per-query latency inflation vs serial (a short count
       query stuck behind two whale sequence sorts is the FIFO failure
-      mode FAIR pools exist to prevent) — reported per query;
-    - conf isolation: a clone flipping the sorted-layout dynamic conf
-      mid-flight must not leak it into the base session or siblings.
+      mode FAIR pools exist to prevent) — reported per query.
 
     ``scheduler="fifo"`` runs the identical workload under default FIFO
     job scheduling (scheduler mode is context-level, so the A/B needs
@@ -1480,8 +1473,8 @@ def concurrent_main(n_rows: int, n_threads: int = 8,
     tasks = [(f"{name}#{i}", name, q)
              for i in (0, 1) for name, q in queries.items()]
 
-    def run_task(session, name, q):
-        df = session.read.parquet(path)
+    def run_task(name, q):
+        df = spark.read.parquet(path)
         t0 = time.perf_counter()
         res = eng.run(df, q)
         return time.perf_counter() - t0, res
@@ -1494,7 +1487,7 @@ def concurrent_main(n_rows: int, n_threads: int = 8,
     # same hygiene as the whale rung
     t0 = time.perf_counter()
     for name, q in queries.items():
-        run_task(spark, name, q)
+        run_task(name, q)
     print(f"# warm-up {time.perf_counter()-t0:.1f}s", file=sys.stderr)
 
     # serial baseline on the base session
@@ -1502,40 +1495,24 @@ def concurrent_main(n_rows: int, n_threads: int = 8,
     serial_lat: dict[str, float] = {}
     t0 = time.perf_counter()
     for task_id, name, q in tasks:
-        dt, res = run_task(spark, name, q)
+        dt, res = run_task(name, q)
         serial_lat[task_id] = round(dt, 2)
         serial_results[task_id] = res
         _gc_between_runs(spark)
     out["timings"]["serial"] = round(time.perf_counter() - t0, 2)
     out["latency"]["serial"] = serial_lat
 
-    base_conf_before = spark.conf.get(
-        "spark.sql.legacy.bucketedTableScan.outputOrdering", "false")
-    leak_probe: dict = {}
-
     def worker(task_id, name, q, results, lats):
-        # the API server's per-request shape: clone + pool, both
-        # established ON THIS THREAD (local properties are thread-local)
-        session = spark.newSession()
-        session.sparkContext.setLocalProperty(
+        # the API server's per-request shape: a pool tag established ON
+        # THIS THREAD (local properties are thread-local)
+        spark.sparkContext.setLocalProperty(
             "spark.scheduler.pool", f"frs-{task_id}")
         try:
-            if task_id == "count3#0":
-                # deliberate dynamic-conf flip on ONE clone: the
-                # sorted-layout enable the engine performs at its plan
-                # chokepoint. Siblings must never observe it.
-                session.conf.set(
-                    "spark.sql.legacy.bucketedTableScan.outputOrdering",
-                    "true")
-            dt, res = run_task(session, name, q)
-            if task_id == "seq3#1":
-                leak_probe["sibling_conf"] = session.conf.get(
-                    "spark.sql.legacy.bucketedTableScan.outputOrdering",
-                    "false")
+            dt, res = run_task(name, q)
             results[task_id] = res
             lats[task_id] = round(dt, 2)
         finally:
-            session.sparkContext.setLocalProperty(
+            spark.sparkContext.setLocalProperty(
                 "spark.scheduler.pool", None)
 
     for nt in sorted({4, n_threads}):
@@ -1577,16 +1554,6 @@ def concurrent_main(n_rows: int, n_threads: int = 8,
             infl[len(infl) // 2], 2) if infl else None
         out[f"latency_abs_{cls}_max_s"] = round(
             max((lat_hi[t] for t in lat_hi if keep(t)), default=0), 2)
-    out["conf_isolation"] = {
-        "base_before": base_conf_before,
-        "base_after": spark.conf.get(
-            "spark.sql.legacy.bucketedTableScan.outputOrdering", "false"),
-        "sibling_during": leak_probe.get("sibling_conf"),
-        "isolated": (spark.conf.get(
-            "spark.sql.legacy.bucketedTableScan.outputOrdering",
-            "false") == base_conf_before
-            and leak_probe.get("sibling_conf") != "true"),
-    }
     print(json.dumps(out))
 
 

@@ -4,8 +4,8 @@ so where a query's seconds go — which stage's CPU, or driver gaps between
 jobs — is answered by measurement instead of plan-reading.
 
 Usage:
-    python tools/profile.py [--sf SF_DIR] [--runs N] [--plans DIR]
-                            [--out OUT.json] [query ...]
+    python tools/spark_profile.py [--sf SF_DIR] [--runs N] [--plans DIR]
+                                  [--out OUT.json] [query ...]
 
 ``--sf`` defaults to ``$SPARK_GRAFT_SF_DIR``; no query names means the
 whole catalog. With ``--plans DIR``, each query's formatted plan is
@@ -23,11 +23,9 @@ import os
 import sys
 import time
 
-if __name__ == "__main__":
-    # Run as a script, this directory is sys.path[0], where this file
-    # would shadow the standard library's ``profile`` (imported by
-    # cProfile, which pyspark imports). Put the repository root there.
-    sys.path[0] = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+if __name__ == "__main__":  # run as a script: import the checkout's package
+    sys.path.insert(0, os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))))
 
 from funnel_rocket_spark import benchqueries  # noqa: E402
 from funnel_rocket_spark.engine.metrics import JobGroupMetrics  # noqa: E402
