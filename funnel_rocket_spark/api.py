@@ -201,28 +201,37 @@ def create_app(spark=None, catalog_dir: Optional[str] = None,
     @app.route("/datasets/<name>/parts")
     def parts(name):
         # Reference admin route (apiserver.py:208-213): the dataset's part
-        # files + sizes. Local filesystem basepaths list the parquet parts
-        # registration matched; table-backed datasets report the table
-        # name only.
+        # files + sizes — the files queries read, i.e. those registration
+        # recorded; recorded files that are gone are named under
+        # ``missingParts`` (queries then fail until the dataset is
+        # registered again). Entries without a recorded list (older
+        # entries) list the local basepath's files matching the
+        # registered pattern; table-backed datasets report the table name
+        # only.
         ds = _dataset(name)
         if ds.table:
             return jsonify({"table": ds.table, "totalParts": None,
                             "parts": []})
         base = ds.basepath
         local = base[len("file://"):] if base.startswith("file://") else base
-        out = []
-        if os.path.isdir(local):
-            for fn in sorted(os.listdir(local)):
-                if fnmatch.fnmatch(fn, ds.pattern or "*.parquet"):
-                    out.append({
-                        "name": fn,
-                        "size": os.path.getsize(os.path.join(local, fn))})
+        if ds.files:
+            paths = ds.files
+        elif os.path.isdir(local):
+            paths = [os.path.join(local, fn)
+                     for fn in sorted(os.listdir(local))
+                     if fnmatch.fnmatch(fn, ds.pattern or "*.parquet")]
         elif os.path.isfile(local):
-            out.append({"name": os.path.basename(local),
-                        "size": os.path.getsize(local)})
+            paths = [local]
+        else:
+            paths = []
+        missing = [p for p in paths if not os.path.isfile(p)]
+        out = [{"name": os.path.basename(p), "size": os.path.getsize(p)}
+               for p in paths if p not in missing]
         return jsonify({"basepath": base, "totalParts": len(out),
                         "totalSize": sum(p["size"] for p in out),
-                        "parts": out})
+                        "parts": out,
+                        "missingParts": [os.path.basename(p)
+                                         for p in missing]})
 
     def _request_id() -> str:
         # reference request-id shape: "<unix-seconds>-<8 hex>" (api.md:69)
@@ -273,7 +282,7 @@ def create_app(spark=None, catalog_dir: Optional[str] = None,
         try:
             run = prepare_query(_spark, app.config["CATALOG_DIR"], name,
                                 query)
-        except QueryValidationError:
+        except (QueryValidationError, DatasetValidationError):
             _prom.record_query(name, False, time.monotonic() - t0)
             raise
 

@@ -84,19 +84,49 @@ class Dataset:
     validation_mode: str = "full"
     files_validated: Optional[int] = None
     files_total: Optional[int] = None
-    # the file-name glob registration discovered the parts with; None when
-    # it read basepath whole (a single file, a remote URI, or a glob that
-    # matched nothing)
+    # the file-name glob registration discovered ``files`` with (register
+    # again with it to pick up new parts); None when it read basepath
+    # whole (a single file, a remote URI, or a glob that matched nothing)
     pattern: Optional[str] = None
+    # What registration read: its Spark schema (``StructType.jsonValue()``,
+    # None for a table) and the part files it discovered (None where
+    # ``pattern`` is None). Entries written before these were recorded
+    # load without them, reading basepath filtered by ``pattern``.
+    schema: Optional[dict] = None
+    files: Optional[list] = None
 
     def load(self, spark: SparkSession) -> DataFrame:
-        """The registered rows: the files registration validated."""
+        """The registered rows, read with the recorded schema (no
+        schema-inference job). With recorded ``files``, basepath is listed
+        on the driver as always but only files of those names are read:
+        a part added later is ignored until the dataset is registered
+        again, and a recorded part that is gone fails the load. (Explicit
+        paths would cost a Spark listing job of one task per file above
+        ``spark.sql.sources.parallelPartitionDiscovery.threshold``.)"""
         if self.table:
             return spark.table(self.table)
         reader = spark.read
-        if self.pattern:
+        if self.schema:
+            reader = reader.schema(T.StructType.fromJson(self.schema))
+        if self.files:
+            missing = [f for f in self.files if not os.path.isfile(f)]
+            if missing:
+                raise DatasetValidationError(
+                    f"dataset '{self.name}' is missing {len(missing)} "
+                    f"registered part file(s) ({', '.join(missing[:5])}); "
+                    "register it again")
+            reader = reader.option("pathGlobFilter", _names_glob(self.files))
+        elif self.pattern:  # an entry written before ``files`` existed
             reader = reader.option("pathGlobFilter", self.pattern)
         return reader.parquet(self.basepath)
+
+
+def _names_glob(files: list[str]) -> str:
+    """A Hadoop glob matching exactly the base names of ``files``."""
+    def escape(name: str) -> str:
+        return "".join("\\" + c if c in "\\{}[]*?," else c for c in name)
+
+    return "{" + ",".join(escape(os.path.basename(f)) for f in files) + "}"
 
 
 def _coltype(dtype: T.DataType) -> Optional[str]:
@@ -260,7 +290,8 @@ def register_dataset(
         validation_mode=validation_mode if files is not None else "full",
         files_validated=len(val_files) if val_files is not None else None,
         files_total=len(files) if files is not None else None,
-        pattern=pattern if files is not None else None)
+        pattern=pattern if files is not None else None,
+        schema=None if table else df.schema.jsonValue(), files=files)
 
     if validate or profile:
         ts_num = _numeric(timestamp_column, fields[timestamp_column])
@@ -366,8 +397,9 @@ def prepare_query(spark: SparkSession, catalog_dir: str, name: str,
     """The one path from a catalog entry to a result (the reference's
     ``invoker_api._build_query_job``): read entry ``name``, mark it used,
     check and validate ``query`` against it — raising
-    ``FileNotFoundError`` or ``QueryValidationError`` before any Spark
-    job — and return ``run(with_stats=False)``, which runs the query with
+    ``FileNotFoundError``, ``DatasetValidationError`` (a registered part
+    is gone) or ``QueryValidationError`` before any Spark job — and
+    return ``run(with_stats=False)``, which runs the query with
     the dataset's columns and layout."""
     ds = load_dataset(catalog_dir, name)
     touch_last_used(catalog_dir, name)

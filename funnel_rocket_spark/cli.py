@@ -70,8 +70,10 @@ def cmd_info(args) -> int:
         return 2
     if not args.full:
         # Reference `info` shows the summary; `info --full` adds the full
-        # per-column schema/profile (frocket/cli.py info_parser --full).
-        meta.pop("columns", None)
+        # per-column schema/profile (frocket/cli.py info_parser --full),
+        # and here the recorded Spark schema and part-file list.
+        for key in ("columns", "schema", "files"):
+            meta.pop(key, None)
     print(json.dumps(meta, indent=2, default=str))
     return 0
 

@@ -18,7 +18,10 @@ job intervals that ``tools/spark_profile.py`` prints.
 
 from __future__ import annotations
 
+import functools
+import json
 import uuid
+from datetime import datetime
 
 
 class JobGroupMetrics:
@@ -133,10 +136,14 @@ class JobGroupMetrics:
     def _fill_from_status_store(self, sc, stage_ids, out: dict) -> None:
         """Full metrics via the driver's AppStatusStore (private plumbing,
         reached by py4j reflection — the caller falls back to
-        :meth:`_fill_from_tracker` if any of it moved). Every stage is
-        read before ``out`` is touched, so a failure mid-loop leaves no
-        partial sums for the fallback to add to."""
+        :meth:`_fill_from_tracker` if any of it moved). Each stage is one
+        ``StageData`` written as JSON by the mapper Spark's REST API uses
+        and parsed here: one py4j read per stage instead of a getter call
+        per field. Every stage is read before ``out`` is touched, so a
+        failure mid-loop leaves no partial sums for the fallback to add
+        to."""
         store = sc._jsc.sc().statusStore()
+        mapper = _stage_json_mapper(sc._gateway)
         # Scala default args surface as $default$N helper methods.
         defaults = [getattr(store, f"stageAttempt$default${i}")()
                     for i in (3, 4, 5, 6)]
@@ -145,28 +152,20 @@ class JobGroupMetrics:
             try:
                 data = store.stageAttempt(int(sid), 0, *defaults)._1()
             except Exception:
-                continue  # skipped stage: planned but never run
+                continue  # planned but never recorded
+            stage = json.loads(mapper.writeValueAsString(data))
             rows.append({
                 "stage": int(sid),
-                "name": str(data.name())[:80],
-                "tasks": data.numCompleteTasks(),
-                "failedTasks": data.numFailedTasks(),
-                "wallSeconds": _wall_seconds(data),
-                "pool": str(data.schedulingPool()),
-                "scannedRows": data.inputRecords(),
-                "scannedBytes": data.inputBytes(),
-                "outputRows": data.outputRecords(),
-                "outputBytes": data.outputBytes(),
-                "shuffleReadBytes": data.shuffleReadBytes(),
-                "shuffleReadRecords": data.shuffleReadRecords(),
-                "shuffleWriteBytes": data.shuffleWriteBytes(),
-                "shuffleWriteRecords": data.shuffleWriteRecords(),
-                "memorySpilledBytes": data.memoryBytesSpilled(),
-                "diskSpilledBytes": data.diskBytesSpilled(),
-                "executorRunSeconds": data.executorRunTime() / 1000.0,
-                "executorCpuSeconds": data.executorCpuTime() / 1e9,
-                "jvmGcSeconds": data.jvmGcTime() / 1000.0,
-                "peakExecutionMemory": data.peakExecutionMemory(),
+                "name": stage["name"][:80],
+                "tasks": stage["numCompleteTasks"],
+                "failedTasks": stage["numFailedTasks"],
+                "wallSeconds": _wall_seconds(stage),
+                "pool": stage["schedulingPool"],
+                **{key: stage[field]
+                   for key, field in _STAGE_COUNTERS.items()},
+                "executorRunSeconds": stage["executorRunTime"] / 1000.0,
+                "executorCpuSeconds": stage["executorCpuTime"] / 1e9,
+                "jvmGcSeconds": stage["jvmGcTime"] / 1000.0,
             })
         inv, w = out["invoker"], out["worker"]
         inv["stages"] += len(rows)
@@ -236,16 +235,41 @@ def _drain_listener_bus(sc) -> None:
         pass
 
 
-def _wall_seconds(data):
-    """First task launch to stage completion of one ``StageData``, or
-    None when either end is unset (a skipped stage launches no task)."""
-    first = data.firstTaskLaunchedTime()
-    if not first.isDefined():
-        return None
-    done = data.completionTime()
-    if not done.isDefined():
-        return None
-    return round((done.get().getTime() - first.get().getTime()) / 1000.0, 3)
+@functools.lru_cache(maxsize=1)
+def _stage_json_mapper(gateway):
+    """The JSON mapper of Spark's REST API, made once per JVM gateway: a
+    new mapper builds its serializers by reflection on first use, which
+    costs more than the reads it replaces."""
+    return gateway.jvm.org.apache.spark.status.api.v1 \
+        .JacksonMessageWriter().mapper()
+
+
+# worker-block key -> its ``StageData`` JSON field, copied as is
+_STAGE_COUNTERS = {
+    "scannedRows": "inputRecords", "scannedBytes": "inputBytes",
+    "outputRows": "outputRecords", "outputBytes": "outputBytes",
+    "shuffleReadBytes": "shuffleReadBytes",
+    "shuffleReadRecords": "shuffleReadRecords",
+    "shuffleWriteBytes": "shuffleWriteBytes",
+    "shuffleWriteRecords": "shuffleWriteRecords",
+    "memorySpilledBytes": "memoryBytesSpilled",
+    "diskSpilledBytes": "diskBytesSpilled",
+    "peakExecutionMemory": "peakExecutionMemory",
+}
+
+
+def _wall_seconds(stage: dict) -> float:
+    """First task launch to completion of one ``StageData`` JSON
+    object; 0.0 when it launched no task (a stage skipped because its
+    shuffle output already existed) or has not completed. The REST
+    mapper writes times as ``yyyy-MM-dd'T'HH:mm:ss.SSS'GMT'``."""
+    first = stage.get("firstTaskLaunchedTime")
+    done = stage.get("completionTime")
+    if first is None or done is None:
+        return 0.0
+    delta = (datetime.fromisoformat(done.removesuffix("GMT"))
+             - datetime.fromisoformat(first.removesuffix("GMT")))
+    return round(delta.total_seconds(), 3)
 
 
 def dataset_stats(df) -> dict:

@@ -252,16 +252,25 @@ def test_prom_label_escaping():
 def test_catalog_entry_with_removed_profile_keys_still_loads(spark, tmp_path):
     """Catalog JSON written by earlier versions carries profile keys the
     Dataset no longer has (group-size histogram, segmented-fold cost
-    premium). Such an entry must still load through the API and answer
+    premium) and lacks the schema and part files registration now
+    records. Such an entry must still load through the API and answer
     a sequence query exactly like a freshly registered dataset."""
+    import shutil
     from dataclasses import asdict
 
     from funnel_rocket_spark.catalog import register_dataset
     from funnel_rocket_spark.engine import QueryEngine
 
     catalog = tmp_path / "cat"
-    ds = register_dataset(spark, "old", SF_EVENTS, "user_id", "ts")
-    saved = {**asdict(ds),
+    data = tmp_path / "data"
+    data.mkdir()
+    shutil.copy(SF_EVENTS, data / "events.parquet")
+    ds = register_dataset(spark, "old", str(data), "user_id", "ts")
+    entry = asdict(ds)
+    # an entry that old also lacks the recorded part list and schema
+    assert entry.pop("files") == [str(data / "events.parquet")]
+    assert entry.pop("schema")["type"] == "struct"
+    saved = {**entry,
              "max_group_rows": 30,
              "group_rows_topk": [30, 28, 27],
              "segmented_cost_premium": 11.8,
@@ -333,9 +342,10 @@ def test_stats_fallback_keeps_counts_and_result(spark, monkeypatch):
 
 
 def test_stage_rows_and_job_intervals_cover_the_snapshot(spark, monkeypatch):
-    """The per-stage rows a snapshot keeps add up to its totals, and the
-    job-interval reader returns one interval per job the snapshot
-    counted."""
+    """The per-stage rows a snapshot keeps add up to its totals, every
+    row has a wall time (0.0 for a stage skipped because its shuffle
+    output existed), and the job-interval reader returns one interval
+    per job the snapshot counted."""
     from funnel_rocket_spark import QueryEngine
     from funnel_rocket_spark.engine import metrics
 
@@ -355,7 +365,16 @@ def test_stage_rows_and_job_intervals_cover_the_snapshot(spark, monkeypatch):
     assert w["scannedRows"] > 0
     assert len(jg.stages) == inv["stages"]
     assert sum(s["tasks"] for s in jg.stages) == inv["totalTasks"]
-    assert sum(s["scannedRows"] for s in jg.stages) == w["scannedRows"]
+    assert sum(s["failedTasks"] for s in jg.stages) == inv["failedTasks"]
+    for key, total in w.items():
+        if key == "taskTime":
+            continue
+        rows = [s[key] for s in jg.stages]
+        want = max(rows) if key == "peakExecutionMemory" else sum(rows)
+        assert total == pytest.approx(want, abs=1e-3), key
+    assert all(isinstance(s["wallSeconds"], float) and s["wallSeconds"] >= 0
+               for s in jg.stages)
+    assert any(s["wallSeconds"] > 0 for s in jg.stages)
     intervals = jg.job_intervals()
     assert len(intervals) == inv["jobs"] > 0
     assert all(j["completedMs"] >= j["submittedMs"] for j in intervals)
@@ -392,9 +411,10 @@ def test_profile_tool_reports_one_catalog_query(spark, tmp_path, capsys):
 def test_query_reads_only_the_registered_pattern(spark, tmp_path):
     """A dataset registered with a ``pattern`` answers over the files that
     pattern matched, not every parquet file under its basepath. A glob
-    that matched nothing registers (and queries) the whole basepath, and
-    a catalog entry written before ``pattern`` was recorded still loads
-    and reads every file, as before."""
+    that matched nothing registers (and queries) the whole basepath. A
+    catalog entry written before part files were recorded still reads
+    only its pattern's files, and one written before ``pattern`` was
+    recorded still loads and reads every file, as before."""
     import shutil
 
     import pyarrow.parquet as pq
@@ -431,9 +451,103 @@ def test_query_reads_only_the_registered_pattern(spark, tmp_path):
 
         entry = json.loads((catalog / "one.json").read_text())
         assert entry["pattern"] == "events.parquet"
+        # an entry written before part files and schema were recorded
+        # still reads and lists only what its pattern matches
+        for key in ("files", "schema"):
+            del entry[key]
+        (catalog / "patterned.json").write_text(json.dumps(entry))
+        assert rows("patterned") == 1000
+        assert [p["name"] for p in
+                c.get("/datasets/patterned/parts").get_json()["parts"]] == \
+            ["events.parquet"]
+        # an entry older still has no pattern either
         del entry["pattern"]
         (catalog / "old.json").write_text(json.dumps(entry))
         assert rows("old") == 1700
+
+
+def test_query_reads_only_the_registered_parts(spark, tmp_path):
+    """Queries and ``/parts`` see the part files registration recorded:
+    a parquet file copied into the basepath afterwards is neither read
+    nor listed until the dataset is registered again, and names match
+    exactly (a comma in a name is not a glob separator). A recorded part
+    that is deleted is named under ``missingParts``, and a query then
+    answers HTTP 400 saying to register again."""
+    import shutil
+
+    data = tmp_path / "data"
+    data.mkdir()
+    shutil.copy(SF_EVENTS, data / "events.parquet")
+    app = create_app(spark=spark, catalog_dir=str(tmp_path / "cat"))
+    app.config["TESTING"] = True
+    body = {"name": "ev", "basepath": str(data),
+            "group_id_column": "user_id", "timestamp_column": "ts"}
+    with app.test_client() as c:
+        def rows_and_parts():
+            r = c.get("/datasets/ev/empty-query")
+            assert r.status_code == 200, r.get_data(as_text=True)
+            parts = c.get("/datasets/ev/parts").get_json()["parts"]
+            return (r.get_json()["query"]["matchingGroupRows"],
+                    [p["name"] for p in parts])
+
+        assert c.post("/datasets/register", json=body).status_code == 200
+        shutil.copy(SF_EVENTS, data / "late,1.parquet")
+        assert rows_and_parts() == (1000, ["events.parquet"])
+
+        assert c.post("/datasets/register", json=body).status_code == 200
+        assert rows_and_parts() == (2000,
+                                    ["events.parquet", "late,1.parquet"])
+
+        (data / "events.parquet").unlink()
+        r = c.get("/datasets/ev/parts")
+        assert r.status_code == 200, r.get_data(as_text=True)
+        listed = r.get_json()
+        assert [p["name"] for p in listed["parts"]] == ["late,1.parquet"]
+        assert listed["missingParts"] == ["events.parquet"]
+        r = c.get("/datasets/ev/empty-query")
+        assert r.status_code == 400, r.get_data(as_text=True)
+        msg = r.get_json()["errorMessage"]
+        assert "events.parquet" in msg and "register it again" in msg
+
+
+def test_prepare_query_starts_no_spark_job(spark, tmp_path):
+    """Loading a registered dataset and validating a query against it is
+    driver-only work: the recorded schema replaces the schema-inference
+    job and the recorded part names filter the driver's listing, for a
+    single-file basepath, a directory of one part and a directory of
+    more parts than Spark lists on the driver when given as explicit
+    paths (``spark.sql.sources.parallelPartitionDiscovery.threshold``,
+    32)."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from funnel_rocket_spark.catalog import prepare_query, register_dataset
+    from funnel_rocket_spark.engine.metrics import JobGroupMetrics
+
+    data = tmp_path / "data"
+    data.mkdir()
+    shutil.copy(SF_EVENTS, data / "events.parquet")
+    many = tmp_path / "many"
+    many.mkdir()
+    table = pq.read_table(SF_EVENTS)
+    for i in range(40):
+        pq.write_table(table.slice(i * 25, 25), many / f"part-{i:02d}.parquet")
+    catalog = str(tmp_path / "cat")
+    register_dataset(spark, "dir", str(data), "user_id", "ts",
+                     catalog_dir=catalog)
+    register_dataset(spark, "file", SF_EVENTS, "user_id", "ts",
+                     catalog_dir=catalog)
+    register_dataset(spark, "many", str(many), "user_id", "ts",
+                     catalog_dir=catalog)
+    answers = {}
+    for name in ("dir", "file", "many"):
+        with JobGroupMetrics(spark, f"prepare {name}") as jg:
+            run = prepare_query(spark, catalog, name, _STATS_QUERY)
+        assert jg.snapshot()["invoker"]["jobs"] == 0, name
+        answers[name] = run()["query"]
+        assert answers[name]["matchingGroups"] > 0
+    assert answers["many"] == answers["dir"] == answers["file"]
 
 
 def _prom_samples(client, series: str) -> float:

@@ -73,7 +73,10 @@ def test_cli_config(capsys):
 def test_cli_config_prints_the_live_session_conf(spark, capsys, monkeypatch):
     """``config`` prints ``session.spark_conf``, the settings get_spark
     applies, so every printed Spark key reads the same value on a
-    get_spark session."""
+    get_spark session, and PySpark's per-call call-site capture is
+    off."""
+    from pyspark.errors.utils import is_debugging_enabled
+
     from funnel_rocket_spark.session import get_spark
 
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")  # the test session's local[4]
@@ -82,9 +85,13 @@ def test_cli_config_prints_the_live_session_conf(spark, capsys, monkeypatch):
     printed = json.loads(out)
     assert rc == 0 and printed.pop("catalog.dir")
     assert printed["spark.sql.legacy.bucketedTableScan.outputOrdering"]
+    assert printed["spark.python.sql.dataFrameDebugging.enabled"] is False
     for key, value in printed.items():
         want = str(value).lower() if isinstance(value, bool) else str(value)
         assert live.get(key) == want, key
+    # PySpark reads the flag once per process: plans here are built
+    # without call-site capture
+    assert is_debugging_enabled() is False
 
 
 def test_packaging_installed_entry_point(tmp_path):

@@ -6,6 +6,7 @@ driver hashes values, so anything beyond tiny formatting noise is a risk).
 Usage: python tools/driver_sim.py [sf_dir] [first_n]
 """
 
+import argparse
 import math
 import os
 import sys
@@ -29,9 +30,14 @@ def normalize(df):
     return df
 
 
-def main():
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    first_n = int(sys.argv[2]) if len(sys.argv) > 2 else 50
+def main(argv=None):
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01",
+                    help="directory of the <table>.parquet inputs")
+    ap.add_argument("first_n", nargs="?", type=int, default=50,
+                    help="how many catalog queries to run, in order")
+    args = ap.parse_args(argv)
+    sf_dir, first_n = args.sf_dir, args.first_n
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")

@@ -101,7 +101,7 @@ def profile(spark, sf: str, names: list[str], runs: int = 3,
             "stage_rows": jm.stages,
             "job_timeline": jobs,
         }
-        top = sorted(jm.stages, key=lambda s: -(s["wallSeconds"] or 0))[:3]
+        top = sorted(jm.stages, key=lambda s: -s["wallSeconds"])[:3]
         tops = "; ".join(
             f"s{s['stage']} {s['wallSeconds']}s/{s['tasks']}t "
             f"{s['name'][:40]}" for s in top)
