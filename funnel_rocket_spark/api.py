@@ -6,8 +6,13 @@
     POST /datasets/<name>/unregister
     GET  /datasets
     GET  /datasets/<name>/schema
+    GET  /datasets/<name>/parts
     POST /datasets/<name>/query          body = query JSON
     GET  /datasets/<name>/empty-query
+
+``catalog`` owns how entries are stored and found (``load_dataset``,
+``list_datasets``; a missing one is ``DatasetNotRegisteredError``, HTTP
+404) and which part files a dataset reads (``Dataset.part_files``).
 
 ``?stream=true`` on query routes streams NDJSON progress lines followed by
 the result — the reference's chunked-progress behavior (``apiserver.py:
@@ -34,7 +39,6 @@ shape the reference gets from per-request Lambda fan-out
 
 from __future__ import annotations
 
-import fnmatch
 import json
 import os
 import threading
@@ -45,7 +49,10 @@ from flask import Flask, Response, jsonify, request, stream_with_context
 
 from funnel_rocket_spark.catalog import (
     DatasetInUseError,
+    DatasetNotRegisteredError,
     DatasetValidationError,
+    default_catalog_dir,
+    list_datasets,
     load_dataset,
     prepare_query,
     register_dataset,
@@ -89,8 +96,7 @@ def create_app(spark=None, catalog_dir: Optional[str] = None,
     ``FUNNEL_ROCKET_MAX_INFLIGHT`` (unset = unbounded, the historical
     behavior). Registration/metadata routes are never gated."""
     app = Flask("funnel-rocket-spark")
-    app.config["CATALOG_DIR"] = catalog_dir or os.environ.get(
-        "FUNNEL_ROCKET_CATALOG", os.path.expanduser("~/.funnel_rocket_spark"))
+    app.config["CATALOG_DIR"] = catalog_dir or default_catalog_dir()
     if max_inflight is None:
         env_max = os.environ.get("FUNNEL_ROCKET_MAX_INFLIGHT")
         max_inflight = int(env_max) if env_max else None
@@ -115,7 +121,7 @@ def create_app(spark=None, catalog_dir: Optional[str] = None,
     def on_dataset_error(e):
         return jsonify({"success": False, "errorMessage": str(e)}), 400
 
-    @app.errorhandler(FileNotFoundError)
+    @app.errorhandler(DatasetNotRegisteredError)
     def on_missing(e):
         return jsonify({"success": False,
                         "errorMessage": "dataset not registered"}), 404
@@ -170,18 +176,10 @@ def create_app(spark=None, catalog_dir: Optional[str] = None,
         return jsonify({"success": True, **info})
 
     @app.route("/datasets")
-    def list_datasets():
-        out = []
-        cat = app.config["CATALOG_DIR"]
-        if os.path.isdir(cat):
-            for fn in sorted(os.listdir(cat)):
-                if fn.endswith(".json"):
-                    with open(os.path.join(cat, fn)) as fh:
-                        meta = json.load(fh)
-                    out.append({"name": meta["name"],
-                                "basepath": meta["basepath"],
-                                "totalRows": meta.get("total_rows")})
-        return jsonify(out)
+    def datasets():
+        return jsonify([{"name": ds.name, "basepath": ds.basepath,
+                         "totalRows": ds.total_rows}
+                        for ds in list_datasets(app.config["CATALOG_DIR"])])
 
     @app.route("/datasets/<name>/schema")
     def schema(name):
@@ -200,34 +198,20 @@ def create_app(spark=None, catalog_dir: Optional[str] = None,
 
     @app.route("/datasets/<name>/parts")
     def parts(name):
-        # Reference admin route (apiserver.py:208-213): the dataset's part
-        # files + sizes — the files queries read, i.e. those registration
-        # recorded; recorded files that are gone are named under
-        # ``missingParts`` (queries then fail until the dataset is
-        # registered again). Entries without a recorded list (older
-        # entries) list the local basepath's files matching the
-        # registered pattern; table-backed datasets report the table name
-        # only.
+        # Reference admin route (apiserver.py:208-213): the part files
+        # queries read (``Dataset.part_files``) + sizes; those gone since
+        # registration are named under ``missingParts`` (queries then fail
+        # until the dataset is registered again). Table-backed datasets
+        # report the table name only.
         ds = _dataset(name)
         if ds.table:
             return jsonify({"table": ds.table, "totalParts": None,
                             "parts": []})
-        base = ds.basepath
-        local = base[len("file://"):] if base.startswith("file://") else base
-        if ds.files:
-            paths = ds.files
-        elif os.path.isdir(local):
-            paths = [os.path.join(local, fn)
-                     for fn in sorted(os.listdir(local))
-                     if fnmatch.fnmatch(fn, ds.pattern or "*.parquet")]
-        elif os.path.isfile(local):
-            paths = [local]
-        else:
-            paths = []
+        paths = ds.part_files()
         missing = [p for p in paths if not os.path.isfile(p)]
         out = [{"name": os.path.basename(p), "size": os.path.getsize(p)}
                for p in paths if p not in missing]
-        return jsonify({"basepath": base, "totalParts": len(out),
+        return jsonify({"basepath": ds.basepath, "totalParts": len(out),
                         "totalSize": sum(p["size"] for p in out),
                         "parts": out,
                         "missingParts": [os.path.basename(p)

@@ -16,12 +16,14 @@ reference demands raw numerics).
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import time
 from dataclasses import asdict, dataclass, field, fields
 from typing import Callable, Optional
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -43,6 +45,16 @@ TOP_VALUES_COUNT = 20    # reference config 'dataset.categorical.top.count'
 
 class DatasetValidationError(ValueError):
     pass
+
+
+class DatasetNotRegisteredError(LookupError):
+    """The catalog has no entry of that name."""
+
+
+def default_catalog_dir() -> str:
+    """``FUNNEL_ROCKET_CATALOG``, otherwise ``~/.funnel_rocket_spark``."""
+    return os.environ.get("FUNNEL_ROCKET_CATALOG",
+                          os.path.expanduser("~/.funnel_rocket_spark"))
 
 
 @dataclass
@@ -95,26 +107,39 @@ class Dataset:
     schema: Optional[dict] = None
     files: Optional[list] = None
 
+    def part_files(self) -> list[str]:
+        """The local part files this dataset reads: the recorded
+        ``files``; for an entry written before those were recorded, the
+        basepath's files matching its ``pattern``; a single-file basepath
+        itself; nothing for a table or a remote URI. A listed file may
+        have been deleted since registration."""
+        local = None if self.table else _local_path(self.basepath)
+        if self.files or local is None:
+            return self.files or []
+        if not os.path.isdir(local):
+            return [local]
+        return _discover_files(local, self.pattern or "*.parquet") or []
+
     def load(self, spark: SparkSession) -> DataFrame:
         """The registered rows, read with the recorded schema (no
         schema-inference job). With recorded ``files``, basepath is listed
         on the driver as always but only files of those names are read:
         a part added later is ignored until the dataset is registered
-        again, and a recorded part that is gone fails the load. (Explicit
-        paths would cost a Spark listing job of one task per file above
-        ``spark.sql.sources.parallelPartitionDiscovery.threshold``.)"""
+        again, and a part that is gone (``part_files``) fails the load.
+        (Explicit paths would cost a Spark listing job of one task per file
+        above ``spark.sql.sources.parallelPartitionDiscovery.threshold``.)"""
         if self.table:
             return spark.table(self.table)
+        missing = [f for f in self.part_files() if not os.path.isfile(f)]
+        if missing:
+            raise DatasetValidationError(
+                f"dataset '{self.name}' is missing {len(missing)} "
+                f"registered part file(s) ({', '.join(missing[:5])}); "
+                "register it again")
         reader = spark.read
         if self.schema:
             reader = reader.schema(T.StructType.fromJson(self.schema))
         if self.files:
-            missing = [f for f in self.files if not os.path.isfile(f)]
-            if missing:
-                raise DatasetValidationError(
-                    f"dataset '{self.name}' is missing {len(missing)} "
-                    f"registered part file(s) ({', '.join(missing[:5])}); "
-                    "register it again")
             reader = reader.option("pathGlobFilter", _names_glob(self.files))
         elif self.pattern:  # an entry written before ``files`` existed
             reader = reader.option("pathGlobFilter", self.pattern)
@@ -165,19 +190,21 @@ def _table_layout(spark: SparkSession, table: str) -> Optional[dict]:
             "sort_columns": _cols("Sort Columns")}
 
 
+def _local_path(basepath: str) -> Optional[str]:
+    """``basepath`` without ``file://``, or None for a remote URI."""
+    local = basepath.removeprefix("file://")
+    return None if "://" in local else local
+
+
 def _discover_files(basepath: str, pattern: str) -> Optional[list[str]]:
     """Parquet part files under a local directory matching ``pattern``
     (reference ``--pattern``, default ``*.parquet`` — skips ``_SUCCESS``
     and friends). None when basepath is a single file or a remote URI
     (Spark's own listing handles those)."""
-    import glob as globmod
-
-    local = basepath[len("file://"):] if basepath.startswith("file://") \
-        else basepath
-    if "://" in local or not os.path.isdir(local):
+    local = _local_path(basepath)
+    if local is None or not os.path.isdir(local):
         return None
-    files = sorted(globmod.glob(os.path.join(local, pattern)))
-    return files or None
+    return sorted(glob.glob(os.path.join(local, pattern))) or None
 
 
 def _footer_row_count(files: list[str]) -> Optional[int]:
@@ -215,8 +242,6 @@ def register_dataset(
     basepath: Optional[str],
     group_id_column: str,
     timestamp_column: str,
-    validate: bool = True,
-    profile: bool = True,
     catalog_dir: Optional[str] = None,
     table: Optional[str] = None,
     pattern: str = "*.parquet",
@@ -242,13 +267,14 @@ def register_dataset(
     if (basepath is None) == (table is None):
         raise DatasetValidationError(
             "exactly one of basepath or table must be given")
-    files = None
-    if table:
-        df = spark.table(table)
-    else:
-        files = _discover_files(basepath, pattern)
-        df = (spark.read.parquet(*files) if files
-              else spark.read.parquet(basepath))
+    files = None if table else _discover_files(basepath, pattern)
+    try:
+        df = (spark.table(table) if table
+              else spark.read.parquet(*(files or [basepath])))
+    except AnalysisException as e:  # a missing path, an empty directory
+        raise DatasetValidationError(
+            f"cannot read dataset '{table or basepath}': "
+            f"{e.getCondition() or e}") from e
     # Partial-validation modes scan only a file subset (cheap registration
     # of a huge dataset — the reference's per-file sampling design); the
     # full-dataset row count stays exact via a parquet metadata-only count.
@@ -293,87 +319,83 @@ def register_dataset(
         pattern=pattern if files is not None else None,
         schema=None if table else df.schema.jsonValue(), files=files)
 
-    if validate or profile:
-        ts_num = _numeric(timestamp_column, fields[timestamp_column])
-        aggs = [
-            F.count(F.lit(1)).alias("__rows"),
-            F.sum(F.col(group_id_column).isNull().cast("long")).alias("__null_groups"),
-            F.sum(ts_num.isNull().cast("long")).alias("__null_ts"),
-            F.approx_count_distinct(group_id_column).alias("__groups"),
-            F.min(ts_num).alias("__min_ts"),
-            F.max(ts_num).alias("__max_ts"),
-        ]
-        if profile:
-            for col_name, info in columns.items():
-                if info["coltype"] in ("INT", "FLOAT"):
-                    num = _numeric(col_name, fields[col_name])
-                    aggs.append(F.min(num).alias(f"__min__{col_name}"))
-                    aggs.append(F.max(num).alias(f"__max__{col_name}"))
-                aggs.append(F.approx_count_distinct(col_name).alias(f"__nuniq__{col_name}"))
-        row = df_val.agg(*aggs).collect()[0]
+    ts_num = _numeric(timestamp_column, fields[timestamp_column])
+    aggs = [
+        F.count(F.lit(1)).alias("__rows"),
+        F.sum(F.col(group_id_column).isNull().cast("long")).alias("__null_groups"),
+        F.sum(ts_num.isNull().cast("long")).alias("__null_ts"),
+        F.approx_count_distinct(group_id_column).alias("__groups"),
+        F.min(ts_num).alias("__min_ts"),
+        F.max(ts_num).alias("__max_ts"),
+    ]
+    for col_name, info in columns.items():
+        if info["coltype"] in ("INT", "FLOAT"):
+            num = _numeric(col_name, fields[col_name])
+            aggs.append(F.min(num).alias(f"__min__{col_name}"))
+            aggs.append(F.max(num).alias(f"__max__{col_name}"))
+        aggs.append(F.approx_count_distinct(col_name).alias(f"__nuniq__{col_name}"))
+    row = df_val.agg(*aggs).collect()[0]
 
-        if validate:
-            if row["__null_groups"] > 0:
-                raise DatasetValidationError(
-                    f"Group-id column '{group_id_column}' has "
-                    f"{row['__null_groups']} null values")
-            if row["__null_ts"] > 0:
-                raise DatasetValidationError(
-                    f"Timestamp column '{timestamp_column}' has "
-                    f"{row['__null_ts']} null values")
+    if row["__null_groups"] > 0:
+        raise DatasetValidationError(
+            f"Group-id column '{group_id_column}' has "
+            f"{row['__null_groups']} null values")
+    if row["__null_ts"] > 0:
+        raise DatasetValidationError(
+            f"Timestamp column '{timestamp_column}' has "
+            f"{row['__null_ts']} null values")
 
-        # Exact regardless of mode: for partial validation the full-dataset
-        # row count comes straight from parquet FOOTERS (driver-side
-        # metadata reads — no Spark job, no data scan; the same trick the
-        # reference's registration uses), falling back to a count job if a
-        # footer is unreadable. Stats below cover the validated subset.
-        if partial:
-            ds.total_rows = _footer_row_count(files)
-            if ds.total_rows is None:
-                ds.total_rows = df.count()
-        else:
-            ds.total_rows = row["__rows"]
-        ds.total_groups = row["__groups"]
-        ds.min_timestamp = row["__min_ts"]
-        ds.max_timestamp = row["__max_ts"]
+    # Exact regardless of mode: for partial validation the full-dataset
+    # row count comes straight from parquet FOOTERS (driver-side
+    # metadata reads — no Spark job, no data scan; the same trick the
+    # reference's registration uses), falling back to a count job if a
+    # footer is unreadable. Stats below cover the validated subset.
+    if partial:
+        ds.total_rows = _footer_row_count(files)
+        if ds.total_rows is None:
+            ds.total_rows = df.count()
+    else:
+        ds.total_rows = row["__rows"]
+    ds.total_groups = row["__groups"]
+    ds.min_timestamp = row["__min_ts"]
+    ds.max_timestamp = row["__max_ts"]
 
-        if profile:
-            total = max(row["__rows"], 1)
-            categorical_strings = []
-            for col_name, info in columns.items():
-                nuniq = row[f"__nuniq__{col_name}"]
-                info["approx_distinct"] = nuniq
-                if info["coltype"] in ("INT", "FLOAT"):
-                    info["min"] = row[f"__min__{col_name}"]
-                    info["max"] = row[f"__max__{col_name}"]
-                if info["coltype"] == "STRING" and nuniq / total <= CATEGORICAL_RATIO:
-                    info["categorical"] = True
-                    categorical_strings.append(col_name)
-            # Top values for ALL categorical strings in ONE job (reference
-            # keeps approximate merged top-Ns; ours are exact): melt the
-            # categorical columns to (col, value) rows via stack, count, and
-            # rank within each column. A per-column groupBy loop would run
-            # one Spark job per column — slow to register a wide table.
-            if categorical_strings:
-                stack_expr = "stack({}, {}) as (__col, __val)".format(
-                    len(categorical_strings),
-                    ", ".join(f"'{c}', `{c}`" for c in categorical_strings))
-                from pyspark.sql import Window
+    total = max(row["__rows"], 1)
+    categorical_strings = []
+    for col_name, info in columns.items():
+        nuniq = row[f"__nuniq__{col_name}"]
+        info["approx_distinct"] = nuniq
+        if info["coltype"] in ("INT", "FLOAT"):
+            info["min"] = row[f"__min__{col_name}"]
+            info["max"] = row[f"__max__{col_name}"]
+        if info["coltype"] == "STRING" and nuniq / total <= CATEGORICAL_RATIO:
+            info["categorical"] = True
+            categorical_strings.append(col_name)
+    # Top values for ALL categorical strings in ONE job (reference
+    # keeps approximate merged top-Ns; ours are exact): melt the
+    # categorical columns to (col, value) rows via stack, count, and
+    # rank within each column. A per-column groupBy loop would run
+    # one Spark job per column — slow to register a wide table.
+    if categorical_strings:
+        stack_expr = "stack({}, {}) as (__col, __val)".format(
+            len(categorical_strings),
+            ", ".join(f"'{c}', `{c}`" for c in categorical_strings))
+        from pyspark.sql import Window
 
-                w = Window.partitionBy("__col").orderBy(
-                    F.desc("__cnt"), F.asc("__val"))
-                top = (
-                    df_val.selectExpr(stack_expr)
-                    .where(F.col("__val").isNotNull())
-                    .groupBy("__col", "__val").agg(F.count("*").alias("__cnt"))
-                    .withColumn("__rk", F.row_number().over(w))
-                    .where(F.col("__rk") <= TOP_VALUES_COUNT)
-                    .collect()
-                )
-                for col_name in categorical_strings:
-                    columns[col_name]["top_values"] = {}
-                for r in sorted(top, key=lambda r: (r["__col"], r["__rk"])):
-                    columns[r["__col"]]["top_values"][str(r["__val"])] = r["__cnt"]
+        w = Window.partitionBy("__col").orderBy(
+            F.desc("__cnt"), F.asc("__val"))
+        top = (
+            df_val.selectExpr(stack_expr)
+            .where(F.col("__val").isNotNull())
+            .groupBy("__col", "__val").agg(F.count("*").alias("__cnt"))
+            .withColumn("__rk", F.row_number().over(w))
+            .where(F.col("__rk") <= TOP_VALUES_COUNT)
+            .collect()
+        )
+        for col_name in categorical_strings:
+            columns[col_name]["top_values"] = {}
+        for r in sorted(top, key=lambda r: (r["__col"], r["__rk"])):
+            columns[r["__col"]]["top_values"][str(r["__val"])] = r["__cnt"]
 
     if catalog_dir:
         os.makedirs(catalog_dir, exist_ok=True)
@@ -383,13 +405,25 @@ def register_dataset(
 
 
 def load_dataset(catalog_dir: str, name: str) -> Dataset:
-    """Read a saved catalog entry. Keys that are not ``Dataset`` fields
-    are dropped, so entries written by older versions (which carried
-    since-removed profile fields) keep loading."""
-    with open(os.path.join(catalog_dir, f"{name}.json")) as fh:
-        data = json.load(fh)
+    """Read a saved catalog entry, raising
+    :class:`DatasetNotRegisteredError` when there is none. Keys that are
+    not ``Dataset`` fields are dropped, so entries written by older
+    versions (which carried since-removed profile fields) keep loading."""
+    try:
+        with open(os.path.join(catalog_dir, f"{name}.json")) as fh:
+            data = json.load(fh)
+    except FileNotFoundError:
+        raise DatasetNotRegisteredError(
+            f"dataset '{name}' is not registered (catalog: {catalog_dir})"
+        ) from None
     known = {f.name for f in fields(Dataset)}
     return Dataset(**{k: v for k, v in data.items() if k in known})
+
+
+def list_datasets(catalog_dir: str) -> list[Dataset]:
+    """Every entry in the catalog (``load_dataset``), by name."""
+    return [load_dataset(catalog_dir, os.path.basename(p)[:-len(".json")])
+            for p in sorted(glob.glob(os.path.join(catalog_dir, "*.json")))]
 
 
 def prepare_query(spark: SparkSession, catalog_dir: str, name: str,
@@ -397,8 +431,9 @@ def prepare_query(spark: SparkSession, catalog_dir: str, name: str,
     """The one path from a catalog entry to a result (the reference's
     ``invoker_api._build_query_job``): read entry ``name``, mark it used,
     check and validate ``query`` against it — raising
-    ``FileNotFoundError``, ``DatasetValidationError`` (a registered part
-    is gone) or ``QueryValidationError`` before any Spark job — and
+    ``DatasetNotRegisteredError``, ``DatasetValidationError`` (a
+    registered part is gone) or ``QueryValidationError`` before any
+    Spark job — and
     return ``run(with_stats=False)``, which runs the query with
     the dataset's columns and layout."""
     ds = load_dataset(catalog_dir, name)
@@ -419,12 +454,10 @@ class DatasetInUseError(RuntimeError):
     """Unregister refused: the dataset was queried too recently."""
 
 
-def touch_last_used(catalog_dir: Optional[str], name: str) -> None:
+def touch_last_used(catalog_dir: str, name: str) -> None:
     """Record query time in a sidecar file (reference keeps last-used in
     its datastore to guard unregistration, ``docs/api.md:618-643``). A
     sidecar avoids rewriting the whole metadata JSON per query."""
-    if not catalog_dir:
-        return
     path = os.path.join(catalog_dir, f"{name}.last_used")
     try:
         with open(path, "w") as fh:

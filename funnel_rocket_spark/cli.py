@@ -14,18 +14,16 @@ Usage:
 from __future__ import annotations
 
 import argparse
-import glob
 import json
-import os
 import sys
+from dataclasses import asdict
 
-from funnel_rocket_spark.catalog import prepare_query, register_dataset
+from funnel_rocket_spark.catalog import (
+    DatasetInUseError, DatasetNotRegisteredError, default_catalog_dir,
+    list_datasets, load_dataset, prepare_query, register_dataset,
+    unregister_dataset)
 from funnel_rocket_spark.session import get_spark, spark_conf
 from funnel_rocket_spark.validation import QueryValidationError
-
-DEFAULT_CATALOG_DIR = os.environ.get(
-    "FUNNEL_ROCKET_CATALOG", os.path.expanduser("~/.funnel_rocket_spark")
-)
 
 
 def cmd_register(args) -> int:
@@ -52,29 +50,25 @@ def cmd_register(args) -> int:
 
 
 def cmd_list(args) -> int:
-    for path in sorted(glob.glob(os.path.join(args.catalog, "*.json"))):
-        with open(path) as fh:
-            meta = json.load(fh)
-        print(f"{meta['name']}\t{meta['basepath']}\t"
-              f"rows={meta.get('total_rows')}\tgroups={meta.get('total_groups')}")
+    for ds in list_datasets(args.catalog):
+        print(f"{ds.name}\t{ds.basepath}\t"
+              f"rows={ds.total_rows}\tgroups={ds.total_groups}")
     return 0
 
 
 def cmd_info(args) -> int:
     try:
-        with open(os.path.join(args.catalog, f"{args.name}.json")) as fh:
-            meta = json.load(fh)
-    except FileNotFoundError:
-        print(f"error: dataset '{args.name}' is not registered "
-              f"(catalog: {args.catalog})", file=sys.stderr)
+        meta = asdict(load_dataset(args.catalog, args.name))
+    except DatasetNotRegisteredError as e:
+        print(f"error: {e}", file=sys.stderr)
         return 2
     if not args.full:
         # Reference `info` shows the summary; `info --full` adds the full
         # per-column schema/profile (frocket/cli.py info_parser --full),
         # and here the recorded Spark schema and part-file list.
         for key in ("columns", "schema", "files"):
-            meta.pop(key, None)
-    print(json.dumps(meta, indent=2, default=str))
+            del meta[key]
+    print(json.dumps(meta, indent=2))
     return 0
 
 
@@ -82,9 +76,6 @@ def cmd_unregister(args) -> int:
     """Reference parity: ``unregister <dataset> [--force]`` — a dataset
     queried within the guard interval refuses unregistration unless
     forced (reference docs/api.md:618-643)."""
-    from funnel_rocket_spark.catalog import (DatasetInUseError,
-                                             unregister_dataset)
-
     try:
         info = unregister_dataset(args.catalog, args.name, force=args.force)
     except DatasetInUseError as e:
@@ -116,9 +107,8 @@ def cmd_run(args) -> int:
     try:
         run = prepare_query(get_spark(), args.catalog, args.name, query)
         result = run()
-    except FileNotFoundError:
-        print(f"error: dataset '{args.name}' is not registered "
-              f"(catalog: {args.catalog})", file=sys.stderr)
+    except DatasetNotRegisteredError as e:
+        print(f"error: {e}", file=sys.stderr)
         return 2
     except QueryValidationError as e:
         print(f"error: invalid query: {e}", file=sys.stderr)
@@ -160,7 +150,7 @@ def cmd_repartition(args) -> int:
 
 def main(argv=None) -> int:
     parser = argparse.ArgumentParser(prog="funnel-rocket-spark")
-    parser.add_argument("--catalog", default=DEFAULT_CATALOG_DIR)
+    parser.add_argument("--catalog", default=default_catalog_dir())
     sub = parser.add_subparsers(dest="command", required=True)
 
     p = sub.add_parser("register", help="register a Parquet dataset")

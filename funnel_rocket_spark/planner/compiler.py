@@ -331,6 +331,18 @@ class QueryPlan:
             df = with_sequence_anchors(df, spec, self.group_col, self.ts_col)
         return df
 
+    def _condition_flags(self, over=lambda c: c) -> list[Column]:
+        """Every condition's ``__cond_i`` flag, aggregated over rows that
+        carry the condition anchors; ``over`` as in ``_target_flag``."""
+        flags = []
+        for i, cond in enumerate(self._conditions):
+            if "sequence" in cond:
+                flag = over(F.max(F.col(self._seq_specs[i].last_anchor).isNotNull()))
+            else:
+                flag = _target_flag(filters_to_column(cond), cond, over)
+            flags.append(F.coalesce(flag, F.lit(False)).alias(f"{COND_PREFIX}{i}"))
+        return flags
+
     def per_group(self) -> DataFrame:
         """One row per group: ``__cond_i`` boolean flags + per-group row count.
 
@@ -340,14 +352,8 @@ class QueryPlan:
         window-min anchors first (the groupBy reuses the window's
         partitioning — still one data exchange).
         """
-        aggs = [F.count(F.lit(1)).alias(ROWS_COL)]
-        for i, cond in enumerate(self._conditions):
-            if "sequence" in cond:
-                flag = F.max(F.col(self._seq_specs[i].last_anchor).isNotNull())
-            else:
-                flag = _target_flag(filters_to_column(cond), cond)
-            aggs.append(F.coalesce(flag, F.lit(False)).alias(f"{COND_PREFIX}{i}"))
-        return self._df_with_condition_anchors().groupBy(self.group_col).agg(*aggs)
+        return self._df_with_condition_anchors().groupBy(self.group_col).agg(
+            F.count(F.lit(1)).alias(ROWS_COL), *self._condition_flags())
 
     def relation_column(self) -> Column:
         """Boolean Column over per_group()'s ``__cond_i`` flags (reference R2)."""
@@ -371,10 +377,7 @@ class QueryPlan:
         universe then share one condition evaluation instead of two.
         """
         mg = matched if matched is not None else self.matched_groups()
-        return mg.agg(
-            F.count(F.lit(1)).alias("matching_groups"),
-            F.coalesce(F.sum(ROWS_COL), F.lit(0)).alias("matching_group_rows"),
-        )
+        return per_group_counts(mg, 0)
 
     def matching_group_ids(self) -> DataFrame:
         """The matched group ids as a one-column DataFrame — the audience
@@ -425,18 +428,9 @@ class QueryPlan:
         already).
         """
         w = Window.partitionBy(self.group_col)
-        df = self._df_with_condition_anchors()
-        original_cols = self.df.columns
-        for i, cond in enumerate(self._conditions):
-            if "sequence" in cond:
-                flag = F.max(F.col(self._seq_specs[i].last_anchor)
-                             .isNotNull()).over(w)
-            else:
-                flag = _target_flag(filters_to_column(cond), cond,
-                                    over=lambda c: c.over(w))
-            df = df.withColumn(f"{COND_PREFIX}{i}",
-                               F.coalesce(flag, F.lit(False)))
-        return df.filter(self.relation_column()).select(*original_cols)
+        flags = self._condition_flags(over=lambda c: c.over(w))
+        return (self._df_with_condition_anchors().select("*", *flags)
+                .filter(self.relation_column()).select(*self.df.columns))
 
     # ------------------------- labeled universe ----------------------- #
 
@@ -478,9 +472,7 @@ class QueryPlan:
         return labeled.groupBy(self.group_col).agg(
             F.count(F.lit(1)).alias(ROWS_COL), F.max(DONE_COL).alias(DONE_COL))
 
-    def funnel_per_group(self, strategy: str = "join",
-                         matched: Optional[DataFrame] = None
-                         ) -> Optional[DataFrame]:
+    def funnel_per_group(self) -> Optional[DataFrame]:
         """(group, __fr_rows, __fr_done): row count + completed-step count
         per group of the funnel universe (``labeled``). ``done`` counts
         non-null anchors, valid because passing step i requires passing
@@ -488,7 +480,7 @@ class QueryPlan:
         """
         if self._funnel_spec is None:
             return None
-        return self._labeled_per_group(self.labeled(strategy, matched))
+        return self._labeled_per_group(self.labeled())
 
     def universe_counts(self, labeled: DataFrame) -> DataFrame:
         """``per_group_counts`` over a ``labeled`` universe. The universe
@@ -497,16 +489,14 @@ class QueryPlan:
         steps = len(self._funnel_spec.step_preds) if self._funnel_spec else 0
         return per_group_counts(self._labeled_per_group(labeled), steps)
 
-    def funnel_step_counts(self, strategy: str = "join",
-                           matched: Optional[DataFrame] = None
-                           ) -> Optional[DataFrame]:
+    def funnel_step_counts(self) -> Optional[DataFrame]:
         """Per-step (step, matching_groups, matching_group_rows): the
         ``universe_counts`` row through ``unpivot_step_counts``."""
         spec = self._funnel_spec
         if spec is None:
             return None
         return unpivot_step_counts(
-            self.universe_counts(self.labeled(strategy, matched)),
+            self.universe_counts(self.labeled()),
             len(spec.step_preds))
 
     # ----------------------------- aggregations ----------------------- #

@@ -139,6 +139,20 @@ def test_streaming_invalid_query_is_http_400(client):
     assert "Unknown column" in body["errorMessage"]
 
 
+def test_register_unreadable_basepath_is_json_400(client, tmp_path):
+    """A basepath that does not exist, or an empty directory, answers the
+    route's JSON 400 naming the path, not Flask's HTML 500."""
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    for path in (str(tmp_path / "nowhere"), str(empty)):
+        r = client.post("/datasets/register", json={
+            "name": "unreadable", "basepath": path,
+            "group_id_column": "user_id", "timestamp_column": "ts"})
+        assert r.status_code == 400, r.get_data(as_text=True)
+        body = r.get_json()
+        assert body["success"] is False and path in body["errorMessage"]
+
+
 def test_error_paths(client):
     r = client.post("/datasets/ev/query", json={
         "query": {"conditions": [{"filter": ["nope", "==", 1]}]}})
@@ -249,15 +263,19 @@ def test_prom_label_escaping():
     assert r'dataset="we\"ird\\name\nx"' in text
 
 
-def test_catalog_entry_with_removed_profile_keys_still_loads(spark, tmp_path):
+def test_catalog_entry_with_removed_profile_keys_still_loads(
+        spark, tmp_path, capsys):
     """Catalog JSON written by earlier versions carries profile keys the
     Dataset no longer has (group-size histogram, segmented-fold cost
     premium) and lacks the schema and part files registration now
     records. Such an entry must still load through the API and answer
-    a sequence query exactly like a freshly registered dataset."""
+    a sequence query exactly like a freshly registered dataset; the API
+    and the CLI list it, ``cli info`` prints it without the unknown keys,
+    and ``/parts`` lists the files its pattern matches."""
     import shutil
     from dataclasses import asdict
 
+    from funnel_rocket_spark import cli
     from funnel_rocket_spark.catalog import register_dataset
     from funnel_rocket_spark.engine import QueryEngine
 
@@ -282,6 +300,7 @@ def test_catalog_entry_with_removed_profile_keys_still_loads(spark, tmp_path):
                              "fold_segmented.400000": 0.9}}}
     catalog.mkdir()
     (catalog / "old.json").write_text(json.dumps(saved))
+    (data / "_SUCCESS").write_text("")  # in basepath, not in the pattern
 
     app = create_app(spark=spark, catalog_dir=str(catalog))
     app.config["TESTING"] = True
@@ -293,6 +312,19 @@ def test_catalog_entry_with_removed_profile_keys_still_loads(spark, tmp_path):
         assert r.status_code == 200, r.get_data(as_text=True)
         body = r.get_json()
         assert c.get("/datasets/old/schema").status_code == 200
+        assert c.get("/datasets").get_json() == [
+            {"name": "old", "basepath": str(data), "totalRows": 1000}]
+        assert [p["name"] for p in
+                c.get("/datasets/old/parts").get_json()["parts"]] == \
+            ["events.parquet"]
+
+    assert cli.main(["--catalog", str(catalog), "list"]) == 0
+    assert capsys.readouterr().out == f"old\t{data}\trows=1000\tgroups=" \
+        f"{ds.total_groups}\n"
+    assert cli.main(["--catalog", str(catalog), "info", "old"]) == 0
+    info = json.loads(capsys.readouterr().out)
+    assert info["name"] == "old" and info["total_rows"] == 1000
+    assert "max_group_rows" not in info and "columns" not in info
 
     want = QueryEngine("user_id", "ts").run(ds.load(spark), q)
     assert body["query"] == want["query"]
@@ -452,14 +484,18 @@ def test_query_reads_only_the_registered_pattern(spark, tmp_path):
         entry = json.loads((catalog / "one.json").read_text())
         assert entry["pattern"] == "events.parquet"
         # an entry written before part files and schema were recorded
-        # still reads and lists only what its pattern matches
+        # (and with a since-removed profile key) still reads, lists and
+        # is listed with only what its pattern matches
         for key in ("files", "schema"):
             del entry[key]
-        (catalog / "patterned.json").write_text(json.dumps(entry))
+        (catalog / "patterned.json").write_text(
+            json.dumps({**entry, "name": "patterned", "max_group_rows": 30}))
         assert rows("patterned") == 1000
         assert [p["name"] for p in
                 c.get("/datasets/patterned/parts").get_json()["parts"]] == \
             ["events.parquet"]
+        assert "patterned" in [d["name"] for d in
+                               c.get("/datasets").get_json()]
         # an entry older still has no pattern either
         del entry["pattern"]
         (catalog / "old.json").write_text(json.dumps(entry))
@@ -508,6 +544,32 @@ def test_query_reads_only_the_registered_parts(spark, tmp_path):
         assert r.status_code == 400, r.get_data(as_text=True)
         msg = r.get_json()["errorMessage"]
         assert "events.parquet" in msg and "register it again" in msg
+
+
+def test_missing_file_while_querying_is_not_an_unregistered_dataset(
+        spark, tmp_path, monkeypatch):
+    """Only a missing catalog entry answers HTTP 404 "dataset not
+    registered": a ``FileNotFoundError`` raised while a registered
+    dataset's query runs surfaces as a server error."""
+    from funnel_rocket_spark.engine import QueryEngine
+
+    app = create_app(spark=spark, catalog_dir=str(tmp_path / "cat"))
+    with app.test_client() as c:
+        assert c.post("/datasets/register", json={
+            "name": "ev", "basepath": SF_EVENTS,
+            "group_id_column": "user_id",
+            "timestamp_column": "ts"}).status_code == 200
+
+        def lost_file(*args, **kwargs):
+            raise FileNotFoundError("a shuffle file is gone")
+
+        monkeypatch.setattr(QueryEngine, "run", lost_file)
+        r = c.get("/datasets/ev/empty-query")
+        assert r.status_code == 500
+        assert "not registered" not in r.get_data(as_text=True)
+        r = c.get("/datasets/nope/empty-query")
+        assert r.status_code == 404
+        assert r.get_json()["errorMessage"] == "dataset not registered"
 
 
 def test_prepare_query_starts_no_spark_job(spark, tmp_path):
