@@ -17,8 +17,12 @@ reference demands raw numerics).
 from __future__ import annotations
 
 import glob
+import itertools
 import json
 import os
+import re
+import stat
+import threading
 import time
 from dataclasses import asdict, dataclass, field, fields
 from typing import Callable, Optional
@@ -121,21 +125,55 @@ class Dataset:
         return _discover_files(local, self.pattern or "*.parquet") or []
 
     def load(self, spark: SparkSession) -> DataFrame:
-        """The registered rows, read with the recorded schema (no
-        schema-inference job). With recorded ``files``, basepath is listed
-        on the driver as always but only files of those names are read:
-        a part added later is ignored until the dataset is registered
-        again, and a part that is gone (``part_files``) fails the load.
-        (Explicit paths would cost a Spark listing job of one task per file
-        above ``spark.sql.sources.parallelPartitionDiscovery.threshold``.)"""
+        """The registered rows. A dataset with local part files
+        (``part_files``) is served from one group-clustered in-memory copy
+        per SparkContext: the rows hash-partitioned by the group column
+        and sorted by (group, timestamp) within each partition, cached
+        (MEMORY_AND_DISK) as a temp view. Catalyst then plans window
+        anchors and ``groupBy(group)`` over it with no exchange and no
+        sort. Loading only plans the copy; the first query's job builds
+        it. It is built again, and the old one dropped, when a part file
+        changes (path, size or ``mtime_ns``), when the dataset is
+        registered again (``registered_at``) or after an external
+        ``spark.catalog.clearCache()``; ``unregister_dataset`` drops it.
+        A table or a remote basepath is read as it is on every load.
+
+        A part that is gone (``part_files``) fails the load. The rows are
+        read with the recorded schema (no schema-inference job); with
+        recorded ``files``, basepath is listed on the driver as always
+        but only files of those names are read: a part added later is
+        ignored until the dataset is registered again. (Explicit paths
+        would cost a Spark listing job of one task per file above
+        ``spark.sql.sources.parallelPartitionDiscovery.threshold``.)"""
         if self.table:
             return spark.table(self.table)
-        missing = [f for f in self.part_files() if not os.path.isfile(f)]
+        parts = self._stat_parts()
+        if not parts:
+            return self._read(spark)
+        return _cached_copy(spark, self, parts).frame
+
+    def _stat_parts(self) -> list[tuple]:
+        """``(path, size, mtime_ns)`` of each part file (the copy's
+        content identity), raising :class:`DatasetValidationError` that
+        names the parts gone since registration."""
+        parts, missing = [], []
+        for f in self.part_files():
+            try:
+                st = os.stat(f)
+            except FileNotFoundError:
+                st = None
+            if st is None or not stat.S_ISREG(st.st_mode):
+                missing.append(f)
+            else:
+                parts.append((f, st.st_size, st.st_mtime_ns))
         if missing:
             raise DatasetValidationError(
                 f"dataset '{self.name}' is missing {len(missing)} "
                 f"registered part file(s) ({', '.join(missing[:5])}); "
                 "register it again")
+        return parts
+
+    def _read(self, spark: SparkSession) -> DataFrame:
         reader = spark.read
         if self.schema:
             reader = reader.schema(T.StructType.fromJson(self.schema))
@@ -144,6 +182,74 @@ class Dataset:
         elif self.pattern:  # an entry written before ``files`` existed
             reader = reader.option("pathGlobFilter", self.pattern)
         return reader.parquet(self.basepath)
+
+
+@dataclass(eq=False)
+class _CachedCopy:
+    """A dataset's group-clustered in-memory copy on one SparkContext:
+    temp view ``view`` of ``session``, cached by name so its scans show
+    as ``Scan In-memory table <view>`` in the SQL plans."""
+    identity: tuple          # (registered_at, ((path, size, mtime_ns), ...))
+    session: SparkSession
+    view: str
+    frame: DataFrame
+    read: bool = False       # a query has started reading it
+
+    def claim(self) -> str:
+        """``"built"`` for the first query that reads the copy (its job
+        materializes it), ``"hit"`` for every later one."""
+        with _COPIES_LOCK:
+            state = "hit" if self.read else "built"
+            self.read = True
+        return state
+
+    def drop(self) -> None:
+        try:
+            self.session.catalog.dropTempView(self.view)  # uncaches it too
+        except Exception:  # noqa: BLE001 — a stopped context holds nothing
+            pass
+
+
+# (SparkContext, dataset name) -> the dataset's in-memory copy there
+_COPIES: dict[tuple, _CachedCopy] = {}
+_COPIES_LOCK = threading.Lock()
+_VIEW_IDS = itertools.count()
+
+
+def _cached_copy(spark: SparkSession, ds: Dataset,
+                 parts: list[tuple]) -> _CachedCopy:
+    """The copy of ``ds`` on ``spark``'s context, planned (no job) when
+    there is none or its identity changed, cached again when it was
+    cleared from outside. The lock makes concurrent first requests share
+    one copy."""
+    sc = spark.sparkContext
+    identity = (ds.registered_at, tuple(parts))
+    with _COPIES_LOCK:
+        copy = _COPIES.get((sc, ds.name))
+        if copy is not None and copy.identity == identity:
+            level = copy.frame.storageLevel
+            if not (level.useMemory or level.useDisk):
+                copy.session.catalog.cacheTable(copy.view)
+                copy.read = False
+            return copy
+        if copy is not None:
+            copy.drop()
+        view = (f"frs_dataset_{next(_VIEW_IDS)}_"
+                + re.sub(r"[^A-Za-z0-9_]", "_", ds.name))
+        (ds._read(spark).repartition(ds.group_id_column)
+         .sortWithinPartitions(ds.group_id_column, ds.timestamp_column)
+         .createOrReplaceTempView(view))
+        spark.catalog.cacheTable(view)
+        copy = _COPIES[(sc, ds.name)] = _CachedCopy(
+            identity, spark, view, spark.table(view))
+        return copy
+
+
+def _drop_copies(name: str) -> None:
+    with _COPIES_LOCK:
+        gone = [_COPIES.pop(k) for k in list(_COPIES) if k[1] == name]
+    for copy in gone:
+        copy.drop()
 
 
 def _names_glob(files: list[str]) -> str:
@@ -406,9 +512,11 @@ def register_dataset(
 
 def load_dataset(catalog_dir: str, name: str) -> Dataset:
     """Read a saved catalog entry, raising
-    :class:`DatasetNotRegisteredError` when there is none. Keys that are
-    not ``Dataset`` fields are dropped, so entries written by older
-    versions (which carried since-removed profile fields) keep loading."""
+    :class:`DatasetNotRegisteredError` when there is none. Its ``name``
+    is the one it was looked up by (the file name), whatever the file
+    says. Keys that are not ``Dataset`` fields are dropped, so entries
+    written by older versions (which carried since-removed profile
+    fields) keep loading."""
     try:
         with open(os.path.join(catalog_dir, f"{name}.json")) as fh:
             data = json.load(fh)
@@ -417,7 +525,8 @@ def load_dataset(catalog_dir: str, name: str) -> Dataset:
             f"dataset '{name}' is not registered (catalog: {catalog_dir})"
         ) from None
     known = {f.name for f in fields(Dataset)}
-    return Dataset(**{k: v for k, v in data.items() if k in known})
+    return Dataset(**{**{k: v for k, v in data.items() if k in known},
+                      "name": name})
 
 
 def list_datasets(catalog_dir: str) -> list[Dataset]:
@@ -433,19 +542,32 @@ def prepare_query(spark: SparkSession, catalog_dir: str, name: str,
     check and validate ``query`` against it — raising
     ``DatasetNotRegisteredError``, ``DatasetValidationError`` (a
     registered part is gone) or ``QueryValidationError`` before any
-    Spark job — and
-    return ``run(with_stats=False)``, which runs the query with
-    the dataset's columns and layout."""
+    Spark job — and return ``run(with_stats=False)``, which runs the
+    query with the dataset's columns and layout over ``Dataset.load``.
+    Its stats add ``strategies.datasetCache``: ``"built"`` when this
+    query materialized the dataset's in-memory copy, ``"hit"`` when it
+    read an existing one, None for a table or a remote basepath."""
     ds = load_dataset(catalog_dir, name)
     touch_last_used(catalog_dir, name)
     check_timeframe_scale(query, ds.min_timestamp, ds.max_timestamp)
     engine = QueryEngine(ds.group_id_column, ds.timestamp_column)
     df = ds.load(spark)
+    with _COPIES_LOCK:
+        copy = next((c for c in _COPIES.values() if c.frame is df), None)
     expanded = engine.expand(query, df)
 
     def run(with_stats: bool = False) -> dict:
-        return engine.run(df, expanded, with_stats=with_stats,
-                          layout=ds.layout)
+        state = copy.claim() if copy else None
+        result = engine.run(df, expanded, with_stats=with_stats,
+                            layout=ds.layout, cached_input=bool(copy))
+        if with_stats:
+            stats = result["stats"]
+            stats["strategies"]["datasetCache"] = state
+            if copy:  # the copy's scan has no input files to list
+                parts = copy.identity[1]
+                stats["dataset"] = {"parts": len(parts), "totalSize": sum(
+                    size for _, size, _ in parts)}
+        return result
 
     return run
 
@@ -476,7 +598,8 @@ def get_last_used(catalog_dir: str, name: str) -> Optional[float]:
 
 def unregister_dataset(catalog_dir: str, name: str, force: bool = False,
                        min_age_seconds: float = 10.0) -> dict:
-    """Remove a dataset's catalog entry (files are never touched).
+    """Remove a dataset's catalog entry and drop its in-memory copy
+    (files are never touched).
 
     Reference semantics (``docs/api.md:618-643``): unregistering a dataset
     queried within the guard interval fails unless ``force`` — ensures
@@ -493,6 +616,7 @@ def unregister_dataset(catalog_dir: str, name: str, force: bool = False,
                 f"(< {min_age_seconds}s); retry later or use force")
     if found:
         os.remove(path)
+        _drop_copies(name)
     sidecar = os.path.join(catalog_dir, f"{name}.last_used")
     if os.path.exists(sidecar):
         os.remove(sidecar)

@@ -88,7 +88,8 @@ class QueryEngine:
 
     def run(self, df: DataFrame, query: dict | ExpandedQuery,
             with_stats: bool = False,
-            layout: Optional[dict] = None) -> dict:
+            layout: Optional[dict] = None,
+            cached_input: bool = False) -> dict:
         """Execute and return the reference-shaped result JSON.
 
         ``with_stats`` adds a ``stats`` block shaped after the reference's
@@ -97,6 +98,9 @@ class QueryEngine:
         and spill volumes, CPU/GC time, dataset parts/size — here read
         from Spark's AppStatusStore for the query's own job group instead
         of a Lambda metrics frame (see ``engine/metrics.py``).
+        ``cached_input`` says ``df`` reads a table cached by name (the
+        copy ``catalog.Dataset.load`` serves), so ``scannedRows`` counts
+        the rows its in-memory scans output.
         """
         import time as _time
 
@@ -126,7 +130,8 @@ class QueryEngine:
         cached = False
         metrics_mgr = None
         if with_stats:
-            metrics_mgr = JobGroupMetrics(df.sparkSession)
+            metrics_mgr = JobGroupMetrics(df.sparkSession,
+                                          cached_input=cached_input)
             metrics_mgr.__enter__()
         matched = None
         try:

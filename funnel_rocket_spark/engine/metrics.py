@@ -33,10 +33,16 @@ class JobGroupMetrics:
     anywhere in the JVM plumbing degrade to partial/empty stats, never
     to a query failure."""
 
-    def __init__(self, spark, description: str = "funnel-rocket-spark query"):
+    def __init__(self, spark, description: str = "funnel-rocket-spark query",
+                 cached_input: bool = False):
         self.spark = spark
         self.group_id = f"frs-{uuid.uuid4().hex[:12]}"
         self.description = description
+        # the group's jobs read their input from a table cached by name
+        # (spark.catalog.cacheTable): scannedRows then counts the rows
+        # its in-memory scans output, since a stage's input records
+        # count the cached batches it read, not rows
+        self.cached_input = cached_input
         # per-stage rows of the last snapshot: stage, name, tasks,
         # failedTasks, wallSeconds, scheduler pool and the worker
         # block's keys
@@ -93,6 +99,12 @@ class JobGroupMetrics:
                 out["partial"] = True
                 out["statsSource"] = "statusTracker"
                 self._fill_from_tracker(tracker, stage_ids, out)
+            if self.cached_input:
+                try:
+                    out["worker"]["scannedRows"] = self._cached_scan_rows(
+                        sc, job_ids)
+                except Exception:
+                    out["partial"] = True  # rows stay the stage records
             w = out["worker"]
             for k in ("executorRunSeconds", "executorCpuSeconds",
                       "jvmGcSeconds"):
@@ -186,6 +198,41 @@ class JobGroupMetrics:
             dist = self._task_duration_quantiles(sc, heaviest["stage"])
             if dist:
                 w["taskTime"] = dist
+
+    def _cached_scan_rows(self, sc, job_ids) -> int:
+        """Rows output by the group's scans of tables cached by name:
+        each job's SQL execution (``jobWithAssociatedSql``), then the
+        nodes of that execution's plan graph named ``Scan In-memory
+        table <name>``, and their ``number of output rows`` values. The
+        cost follows the group's jobs and their plans' nodes, not every
+        execution the driver has retained. Names are read node by node:
+        one rendering of the whole graph is a py4j answer of 10 KB or
+        more, and each such answer measured about 45 ms."""
+        store = sc._jsc.sc().statusStore()
+        sql = self.spark._jsparkSession.sharedState().statusStore()
+        executions = set()
+        for jid in job_ids:
+            execution = store.jobWithAssociatedSql(int(jid))._2()
+            if execution.isDefined():
+                executions.add(execution.get())
+        rows = 0
+        for eid in executions:
+            nodes = sql.planGraph(eid).allNodes()
+            values = None
+            for i in range(nodes.size()):
+                node = nodes.apply(i)
+                if not node.name().startswith("Scan In-memory table "):
+                    continue
+                if values is None:
+                    values = sql.executionMetrics(eid)
+                metrics = node.metrics()
+                for j in range(metrics.size()):
+                    metric = metrics.apply(j)
+                    value = values.get(metric.accumulatorId())
+                    if (metric.name() == "number of output rows"
+                            and value.isDefined()):
+                        rows += int(value.get().replace(",", ""))
+        return rows
 
     @staticmethod
     def _fill_from_tracker(tracker, stage_ids, out: dict) -> None:

@@ -132,7 +132,9 @@ class PromRegistry:
         registry — the metric names mirror the reference's MetricName
         enum (``common/metrics.py:126-152``: invoker_total_seconds,
         scanned_rows, cost_dollars, task_total_run_seconds) plus
-        Spark-native additions (scanned_bytes, failed_tasks_total)."""
+        Spark-native additions (scanned_bytes, failed_tasks_total,
+        dataset_cache_builds_total: queries that materialized their
+        dataset's in-memory copy, per dataset)."""
         labels = {"dataset": dataset, "success": str(bool(success)).lower(),
                   "type": job_type}
         self.inc("query_requests_total", labels)
@@ -150,6 +152,8 @@ class PromRegistry:
                          w["executorRunSeconds"])
         if inv.get("failedTasks"):
             self.inc("failed_tasks_total", labels, inv["failedTasks"])
+        if (stats.get("strategies") or {}).get("datasetCache") == "built":
+            self.inc("dataset_cache_builds_total", {"dataset": dataset})
         if stats.get("cost") is not None:
             self.observe("cost_dollars", labels, stats["cost"])
 

@@ -45,15 +45,35 @@ def read_schema_columns(df: DataFrame) -> list[list[str]]:
     return schemas
 
 
+def _query_operators(df: DataFrame, name: str) -> int:
+    """Number of ``name`` operators the query itself runs. Formatted
+    mode lists each node twice (tree + "(N) Name" detail header); count
+    the numbered detail headers only. The plan that builds a cached
+    frame the query reads (the subtree under an ``InMemoryRelation``)
+    runs once for all the queries that read the frame, so its operators
+    are not counted."""
+    plan = formatted_plan(df)
+    built, column = set(), None
+    for line in plan.split("\n\n", 1)[0].splitlines():
+        start = re.search(r"[\w=]", line)
+        if start is None:
+            continue
+        if column is not None and start.start() > column:
+            built.update(re.findall(r"\((\d+)\)", line))
+            continue
+        column = (start.start() if line[start.start():]
+                  .startswith("InMemoryRelation") else None)
+    return sum(1 for n in re.findall(rf"\((\d+)\) {name}\b", plan)
+               if n not in built)
+
+
 def count_exchanges(df: DataFrame) -> int:
     """Number of Exchange operators (shuffles) in the physical plan.
 
     AQE reuse/coalescing can only reduce these at runtime, so this is an
     upper bound — which is exactly what a regression gate wants.
     """
-    # formatted mode lists each node twice (tree + "(N) Exchange" detail
-    # header); count the numbered detail headers only
-    return len(re.findall(r"\(\d+\) Exchange\b", formatted_plan(df)))
+    return _query_operators(df, "Exchange")
 
 
 def count_sorts(df: DataFrame) -> int:
@@ -64,4 +84,4 @@ def count_sorts(df: DataFrame) -> int:
     straight off the scan — a Sort appearing there means the layout
     declaration was lost (e.g. multi-file buckets) and the query went
     back to paying the whale partition sort at scale."""
-    return len(re.findall(r"\(\d+\) Sort\b", formatted_plan(df)))
+    return _query_operators(df, "Sort")

@@ -612,6 +612,42 @@ def test_prepare_query_starts_no_spark_job(spark, tmp_path):
     assert answers["many"] == answers["dir"] == answers["file"]
 
 
+def test_entry_is_listed_and_served_by_its_file_name(spark, tmp_path):
+    """An entry file copied to ``<new>.json`` is its own dataset named
+    ``<new>``, whatever ``name`` the file holds: ``/datasets`` lists both
+    names, each answers its queries (with the same scanned rows), and
+    unregistering one leaves the other serving."""
+    import shutil
+
+    catalog = tmp_path / "cat"
+    app = create_app(spark=spark, catalog_dir=str(catalog))
+    app.config["TESTING"] = True
+    with app.test_client() as c:
+        assert c.post("/datasets/register", json={
+            "name": "one", "basepath": SF_EVENTS,
+            "group_id_column": "user_id",
+            "timestamp_column": "ts"}).status_code == 200
+        shutil.copy(catalog / "one.json", catalog / "patterned.json")
+        assert [d["name"] for d in c.get("/datasets").get_json()] == \
+            ["one", "patterned"]
+
+        def answer(name):
+            r = c.post(f"/datasets/{name}/query", json=_STATS_QUERY)
+            assert r.status_code == 200, r.get_data(as_text=True)
+            body = r.get_json()
+            return body["query"], body["stats"]["worker"]["scannedRows"]
+
+        assert answer("one") == answer("patterned")
+        assert answer("one")[1] >= 1000
+        assert c.post("/datasets/one/unregister?force=true").status_code \
+            == 200
+        assert [d["name"] for d in c.get("/datasets").get_json()] == \
+            ["patterned"]
+        assert answer("patterned")[0]["matchingGroups"] > 0
+        assert c.get("/datasets/one/empty-query").status_code == 404
+        c.post("/datasets/patterned/unregister?force=true")
+
+
 def _prom_samples(client, series: str) -> float:
     for line in client.get("/metrics").get_data(as_text=True).splitlines():
         if line.startswith(series + " "):
@@ -642,13 +678,15 @@ def test_stream_and_sync_routes_answer_alike(spark, tmp_path):
             assert _prom_samples(c, series) == before + 1
             return body
 
+        # the first request builds the dataset's in-memory copy (more
+        # jobs, datasetCache "built"); the compared pair both read it
+        counted(lambda: c.get("/datasets/ev/empty-query"))
+        counted(lambda: c.get("/datasets/ev/empty-query?stream=true"))
         sync = json.loads(counted(lambda: c.post("/datasets/ev/query",
                                                  json=_STATS_QUERY)))
         stream = counted(lambda: c.post("/datasets/ev/query?stream=true",
                                         json=_STATS_QUERY))
         final = json.loads(stream.splitlines()[-1])
-        counted(lambda: c.get("/datasets/ev/empty-query"))
-        counted(lambda: c.get("/datasets/ev/empty-query?stream=true"))
 
     assert final["requestId"] != sync["requestId"]
     sync_stats, final_stats = sync.pop("stats"), final.pop("stats")

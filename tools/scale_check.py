@@ -10,7 +10,9 @@ tests/test_plans.py pin the shapes; this script pins the slope).
 
 Usage: python tools/scale_check.py [n_rows] [n_groups]
        python tools/scale_check.py <rung> [args]   (see main() for rungs;
-       e.g. ``whalespill 40000000 0.75 1g`` writes tools/rung_whale_spill.json)
+       e.g. ``whalespill 40000000 0.75 1g`` writes tools/rung_whale_spill.json,
+       ``served 8 parent=<checkout> change=.`` writes
+       tools/rung_served_sf1.json)
 """
 
 from __future__ import annotations
@@ -1799,7 +1801,102 @@ def multimodal_main(n_docs: int) -> None:
     print(json.dumps(out))
 
 
+# One process of the served rung, run by ``served_main`` in a fresh
+# interpreter that imports the package from the checkout it names:
+# argv = checkout, events path, steady-state runs per shape. Prints one
+# JSON line.
+_SERVED_CHILD = r"""
+import json, os, statistics, sys, tempfile, time
+checkout, data, runs = sys.argv[1], sys.argv[2], int(sys.argv[3])
+sys.path[:0] = [checkout, os.path.join(checkout, "perfbench")]
+from funnel_rocket_spark import catalog
+from funnel_rocket_spark.session import get_spark
+from workloads import FUNNEL_QUERIES
+
+def hwm_mb(pid):
+    with open(f"/proc/{pid}/status") as fh:
+        return next(int(l.split()[1]) for l in fh
+                    if l.startswith("VmHWM:")) / 1024
+
+n = len(os.sched_getaffinity(0))
+spark = get_spark(app_name="served-rung", master=f"local[{n}]",
+                  shuffle_partitions=n,
+                  extra_conf={"spark.driver.memory": "2g"})
+spark.sparkContext.setLogLevel("ERROR")
+cat = tempfile.mkdtemp()
+t0 = time.perf_counter()
+ds = catalog.register_dataset(spark, "events", data, "user_id", "ts",
+                              catalog_dir=cat)
+out = {"rows": ds.total_rows, "register_s": round(time.perf_counter() - t0, 3),
+       "shapes": {}}
+for name, query in FUNNEL_QUERIES.items():
+    seconds, stats = [], []
+    for _ in range(1 + runs):
+        t0 = time.perf_counter()
+        result = catalog.prepare_query(spark, cat, "events", query)(
+            with_stats=True)
+        seconds.append(time.perf_counter() - t0)
+        stats.append(result["stats"])
+    last = stats[-1]
+    out["shapes"][name] = {
+        "first_s": round(seconds[0], 3),
+        "first_cache": stats[0]["strategies"].get("datasetCache"),
+        "steady_median_s": round(statistics.median(seconds[1:]), 3),
+        "steady_min_s": round(min(seconds[1:]), 3),
+        "steady_jobs": last["invoker"]["jobs"],
+        "steady_stages": last["invoker"]["stages"],
+        "steady_shuffle_write_bytes": last["worker"]["shuffleWriteBytes"],
+        "steady_scanned_rows": last["worker"]["scannedRows"]}
+out["peak_rss_mb"] = round(
+    hwm_mb(os.getpid()) + hwm_mb(spark.sparkContext._gateway.proc.pid))
+spark.stop()
+print(json.dumps(out))
+"""
+
+
+def served_main(runs: int = 8, checkouts: list[str] | None = None) -> None:
+    """Serving rung past the benchmark's 100k rows: the three perfbench
+    ``funnel`` query shapes through ``catalog.prepare_query(...)(
+    with_stats=True)`` over the sf1 events table (1M rows, built by
+    tools/make_sf1.py into .scratch/sf1.0 when missing) registered with
+    ``catalog.register_dataset``. Per shape it times the first request
+    (the very first one builds the dataset's in-memory copy, where the
+    checkout serves from one) and ``runs`` steady-state requests, with
+    the jobs, stages, shuffle bytes and scanned rows of the last, and
+    the process's peak RSS (driver + JVM). Each ``label=checkout``
+    (default: ``this=`` this checkout; e.g. ``parent=<clone of the
+    parent commit> change=.``) runs in its own process, in that order.
+    Writes tools/rung_served_sf1.json."""
+    import subprocess
+
+    import make_sf1
+
+    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    data = os.path.join(here, ".scratch", "sf1.0", "events.parquet")
+    if not os.path.exists(data):
+        make_sf1.build(make_sf1.SRC_DEFAULT, os.path.dirname(data))
+    out = {"rows": None, "runs": runs, "host_cores": os.cpu_count(),
+           "checkouts": {}}
+    for arg in checkouts or [f"this={here}"]:
+        label, _, checkout = arg.partition("=")
+        checkout = os.path.abspath(checkout)
+        child = subprocess.run(
+            [sys.executable, "-c", _SERVED_CHILD, checkout, data, str(runs)],
+            cwd=checkout, env={**os.environ, "PYTHONPATH": checkout},
+            check=True, capture_output=True, text=True)
+        got = json.loads(child.stdout.strip().splitlines()[-1])
+        out["rows"] = got.pop("rows")
+        out["checkouts"][label] = got
+        print(json.dumps({label: got}), flush=True)
+    with open(os.path.join(here, "tools", "rung_served_sf1.json"), "w") as fh:
+        json.dump(out, fh, indent=1)
+
+
 def main() -> None:
+    if len(sys.argv) > 1 and sys.argv[1] == "served":
+        served_main(int(sys.argv[2]) if len(sys.argv) > 2 else 8,
+                    sys.argv[3:])
+        return
     if len(sys.argv) > 1 and sys.argv[1] == "docs":
         docs_main(int(sys.argv[2]) if len(sys.argv) > 2 else 100_000)
         return
